@@ -121,14 +121,13 @@ HEADLINE = [
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
     from pythonmapreduce_spark.session import get_spark
     from pythonmapreduce_spark.plans import registry
 
-    spark = get_spark("pythonmapreduce-spark-bench", cpus=cpus)
+    spark = get_spark("pythonmapreduce-spark-bench")
     registry.load_all()
 
     # Warm the JVM/codegen paths once with a trivial action.

@@ -18,12 +18,14 @@ Scale notes per operator:
   volume is Σ deg(v)²/2 over the oriented (lower-endpoint) adjacency —
   the standard node-iterator bound. All joins are equi-joins on vertex
   keys (shuffle hash / sort-merge); no cartesian anywhere.
-- pagerank_iter keeps ranks and edges co-partitioned on the vertex key
-  across iterations — the join key never changes, so after the first
-  shuffle each subsequent iteration reuses the partitioning (no new
-  exchange of the edge set). Ranks are O(V) and flow through shuffle
-  joins, never a broadcast (at 100 TB, V-proportional state must not
-  land on the driver).
+- pagerank_iter, bfs_distances and kcore_rounds loop over a checkpointed
+  adjacency base (_sym_adjacency). A checkpointed base enters the plan
+  as ``Scan ExistingRDD`` with UnknownPartitioning, so it is NOT
+  co-partitioned with the loop state: each query shuffles the adjacency
+  once for its state join on the vertex key, and AQE reuses that
+  exchange across rounds. Per round only the O(V) state moves. State
+  flows through shuffle joins, never a broadcast (at 100 TB,
+  V-proportional state must not land on the driver).
 """
 
 from __future__ import annotations
@@ -61,37 +63,34 @@ _EDGES_CTE = """
 
 def _sym_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized symmetric ADJACENCY LISTS: (vtx, nbrs) — one row per
-    vertex, neighbors as an array. The round-12 loop base for the
-    propagation-style graph queries (pagerank/bfs/LPA/CC/kcore/HITS).
+    vertex, neighbors as an array. The loop base for pagerank_iter,
+    bfs_distances and kcore_rounds.
 
-    Why arrays instead of the (src, dst) edge rows the loops used
-    through round 11 (guide §2.3 "shuffle fewer bytes"): a checkpointed
-    base re-enters the plan as ExistingRDD with NO known partitioning,
-    so every loop round re-shuffles it for the state join. As edge rows
-    that is 2|E| rows × 16 bytes per round; as adjacency rows it is
-    |V| rows carrying |E|+|V| longs total — about half the bytes and a
-    V-sized join cardinality instead of 2E (at 100 TB the state table
-    is O(V) and CANNOT broadcast, so the per-round join shuffle is the
-    loop's dominant cost). The propagation itself becomes
-    join-on-vertex → explode(nbrs), and the explode output collapses
-    map-side into the same per-vertex aggregate as before. Per-vertex
-    degree is size(nbrs) — free, no second aggregate. Interleaved A/B
-    at sf0.1: bfs 0.65×, pagerank 0.79×, row-equal outputs.
+    Built straight from the per-order baskets (basket_adjacency_rows), not
+    from ``_edges``: the neighbor sets are the symmetric closure of the
+    edge set by construction, so the loop base needs neither the edge
+    ``distinct()`` shuffle nor a union with the mirrored edges (which put
+    the whole basket subtree into the plan twice). The build is two
+    exchanges: the basket groupBy on l_orderkey and the neighbor
+    collect_set on vtx.
 
-    Neighbor-list ORDER is collect_list arrival order (nondeterministic
-    across runs) — every consumer aggregates with order-independent
-    (min/count) or rounding-absorbed (float-sum) semantics, exactly the
-    guarantee the edge-row shape already relied on (shuffle arrival
-    order was never deterministic either)."""
-    e = _edges(spark, sf_dir)
-    sym = e.unionAll(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    return iter_materialize(
-        sym.groupBy(F.col("src").alias("vtx")).agg(
-            F.collect_list("dst").alias("nbrs")
-        )
-    )
+    Why arrays instead of (src, dst) edge rows: a checkpointed base
+    re-enters the plan as ``Scan ExistingRDD`` with UnknownPartitioning,
+    so each query shuffles it once for its state join (AQE then reuses
+    that exchange across rounds). As edge rows that shuffle is 2|E| rows
+    × 16 bytes; as adjacency rows it is |V| rows carrying |E|+|V| longs
+    — about half the bytes and a V-sized join cardinality instead of 2E.
+    The propagation itself becomes join-on-vertex → explode(nbrs), and
+    per-vertex degree is size(nbrs) — free, no second aggregate.
+
+    Degree-skew bound: one vertex's row is O(deg) and is built in ONE
+    collect_set buffer, which has no spill path — the co-occurrence graph
+    keeps degrees small, but a super-node would be a single large row.
+    Chunking into bounded (vtx, chunk, nbrs) rows is ROADMAP item 4.
+    Neighbor order within ``nbrs`` is unspecified; every consumer
+    aggregates with order-independent (min/count) or rounding-absorbed
+    (float-sum) semantics."""
+    return iter_materialize(basket_adjacency_rows(_baskets(spark, sf_dir)))
 
 
 def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame | None:
@@ -169,31 +168,60 @@ def basket_pair_rows(baskets: DataFrame, c1: str, c2: str) -> DataFrame:
     )
 
 
+def basket_adjacency_rows(baskets: DataFrame) -> DataFrame:
+    """Symmetric adjacency (vtx, nbrs) of the basket co-occurrence graph:
+    each part of each basket is a vertex whose neighbors are the basket's
+    other parts, merged across baskets.
+
+    Every row stays O(k) — the same skew argument as basket_pair_rows:
+    level 1 emits one (parts, vtx) row per item, level 2 explodes the
+    basket minus that item. collect_set removes duplicate neighbors
+    map-side (a pair co-occurring in many baskets counts once), and
+    ``array_remove`` drops the vertex itself, so ``nbrs`` is exactly the
+    symmetric closure of the ``_edges`` set: no duplicates, no
+    self-loops. A part alone in its basket gets no row, as it has no
+    edge."""
+    return (
+        baskets.select("parts", F.explode("parts").alias("vtx"))
+        .select(
+            "vtx",
+            F.explode(F.array_remove("parts", F.col("vtx"))).alias("nbr"),
+        )
+        .groupBy("vtx")
+        .agg(F.collect_set("nbr").alias("nbrs"))
+    )
+
+
+def _baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-order sorted distinct part arrays (l_orderkey, parts) of the
+    URGENT orders — the input of both graph bases. ONE lineitem pass;
+    collect_set dedups map-side and order size (~4) bounds the array."""
+    urgent = (
+        load(spark, sf_dir, "orders")
+        .where(F.col("o_orderpriority") == "1-URGENT")
+        .select("o_orderkey")
+    )
+    return (
+        load(spark, sf_dir, "lineitem")
+        .join(urgent, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("l_orderkey")
+        .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
+    )
+
+
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected edge set (src < dst) of the part co-occurrence graph.
 
-    Round 11 shape: ONE lineitem pass builds per-order sorted distinct
-    part arrays (collect_set dedups map-side; order size ~4 bounds the
-    array), then pairs explode from each array in-JVM — sorted arrays
-    make src < dst by construction. The old form self-joined a distinct
+    Round 11 shape: pairs explode from each order's sorted distinct part
+    array (_baskets) in-JVM — sorted arrays make src < dst by
+    construction. The old form self-joined a distinct
     (l_orderkey, l_partkey) projection with itself, which the physical
     plan executed as TWO full lineitem scans + two distinct exchanges +
     a join-key shuffle; now the only exchanges are the groupBy(order)
     and the final edge distinct. Identical edge set (verified row-equal
     at sf0.1 and via every graph oracle). Round 12: the pair explode is
     the two-level skew-safe form — see basket_pair_rows."""
-    urgent = (
-        load(spark, sf_dir, "orders")
-        .where(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_orderkey")
-    )
-    baskets = (
-        load(spark, sf_dir, "lineitem")
-        .join(urgent, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-    )
-    return basket_pair_rows(baskets, "src", "dst").distinct()
+    return basket_pair_rows(_baskets(spark, sf_dir), "src", "dst").distinct()
 
 
 @register(
@@ -310,9 +338,10 @@ def pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per iteration: ranks ⋈ edges on the source vertex, contributions
     pr/deg flow along out-edges, sum per destination, re-seed with the
     teleport term. The symmetric edge set guarantees no dangling mass
-    (every node has out-degree ≥ 1). Ranks stay O(V) and co-partitioned
-    with the edge list on the vertex key across iterations — Spark reuses
-    the exchange instead of re-shuffling edges each round. Fixed iteration
+    (every node has out-degree ≥ 1). Ranks stay O(V); the checkpointed
+    adjacency base has no known partitioning, so the query shuffles it
+    once for the rank join and reuses that exchange in every later
+    iteration (see the module notes). Fixed iteration
     count keeps the computation a finite DAG, which is what makes the
     unrolled-CTE oracle expressible; scores ×1000 then rounded to 6dp so
     the cross-engine float-summation drift stays below the compare
@@ -377,9 +406,10 @@ def bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     they cover both classic iterative-graph dataflows).
 
     Each round relaxes dist(v) = min(dist(v), min_{u→v} dist(u)+1) as a
-    union + min-aggregate over the checkpointed symmetric edge list: one
-    vertex-key equi-join and one partial+final min per hop, distance
-    table stays O(V) and co-partitioned with edges on the join key.
+    union + min-aggregate over the checkpointed adjacency base: one
+    vertex-key equi-join and one partial+final min per hop; the distance
+    table stays O(V). The base is shuffled once for the first join and
+    that exchange is reused by the later hops (see the module notes).
     Bounded hop count makes the computation a finite DAG (the unrolled
     oracle); the unbounded variant is the same loop with a convergence
     count, exactly like dedup_clusters. Output: distance histogram
@@ -586,7 +616,7 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis run on directed webs).
 
     Same spine as the rest of the tier: scores live in O(V) tables
-    co-partitioned on the vertex key, each half-round is one equi-join +
+    keyed on the vertex, each half-round is one equi-join +
     combine-enabled sum, normalizers are 1-row broadcasts, and the
     deterministic top-20 (score desc, id) bounds the output. More rounds
     = the same pair of joins repeated over iter_materialize'd bases.
@@ -795,8 +825,8 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     combine-enabled hash aggregate instead of a per-vertex sort window,
     so both round stages take map-side partials and nothing sorts.
     Labels stay O(V), edges are never re-derived (iter_materialize).
-    Same iterative scale shape as pagerank: co-partitioned on the vertex
-    key, nothing collected, rounds extend to convergence on a cluster.
+    Same iterative scale shape as pagerank: state keyed on the vertex,
+    nothing collected, rounds extend to convergence on a cluster.
     """
     # Round-12 note: the adjacency-array base (_sym_adjacency) measured
     # 1.16× SLOWER here interleaved (1.790 vs 1.545 min, steal 22) —

@@ -21,7 +21,8 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# local[N] at this machine's core count unless SPARK_GRAFT_CPUS says otherwise.
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
 
 
 def get_spark(app_name: str = "pythonmapreduce-spark", cpus: str | None = None) -> SparkSession:
@@ -31,7 +32,7 @@ def get_spark(app_name: str = "pythonmapreduce-spark", cpus: str | None = None) 
     spark-submit and these configs still apply.
     """
     cpus = cpus or DEFAULT_CPUS
-    n = int(cpus) if str(cpus).isdigit() else 32
+    n = int(cpus) if str(cpus).isdigit() else os.cpu_count() or 1
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

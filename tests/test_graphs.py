@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 from pythonmapreduce_spark.operators.graphs import (
     _edges,
     _pagerank_ranks,
+    _sym_adjacency,
+    basket_adjacency_rows,
     basket_pair_rows,
 )
 from pythonmapreduce_spark.plans import registry
@@ -65,6 +67,35 @@ def test_basket_pair_rows_unbounded_basket(spark) -> None:
     assert got == [(1, 3), (1, 7), (3, 7)]
 
 
+def test_basket_adjacency_rows_hand_built_baskets(spark) -> None:
+    """The loop base's neighbor sets on hand-built baskets: a part alone
+    in its basket (5) gets no row, an empty basket adds nothing, and the
+    3–7 pair that co-occurs in two baskets yields ONE neighbor each way —
+    no duplicates, no self-loops."""
+    baskets = spark.createDataFrame(
+        [([1, 3, 7],), ([5],), ([],), ([3, 7, 9],)], "parts array<long>"
+    )
+    got = {
+        r.vtx: sorted(r.nbrs) for r in basket_adjacency_rows(baskets).collect()
+    }
+    assert got == {1: [3, 7], 3: [1, 7, 9], 7: [1, 3, 9], 9: [3, 7]}
+
+
+def test_sym_adjacency_is_symmetric_closure_of_edges(spark, sf_smoke) -> None:
+    """On the live graph the basket-built adjacency equals the symmetric
+    closure of ``_edges``: same vertex set, and each vertex's sorted
+    neighbor list is exactly its edge endpoints in both directions."""
+    e = _edges(spark, sf_smoke)
+    sym = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    want = {
+        r.src: sorted(r.nbrs)
+        for r in sym.groupBy("src").agg(F.collect_list("dst").alias("nbrs")).collect()
+    }
+    got = {r.vtx: sorted(r.nbrs) for r in _sym_adjacency(spark, sf_smoke).collect()}
+    assert want  # the graph is non-degenerate at the smoke SF
+    assert got == want
+
+
 def test_pagerank_mass_conserved(spark, sf_smoke) -> None:
     """Uniform teleport + symmetric (dangling-free) graph ⇒ the full rank
     vector sums to exactly 1 after every synchronous iteration."""
@@ -103,6 +134,12 @@ def test_superstep0_specializations_match_general_round(spark, sf_smoke) -> None
     unrolls and asserts equality on the live graph, so a future edge
     derivation that drops the distinct (or an asymmetric variant that
     makes both directions collide) fails here, not in the driver diff.
+
+    pagerank (and bfs/kcore) read the basket-built ``_sym_adjacency``
+    instead of this edge-row sym. That base is pinned to the same
+    duplicate-free, self-loop-free symmetric closure by
+    test_sym_adjacency_is_symmetric_closure_of_edges, so the equalities
+    below cover it too.
     """
     from pyspark.sql import Window
 

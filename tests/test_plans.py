@@ -812,6 +812,30 @@ def test_pagerank_round_is_one_equi_join_one_agg_exchange(spark, sf_smoke) -> No
     assert len(dst_exchanges) == 1, plan
 
 
+def test_pagerank_loop_base_builds_in_two_exchanges(spark, sf_smoke) -> None:
+    # The adjacency loop base builds straight from the order baskets: one
+    # shuffle for the basket groupBy (l_orderkey), one for the neighbor
+    # collect_set (vtx). An edge distinct() or a union with the mirrored
+    # edges (which re-plans the whole basket subtree) fails here.
+    from pythonmapreduce_spark.plans import materialize
+
+    passes: list[str] = []
+    materialize.PLAN_CAPTURE = passes
+    try:
+        registry.QUERIES["pagerank_iter"](spark, sf_smoke)
+    finally:
+        materialize.PLAN_CAPTURE = None
+    assert len(passes) == 1, passes
+    base = passes[0]
+    exchanges = [
+        ln.split("hashpartitioning(", 1)[1]
+        for ln in base.splitlines()
+        if "Arguments: hashpartitioning(" in ln
+    ]
+    assert sorted(x.split("#", 1)[0] for x in exchanges) == ["l_orderkey", "vtx"], base
+    assert "Union" not in base, base
+
+
 def test_hits_only_nested_loops_are_one_row_normalizer_broadcasts(
     spark, sf_smoke
 ) -> None:

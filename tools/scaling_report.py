@@ -26,7 +26,7 @@ if not os.path.isdir("pythonmapreduce_spark"):
     os.chdir(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pythonmapreduce_spark.plans.registry import QUERIES, load_all  # noqa: E402
-from pythonmapreduce_spark.session import get_spark  # noqa: E402
+from pythonmapreduce_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 SFS = [0.001, 0.01, 0.1]
 SF_DIRS = {sf: f"/root/testdata/sf{sf}" for sf in SFS}
@@ -227,7 +227,7 @@ def _steal_ticks() -> int:
 
 def main() -> int:
     load_all()
-    spark = get_spark("scaling-report", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark("scaling-report")
     spark.range(1000).selectExpr("sum(id)").collect()
     steal_start = _steal_ticks()
 
@@ -256,7 +256,7 @@ def main() -> int:
     lines = [
         "# SCALING — measured cross-SF behavior (generated by tools/scaling_report.py)",
         "",
-        "Steady-state wall time (local[32], noop sink, 2 warmups, min of 3",
+        f"Steady-state wall time (measured at {DEFAULT_CPUS} cores, noop sink, 2 warmups, min of 3",
         "timed runs — burst-robust against hypervisor steal) at three scale",
         "factors spanning 100× in data volume. `b` is the empirical exponent of",
         "t ≈ a·SF^b fitted over the top decade (sf0.01 → sf0.1): **b ≈ 0** means",
