@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.catalog import SCHEMAS, load
 from pythonmapreduce_spark.plans.registry import register
+from pythonmapreduce_spark.sources.text_corpus import BOOKS_DIR
 
 
 def write_csv(df: DataFrame, path: str) -> None:
@@ -460,19 +461,19 @@ def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "source_binaryfile",
-    oracle=r"""
+    oracle=rf"""
     SELECT regexp_extract(filename, '[^/]+$') AS file_name,
            CAST(octet_length(encode(content)) AS BIGINT) AS n_bytes,
            md5(content) AS digest
-    FROM read_text('/root/reference/books/*.txt')
+    FROM read_text('{BOOKS_DIR}/*.txt')
     """,
 )
 def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark's built-in `binaryFile` source over the reference's books/
-    corpus: whole files as opaque binary payloads with typed metadata
-    (path, length, content) — the ingestion shape for multimodal blobs
-    (multimodal.py consumes exactly this schema once images/audio are
-    real files instead of synthesized columns).
+    """Spark's built-in `binaryFile` source over the books/ corpus
+    (``text_corpus.BOOKS_DIR``): whole files as opaque binary payloads
+    with typed metadata (path, length, content) — the ingestion shape for
+    multimodal blobs (multimodal.py consumes exactly this schema once
+    images/audio are real files instead of synthesized columns).
 
     Emits per-file byte length + md5 digest, oracle-checked against
     DuckDB's read_text (md5 over the UTF-8 payload; DuckDB's blob→varchar
@@ -486,7 +487,7 @@ def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.txt")
-        .load("/root/reference/books")
+        .load(BOOKS_DIR)
         .select(
             F.regexp_extract(F.col("path"), r"[^/]+$", 0).alias("file_name"),
             F.col("length").cast("long").alias("n_bytes"),

@@ -21,7 +21,9 @@ hostile-delimiter parity test pins at the tokenizer level.
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,9 +38,9 @@ from pyspark.sql.datasource import (
 )
 
 from pythonmapreduce_spark.plans.registry import register
+from pythonmapreduce_spark.sources.text_corpus import BOOKS_DIR
 
 _DELIM = "#\r#"
-_BOOKS_DIR = "/root/reference/books"
 
 
 class RefWireDataSource(DataSource):
@@ -178,42 +180,53 @@ def register_refwire(spark: SparkSession) -> None:
         _REGISTERED.add(id(spark))
 
 
-def _frame_books(out_dir: str) -> str:
-    """Encode the reference's books corpus into its wire format, one
-    ``.wire`` file per book — the exact framing loop of master.py:25-40
-    (line-per-frame; leading BOM stripped to match Spark's text-reader
-    semantics so the oracle tokenization agrees).
+def _frame_books(cache_dir: str) -> str:
+    """Encode the books corpus (``text_corpus.BOOKS_DIR``) into the
+    reference's wire format, one ``.wire`` file per book — the exact
+    framing loop of master.py:25-40 (line-per-frame; leading BOM stripped
+    to match Spark's text-reader semantics so the oracle tokenization
+    agrees). Returns the framed directory.
 
-    ``out_dir`` is a FIXED-NAME scratch entry (an immutable content
-    cache whose mtime never refreshes): any new fixed-name cache like
-    this one MUST be added to ``readers._FIXED_LIVE_SCRATCH``, or the
-    age-based sweep will silently reap it after 2 days."""
-    if not os.path.isdir(out_dir):
-        os.makedirs(out_dir, exist_ok=True)
-        for src in sorted(glob.glob(os.path.join(_BOOKS_DIR, "*.txt"))):
-            name = os.path.basename(src)
-            with open(src, encoding="utf-8", errors="ignore", newline="") as f:
-                text = f.read().lstrip("\ufeff")
-            text = text.replace("\r\n", "\n")
-            frames = "".join(
-                f"{_DELIM}{name}{_DELIM}{line}" for line in text.split("\n")
-            )
-            with open(
-                os.path.join(out_dir, name + ".wire"), "w", encoding="utf-8", newline=""
-            ) as f:
-                f.write(frames)
+    The frames live in ``cache_dir/<corpus digest>``, so an edited corpus
+    never reads stale frames. ``cache_dir`` is a FIXED-NAME scratch entry
+    (an immutable content cache whose mtime never refreshes): any new
+    fixed-name cache like this one MUST be added to
+    ``readers._FIXED_LIVE_SCRATCH``, or the age-based sweep will silently
+    reap it after 2 days."""
+    srcs = sorted(glob.glob(os.path.join(BOOKS_DIR, "*.txt")))
+    digest = hashlib.sha1()
+    for src in srcs:
+        with open(src, "rb") as f:
+            digest.update(os.path.basename(src).encode() + b"\0" + f.read())
+    out_dir = os.path.join(cache_dir, digest.hexdigest()[:16])
+    if os.path.isdir(out_dir):
+        return out_dir
+    os.makedirs(cache_dir, exist_ok=True)
+    tmp_dir = tempfile.mkdtemp(dir=cache_dir)
+    for src in srcs:
+        name = os.path.basename(src)
+        with open(src, encoding="utf-8", errors="ignore", newline="") as f:
+            text = f.read().lstrip("\ufeff")
+        text = text.replace("\r\n", "\n")
+        frames = "".join(f"{_DELIM}{name}{_DELIM}{line}" for line in text.split("\n"))
+        with open(os.path.join(tmp_dir, name + ".wire"), "w", encoding="utf-8", newline="") as f:
+            f.write(frames)
+    try:
+        os.rename(tmp_dir, out_dir)  # atomic publish; readers never see a partial dir
+    except OSError:  # another caller published the same digest first
+        shutil.rmtree(tmp_dir, ignore_errors=True)
     return out_dir
 
 
 @register(
     "wordcount_refwire",
-    oracle=r"""
+    oracle=rf"""
     SELECT word, COUNT(*) AS cnt
     FROM (
         SELECT UNNEST(list_filter(string_split_regex(content, '\s+'), t -> t <> ''))
             AS word
-        FROM (SELECT regexp_replace(content, '^\x{FEFF}', '') AS content
-              FROM read_text('/root/reference/books/*.txt'))
+        FROM (SELECT regexp_replace(content, '^\x{{FEFF}}', '') AS content
+              FROM read_text('{BOOKS_DIR}/*.txt'))
     )
     GROUP BY word
     """,
@@ -238,13 +251,13 @@ def wordcount_refwire(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_wordcount_refwire",
-    oracle=r"""
+    oracle=rf"""
     SELECT word, COUNT(*) AS cnt
     FROM (
         SELECT UNNEST(list_filter(string_split_regex(content, '\s+'), t -> t <> ''))
             AS word
-        FROM (SELECT regexp_replace(content, '^\x{FEFF}', '') AS content
-              FROM read_text('/root/reference/books/*.txt'))
+        FROM (SELECT regexp_replace(content, '^\x{{FEFF}}', '') AS content
+              FROM read_text('{BOOKS_DIR}/*.txt'))
     )
     GROUP BY word
     """,
@@ -291,8 +304,6 @@ def sink_roundtrip_refwire(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture corpus contains no delimiter bytes, which is exactly the
     assumption the reference itself lives on.
     """
-    import shutil as _shutil
-
     from pythonmapreduce_spark.catalog import load
 
     register_refwire(spark)
@@ -311,7 +322,7 @@ def sink_roundtrip_refwire(spark: SparkSession, sf_dir: str) -> DataFrame:
     # invocation's entry-rmtree (same (pid, app, input) key from a
     # newSession clone) cannot delete the wire files mid-flight
     with SCRATCH_LOCK:
-        _shutil.rmtree(out_dir, ignore_errors=True)
+        shutil.rmtree(out_dir, ignore_errors=True)
         docs = load(spark, sf_dir, "documents").select(
             F.col("source").alias("file_name"), F.col("text").alias("chunk")
         )

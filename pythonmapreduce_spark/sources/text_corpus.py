@@ -19,6 +19,8 @@ the reference lacks entirely (/root/reference/mapper_node.py:23-37).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -152,16 +154,17 @@ def inverted_index_text(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Reference-corpus golden queries: the two jobs the reference actually ships
 # (/root/reference/mapreduce_wc.py:3-11, mapreduce_inverted.py:3-11), run
-# over the reference's OWN books/ corpus and oracle-checked, so an external
-# verification run certifies byte-level reference parity — not just the
-# pytest goldens. The corpus path is a fixed read-only fixture (sf_dir is
-# accepted for the registry signature but the corpus does not scale with it).
+# over a books/ corpus like the reference's and oracle-checked, so an
+# external verification run certifies byte-level reference parity — not just
+# the pytest goldens. The corpus is a small read-only fixture shipped inside
+# the package (sf_dir is accepted for the registry signature but the corpus
+# does not scale with it): four UTF-8 books, one with a leading BOM, with
+# tabs, blank lines, punctuation and mixed case.
 # ---------------------------------------------------------------------------
 
 # Spark side reads the DIRECTORY (globs trigger a noisy streaming-metadata
 # probe per query); the DuckDB oracle needs the explicit *.txt glob.
-_BOOKS_DIR = "/root/reference/books"
-_BOOKS_GLOB = "/root/reference/books/*.txt"
+BOOKS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "books")
 
 
 @register(
@@ -174,19 +177,19 @@ _BOOKS_GLOB = "/root/reference/books/*.txt"
         -- Spark's text reader strips a leading UTF-8 BOM; read_text keeps
         -- it, so strip it here for token parity.
         FROM (SELECT filename, regexp_replace(content, '^\x{{FEFF}}', '') AS content
-              FROM read_text('{_BOOKS_GLOB}'))
+              FROM read_text('{BOOKS_DIR}/*.txt'))
     )
     GROUP BY word
     """,
 )
 def wordcount_text_books(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reference word count over the reference's books/ corpus.
+    """Reference word count over the books/ corpus (``BOOKS_DIR``).
 
     Same tokenizer contract as `wordcount` (split \\s+, drop empties,
     case-sensitive); line-based ingestion is token-equivalent to the
     oracle's whole-file read because newlines are themselves \\s+.
     """
-    return wordcount_text(read_text_corpus(spark, [_BOOKS_DIR]))
+    return wordcount_text(read_text_corpus(spark, [BOOKS_DIR]))
 
 
 @register(
@@ -202,7 +205,7 @@ def wordcount_text_books(spark: SparkSession, sf_dir: str) -> DataFrame:
         -- Spark's text reader strips a leading UTF-8 BOM; read_text keeps
         -- it, so strip it here for token parity.
         FROM (SELECT filename, regexp_replace(content, '^\x{{FEFF}}', '') AS content
-              FROM read_text('{_BOOKS_GLOB}'))
+              FROM read_text('{BOOKS_DIR}/*.txt'))
     )
     GROUP BY word
     """,
@@ -212,7 +215,7 @@ def inverted_index_text_books(spark: SparkSession, sf_dir: str) -> DataFrame:
     basenames, ','-joined (array cells are canonicalizer-hostile; the
     reference's Python-set ordering is an artifact, so sorted is the
     contract — mapreduce_inverted.py:11's list(set(files)))."""
-    corpus = read_text_corpus(spark, [_BOOKS_DIR]).select(
+    corpus = read_text_corpus(spark, [BOOKS_DIR]).select(
         F.element_at(F.split(F.col("file_name"), "/"), -1).alias("file_name"), "line"
     )
     toks = F.filter(F.split(F.col("line"), r"\s+"), lambda t: t != F.lit(""))

@@ -104,73 +104,6 @@ def test_registry_tier1_flags_unattested_and_oracle_upgraded() -> None:
     assert unregistered == ["ghost_query_not_registered"]
 
 
-def test_noise_gate_classify_bands() -> None:
-    # sub-floor min = suspicious-fast (broken/pruned plan), never a pass;
-    # the floor is NOT widened by --factor (steal only slows runs).
-    from tools.noise_gate import BANDS, classify
-
-    assert classify(0.30, 0.26, 0.36, 1.0) == "in_band"
-    assert classify(0.36, 0.26, 0.36, 1.0) == "in_band"
-    assert classify(0.40, 0.26, 0.36, 1.0) == "above"
-    assert classify(0.40, 0.26, 0.36, 1.25) == "in_band"  # degraded boot
-    assert classify(0.10, 0.26, 0.36, 1.25) == "below"
-    # the r09 additions are present with their BASELINE.md bands
-    assert BANDS["auc_roc"] == (0.23, 0.31)
-    assert BANDS["join_asof_nearest"] == (0.35, 0.45)
-
-
-def test_noise_gate_bands_match_baseline_table() -> None:
-    # The BANDS constants are hand-copies of BASELINE.md's per-query
-    # band table; this parses the table back and pins equality, so a
-    # band update in one place without the other fails here (the
-    # mechanical staleness check ADVICE r09 asked for). Covers the
-    # shared "window_named_clause / join_asof_nearest" row where the
-    # gated query takes the SECOND range.
-    from tools.noise_gate import BANDS, bands_from_baseline
-
-    baseline = REPO / "BASELINE.md"
-    if not baseline.exists():
-        pytest.skip("BASELINE.md absent")
-    assert bands_from_baseline(baseline) == BANDS
-
-
-def test_newest_bench_refs_and_warm_mix_coverage() -> None:
-    # The gate's auto-factor divides warm-mix timings by the newest
-    # BENCH file's per-query references — those references must exist
-    # for every mix query (all eight are headline bench queries) and be
-    # positive, or the factor silently degrades to fewer samples.
-    from tools.noise_gate import WARM_MIX, newest_bench_refs
-
-    refs = newest_bench_refs(REPO)
-    if not refs:
-        pytest.skip("no BENCH_r*.json in repo")
-    missing = [q for q in WARM_MIX if refs.get(q, 0) <= 0]
-    assert missing == []
-
-
-def test_bands_from_baseline_synthetic_rows(tmp_path: Path) -> None:
-    # Pins the parser's edge rules on a synthetic table: shared rows map
-    # the i-th name to the i-th range, parenthetical descriptions are
-    # stripped before the split, decoy ranges inside the note
-    # parenthetical are ignored (only leading ranges count), and
-    # non-gated rows don't contribute.
-    from tools.noise_gate import bands_from_baseline
-
-    f = tmp_path / "BASELINE.md"
-    f.write_text(
-        "| other_query (desc) | 9.9–9.99 s | x | y |\n"
-        "| auc_roc (exact Mann–Whitney, a/b collapse) | 0.23–0.31 s "
-        "(pre-reshape 0.235–0.303 decoy) | plan | same |\n"
-        "| window_named_clause / join_asof_nearest | 0.25–0.35 s / "
-        "0.35–0.45 s (4 runs each) | plan | same |\n"
-    )
-    got = bands_from_baseline(f)
-    assert got == {
-        "auc_roc": (0.23, 0.31),
-        "join_asof_nearest": (0.35, 0.45),
-    }
-
-
 def test_project_window_failed_before_tier1() -> None:
     # registry.ordered_names() sorts FAILED as tier 0 BEFORE tier-1
     # (unattested/oracle-upgraded) rows; the projection must splice tier1

@@ -56,6 +56,48 @@ def test_iter_materialize_checkpoint_dir(spark, sf_smoke, _restore_conf, tmp_pat
     assert rows
 
 
+@pytest.mark.parametrize(
+    ("mode", "ckpt_dir"),
+    [("localCheckpoint", False), ("persist", False), ("checkpoint", True), ("checkpoint", False)],
+    ids=["localCheckpoint", "persist", "checkpoint", "checkpoint_fallback"],
+)
+def test_iter_materialize_is_eager(spark, _restore_conf, tmp_path, mode, ckpt_dir) -> None:
+    """Every mode runs a Spark job before it returns. collocation_pmi reads
+    an ``observe()`` metric right after iter_materialize, and
+    ``Observation.get`` blocks forever if no action ran on the plan — so the
+    job must exist BEFORE the metric is read."""
+    from pyspark.sql import Observation
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    prev_dir = jsc.checkpointDir()
+    # SparkContext has no public way to unset the checkpoint dir; the
+    # fallback case needs it unset, and neither case may leak a dir
+    set_dir = getattr(jsc, "checkpointDir_$eq")
+    if ckpt_dir:
+        sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    else:
+        set_dir(spark._jvm.scala.Option.empty())
+    group = f"eager_{mode}_{ckpt_dir}"
+    spark.conf.set(CONF_KEY, mode)
+    sc.setJobGroup(group, "iter_materialize eagerness")
+    try:
+        obs = Observation()
+        df = spark.range(10).observe(obs, F.count(F.lit(1)).alias("n"))
+        if mode == "checkpoint" and not ckpt_dir:
+            with pytest.warns(UserWarning, match="falling back to localCheckpoint"):
+                out = iter_materialize(df)
+        else:
+            out = iter_materialize(df)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)), f"{mode}: no job ran"
+        assert obs.get["n"] == 10
+        out.unpersist()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        set_dir(prev_dir)
+
+
 def test_iter_materialize_rejects_unknown_mode(spark, _restore_conf) -> None:
     spark.conf.set(CONF_KEY, "bogus")
     with pytest.raises(ValueError, match="bogus"):

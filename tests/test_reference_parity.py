@@ -1,7 +1,7 @@
 r"""Golden reference-parity: the engine's word count and inverted index over
-the reference's own books corpus must exactly match an independent
-pure-Python implementation of the reference's semantics
-(/root/reference/mapreduce_wc.py:3-11, mapreduce_inverted.py:3-11):
+the books corpus shipped in the package (``text_corpus.BOOKS_DIR``) must
+exactly match an independent pure-Python implementation of the reference's
+semantics (/root/reference/mapreduce_wc.py:3-11, mapreduce_inverted.py:3-11):
 ``str.split()`` whitespace tokenization, case-sensitive, punctuation kept;
 exact integer sums; distinct file set per token (order normalized by
 sorting — the reference's Python-set order is an artifact, SURVEY §2.1).
@@ -13,15 +13,14 @@ import glob
 import os
 from collections import Counter, defaultdict
 
-import pytest
-
 from pythonmapreduce_spark.sources.text_corpus import (
+    BOOKS_DIR,
     inverted_index_text,
     read_text_corpus,
     wordcount_text,
 )
 
-BOOKS = sorted(glob.glob("/root/reference/books/*.txt"))
+BOOKS = sorted(glob.glob(os.path.join(BOOKS_DIR, "*.txt")))
 
 
 def _pure_python_jobs() -> tuple[Counter, dict[str, set[str]]]:
@@ -29,6 +28,7 @@ def _pure_python_jobs() -> tuple[Counter, dict[str, set[str]]]:
     copy — same contract, plain batch Python)."""
     counts: Counter = Counter()
     postings: dict[str, set[str]] = defaultdict(set)
+    assert BOOKS, f"no books under {BOOKS_DIR}"
     for path in BOOKS:
         base = os.path.basename(path)
         with open(path, encoding="utf-8-sig", errors="ignore") as fh:
@@ -42,7 +42,6 @@ def _pure_python_jobs() -> tuple[Counter, dict[str, set[str]]]:
     return counts, postings
 
 
-@pytest.mark.skipif(not BOOKS, reason="reference corpus not present")
 def test_books_wordcount_golden(spark) -> None:
     corpus = read_text_corpus(spark, BOOKS)
     got = {r["word"]: r["cnt"] for r in wordcount_text(corpus).collect()}
@@ -53,7 +52,6 @@ def test_books_wordcount_golden(spark) -> None:
     assert sum(got.values()) == sum(expected.values())
 
 
-@pytest.mark.skipif(not BOOKS, reason="reference corpus not present")
 def test_books_inverted_index_golden(spark) -> None:
     corpus = read_text_corpus(spark, BOOKS)
     # input_file_name() yields file:///... URIs; normalize to basenames

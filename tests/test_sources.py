@@ -160,3 +160,27 @@ def test_scratch_keyed_reuse_refreshes_mtime(tmp_path, monkeypatch, spark) -> No
     os.utime(path, (old, old))
     assert readers._scratch_keyed(spark, "mtime_probe", "/some/sf_dir") == path
     assert time.time() - os.path.getmtime(path) < readers._SCRATCH_AGE_LIMIT_S
+
+
+def test_frame_books_ignores_stale_frames(tmp_path) -> None:
+    """The refwire frame cache is keyed by the corpus digest: frames left
+    in the fixed-name cache by an earlier or absent corpus (an empty dir,
+    a book no longer shipped) are never served, and a second call reuses
+    the published frames."""
+    import glob
+
+    from pythonmapreduce_spark.sources.refwire import _frame_books
+    from pythonmapreduce_spark.sources.text_corpus import BOOKS_DIR
+
+    cache = tmp_path / "refwire_books"
+    (cache / "stale").mkdir(parents=True)
+    (cache / "gone_book.txt.wire").write_text("#\r#gone_book.txt#\r#stale words")
+
+    out = _frame_books(str(cache))
+    books = sorted(os.path.basename(p) for p in glob.glob(os.path.join(BOOKS_DIR, "*.txt")))
+    assert books and sorted(os.listdir(out)) == [b + ".wire" for b in books]
+    assert _frame_books(str(cache)) == out
+    # framed like the reference, with the leading BOM dropped
+    with open(os.path.join(out, books[0] + ".wire"), encoding="utf-8", newline="") as fh:
+        first = fh.read()
+    assert first.startswith(f"#\r#{books[0]}#\r#") and "\ufeff" not in first

@@ -441,8 +441,7 @@ def main() -> int:
         "Watermark key state 4→5→2), covering both state classes.",
         "Wall-time exponents carry the usual per-micro-batch fixed cost",
         "(state-store instance creation + commit barriers dominate at",
-        "these sizes — see the stream_stream_left_join band note in",
-        "BASELINE.md), so b(time) under-states data sensitivity; b(state)",
+        "these sizes), so b(time) under-states data sensitivity; b(state)",
         "is the honest scale axis for streaming.",
         "",
     ]

@@ -9,10 +9,11 @@ Usage: python tools/sync_counts.py [--check]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pythonmapreduce_spark.plans import registry  # noqa: E402
 
@@ -24,14 +25,6 @@ def main() -> int:
     n_o = len(registry.ORACLES)
 
     # (file, pattern, replacement) — patterns anchored to the count phrasing.
-    n_bench = None
-    try:
-        import bench
-
-        n_bench = len(bench.HEADLINE)
-    except Exception:  # noqa: BLE001
-        pass
-
     edits = [
         (
             "README.md",
@@ -49,11 +42,6 @@ def main() -> int:
             f"{n_q} registered as of",
         ),
     ]
-    if n_bench is not None:
-        edits += [
-            ("BASELINE.md", r"\b\d+ headline queries", f"{n_bench} headline queries"),
-            ("BASELINE.md", r"headline_total, \d+ queries", f"headline_total, {n_bench} queries"),
-        ]
 
     stale = False
     for path, pat, repl in edits:
@@ -66,8 +54,7 @@ def main() -> int:
                 with open(path, "w") as f:
                     f.write(new)
                 print(f"updated {path}: {pat!r} -> {repl!r}")
-    print(f"registry: {n_q} queries, {n_o} oracle-backed, "
-          f"{n_q - n_o} rows-only, bench headline {n_bench}")
+    print(f"registry: {n_q} queries, {n_o} oracle-backed, {n_q - n_o} rows-only")
     if check and stale:
         print("STALE: docs do not match the registry; run tools/sync_counts.py")
         return 1
