@@ -18,12 +18,16 @@ Scale notes per operator:
   volume is Σ deg(v)²/2 over the oriented (lower-endpoint) adjacency —
   the standard node-iterator bound. All joins are equi-joins on vertex
   keys (shuffle hash / sort-merge); no cartesian anywhere.
-- pagerank_iter, bfs_distances and kcore_rounds loop over a checkpointed
-  adjacency base (_sym_adjacency). A checkpointed base enters the plan
-  as ``Scan ExistingRDD`` with UnknownPartitioning, so it is NOT
-  co-partitioned with the loop state: each query shuffles the adjacency
-  once for its state join on the vertex key, and AQE reuses that
-  exchange across rounds. Per round only the O(V) state moves. State
+- pagerank_iter, bfs_distances and kcore_rounds loop over one adjacency
+  base (_sym_adjacency), hash-partitioned on the vertex key by its own
+  groupBy. pagerank_iter and bfs_distances are fixed-depth loops built
+  as ONE plan, so they take the base unmaterialized: every round's
+  state join on the vertex key is co-partitioned with it, and AQE
+  reuses the single adjacency exchange in every round. kcore_rounds
+  runs an action per peeling round, so it checkpoints the base (which
+  then re-enters each round as ``Scan ExistingRDD`` with
+  UnknownPartitioning and is shuffled again inside each round).
+  Per round only the O(V) state moves. State
   flows through shuffle joins, never a broadcast (at 100 TB,
   V-proportional state must not land on the driver).
 """
@@ -62,8 +66,8 @@ _EDGES_CTE = """
 
 
 def _sym_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialized symmetric ADJACENCY LISTS: (vtx, nbrs) — one row per
-    vertex, neighbors as an array. The loop base for pagerank_iter,
+    """Symmetric ADJACENCY LISTS: (vtx, nbrs) — one row per vertex,
+    neighbors as an array. The loop base for pagerank_iter,
     bfs_distances and kcore_rounds.
 
     Built straight from the per-order baskets (basket_adjacency_rows), not
@@ -74,13 +78,19 @@ def _sym_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges: the basket groupBy on l_orderkey and the neighbor
     collect_set on vtx.
 
-    Why arrays instead of (src, dst) edge rows: a checkpointed base
-    re-enters the plan as ``Scan ExistingRDD`` with UnknownPartitioning,
-    so each query shuffles it once for its state join (AQE then reuses
-    that exchange across rounds). As edge rows that shuffle is 2|E| rows
-    × 16 bytes; as adjacency rows it is |V| rows carrying |E|+|V| longs
-    — about half the bytes and a V-sized join cardinality instead of 2E.
-    The propagation itself becomes join-on-vertex → explode(nbrs), and
+    Returned unmaterialized and hash-partitioned on ``vtx``: a
+    single-plan loop joins its state on the vertex key co-partitioned
+    with this base, and AQE reuses the one ``vtx`` exchange in every
+    round. Materializing it would cost that: a checkpointed base
+    re-enters the plan as ``Scan ExistingRDD`` with UnknownPartitioning
+    under AQE, so the first round join shuffles the adjacency a second
+    time. Only kcore_rounds, which runs an action per round, pays that
+    to avoid rebuilding the base each round.
+
+    Why arrays instead of (src, dst) edge rows: a round join moves |V|
+    rows carrying |E|+|V| longs instead of 2|E| rows × 16 bytes — about
+    half the bytes and a V-sized join cardinality instead of 2E. The
+    propagation itself becomes join-on-vertex → explode(nbrs), and
     per-vertex degree is size(nbrs) — free, no second aggregate.
 
     Degree-skew bound: one vertex's row is O(deg) and is built in ONE
@@ -90,11 +100,11 @@ def _sym_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     Neighbor order within ``nbrs`` is unspecified; every consumer
     aggregates with order-independent (min/count) or rounding-absorbed
     (float-sum) semantics."""
-    return iter_materialize(basket_adjacency_rows(_baskets(spark, sf_dir)))
+    return basket_adjacency_rows(_baskets(spark, sf_dir))
 
 
-def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """Full (node, pr) vector after 3 iterations, or None on an empty
+def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full (node, pr) vector after 3 iterations; no rows on an empty
     graph. Factored out of the registered query so tests can assert
     global invariants (Σ pr = 1) the top-20 projection hides."""
     # Round 12: adjacency-array loop base (see _sym_adjacency) — the
@@ -103,11 +113,13 @@ def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     adj = _sym_adjacency(spark, sf_dir).select(
         "vtx", "nbrs", F.size("nbrs").alias("d")
     )
-    # |V| is one scalar folded into the teleport literal.
-    n_nodes = adj.count()
-    if n_nodes == 0:
-        return None
-    teleport = 0.15 / n_nodes
+    # |V| is an in-plan scalar subquery, not a count() action. It counts
+    # the rows with d > 0, which is every row: basket_adjacency_rows
+    # emits a vertex only when it has a neighbor. Reading nbrs keeps the
+    # subquery on the base's own vtx exchange; a plain count(*) is
+    # column-pruned into a second, vtx-only exchange.
+    n_nodes = adj.agg(F.count_if(F.col("d") > 0)).scalar()
+    teleport = F.lit(0.15) / n_nodes
     # Iteration-1 specialization (superstep-0 constant folding): the
     # uniform init makes every rank the literal 1/|V|, so each vertex
     # sends the constant (1/|V|)/d to every neighbor — fold it into the
@@ -118,10 +130,10 @@ def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     ranks = (
         adj.select(
             F.explode("nbrs").alias("dst"),
-            (F.lit(1.0 / n_nodes) / F.col("d")).alias("t"),
+            (F.lit(1.0) / n_nodes / F.col("d")).alias("t"),
         )
         .groupBy("dst")
-        .agg((F.lit(teleport) + 0.85 * F.sum("t")).alias("pr"))
+        .agg((teleport + 0.85 * F.sum("t")).alias("pr"))
         .withColumnRenamed("dst", "src")
     )
     for _ in range(2):
@@ -132,7 +144,7 @@ def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame | None:
                 (F.col("pr") / F.col("d")).alias("t"),
             )
             .groupBy("dst")
-            .agg((F.lit(teleport) + 0.85 * F.sum("t")).alias("pr"))
+            .agg((teleport + 0.85 * F.sum("t")).alias("pr"))
             .withColumnRenamed("dst", "src")
         )
     return ranks
@@ -338,22 +350,17 @@ def pagerank_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per iteration: ranks ⋈ edges on the source vertex, contributions
     pr/deg flow along out-edges, sum per destination, re-seed with the
     teleport term. The symmetric edge set guarantees no dangling mass
-    (every node has out-degree ≥ 1). Ranks stay O(V); the checkpointed
-    adjacency base has no known partitioning, so the query shuffles it
-    once for the rank join and reuses that exchange in every later
-    iteration (see the module notes). Fixed iteration
-    count keeps the computation a finite DAG, which is what makes the
-    unrolled-CTE oracle expressible; scores ×1000 then rounded to 6dp so
-    the cross-engine float-summation drift stays below the compare
-    precision. Top-20 with vertex-id tiebreak.
+    (every node has out-degree ≥ 1). Ranks stay O(V); the adjacency base
+    is shuffled once, on the vertex key its own groupBy produced, and
+    every iteration's rank join reuses that exchange (see the module
+    notes). Fixed iteration count keeps the computation a finite DAG,
+    which is what makes the unrolled-CTE oracle expressible; scores
+    ×1000 then rounded to 6dp so the cross-engine float-summation drift
+    stays below the compare precision. Top-20 with vertex-id tiebreak.
+    An empty graph yields no rows.
     """
-    ranks = _pagerank_ranks(spark, sf_dir)
-    if ranks is None:
-        # Degenerate (empty-partition) corpus: no vertices, empty result
-        # with the stable schema.
-        return spark.createDataFrame([], "node bigint, pr_millis double")
     return (
-        ranks.select(
+        _pagerank_ranks(spark, sf_dir).select(
             F.col("src").alias("node"),
             (F.round(F.col("pr") * 1000, 6) + 0.0).alias("pr_millis"),
         )
@@ -406,10 +413,11 @@ def bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     they cover both classic iterative-graph dataflows).
 
     Each round relaxes dist(v) = min(dist(v), min_{u→v} dist(u)+1) as a
-    union + min-aggregate over the checkpointed adjacency base: one
-    vertex-key equi-join and one partial+final min per hop; the distance
-    table stays O(V). The base is shuffled once for the first join and
-    that exchange is reused by the later hops (see the module notes).
+    union + min-aggregate over the adjacency base: one vertex-key
+    equi-join and one partial+final min per hop; the distance table
+    stays O(V). The base is shuffled once, on the vertex key its own
+    groupBy produced, and every hop's join reuses that exchange (see the
+    module notes).
     Bounded hop count makes the computation a finite DAG (the unrolled
     oracle); the unbounded variant is the same loop with a convergence
     count, exactly like dedup_clusters. Output: distance histogram
@@ -930,8 +938,10 @@ def kcore_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle), and each peeling round filters the |V|-row base + the
     # exploded neighbors against the survivor set instead of
     # semi-joining the 2|E| edge rows twice. Counts are order-
-    # independent — identical survivor sets (oracle green).
-    adj = _sym_adjacency(spark, sf_dir)
+    # independent — identical survivor sets (oracle green). Each round
+    # is its own action, so the base is materialized once here rather
+    # than rebuilt from the baskets every round.
+    adj = iter_materialize(_sym_adjacency(spark, sf_dir))
     alive = None
     counts = []
     for r in range(1, 4):

@@ -2002,11 +2002,15 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT CAST(a.n AS BIGINT) AS n_ref, CAST(b.n AS BIGINT) AS n_cur,
            ROUND(list_cosine_similarity(a.c, b.c), 6) + 0.0 AS centroid_cosine,
-           ROUND(sqrt(list_dot_product(
+           -- list_zip pads a NULL (empty-half) centroid with NULLs,
+           -- which list_dot_product rejects: an empty half is NULL l2
+           CASE WHEN a.c IS NOT NULL AND b.c IS NOT NULL THEN
+               ROUND(sqrt(list_dot_product(
                      list_transform(list_zip(a.c, b.c),
                                     p -> p[1] - p[2]),
                      list_transform(list_zip(a.c, b.c),
-                                    p -> p[1] - p[2]))), 6) AS centroid_l2
+                                    p -> p[1] - p[2]))), 6)
+           END AS centroid_l2
     FROM a, b
     """,
 )
@@ -2023,10 +2027,12 @@ def embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (64 coordinate sums per group, map-side partials — round 12 fused
     the two per-half aggregates, halving the corpus passes; the split
     point still needs its own max(vec_id) pass, pruned to one column)
-    and a 1x1 join of the two group rows — nothing but 128 doubles past
-    the aggregate. Per-coordinate means divide identically on both
-    engines (same sums, same counts, same order as the per-half
-    aggregates they replace); emitted at 6dp.
+    and one global aggregate over the two group rows — nothing but 128
+    doubles past the aggregate. That global aggregate always yields ONE
+    row: a half with no vectors gives NULL n and NULL metrics, like the
+    oracle's global-aggregate CTEs. Per-coordinate means divide
+    identically on both engines (same sums, same counts, same order as
+    the per-half aggregates they replace); emitted at 6dp.
     """
     v = _vectors(spark, sf_dir).select(
         "vec_id", _as_double(F.col("embedding")).alias("ve")
@@ -2042,12 +2048,17 @@ def embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.sum(F.col("ve")[i]).alias(f"s{i}") for i in range(64)],
     )
     arr = F.array(*[F.col(f"s{i}") / F.col("n") for i in range(64)])
-    # 2-row result table, materialized: both half-selectors read it, and
-    # without the cut each would re-run the corpus aggregate.
-    centroids = iter_materialize(sums.select("is_ref", "n", arr.alias("c")))
-    a = centroids.where(F.col("is_ref")).select("n", "c")
-    b = centroids.where(~F.col("is_ref")).select(
-        F.col("n").alias("n2"), F.col("c").alias("c2")
+    # Pivot the (at most) two half rows into ONE row with a global
+    # aggregate, so an empty half still yields the row, with its n, its
+    # centroid and both metrics NULL; each max() sees at most one
+    # non-NULL value. coalesce(1) puts the half rows in one partition,
+    # so the pivot needs no exchange of its own.
+    ref, cur = F.col("is_ref"), ~F.col("is_ref")
+    ab = sums.select("is_ref", "n", arr.alias("a")).coalesce(1).agg(
+        F.max(F.when(ref, F.col("n"))).alias("n"),
+        F.max(F.when(ref, F.col("a"))).alias("c"),
+        F.max(F.when(cur, F.col("n"))).alias("n2"),
+        F.max(F.when(cur, F.col("a"))).alias("c2"),
     )
     dot = F.aggregate(
         F.zip_with("c", "c2", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
@@ -2065,7 +2076,7 @@ def embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda acc, x: acc + x,
         )
     )
-    return a.crossJoin(b).select(
+    return ab.select(
         F.col("n").cast("long").alias("n_ref"),
         F.col("n2").cast("long").alias("n_cur"),
         (F.round(dot / (na * nb), 6) + 0.0).alias("centroid_cosine"),

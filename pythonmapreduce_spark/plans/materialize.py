@@ -1,10 +1,13 @@
 """Iteration-base materialization, cluster-parametric.
 
-Every iterative operator here (PageRank/BFS/CC loops, the checkpointed
-edge bases) must cut its lineage each round or re-execute the whole
-upstream plan per iteration (measured ~8 of dedup_clusters' 9.6 s at
-sf0.01 without it). HOW to cut it is a deployment decision, not an
-algorithm decision:
+An iterative operator that runs an action per round (CC/label-propagation
+loops, k-core peeling, the checkpointed edge bases they share) must cut
+its lineage each round or re-execute the whole upstream plan per
+iteration (measured ~8 of dedup_clusters' 9.6 s at sf0.01 without it).
+A fixed-depth loop built as ONE plan (pagerank_iter, bfs_distances) does
+not: the plan executes once and AQE reuses its exchanges across rounds,
+so it materializes nothing. HOW to cut lineage is a deployment decision,
+not an algorithm decision:
 
 - ``localCheckpoint`` (default): executor-local blocks, zero
   configuration — right for local[] and sandboxed runs, but blocks die

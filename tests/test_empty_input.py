@@ -16,6 +16,7 @@ import pytest
 
 from pythonmapreduce_spark.catalog import SCHEMAS, TABLES
 from pythonmapreduce_spark.plans import registry
+from tests.harness import run_compare
 
 registry.load_all()
 
@@ -44,6 +45,27 @@ def test_runs_on_empty_input(name: str, spark, empty_sf_dir: str) -> None:
     assert n >= 0
 
 
+def _sf_with_table(spark, dirname: str, table: str, rows: list) -> str:
+    """sf0.001 layout (symlinked) with ``table`` replaced by ``rows``."""
+    src = "/root/testdata/sf0.001"
+    assert os.path.isdir(src)
+    d = os.path.join(tempfile.gettempdir(), dirname)
+    os.makedirs(d, exist_ok=True)
+    for t in TABLES:
+        target = os.path.join(d, f"{t}.parquet")
+        if t != table and not os.path.exists(target):
+            os.symlink(os.path.join(src, f"{t}.parquet"), target)
+    target = os.path.join(d, f"{table}.parquet")
+    if not os.path.exists(target):
+        tmp = target + ".dir"
+        spark.createDataFrame(rows, SCHEMAS[table]).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
+        os.replace(os.path.join(tmp, part), target)
+    return d
+
+
 @pytest.fixture(scope="session")
 def short_doc_sf_dir(spark) -> str:
     """sf0.001 layout with documents replaced by a degenerate corpus:
@@ -53,30 +75,14 @@ def short_doc_sf_dir(spark) -> str:
     bigram build was FATAL on these rows (sequence(1, 0) descends to
     [1, 0]; element_at(toks, 0) throws) — round-12 regression pin for the
     zip_with/slice form."""
-    src = "/root/testdata/sf0.001"
-    assert os.path.isdir(src)
-    d = os.path.join(tempfile.gettempdir(), "pmr_short_doc_sf")
-    os.makedirs(d, exist_ok=True)
-    for t in TABLES:
-        target = os.path.join(d, f"{t}.parquet")
-        if t != "documents" and not os.path.exists(target):
-            os.symlink(os.path.join(src, f"{t}.parquet"), target)
-    target = os.path.join(d, "documents.parquet")
-    if not os.path.exists(target):
-        rows = [  # (doc_id, text, lang, source, n_chars)
-            (0, "", "en", "synthetic", 0),
-            (1, "   ", "en", "synthetic", 3),
-            (2, "solitary", "en", "synthetic", 8),
-            (3, "two tokens", "en", "synthetic", 10),
-            (4, "a b c d e", "de", "synthetic", 9),
-        ]
-        tmp = target + ".dir"
-        spark.createDataFrame(rows, SCHEMAS["documents"]).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        os.replace(os.path.join(tmp, part), target)
-    return d
+    rows = [  # (doc_id, text, lang, source, n_chars)
+        (0, "", "en", "synthetic", 0),
+        (1, "   ", "en", "synthetic", 3),
+        (2, "solitary", "en", "synthetic", 8),
+        (3, "two tokens", "en", "synthetic", 10),
+        (4, "a b c d e", "de", "synthetic", 9),
+    ]
+    return _sf_with_table(spark, "pmr_short_doc_sf", "documents", rows)
 
 
 # The bigram/qgram builders (the ANSI-fatal family) plus their heaviest
@@ -96,3 +102,37 @@ _SHORT_DOC_QUERIES = [
 def test_runs_on_short_docs(name: str, spark, short_doc_sf_dir: str) -> None:
     df = registry.QUERIES[name](spark, short_doc_sf_dir)
     assert df.count() >= 0
+
+
+def test_single_plan_graph_loops_on_empty_graph(spark, empty_sf_dir: str) -> None:
+    # No vertices: both loops yield no rows, with their usual schema.
+    pr = registry.QUERIES["pagerank_iter"](spark, empty_sf_dir)
+    assert pr.collect() == []
+    assert pr.schema.simpleString() == "struct<node:bigint,pr_millis:double>"
+    bfs = registry.QUERIES["bfs_distances"](spark, empty_sf_dir)
+    assert bfs.collect() == []
+    assert bfs.schema.simpleString() == "struct<dist:int,n_nodes:bigint>"
+
+
+@pytest.fixture(scope="session")
+def one_vector_sf_dir(spark) -> str:
+    """sf0.001 layout whose embeddings table holds ONE vector (vec_id 7):
+    the split point floor(7 / 2) = 3 leaves the reference half empty."""
+    vec = [float(i % 5) - 2.0 for i in range(64)]
+    return _sf_with_table(spark, "pmr_one_vector_sf", "embeddings", [(7, vec, 1)])
+
+
+@pytest.mark.parametrize("fixture", ["one_vector_sf_dir", "empty_sf_dir"])
+def test_embedding_drift_empty_half_matches_oracle(
+    fixture: str, spark, request
+) -> None:
+    # An empty half is one row with that half's n and the metrics NULL,
+    # as in the oracle, whose per-half CTEs are global aggregates.
+    sf_dir = request.getfixturevalue(fixture)
+    run_compare(
+        spark,
+        sf_dir,
+        "embedding_drift",
+        registry.QUERIES["embedding_drift"],
+        registry.ORACLES["embedding_drift"],
+    )

@@ -812,28 +812,44 @@ def test_pagerank_round_is_one_equi_join_one_agg_exchange(spark, sf_smoke) -> No
     assert len(dst_exchanges) == 1, plan
 
 
-def test_pagerank_loop_base_builds_in_two_exchanges(spark, sf_smoke) -> None:
+def test_loop_base_two_exchanges_and_single_plan_loops_build_no_job(
+    spark, sf_smoke
+) -> None:
     # The adjacency loop base builds straight from the order baskets: one
     # shuffle for the basket groupBy (l_orderkey), one for the neighbor
     # collect_set (vtx). An edge distinct() or a union with the mirrored
     # edges (which re-plans the whole basket subtree) fails here.
+    from pythonmapreduce_spark.operators.graphs import _sym_adjacency
     from pythonmapreduce_spark.plans import materialize
 
-    passes: list[str] = []
-    materialize.PLAN_CAPTURE = passes
-    try:
-        registry.QUERIES["pagerank_iter"](spark, sf_smoke)
-    finally:
-        materialize.PLAN_CAPTURE = None
-    assert len(passes) == 1, passes
-    base = passes[0]
+    base = _plan(_sym_adjacency(spark, sf_smoke))
     exchanges = [
-        ln.split("hashpartitioning(", 1)[1]
+        ln.split("hashpartitioning(", 1)[1].split("#", 1)[0]
         for ln in base.splitlines()
         if "Arguments: hashpartitioning(" in ln
     ]
-    assert sorted(x.split("#", 1)[0] for x in exchanges) == ["l_orderkey", "vtx"], base
+    assert sorted(exchanges) == ["l_orderkey", "vtx"], base
     assert "Union" not in base, base
+    # pagerank_iter and bfs_distances take that base unmaterialized, so
+    # their round joins reuse its vtx partitioning: building either query
+    # runs no Spark job and materializes nothing. A checkpoint, a count()
+    # action or any other eager step at build time fails here. The job
+    # count is read rather than final-plan strings, which AQE repeats
+    # per stage.
+    sc = spark.sparkContext
+    for name in ("pagerank_iter", "bfs_distances"):
+        group = f"build_{name}"
+        passes: list[str] = []
+        materialize.PLAN_CAPTURE = passes
+        sc.setJobGroup(group, "single-plan loop build")
+        try:
+            registry.QUERIES[name](spark, sf_smoke)
+        finally:
+            materialize.PLAN_CAPTURE = None
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+        assert passes == [], name
 
 
 def test_hits_only_nested_loops_are_one_row_normalizer_broadcasts(
