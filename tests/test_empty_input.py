@@ -136,3 +136,50 @@ def test_embedding_drift_empty_half_matches_oracle(
         registry.QUERIES["embedding_drift"],
         registry.ORACLES["embedding_drift"],
     )
+
+
+@pytest.fixture(scope="session")
+def no_match_sf_dir(spark) -> str:
+    """documents with text but none of the query terms join/table/spark."""
+    rows = [
+        (0, "scan filter column", "en", "synthetic", 18),
+        (1, "order by tables joins sparks", "en", "synthetic", 28),
+    ]
+    return _sf_with_table(spark, "pmr_bm25_no_match_sf", "documents", rows)
+
+
+@pytest.fixture(scope="session")
+def blank_sf_dir(spark) -> str:
+    """documents whose every text is empty or whitespace: dl = avgdl = 0."""
+    rows = [
+        (0, "", "en", "synthetic", 0),
+        (1, " \t ", "en", "synthetic", 3),
+    ]
+    return _sf_with_table(spark, "pmr_bm25_blank_sf", "documents", rows)
+
+
+@pytest.fixture(scope="session")
+def one_doc_sf_dir(spark) -> str:
+    """a one-document corpus that matches two query terms."""
+    rows = [(5, "spark join spark scan", "en", "synthetic", 21)]
+    return _sf_with_table(spark, "pmr_bm25_one_doc_sf", "documents", rows)
+
+
+@pytest.mark.parametrize(
+    "fixture, n_rows",
+    [("no_match_sf_dir", 0), ("blank_sf_dir", 0), ("one_doc_sf_dir", 1)],
+)
+def test_bm25_rank_degenerate_corpus_matches_oracle(
+    fixture: str, n_rows: int, spark, request
+) -> None:
+    # Only documents holding a query term are scored, so a blank corpus
+    # (avgdl = 0) never reaches the length division that ANSI would fail.
+    sf_dir = request.getfixturevalue(fixture)
+    assert registry.QUERIES["bm25_rank"](spark, sf_dir).count() == n_rows
+    run_compare(
+        spark,
+        sf_dir,
+        "bm25_rank",
+        registry.QUERIES["bm25_rank"],
+        registry.ORACLES["bm25_rank"],
+    )

@@ -4,6 +4,8 @@ gates (no cartesian products in the wedge join)."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.operators.graphs import (
@@ -113,16 +115,23 @@ def test_graph_plans_have_no_cartesian(spark, sf_smoke) -> None:
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
-def test_bm25_broadcasts_model_sides(spark, sf_smoke) -> None:
-    """bm25_rank: the idf join must be a broadcast (model side is
-    O(|query terms|)); the only nested-loop joins are the two deliberate
-    1-row stat broadcasts; the ranking is TakeOrderedAndProject."""
+def test_bm25_scores_in_scan_stage(spark, sf_smoke) -> None:
+    """bm25_rank scores each document in its scan row: the one exchange
+    is the 1-row corpus aggregate (SinglePartition, no hash shuffle), it
+    broadcasts back as the only join, nothing explodes, the documents
+    are read from the materialized base (no parquet rescan), and the
+    ranking is TakeOrderedAndProject."""
     plan = _plan(registry.QUERIES["bm25_rank"](spark, sf_smoke))
-    assert "BroadcastHashJoin" in plan
-    # formatted plans list each node in the tree AND the details section,
-    # so count the tree form (node name + join type)
-    assert plan.count("BroadcastNestedLoopJoin Cross") <= 2
+    # formatted plans list each node in the tree AND the details section;
+    # count the details headers, "(N) Exchange", which skip BroadcastExchange
+    assert len(re.findall(r"^\(\d+\) Exchange$", plan, re.M)) == 1, plan
+    assert "SinglePartition" in plan
+    assert "hashpartitioning" not in plan
+    # the tree form carries the join type, the details form does not
+    assert plan.count("BroadcastNestedLoopJoin Cross") == 1
     assert "CartesianProduct" not in plan
+    assert "Generate" not in plan
+    assert "Scan parquet" not in plan
     assert "TakeOrderedAndProject" in plan
 
 

@@ -110,9 +110,19 @@ NOTES = {
         "survives 100 TB. One exchange on the term key, one on (d1,d2)."
     ),
     "bm25_rank": (
-        "query-term filter sits in the scan stage (non-matching tokens never "
-        "shuffle); idf and corpus stats broadcast; TakeOrderedAndProject "
-        "caps the ranking at k rows per partition."
+        "every document is scored in the scan stage from its own per-term "
+        "count array; the one exchange is the 1-row SinglePartition corpus "
+        "aggregate (N, avgdl, df → idf), which broadcasts back as the only "
+        "join; TakeOrderedAndProject caps the ranking at k rows per "
+        "partition."
+    ),
+    "hybrid_search_rrf": (
+        "the lexical leg is bm25_rank's scorer (one 1-row SinglePartition "
+        "corpus aggregate broadcast onto the scan-stage scores); the "
+        "semantic leg broadcasts the one query vector onto the unshuffled "
+        "embeddings scan; each leg's row_number <= 100 becomes a "
+        "TakeOrderedAndProject, so the full-outer fusion join and the final "
+        "top-20 touch at most 200 rows, with no exchange of their own."
     ),
     "semdedup": (
         "fixed-K (deployment constant, fixture 64) assignment as a "
