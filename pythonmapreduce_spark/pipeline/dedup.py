@@ -1079,8 +1079,8 @@ def remove_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each re-ran the parquet scan + regex tokenize otherwise. The
     # checkpoint holds the token arrays once — the same bytes the old
     # plan recomputed twice more (measured 2.10 → 1.73 s min-of-6
-    # interleaved at sf0.1, identical rows); on a cluster the
-    # iterMaterialize conf picks persist/checkpoint instead.
+    # interleaved at sf0.1, identical rows); on a cluster with a
+    # checkpoint dir it is a reliable checkpoint instead.
     toks = iter_materialize(
         docs.select(
             "doc_id", F.expr("filter(split(text, '\\\\s+'), t -> t != '')").alias("t")

@@ -1223,8 +1223,8 @@ def semdedup_k(
     the normalize scan ~6× and the mapInPandas GEMM 3× per execution
     (measured 1.80 → 1.48 s min-of-6 interleaved at sf0.1, identical
     rows). The unit-vector checkpoint stores exactly the bytes the old
-    plan recomputed thrice; on a cluster the iterMaterialize conf picks
-    persist/checkpoint instead (plans/materialize.py)."""
+    plan recomputed thrice; on a cluster with a checkpoint dir it is a
+    reliable checkpoint instead (plans/materialize.py)."""
     e = iter_materialize(_semdedup_unit_vectors(spark, sf_dir))
     if centroids is None:
         centroids = e.where(F.col("vec_id") <= k).select(

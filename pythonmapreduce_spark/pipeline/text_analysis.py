@@ -892,7 +892,7 @@ def collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``observe()`` metric summed DURING the same materialization pass
     (CollectMetrics is an accumulator riding the existing job: no extra
     pass, no extra checkpoint bytes, delivered by the eager
-    materialization action in every iterMaterialize mode) and folded
+    materialization action on both checkpoint paths) and folded
     into the projection as a literal. Same value, verified equal to the
     full-table aggregate at sf0.1 (265,704).
     """

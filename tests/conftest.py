@@ -12,8 +12,7 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pythonmapreduce-spark-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    yield s
+    return get_spark("pythonmapreduce-spark-tests")
 
 
 @pytest.fixture(scope="session")

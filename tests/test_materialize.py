@@ -1,27 +1,50 @@
-"""Deployment-parametric materialization + AQE skew handling.
+"""Iteration-base materialization + AQE skew handling.
 
 These gates cover the two cluster behaviors the sandbox can't show
-naturally: how iterative bases survive executor loss (materialization
-mode) and how AQE splits a skewed join at scale.
+naturally: how iterative bases survive executor loss (reliable
+checkpoint exactly when the deployment set a checkpoint dir) and how
+AQE splits a skewed join at scale.
 """
 
 from __future__ import annotations
+
+import warnings
+from contextlib import contextmanager
 
 import pytest
 
 from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.plans import registry
-from pythonmapreduce_spark.plans.materialize import CONF_KEY, iter_materialize
+from pythonmapreduce_spark.plans.materialize import iter_materialize
 
 registry.load_all()
 
 
-@pytest.fixture
-def _restore_conf(spark):
-    prev = spark.conf.get(CONF_KEY, "localCheckpoint")
-    yield
-    spark.conf.set(CONF_KEY, prev)
+@contextmanager
+def _checkpoint_dir(spark, path):
+    """Run the block with the session's checkpoint dir at ``path`` (None:
+    unset), then restore the prior one. SparkContext has no public way to
+    unset the dir, so both go through the JVM setter; no test leaks it."""
+    jsc = spark.sparkContext._jsc.sc()
+    prev = jsc.checkpointDir()
+    set_dir = getattr(jsc, "checkpointDir_$eq")
+    set_dir(spark._jvm.scala.Option.empty())
+    if path is not None:
+        spark.sparkContext.setCheckpointDir(str(path))
+    try:
+        yield
+    finally:
+        set_dir(prev)
+
+
+@pytest.fixture(params=[False, True], ids=["localCheckpoint", "checkpoint"])
+def ckpt_dir(request, spark, tmp_path):
+    """Yield ``(path, is_set)``; the session's checkpoint dir is ``path``
+    when set, unset otherwise — the two paths iter_materialize takes."""
+    path = tmp_path / "ckpt"
+    with _checkpoint_dir(spark, path if request.param else None):
+        yield path, request.param
 
 
 def _cluster_rows(spark, sf_smoke):
@@ -31,77 +54,45 @@ def _cluster_rows(spark, sf_smoke):
     )
 
 
-def test_iter_materialize_modes_agree(spark, sf_smoke, _restore_conf) -> None:
-    """One conf flips every iterative base; results must be identical
-    under all three modes (checkpoint falls back with a warning here —
-    no checkpoint dir is configured in the test session)."""
-    spark.conf.set(CONF_KEY, "localCheckpoint")
-    base = _cluster_rows(spark, sf_smoke)
-    assert base, "fixture should produce clusters"
-
-    spark.conf.set(CONF_KEY, "persist")
-    assert _cluster_rows(spark, sf_smoke) == base
-
-    spark.conf.set(CONF_KEY, "checkpoint")
-    with pytest.warns(UserWarning, match="falling back to localCheckpoint"):
-        assert _cluster_rows(spark, sf_smoke) == base
+@pytest.fixture(scope="module")
+def unset_rows(spark, sf_smoke):
+    with _checkpoint_dir(spark, None):
+        return _cluster_rows(spark, sf_smoke)
 
 
-def test_iter_materialize_checkpoint_dir(spark, sf_smoke, _restore_conf, tmp_path) -> None:
-    """With a checkpoint dir configured, reliable checkpoint engages (no
-    fallback warning) and a graph query still answers correctly."""
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    spark.conf.set(CONF_KEY, "checkpoint")
-    rows = registry.QUERIES["graph_degree"](spark, sf_smoke).collect()
-    assert rows
+def test_iter_materialize_checkpoint_dir(spark, sf_smoke, ckpt_dir, unset_rows) -> None:
+    """The checkpoint dir alone picks the path: reliable checkpoint files
+    appear under it only when it is set, no warning either way, and
+    dedup_clusters answers identically on both paths."""
+    path, is_set = ckpt_dir
+    assert unset_rows, "fixture should produce clusters"
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert _cluster_rows(spark, sf_smoke) == unset_rows
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
+    files = [p for p in path.rglob("*") if p.is_file()]
+    assert bool(files) == is_set, files[:5]
 
 
-@pytest.mark.parametrize(
-    ("mode", "ckpt_dir"),
-    [("localCheckpoint", False), ("persist", False), ("checkpoint", True), ("checkpoint", False)],
-    ids=["localCheckpoint", "persist", "checkpoint", "checkpoint_fallback"],
-)
-def test_iter_materialize_is_eager(spark, _restore_conf, tmp_path, mode, ckpt_dir) -> None:
-    """Every mode runs a Spark job before it returns. collocation_pmi reads
+def test_iter_materialize_is_eager(spark, ckpt_dir) -> None:
+    """Both paths run a Spark job before they return. collocation_pmi reads
     an ``observe()`` metric right after iter_materialize, and
     ``Observation.get`` blocks forever if no action ran on the plan — so the
     job must exist BEFORE the metric is read."""
     from pyspark.sql import Observation
 
     sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-    prev_dir = jsc.checkpointDir()
-    # SparkContext has no public way to unset the checkpoint dir; the
-    # fallback case needs it unset, and neither case may leak a dir
-    set_dir = getattr(jsc, "checkpointDir_$eq")
-    if ckpt_dir:
-        sc.setCheckpointDir(str(tmp_path / "ckpt"))
-    else:
-        set_dir(spark._jvm.scala.Option.empty())
-    group = f"eager_{mode}_{ckpt_dir}"
-    spark.conf.set(CONF_KEY, mode)
+    group = f"eager_{ckpt_dir[1]}"
     sc.setJobGroup(group, "iter_materialize eagerness")
     try:
         obs = Observation()
-        df = spark.range(10).observe(obs, F.count(F.lit(1)).alias("n"))
-        if mode == "checkpoint" and not ckpt_dir:
-            with pytest.warns(UserWarning, match="falling back to localCheckpoint"):
-                out = iter_materialize(df)
-        else:
-            out = iter_materialize(df)
-        assert list(sc.statusTracker().getJobIdsForGroup(group)), f"{mode}: no job ran"
+        out = iter_materialize(spark.range(10).observe(obs, F.count(F.lit(1)).alias("n")))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)), "no job ran"
         assert obs.get["n"] == 10
         out.unpersist()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-        set_dir(prev_dir)
-
-
-def test_iter_materialize_rejects_unknown_mode(spark, _restore_conf) -> None:
-    spark.conf.set(CONF_KEY, "bogus")
-    with pytest.raises(ValueError, match="bogus"):
-        iter_materialize(spark.range(3))
 
 
 def test_aqe_splits_skewed_join(spark) -> None:
