@@ -8,7 +8,8 @@ surface mandated by SURVEY.md §2.3, as idiomatic Spark DataFrame/SQL plans
 optimized by Catalyst.
 
 Layout:
-    session.py    SparkSession builder (AQE, Arrow, UTC, tuned shuffle partitions)
+    session.py    SparkSession builder (AQE, Arrow, UTC, zstd shuffle codec,
+                  tuned shuffle partitions)
     catalog.py    explicit-schema loaders for the test tables + temp views
     plans/        query registry: name -> (callable, oracle SQL) consumed by
                   __spark_entry__.py
