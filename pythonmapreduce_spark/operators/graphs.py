@@ -13,23 +13,26 @@ linear in lineitem overall, which is what survives 100 TB. The priority
 filter prunes at the orders scan before anything joins.
 
 Scale notes per operator:
-- triangle_count uses the src-centered wedge join with the src<dst<dst2
-  total order, so each triangle is generated exactly once and wedge
-  volume is Σ deg(v)²/2 over the oriented (lower-endpoint) adjacency —
-  the standard node-iterator bound. All joins are equi-joins on vertex
-  keys (shuffle hash / sort-merge); no cartesian anywhere.
-- pagerank_iter, bfs_distances and kcore_rounds loop over one adjacency
-  base (_sym_adjacency), hash-partitioned on the vertex key by its own
-  groupBy. pagerank_iter and bfs_distances are fixed-depth loops built
-  as ONE plan, so they take the base unmaterialized: every round's
-  state join on the vertex key is co-partitioned with it, and AQE
-  reuses the single adjacency exchange in every round. kcore_rounds
-  runs an action per peeling round, so it checkpoints the base (which
-  then re-enters each round as ``Scan ExistingRDD`` with
-  UnknownPartitioning and is shuffled again inside each round).
-  Per round only the O(V) state moves. State
-  flows through shuffle joins, never a broadcast (at 100 TB,
-  V-proportional state must not land on the driver).
+- triangle_count and graph_clustering_coef enumerate wedges from the
+  adjacency base: each vertex pairs its higher-id neighbours, so the
+  u<v<w total order generates each triangle exactly once and wedge
+  volume is Σ deg(v)²/2 over the oriented adjacency — the standard
+  node-iterator bound. A wedge (v, w) closes when w is in v's neighbour
+  array: one equi-join on the vertex key, no cartesian anywhere.
+- Round-join rule: pagerank_iter and bfs_distances loop over the
+  adjacency base (_sym_adjacency), hash-partitioned on vtx by its own
+  groupBy, each as ONE plan. Every join of O(V) loop state to it
+  goes through _round_join, a shuffle-hash join that builds the
+  adjacency: AQE keeps the join on the base's own exchange and runs no
+  broadcast job, and per round only the state moves. The build side is
+  one AQE-coalesced partition of the adjacency; a super-node row is
+  ROADMAP item 4.
+- The edge-row loops (graph_cc_rounds, label_propagation_communities,
+  hits_hub_authority) join O(V) state to the 2|E| edge rows unhinted:
+  there AQE's broadcast of the state, taken only under the broadcast
+  threshold, is what saves the edge shuffle.
+- Only hits_hub_authority, kcore_rounds (see there) and the star loops,
+  whose rounds are driver-loop actions, checkpoint at build time.
 """
 
 from __future__ import annotations
@@ -67,8 +70,8 @@ _EDGES_CTE = """
 
 def _sym_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric ADJACENCY LISTS: (vtx, nbrs) — one row per vertex,
-    neighbors as an array. The loop base for pagerank_iter,
-    bfs_distances and kcore_rounds.
+    neighbors as an array. The base of pagerank_iter, bfs_distances,
+    kcore_rounds, the triangle pair and graph_common_neighbors.
 
     Built straight from the per-order baskets (basket_adjacency_rows), not
     from ``_edges``: the neighbor sets are the symmetric closure of the
@@ -78,14 +81,11 @@ def _sym_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges: the basket groupBy on l_orderkey and the neighbor
     collect_set on vtx.
 
-    Returned unmaterialized and hash-partitioned on ``vtx``: a
-    single-plan loop joins its state on the vertex key co-partitioned
-    with this base, and AQE reuses the one ``vtx`` exchange in every
-    round. Materializing it would cost that: a checkpointed base
-    re-enters the plan as ``Scan ExistingRDD`` with UnknownPartitioning
-    under AQE, so the first round join shuffles the adjacency a second
-    time. Only kcore_rounds, which runs an action per round, pays that
-    to avoid rebuilding the base each round.
+    Returned unmaterialized and hash-partitioned on ``vtx``: a round join
+    reaches it through _round_join and stays on this exchange (see the
+    module notes). A checkpointed base, as in kcore_rounds, re-enters as
+    ``Scan ExistingRDD`` with UnknownPartitioning under AQE, so a round
+    join shuffles the adjacency a second time.
 
     Why arrays instead of (src, dst) edge rows: a round join moves |V|
     rows carrying |E|+|V| longs instead of 2|E| rows × 16 bytes — about
@@ -101,6 +101,15 @@ def _sym_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates with order-independent (min/count) or rounding-absorbed
     (float-sum) semantics."""
     return basket_adjacency_rows(_baskets(spark, sf_dir))
+
+
+def _round_join(adj: DataFrame, state: DataFrame, on) -> DataFrame:
+    """Join O(V) loop state to the vtx-partitioned adjacency as a
+    shuffle-hash join that builds the adjacency. Unhinted, AQE would
+    broadcast the adjacency in an extra job; hinted, the join stays on
+    the base's own exchange, and the state still streams in its own
+    order, so the shuffle bytes do not change."""
+    return adj.hint("shuffle_hash").join(state, on)
 
 
 def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -138,7 +147,7 @@ def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for _ in range(2):
         ranks = (
-            adj.join(ranks, F.col("vtx") == F.col("src"))
+            _round_join(adj, ranks, F.col("vtx") == F.col("src"))
             .select(
                 F.explode("nbrs").alias("dst"),
                 (F.col("pr") / F.col("d")).alias("t"),
@@ -150,10 +159,10 @@ def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranks
 
 
-def basket_pair_rows(baskets: DataFrame, c1: str, c2: str) -> DataFrame:
+def basket_pair_rows(baskets: DataFrame, c1: str, c2: str, *keep: str) -> DataFrame:
     """All ordered pairs (a < b) from each basket's sorted distinct
-    ``parts`` array, one pair per output row — shared by the graph edge
-    base and basket_rules.
+    ``parts`` array, one pair per output row with the ``keep`` columns —
+    shared by the graph edge base, the triangle wedges and basket_rules.
 
     Round 12 shape: a TWO-LEVEL explode (posexplode each anchor, then
     explode the anchor's tail slice) instead of round 11's
@@ -171,8 +180,9 @@ def basket_pair_rows(baskets: DataFrame, c1: str, c2: str) -> DataFrame:
     exactly one pass over the fact table. p1 < p2 by construction
     (sorted distinct array, tail slice strictly after the anchor)."""
     return baskets.select(
-        "parts", F.posexplode("parts").alias("_i", c1)
+        *keep, "parts", F.posexplode("parts").alias("_i", c1)
     ).select(
+        *keep,
         c1,
         F.explode(
             F.expr("slice(parts, _i + 2, size(parts) - _i - 1)")
@@ -221,6 +231,20 @@ def _baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _both_directions(e: DataFrame) -> DataFrame:
+    """Each (src, dst) edge of ``e`` in both directions, from one read of
+    ``e``: a union of the two directions re-reads e's distinct exchange
+    and re-runs its final aggregate once per branch."""
+    return e.select(
+        F.inline(
+            F.array(
+                F.struct("src", "dst"),
+                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+            )
+        )
+    )
+
+
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected edge set (src < dst) of the part co-occurrence graph.
 
@@ -255,15 +279,12 @@ def graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree distribution of the co-occurrence graph.
 
     The first question asked of any production graph (skew detection:
-    a power-law hub is what breaks the wedge join below). Symmetrize by
-    union, count per node, histogram the counts — two partial-agg
-    exchanges, output is |distinct degrees| rows.
+    a power-law hub is what breaks the wedge join below). Explode each
+    edge to its two endpoints, count per node, histogram the counts — two
+    partial-agg exchanges, output is |distinct degrees| rows.
     """
-    e = iter_materialize(_edges(spark, sf_dir))
-    sym = e.select(F.col("src").alias("node")).unionAll(
-        e.select(F.col("dst").alias("node"))
-    )
-    deg = sym.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
+    node = _edges(spark, sf_dir).select(F.explode(F.array("src", "dst")).alias("node"))
+    deg = node.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
     return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_nodes"))
 
 
@@ -280,28 +301,33 @@ def graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
 def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact triangle count via the node-iterator wedge join.
 
-    Wedges (u<v, u<w, v<w) are built from the lower endpoint's adjacency
-    (self-equi-join on src), then closed against the edge set with one
-    more equi-join — each triangle counted exactly once because the
-    vertex total order orients it uniquely. Both joins shuffle on vertex
-    keys; wedge volume is the classic Σ deg² bound, kept small here by
-    the order-size-bounded co-occurrence degree. One global count at the
-    end (partial counts combine map-side).
+    Wedges (u<v, u<w, v<w) explode from the lower endpoint's adjacency
+    row, then close against v's neighbour array in one equi-join on the
+    vertex key — each triangle counted exactly once because the vertex
+    total order orients it uniquely. Wedge volume is the classic Σ deg²
+    bound, kept small here by the order-size-bounded co-occurrence
+    degree. One global count at the end (partial counts combine
+    map-side).
     """
-    # Materialize the edge set once: the plan references it three times
-    # (two wedge sides + the closing probe) and Catalyst's exchange reuse
-    # does not canonicalize the three differently-aliased self-join
-    # subtrees (measured: 12 parquet scans, 0 ReusedExchange without
-    # this). On a cluster this is persist() of the oriented edge list.
-    e = iter_materialize(_edges(spark, sf_dir))
-    e1 = e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-    e2 = e.select(F.col("src").alias("u2"), F.col("dst").alias("w"))
-    wedges = e1.join(
-        e2, (F.col("u") == F.col("u2")) & (F.col("v") < F.col("w"))
-    ).select("v", "w")
-    closing = e.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    return wedges.join(closing, ["v", "w"]).agg(
-        F.count(F.lit(1)).alias("n_triangles")
+    return _triangles(spark, sf_dir).agg(F.count(F.lit(1)).alias("n_triangles"))
+
+
+def _triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every triangle once, as (u, v, w) with u < v < w: the pairs of
+    u's higher neighbours (the two-level explode of basket_pair_rows, so
+    a row stays O(deg)), kept when w is a neighbour of v. The join is
+    unhinted: AQE sizes it at run time (at sf0.1 it broadcasts the
+    wedges and the adjacency stays on its own exchange)."""
+    adj = _sym_adjacency(spark, sf_dir)
+    higher = adj.select(
+        F.col("vtx").alias("u"),
+        F.array_sort(F.filter("nbrs", lambda x: x > F.col("vtx"))).alias("parts"),
+    )
+    wedges = basket_pair_rows(higher, "v", "w", "u")
+    return (
+        adj.join(wedges, F.col("vtx") == F.col("v"))
+        .where(F.array_contains("nbrs", F.col("w")))
+        .select("u", "v", "w")
     )
 
 
@@ -435,7 +461,7 @@ def bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node", F.lit(0).alias("dist"))
     )
     for _ in range(3):
-        relaxed = adj.join(dist, F.col("vtx") == F.col("node")).select(
+        relaxed = _round_join(adj, dist, F.col("vtx") == F.col("node")).select(
             F.explode("nbrs").alias("node"), (F.col("dist") + 1).alias("dist")
         )
         dist = (
@@ -474,24 +500,20 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     of triangle_count (Σ common over all edges = 3 × triangles, pinned
     by tests/test_graphs.py's cross-check).
 
-    Adjacency sets build in one partial-agg exchange (collect_set);
-    each edge joins its two endpoint sets on the vertex key and the
+    Each edge (src < dst) explodes from src's adjacency row with src's
+    set attached, joins dst's set on the vertex key, and the
     intersection runs as a JVM array expression per edge — work is
     Σ(deg(u)+deg(v)) over edges, never a pair explosion. The ≥5 floor
     keeps the emitted edge list to the structurally-embedded ties.
     """
-    e = iter_materialize(_edges(spark, sf_dir))
-    sym = e.unionAll(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    adj = sym.groupBy(F.col("src").alias("node")).agg(
-        F.collect_set("dst").alias("nbrs")
-    )
+    adj = _sym_adjacency(spark, sf_dir)
+    e = adj.select(
+        F.col("vtx").alias("src"), F.col("nbrs").alias("na"), F.explode("nbrs").alias("dst")
+    ).where(F.col("src") < F.col("dst"))
     common = F.size(F.array_intersect("na", "nb"))
     union_size = F.size(F.array_union("na", "nb"))
     return (
-        e.join(adj.withColumnsRenamed({"node": "u", "nbrs": "na"}), F.col("src") == F.col("u"))
-        .join(adj.withColumnsRenamed({"node": "v", "nbrs": "nb"}), F.col("dst") == F.col("v"))
+        e.join(adj.withColumnsRenamed({"vtx": "v", "nbrs": "nb"}), F.col("dst") == F.col("v"))
         .where(common >= 5)
         .select(
             "src",
@@ -539,35 +561,23 @@ def graph_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vertex local clustering coefficient: 2·T(v) / (deg(v)·(deg−1))
     — how close each part's neighborhood is to a clique, the community-
     structure metric on top of triangle_count's global tally (same
-    oriented triangle enumeration, now unioned back to all three corners
-    before a vertex-key count).
+    oriented triangle enumeration, each triangle exploded to its three
+    corners before a vertex-key count).
 
-    Same scale spine as the rest of the graph tier: the oriented edge
-    base materializes once (iter_materialize), wedge volume is the Σdeg²
-    bound, per-vertex triangle counts and degrees are combine-enabled
-    aggregates on vertex keys, and the final join is |V|-sized. Degree<2
-    vertices are excluded (coefficient undefined).
+    Same scale spine as the rest of the graph tier: one adjacency base
+    gives both the triangles (_triangles, Σdeg² wedges) and the degrees
+    (size(nbrs)), the per-vertex triangle count is a combine-enabled
+    aggregate over the exploded corners, and the final join is
+    |V|-sized. Degree<2 vertices are excluded (coefficient undefined).
     """
-    e = iter_materialize(_edges(spark, sf_dir))
-    sym = e.select(F.col("src").alias("v")).unionAll(
-        e.select(F.col("dst").alias("v"))
-    )
-    deg = sym.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    e1 = e.select(F.col("src").alias("u"), F.col("dst").alias("v1"))
-    e2 = e.select(F.col("src").alias("u2"), F.col("dst").alias("w"))
-    wedges = e1.join(
-        e2, (F.col("u") == F.col("u2")) & (F.col("v1") < F.col("w"))
-    ).select("u", "v1", "w")
-    closing = e.select(F.col("src").alias("v1"), F.col("dst").alias("w"))
-    tris = wedges.join(closing, ["v1", "w"]).select(
-        F.col("u").alias("a"), F.col("v1").alias("b"), F.col("w").alias("c")
-    )
     tv = (
-        tris.select(F.col("a").alias("v"))
-        .unionAll(tris.select(F.col("b").alias("v")))
-        .unionAll(tris.select(F.col("c").alias("v")))
+        _triangles(spark, sf_dir)
+        .select(F.explode(F.array("u", "v", "w")).alias("v"))
         .groupBy("v")
         .agg(F.count(F.lit(1)).cast("long").alias("t"))
+    )
+    deg = _sym_adjacency(spark, sf_dir).select(
+        F.col("vtx").alias("v"), F.size("nbrs").cast("long").alias("d")
     )
     return (
         deg.join(tv, "v", "left")
@@ -627,16 +637,16 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed on the vertex, each half-round is one equi-join +
     combine-enabled sum, normalizers are 1-row broadcasts, and the
     deterministic top-20 (score desc, id) bounds the output. More rounds
-    = the same pair of joins repeated over iter_materialize'd bases.
+    = the same pair of joins repeated over checkpointed score tables.
     """
     # Round-12 note: the adjacency-array base measured neutral here
     # (1.032 interleaved, steal 11 — ONE propagation join can't amortize
     # the base's collect_list shuffle). Edge-row form kept, same
     # adjudication as LPA/CC.
+    # Checkpointed: both score-table checkpoints below read it, and each
+    # would rebuild the edge set from lineitem in its own job.
     e = iter_materialize(_edges(spark, sf_dir))
-    sym = e.select("src", "dst").unionAll(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = _both_directions(e)
     # Each raw score table feeds BOTH its own normalizer aggregate and the
     # next half-round (and h1 additionally the final join). Without
     # materializing these O(V) tables Catalyst re-executes the |E|-sized
@@ -726,19 +736,16 @@ def graph_cc_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     converged are part of the CONTRACT, not an error.
 
     Per round: one vertex-key equi-join against the label table + a
-    min-aggregate — labels O(V), edges reused from the materialized
-    base, the iterative shape pagerank/bfs share. On a cluster rounds
-    continue to convergence with iter_materialize cutting lineage.
+    min-aggregate — labels O(V), the edge exchange reused by every round
+    of the one plan. A run to convergence is a driver loop that cuts
+    lineage per round, as bigstar_fixpoint does.
     """
     # Round-12 note: the adjacency-array base measured ~neutral-to-worse
     # here (1.050 interleaved, steal 15) — two min rounds don't clearly
     # amortize the extra collect_list shuffle. Edge-row form kept (same
     # adjudication as LPA; pagerank/bfs/kcore adopted the base on
     # measured wins).
-    e = iter_materialize(_edges(spark, sf_dir))
-    sym = e.select("src", "dst").unionAll(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = _both_directions(_edges(spark, sf_dir))
     # Round-1 specialization (superstep-0 constant folding): with every
     # initial label equal to the vertex id, round 1's neighbor-min is
     # just min(dst) per src and the least() against the own label is
@@ -747,7 +754,7 @@ def graph_cc_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # appears as a src in the symmetric edge set, so no left join is
     # needed to keep isolated-side rows. Integer min — bit-identical to
     # the general round the oracle unrolls.
-    labels = iter_materialize(
+    labels = (
         sym.groupBy("src")
         .agg(F.min("dst").alias("nbl"))
         .select(
@@ -769,7 +776,6 @@ def graph_cc_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.least(F.col("lbl"), F.coalesce("nbl", F.col("lbl"))).alias("lbl"),
             )
         )
-        labels = iter_materialize(labels)
     return labels.groupBy(F.col("lbl").alias("component")).agg(
         F.count(F.lit(1)).cast("long").alias("n_vertices")
     )
@@ -828,13 +834,14 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     reproduces it exactly (the graph_cc_rounds trick).
 
     Per round: one vertex-key equi-join of the label table against the
-    materialized edge base, a (vertex, label) count aggregate, and a
+    edge rows, a (vertex, label) count aggregate, and a
     per-vertex top-1 expressed as max_by(lbl, (cnt, -lbl)) — a second
     combine-enabled hash aggregate instead of a per-vertex sort window,
     so both round stages take map-side partials and nothing sorts.
-    Labels stay O(V), edges are never re-derived (iter_materialize).
-    Same iterative scale shape as pagerank: state keyed on the vertex,
-    nothing collected, rounds extend to convergence on a cluster.
+    Labels stay O(V); the one plan derives the edges once and AQE reuses
+    their exchange in every round. Same iterative scale shape as
+    pagerank: state keyed on the vertex, nothing collected, rounds
+    extend to convergence on a cluster.
     """
     # Round-12 note: the adjacency-array base (_sym_adjacency) measured
     # 1.16× SLOWER here interleaved (1.790 vs 1.545 min, steal 22) —
@@ -842,10 +849,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     # shuffle the base costs, unlike pagerank/bfs/kcore's 2-3 join
     # rounds. Edge-row form kept; at convergence-depth production runs
     # the adjacency base wins, and flipping it is a 5-line change.
-    e = iter_materialize(_edges(spark, sf_dir))
-    sym = e.select("src", "dst").unionAll(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    sym = _both_directions(_edges(spark, sf_dir))
     # Round-1 specialization (first-iteration constant folding, the
     # standard Pregel superstep-0 trick): every initial label is the
     # vertex id and sym is duplicate-free BY CONSTRUCTION (_edges ends
@@ -855,7 +859,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     # id. One combine-enabled min-aggregate over the edge base replaces
     # the label join + O(E) vote count + per-vertex window; integer
     # min, so bit-identical to the general round the oracle unrolls.
-    labels = iter_materialize(
+    labels = (
         sym.groupBy("src")
         .agg(F.min("dst").alias("lbl"))
         .select(F.col("src").alias("vid"), "lbl")
@@ -878,7 +882,6 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
         labels = votes.groupBy(F.col("src").alias("vid")).agg(
             F.max_by("lbl", F.struct(F.col("cnt"), (-F.col("lbl")).alias("nl"))).alias("lbl")
         )
-        labels = iter_materialize(labels)
     return labels.groupBy(F.col("lbl").alias("community")).agg(
         F.count(F.lit(1)).cast("long").alias("n_vertices")
     )
@@ -924,10 +927,10 @@ def kcore_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     detection, and the standard "find the engaged core" cut for social/
     co-occurrence graphs. Fixed round count makes the intermediate
     survivor sets deterministic, so the unrolled CTE reproduces them
-    exactly (graph_cc_rounds' trick); full peeling runs rounds to
-    fixpoint with iter_materialize cutting lineage.
+    exactly (graph_cc_rounds' trick); full peeling runs the same round
+    in a driver loop to fixpoint.
 
-    Per round: two semi-joins restrict the materialized edge base to the
+    Per round: two semi-joins restrict the checkpointed adjacency to the
     surviving subgraph (vertex-key equi-joins, survivor sets O(V)), then
     one combine-enabled degree count — no edge regeneration, no pair
     explosion. Emits survivors per round; a round losing no vertices is
@@ -938,9 +941,9 @@ def kcore_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle), and each peeling round filters the |V|-row base + the
     # exploded neighbors against the survivor set instead of
     # semi-joining the 2|E| edge rows twice. Counts are order-
-    # independent — identical survivor sets (oracle green). Each round
-    # is its own action, so the base is materialized once here rather
-    # than rebuilt from the baskets every round.
+    # independent — identical survivor sets (oracle green). Checkpointed:
+    # as one plan each round re-reads the base's collect_set, and executor
+    # CPU broke BASELINE.md's rule at sf0.1 in every lazy form measured.
     adj = iter_materialize(_sym_adjacency(spark, sf_dir))
     alive = None
     counts = []
@@ -1043,6 +1046,8 @@ def graph_cc_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     iter_materialize cutting lineage per round. Per round nothing wider
     than (vertex, vertex) int pairs crosses an exchange.
     """
+    # Checkpointed like each star_op round: the driver-loop sites of
+    # ROADMAP item 6, left for their own pass.
     e = iter_materialize(_edges(spark, sf_dir)).select(
         F.col("src").alias("a"), F.col("dst").alias("b")
     )

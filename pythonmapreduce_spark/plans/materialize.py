@@ -1,12 +1,13 @@
 """Iteration-base materialization.
 
-An iterative operator that runs an action per round (CC/label-propagation
-loops, k-core peeling, the checkpointed edge bases they share) must cut
-its lineage each round or re-execute the whole upstream plan per
-iteration (measured ~8 of dedup_clusters' 9.6 s at sf0.01 without it).
-A fixed-depth loop built as ONE plan (pagerank_iter, bfs_distances) does
-not: the plan executes once and AQE reuses its exchanges across rounds,
-so it materializes nothing.
+An iterative operator that runs an action per round (star contraction
+to a fixpoint, dedup's label propagation, k-core peeling) must cut its
+lineage each round or re-execute the whole upstream plan per iteration
+(measured ~8 of dedup_clusters' 9.6 s at sf0.01 without it). A
+fixed-depth loop built as ONE plan (pagerank_iter, bfs_distances,
+graph_cc_rounds, label_propagation_communities) does not: the plan
+executes once and AQE reuses its exchanges across rounds, so it
+materializes nothing.
 
 One rule, decided by what the deployment configured:
 

@@ -6,6 +6,7 @@ these tests are the regression gate for the 100 TB story.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.catalog import load
@@ -780,36 +781,74 @@ def test_triangle_wedge_joins_stay_equi_with_pruned_scans(spark, sf_smoke) -> No
     ), lineitem_schemas
 
 
-def test_pagerank_round_is_one_equi_join_one_agg_exchange(spark, sf_smoke) -> None:
-    # One PageRank round over the checkpointed (edge, degree) base:
-    # ranks join on the source vertex must stay a hash equi-join and the
-    # per-destination sum a partial/final HashAggregate pair around ONE
-    # hashpartitioning exchange on dst — per-round cost at scale is
-    # exactly one shuffle of O(V) rank mass, never a re-shuffle of edges.
-    from pythonmapreduce_spark.operators.graphs import _edges
-    from pythonmapreduce_spark.plans.materialize import iter_materialize
+def _executed_nodes(df) -> list:
+    """Run ``df`` and return every node of its executed (AQE final) plan,
+    entering query stages; a reused exchange is listed, not entered."""
+    df.collect()
+    nodes, todo = [], [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        nodes.append(node)
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            todo.append(node.plan())
+        elif name != "ReusedExchange":
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.size()))
+    return nodes
 
-    e = _edges(spark, sf_smoke)
-    sym = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    base = iter_materialize(sym.join(deg, "src"))
-    ranks = base.select("src", "d").dropDuplicates(["src"]).select(
-        "src", F.lit(0.25).alias("pr")
-    )
-    rnd = (
-        base.join(ranks, "src")
-        .groupBy("dst")
-        .agg((F.lit(0.01) + 0.85 * F.sum(F.col("pr") / F.col("d"))).alias("pr"))
-    )
-    plan = _plan(rnd)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    dst_exchanges = [
-        ln
-        for ln in plan.splitlines()
-        if "Arguments: hashpartitioning(dst" in ln
+
+# (query, the rounds' aggregation key, rounds, rounds with a state join):
+# pagerank_iter's first round folds the uniform ranks and joins nothing.
+@pytest.mark.parametrize(
+    "name, round_key, rounds, joins",
+    [("pagerank_iter", "dst", 3, 2), ("bfs_distances", "node", 3, 3)],
+    ids=["pagerank_iter", "bfs_distances"],
+)
+def test_adjacency_round_joins_are_shuffle_hash_on_the_base_exchange(
+    spark, sf_smoke, name: str, round_key: str, rounds: int, joins: int
+) -> None:
+    # Each round joins the O(V) state to the vtx-partitioned adjacency as
+    # a shuffle-hash join that builds the adjacency: AQE keeps it on the
+    # base's own exchange instead of broadcasting the adjacency in an
+    # extra job. Per round exactly one exchange moves the state on the
+    # round's aggregation key, and no join degrades to a cartesian.
+    nodes = _executed_nodes(registry.QUERIES[name](spark, sf_smoke))
+    names = [n.nodeName() for n in nodes]
+    assert "CartesianProduct" not in names
+    assert "BroadcastNestedLoopJoin" not in names
+    vtx_joins = [
+        n for n in nodes if n.nodeName().endswith("Join") and "[vtx#" in n.simpleString(100)
     ]
-    assert len(dst_exchanges) == 1, plan
+    assert len(vtx_joins) == joins, names
+    for j in vtx_joins:
+        assert j.nodeName() == "ShuffledHashJoin", j.simpleString(100)
+        assert "BuildLeft" in j.simpleString(100), j.simpleString(100)
+    broadcasts = [
+        n.output().toString() for n in nodes if n.nodeName() == "BroadcastExchange"
+    ]
+    assert not [b for b in broadcasts if "nbrs#" in b], broadcasts
+    round_exchanges = [
+        n
+        for n in nodes
+        if n.nodeName() == "Exchange"
+        and f"hashpartitioning({round_key}#" in n.simpleString(100)
+    ]
+    assert len(round_exchanges) == rounds, [n.simpleString(100) for n in round_exchanges]
+
+
+SINGLE_PLAN_GRAPH_QUERIES = (
+    "pagerank_iter",
+    "bfs_distances",
+    "graph_cc_rounds",
+    "label_propagation_communities",
+    "triangle_count",
+    "graph_clustering_coef",
+    "graph_common_neighbors",
+    "graph_degree",
+)
 
 
 def test_loop_base_two_exchanges_and_single_plan_loops_build_no_job(
@@ -830,14 +869,14 @@ def test_loop_base_two_exchanges_and_single_plan_loops_build_no_job(
     ]
     assert sorted(exchanges) == ["l_orderkey", "vtx"], base
     assert "Union" not in base, base
-    # pagerank_iter and bfs_distances take that base unmaterialized, so
-    # their round joins reuse its vtx partitioning: building either query
-    # runs no Spark job and materializes nothing. A checkpoint, a count()
-    # action or any other eager step at build time fails here. The job
-    # count is read rather than final-plan strings, which AQE repeats
-    # per stage.
+    # The single-plan graph queries take their bases unmaterialized, so
+    # the loops' round joins reuse the bases' exchanges: building any of
+    # them runs no Spark job and materializes nothing. A checkpoint, a
+    # count() action or any other eager step at build time fails here.
+    # The job count is read rather than final-plan strings, which AQE
+    # repeats per stage.
     sc = spark.sparkContext
-    for name in ("pagerank_iter", "bfs_distances"):
+    for name in SINGLE_PLAN_GRAPH_QUERIES:
         group = f"build_{name}"
         passes: list[str] = []
         materialize.PLAN_CAPTURE = passes

@@ -98,10 +98,12 @@ NOTES = {
         "memory bounded by maxItemsTracked regardless of corpus size."
     ),
     "triangle_count": (
-        "node-iterator wedge join: both joins are vertex-key equi-joins "
-        "(no cartesian, no nested loop); the vertex total order orients "
-        "each triangle exactly once, and wedge volume is the Σ deg² bound "
-        "kept small by the order-size-bounded co-occurrence degree."
+        "node-iterator wedges explode from each vertex's higher neighbours "
+        "in the adjacency base and close in one vertex-key equi-join (no "
+        "cartesian, no nested loop) against the neighbour array; the "
+        "vertex total order orients each triangle exactly once, and wedge "
+        "volume is the Σ deg² bound kept small by the order-size-bounded "
+        "co-occurrence degree. One plan, no checkpoint."
     ),
     "tfidf_cosine_pairs": (
         "partial dot products generated per POSTING LIST (equi-join on the "
@@ -145,10 +147,10 @@ NOTES = {
         "sort both key on doc_id, reusing one partition layout."
     ),
     "graph_clustering_coef": (
-        "the oriented edge base materializes once and feeds wedges, the "
-        "closing probe, AND the degree count; triangle corners union back "
-        "to vertex keys for combine-enabled counting — work stays within "
-        "the wedge bound, output is |V|."
+        "one adjacency base feeds the wedges, the closing probe AND the "
+        "degrees (size(nbrs)); triangle corners explode back to vertex "
+        "keys for combine-enabled counting — work stays within the wedge "
+        "bound, output is |V|. One plan, no checkpoint."
     ),
     "hits_hub_authority": (
         "mutually-recursive two-table update: each half-round is one "
@@ -185,10 +187,11 @@ NOTES = {
         "check; all later aggregates reuse doc_id-keyed exchanges."
     ),
     "label_propagation_communities": (
-        "final community-size aggregate over the checkpointed round-2 "
-        "labels (iter_materialize truncates the per-round lineage — "
-        "tests/test_plans.py pins the per-round shape explicitly: vote "
-        "equi-join + count agg + WindowGroupLimit top-1, no cartesian)."
+        "both rounds in one plan: the edge set is derived once and "
+        "read once per round through its reused exchange; round 1 is a "
+        "min-aggregate, round 2 the vote equi-join + count agg + max_by "
+        "top-1, and the community sizes aggregate last. No checkpoint, "
+        "no cartesian."
     ),
     "search_ndcg_mrr": (
         "offline ranking evaluation with bm25_rank's scan discipline: both "
