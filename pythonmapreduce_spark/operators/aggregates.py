@@ -1118,20 +1118,17 @@ def chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     arm assignment skew by country).
 
     Scale shape: ONE combine-enabled pass over the 100 TB side builds the
-    |segments| x |nations| contingency table, MATERIALIZED so the three
-    downstream consumers (the seg margin, the nat margin, and the cell
-    join) read the |r x c|-row table instead of each re-executing the
-    corpus aggregate — pre-reshape this query ran 3 customer scans with
-    zero exchange reuse (the consumers' pruned column sets differ, so
-    AQE never collapses them). Zero-count cells (which still contribute
-    (0-E)^2/E = E to the statistic — dropping them understates chi2)
-    are restored by crossing the two tiny margins; every window and the
-    final sum run on the |r x c|-row table. The statistic, degrees of
-    freedom, and N are closed-form double math, identical cross-engine
-    at 4dp.
+    |segments| x |nations| contingency table, which its three consumers
+    (the seg margin, the nat margin, and the cell join) read. Zero-count
+    cells (which still contribute (0-E)^2/E = E to the statistic —
+    dropping them understates chi2) are restored by crossing the two tiny
+    margins; every window and the final sum run on the |r x c|-row table.
+    The statistic, degrees of freedom, and N are closed-form double math,
+    identical cross-engine at 4dp.
     """
     from pythonmapreduce_spark.plans.materialize import iter_materialize
 
+    # Kept (c): lazy, the final plan scans customer 3x with no exchange reuse.
     cont = iter_materialize(
         load(spark, sf_dir, "customer")
         .groupBy(F.col("c_mktsegment").alias("seg"), F.col("c_nationkey").alias("nat"))

@@ -83,6 +83,7 @@ def resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence("d0", "d1", F.expr("interval 1 day"))).alias("day")
     )
 
+    # Kept (c): lazy, the final plan scans events 3x instead of 2x.
     observed = iter_materialize(
         events.groupBy(F.col("user_id"), day.alias("day")).agg(
             F.round(F.max_by("value", "event_id"), 4).alias("day_value")
@@ -187,20 +188,17 @@ def funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each stage is a groupBy on user_id joined to the previous stage's
     per-user timestamp — at scale all three stages shuffle on the SAME key
     (user_id), so the exchanges line up and AQE reuses the partitioning;
-    no per-user driver logic, no window over the full event stream.
-
-    s1/s2 are materialized (round 11): each survivor table feeds both the
-    next stage's join and its own step count, and the chained funnel made
-    the re-derivation multiplicative — step 3's count re-ran steps 1 and 2
-    from parquet (6 events scans executed; 3 pruned scans after, one per
-    event type). The checkpoints hold per-user (id, ts) rows only.
+    no per-user driver logic, no window over the full event stream. Each
+    survivor table feeds the next stage's join and its own step count.
     """
     ev = load(spark, sf_dir, "events").select("user_id", "event_type", "ts")
+    # Kept (d): lazy, s1 raises shuffle bytes 3,151 -> 3,752 B at sf0.01.
     s1 = iter_materialize(
         ev.where(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_signup"))
     )
+    # Kept (d): lazy, s2 raises CPU min 0.068 -> 0.080 s (0.007 s spread).
     s2 = iter_materialize(
         ev.where(F.col("event_type") == "click")
         .join(s1, "user_id")
@@ -797,11 +795,10 @@ def anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     Aggregate-then-broadcast twice: |days| rows → 1-row median → 1-row
     MAD — the raw event stream collapses at the first aggregation and
     nothing wider than |days| ever crosses an exchange again. ``daily``
-    is materialized (round 11): the median, the MAD, and the final
-    projection each re-ran the events scan + aggregate otherwise (4
-    scans executed → 1); the checkpoint is |days| rows.
+    stays in the plan: its three consumers reuse its one exchange, so the
+    events scan executes once and building runs no job.
     """
-    daily = iter_materialize(
+    daily = (
         load(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
         .groupBy(F.col("ts").cast("date").alias("day"))
@@ -1447,23 +1444,18 @@ def basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-monotone prune — it is what keeps level-2+ candidate growth
     bounded at scale.
 
-    Round 11 restructure: the old form derived ``items`` (lineitem ⋈
-    urgent → distinct) FIVE times — n_orders, item_count (read twice),
-    and both sides of the pair self-join each re-ran the scan+join
-    (20 parquet scans / 38 exchanges executed). Now ONE scan builds
-    per-order sorted distinct part arrays (collect_set is the map-side-
-    combining dedup; order size ~4 bounds the array), materialized
-    once; pairs explode from each array in-JVM (sorted arrays make
-    p1 < p2 by construction — no self-join, no join-key shuffle of a
-    second lineitem pass), and n_orders/item_count are cheap reads of
-    the same materialized base. Identical rule set — verified row-equal
-    at sf0.001/0.01/0.1 and against the oracle.
+    ONE scan builds per-order sorted distinct part arrays (collect_set
+    is the map-side-combining dedup; order size ~4 bounds the array);
+    pairs explode from each array in-JVM (sorted arrays make p1 < p2 by
+    construction — no self-join, no second lineitem pass), and
+    n_orders/item_count read the same base.
     """
     urgent = (
         load(spark, sf_dir, "orders")
         .where(F.col("o_orderpriority") == "1-URGENT")
         .select("o_orderkey")
     )
+    # Kept (d): lazy raises shuffle bytes 125,468 -> 132,165 B at sf0.01.
     baskets = iter_materialize(
         load(spark, sf_dir, "lineitem")
         .join(urgent, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -2840,12 +2832,11 @@ def stickiness_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output restricted to days where the full join exists; stickiness is
     a single rounded division. At 100 TB the (user, day) reduction is
     the whole trick — events collapse by ~10³ before anything fans out,
-    and the reduced pair set is MATERIALIZED so its two consumers (the
-    30-day fan for MAU, the day count for DAU) read it instead of each
-    re-executing the corpus distinct (pre-reshape: 2 events scans, zero
-    runtime exchange reuse).
+    and the reduced pair set feeds both the 30-day fan (MAU) and the day
+    count (DAU).
     """
     ev = load(spark, sf_dir, "events")
+    # Kept (d): lazy raises shuffle bytes 18,218 -> 22,611 B at sf0.01.
     user_days = iter_materialize(
         ev.select("user_id", F.col("ts").cast("date").alias("day")).distinct()
     )
@@ -3691,11 +3682,7 @@ def cdc_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pythonmapreduce_spark.plans.materialize import iter_materialize
 
-    # Materialized (round 6): the three changelog branches and the
-    # recompute cross-check all consume base, and without a checkpoint
-    # each re-scanned orders (4 scans, zero exchange reuse). base is four
-    # narrow columns — one scan; in production the changelog arrives as a
-    # stream and only the recompute ever touches the base table.
+    # Kept (c): lazy, the final plan scans orders 4x with no exchange reuse.
     base = iter_materialize(
         load(spark, sf_dir, "orders").select(
             "o_orderkey",

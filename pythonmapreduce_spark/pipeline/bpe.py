@@ -121,10 +121,9 @@ def _train_merges(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, str,
             "freq",
         )
     )
-    # the vocabulary table is small relative to the corpus (tens of
-    # thousands of rows at test SFs) — materialize it once (all three
-    # rounds re-scan it) and collapse to a few partitions so per-round
-    # aggregates don't pay 32 near-empty task schedulings per stage
+    # Kept (a): every round collects its best pair to the driver and
+    # re-reads the vocabulary; 8 partitions spare each round's aggregates
+    # 32 near-empty tasks per stage.
     cur = iter_materialize(words.coalesce(8))
     merges: list[tuple[int, str, str, int]] = []
     for rnd in range(1, _ROUNDS + 1):

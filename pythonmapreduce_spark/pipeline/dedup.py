@@ -483,17 +483,14 @@ def _label_propagation(pairs: DataFrame) -> DataFrame:
     dedup_clusters' core, shared with dedup_clusters_verify so the
     contract exercises the REAL implementation on a pair set computed
     once (review r4 finding #6)."""
-    # Undirected edge list, both directions. Materialized ONCE
-    # (localCheckpoint) before the loop: edges is derived from the whole
-    # MinHash-LSH candidate+verify pipeline, and without the checkpoint
-    # every round's neighbor join would re-execute that entire upstream
-    # plan — measured as ~8 of dedup_clusters' 9.6 s at sf0.01.
+    # Undirected edge list, both directions.
     edges = (
         pairs.unionByName(
             pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
         )
         .distinct()
     )
+    # Kept (a): the loop's depth depends on a count the driver reads each round.
     edges = iter_materialize(edges)
     # Round-1 specialization (superstep-0 constant folding, same as the
     # graph tier's LPA/CC): with every initial label equal to the node
@@ -503,6 +500,7 @@ def _label_propagation(pairs: DataFrame) -> DataFrame:
     # join + left-join merge. min() is duplicate-insensitive, so this
     # needs no dup-free precondition; every node appears as an id_a in
     # the symmetrized edge set, so no left join is needed either.
+    # Kept (a): as edges; each round's count compares against these labels.
     labels = iter_materialize(
         edges.groupBy(F.col("id_a").alias("doc_id"))
         .agg(F.min("id_b").alias("nbl"))
@@ -527,6 +525,7 @@ def _label_propagation(pairs: DataFrame) -> DataFrame:
                 ).alias("cluster_id"),
             )
         )
+        # Kept (a): the driver reads the changed count right below.
         new_labels = iter_materialize(new_labels)
         changed = (
             new_labels.alias("n")
@@ -593,10 +592,9 @@ def dedup_clusters_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     label rows."""
     from pythonmapreduce_spark.operators.graphs import bigstar_fixpoint
 
-    # ONE MinHash-LSH run feeds both labelings (the pipeline is ~85% of
-    # the cost; iter_materialize cuts it once) — _label_propagation IS
-    # dedup_clusters' implementation, so the contract still exercises the
-    # registered code path.
+    # ONE MinHash-LSH run feeds both labelings; _label_propagation IS
+    # dedup_clusters' implementation, so the contract exercises it.
+    # Kept (d): lazy raises shuffle bytes 277,066 -> 534,558 B at sf0.01.
     pairs = iter_materialize(
         QUERIES["dedup_near"](spark, sf_dir).select("id_a", "id_b")
     )
@@ -1074,13 +1072,7 @@ def remove_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles, no global index build.
     """
     docs = load(spark, sf_dir, "documents")
-    # toks is materialized (round 11): three consumers (the span-position
-    # base, tokpos's rebuild explode, and the final n_tokens projection)
-    # each re-ran the parquet scan + regex tokenize otherwise. The
-    # checkpoint holds the token arrays once — the same bytes the old
-    # plan recomputed twice more (measured 2.10 → 1.73 s min-of-6
-    # interleaved at sf0.1, identical rows); on a cluster with a
-    # checkpoint dir it is a reliable checkpoint instead.
+    # Kept (d): lazy raises CPU min 0.269 -> 0.307 s at sf0.01 (0.027 s spread).
     toks = iter_materialize(
         docs.select(
             "doc_id", F.expr("filter(split(text, '\\\\s+'), t -> t != '')").alias("t")
@@ -1093,15 +1085,10 @@ def remove_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coverage explode and rebuild sort dominate; at 100 TB the avoided
     # string allocations matter). The oracle keeps md5 over the joined
     # span; the duplicate-span SETS agree because both hashes group by
-    # span content.
-    # Materialized (round 6): dup and covered BOTH consume pos, and
-    # without a checkpoint each re-derived the tokenize + 8x explode +
-    # hash from parquet (4 corpus scans, zero exchange reuse). pos is
-    # (doc_id, span_key, p) ints — checkpointing it keeps the span
-    # derivation single-pass while storing only integer width, never
-    # tokens; the corpus is read exactly twice (here and the rebuild's
-    # tokpos, which genuinely needs the token strings).
-    pos = iter_materialize(
+    # span content. dup and covered each re-derive pos from the toks
+    # checkpoint in their scan stage, which costs less than a checkpoint
+    # pass of its own.
+    pos = (
         toks.where(F.size("t") >= 8)
         .select(
             "doc_id",

@@ -153,6 +153,7 @@ def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's sum over matched terms only.
     """
     terms_sql = ", ".join(f"'{t}'" for t in _QUERY_TERMS)
+    # Kept (d): lazy raises CPU min 0.074 -> 0.145 s at sf0.01.
     base = iter_materialize(
         load(spark, sf_dir, "documents")
         .select(
@@ -234,16 +235,14 @@ def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived from the SAME bigram multiset so the model normalizes exactly;
     (2) each document's bigrams join their probabilities and average.
     The model tables are vocabulary-sized (≪ corpus at scale) and join on
-    the bigram/unigram key. ONE corpus pass (round 6): the explode
-    collapses immediately into the per-(doc, bigram) count table, which
-    is materialized at count width and feeds BOTH the model aggregation
-    and the scoring join — previously the model side and the scoring
-    side each re-derived the tokenize+explode from parquet (4 corpus
-    scans, zero exchange reuse). The per-doc average weights each
+    the bigram/unigram key. ONE corpus pass: the explode collapses
+    immediately into the per-(doc, bigram) count table, which feeds BOTH
+    the model aggregation and the scoring join. The per-doc average weights each
     distinct bigram by its count, which is exactly the per-occurrence
     average. ln on both engines; 4dp round absorbs summation-order
     drift.
     """
+    # Kept (d): lazy raises shuffle bytes 205,157 -> 387,026 B at sf0.01.
     tfd = iter_materialize(
         _doc_bigrams(spark, sf_dir)
         .groupBy("doc_id", "bigram")
@@ -321,13 +320,11 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity stays tractable on a 100 TB corpus. One shuffle on the
     term key, one on the (d1, d2) pair key, norms broadcast-joined.
 
-    The weight table ``w`` is materialized (round 11): FOUR consumers
-    read it — nrm twice (n1/n2 legs) and both sides of the posting-list
-    self-join — and without the cut each re-derived the whole
-    tokenize → bigram explode → tf/df aggregate → idf join chain from
-    parquet (24 corpus scans / 68 exchanges in the executed plan; 1
-    scan / 11 exchanges after). Same bm25_rank discipline: materialize
-    the narrow (doc_id, g, w) table once, never the corpus text.
+    The narrow (doc_id, g, w) weight table is checkpointed, never the
+    corpus text: FOUR consumers read it (nrm's n1/n2 legs and both sides
+    of the posting-list self-join). Its checkpoint pass plans 3 documents
+    scans, one per consumer of tf (the join, df and n_docs); the final
+    plan reads only the checkpoint.
     """
     grams = _doc_bigrams(spark, sf_dir).withColumnRenamed("bigram", "g")
     tf = grams.groupBy("doc_id", "g").agg(
@@ -335,6 +332,7 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     df_counts = tf.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     n_docs = tf.select(F.countDistinct("doc_id").alias("n"))
+    # Kept (d): at sf0.1 lazy bytes vary by run, up to 3,480,061 B vs 3,478,771 B.
     w = iter_materialize(
         tf.join(df_counts, "g")
         .where(F.col("df").between(2, 100))
@@ -970,13 +968,10 @@ def search_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare convention; DCG terms are irrational (log2 denominators),
     so a 6dp half-boundary tie between engines is measure-zero.
 
-    Round 11: ONE materialized narrow base per corpus pass, as in
-    _bm25_scores — (doc_id, dl, query-matching tokens,
-    query-phrase bigrams) is computed in a single scan and every
-    downstream table (dl, stats, tf, phrase) reads it; ``graded`` is
-    materialized too (ranked/ideal/nrel all consume it). The old DAG
-    re-derived the tokenize from parquet for each consumer — 11
-    documents scans in the executed plan, now 1.
+    ONE narrow base, as in _bm25_scores: (doc_id, dl, query-matching
+    tokens, query-phrase bigrams) is computed in a single scan and every
+    downstream table (dl, stats, tf, phrase) reads it; ``graded`` feeds
+    ranked, ideal and nrel.
     """
     from pyspark.sql import Window
 
@@ -984,6 +979,7 @@ def search_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(qid, t1, t2) for qid, t1, t2 in _EVAL_QUERIES],
         "query_id long, t1 string, t2 string",
     )
+    # Kept (c): lazy, documents is scanned 7x instead of once.
     base = iter_materialize(_ndcg_base(spark, sf_dir))
     dl = base.select("doc_id", "dl")
     stats = base.agg(
@@ -1020,6 +1016,8 @@ def search_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("is_phrase", F.lit(1))
     )
+    # Kept until ROADMAP item 5's tf-array restructure: lazy saves tasks but
+    # plans graded into its three consumers (2 -> 8 Generate nodes).
     graded = iter_materialize(
         qtf.groupBy("query_id", "doc_id")
         .agg(F.count_distinct("term").alias("cov"))

@@ -977,13 +977,10 @@ def knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     prediction table (one row per truth, one per prediction) followed by
     a single aggregate — no per-class filtering passes, so the plan cost
     is |queries| regardless of how many classes exist. Rounded ratios +
-    NULL-on-zero denominators identical on both engines.
-
-    Round 12: ``preds`` (|queries| rows) is materialized — both tagged
-    projections consume it, and without the cut each re-executed the
-    ENTIRE kNN pipeline upstream (scoring scan + vote, 8 embeddings
-    scans in the executed plan; now 4 + the checkpoint).
+    NULL-on-zero denominators identical on both engines. Both tagged
+    projections read ``preds`` (|queries| rows).
     """
+    # Kept (d): lazy, CPU min 0.532 -> 0.669 s at sf0.1 (0.082 s spread).
     preds = iter_materialize(
         QUERIES["knn_classify"](spark, sf_dir).select("true_label", "predicted")
     )
@@ -1215,21 +1212,16 @@ def semdedup_k(
     broadcast exchange, O(n·K·d) with K constant); the in-cluster pair
     join shuffles on the cluster key, unit vectors ship once each way;
     with K sized so clusters average c vectors, pair work is n·c/2 dots.
-    Nothing global, nothing that grows superlinearly in n.
-
-    Both bases are materialized (round 11): ``e`` is consumed four ways
-    (centroid slice, GEMM input, both pair-join sides) and ``assign``
-    three (ea, eb, final keep join) — unmaterialized, the plan re-ran
-    the normalize scan ~6× and the mapInPandas GEMM 3× per execution
-    (measured 1.80 → 1.48 s min-of-6 interleaved at sf0.1, identical
-    rows). The unit-vector checkpoint stores exactly the bytes the old
-    plan recomputed thrice; on a cluster with a checkpoint dir it is a
-    reliable checkpoint instead (plans/materialize.py)."""
+    Nothing global, nothing that grows superlinearly in n. ``e`` is
+    consumed four ways (centroid slice, GEMM input, both pair-join sides)
+    and ``assign`` three (ea, eb, final keep join)."""
+    # Kept (d): lazy raises CPU min 0.221 -> 0.330 s at sf0.01 (0.083 s spread).
     e = iter_materialize(_semdedup_unit_vectors(spark, sf_dir))
     if centroids is None:
         centroids = e.where(F.col("vec_id") <= k).select(
             F.col("vec_id").alias("cid"), F.col("v").alias("cv")
         )
+    # Kept (b): lazy, each consumer re-runs the mapInPandas GEMM.
     assign = iter_materialize(semdedup_assign(spark, e, centroids))
     ea = assign.join(e, "vec_id").select(
         F.col("vec_id").alias("id_a"), "cluster", F.col("v").alias("va")

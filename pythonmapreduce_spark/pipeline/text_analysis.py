@@ -878,29 +878,17 @@ def collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     and PMI itself is per-row double math (no summation), identical in
     both engines.
 
-    Round 11: both count tables are materialized — uni feeds three
-    consumers (n_uni, the two component joins) and the bigram counts two
-    (the c_ab ≥ 10 slice and the n_big total), so the unmaterialized DAG
-    re-ran the tokenize+explode from parquet five times; now exactly two
-    corpus passes (one per explode), with everything downstream reading
-    the vocab-sized checkpoints.
-
-    Round 12: only the c_ab ≥ 10 SLICE is checkpointed. Materializing
-    the unfiltered bigram vocabulary grew executor-local storage with
-    corpus size (the full table can be orders of magnitude larger than
-    the frequent slice); n_big — its only other consumer — is now an
-    ``observe()`` metric summed DURING the same materialization pass
-    (CollectMetrics is an accumulator riding the existing job: no extra
-    pass, no extra checkpoint bytes, delivered by the eager
-    materialization action on both checkpoint paths) and folded
-    into the projection as a literal. Same value, verified equal to the
-    full-table aggregate at sf0.1 (265,704).
+    ``uni`` stays in the plan: n_uni and the two component joins reuse
+    its one exchange. Only the c_ab ≥ 10 slice of the bigram counts is
+    checkpointed; n_big, the full table's other consumer, is an
+    ``observe()`` metric summed during that same pass and folded into the
+    projection as a literal.
     """
     from pyspark.sql import Observation
 
     toks = tokens_col()
     docs = load(spark, sf_dir, "documents")
-    uni = iter_materialize(
+    uni = (
         docs.select(F.explode(toks).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -911,6 +899,7 @@ def collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda a, b: F.concat_ws(" ", a, b),
     )
     obs = Observation()
+    # Kept (a): the driver reads obs's n_big right after this pass.
     big = iter_materialize(
         docs.select(F.explode(bigrams).alias("bigram"))
         .groupBy("bigram")

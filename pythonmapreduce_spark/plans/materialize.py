@@ -9,6 +9,18 @@ graph_cc_rounds, label_propagation_communities) does not: the plan
 executes once and AQE reuses its exchanges across rounds, so it
 materializes nothing.
 
+Lazy is the default: each call is an eager job at query-build time, so a
+base stays in the plan unless its site names one of four reasons, in a
+``# Kept (x)`` comment with the figure that decided it (graphs.py's
+kept sites state theirs in prose):
+
+- (a) the driver reads a value, or the loop depth depends on the data;
+- (b) the lazy form re-runs a Python stage, whose CPU executorCpuTime
+  does not count;
+- (c) the lazy form re-scans a base table that a scan gate pins;
+- (d) the lazy form raises shuffle bytes, or raises executor CPU under
+  BASELINE.md's rule.
+
 One rule, decided by what the deployment configured:
 
 - ``sparkContext.setCheckpointDir`` called (the cluster setup, on

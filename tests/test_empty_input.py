@@ -17,7 +17,7 @@ import pytest
 from pythonmapreduce_spark.catalog import SCHEMAS, TABLES
 from pythonmapreduce_spark.plans import registry
 from tests.harness import run_compare
-from tests.test_plans import SINGLE_PLAN_GRAPH_QUERIES
+from tests.test_plans import SINGLE_PLAN_QUERIES
 
 registry.load_all()
 
@@ -113,9 +113,9 @@ def test_single_plan_graph_loops_on_empty_graph(spark, empty_sf_dir: str) -> Non
     bfs = registry.QUERIES["bfs_distances"](spark, empty_sf_dir)
     assert bfs.collect() == []
     assert bfs.schema.simpleString() == "struct<dist:int,n_nodes:bigint>"
-    # The other single-plan graph queries match their oracles' degenerate
+    # The other single-plan queries match their oracles' degenerate
     # output: no rows, or triangle_count's one zero count.
-    for name in SINGLE_PLAN_GRAPH_QUERIES:
+    for name in SINGLE_PLAN_QUERIES:
         if name not in ("pagerank_iter", "bfs_distances"):
             run_compare(
                 spark, empty_sf_dir, name, registry.QUERIES[name], registry.ORACLES[name]

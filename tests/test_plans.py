@@ -626,39 +626,20 @@ def test_media_chunk_cdc_digests_only_exchange(spark, sf_smoke) -> None:
     assert not any("payload" in k for k in keys)
 
 
-def test_lpa_round_uses_window_group_limit(spark, sf_smoke) -> None:
-    # one label-propagation round's per-vertex top-1 must plan as
-    # WindowGroupLimit (rank-limit pushdown: only the leading row per
-    # vertex survives the sort, not the full vote set), and the vote
-    # join must stay an equi-join — no cartesian/nested-loop anywhere.
-    # Built explicitly (not via the registered query) because
-    # iter_materialize truncates lineage, hiding the per-round shape.
-    from pyspark.sql import Window
-
-    from pythonmapreduce_spark.operators.graphs import _edges
-
-    e = _edges(spark, sf_smoke)
-    sym = e.select("src", "dst").unionAll(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+def test_lpa_vote_join_is_equi_join_without_window(spark, sf_smoke) -> None:
+    # label_propagation_communities runs as one plan: its vote join must
+    # stay a vertex-key equi-join (no cartesian or nested loop anywhere),
+    # and its per-vertex top-1 is a max_by aggregate, so no Window or
+    # WindowGroupLimit sorts the vote set.
+    nodes = _executed_nodes(
+        registry.QUERIES["label_propagation_communities"](spark, sf_smoke)
     )
-    labels = sym.select(F.col("src").alias("vid")).distinct().withColumn(
-        "lbl", F.col("vid")
-    )
-    votes = (
-        sym.join(labels.withColumnRenamed("vid", "dst2"), F.col("dst") == F.col("dst2"))
-        .groupBy("src", "lbl")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w = Window.partitionBy("src").orderBy(F.col("cnt").desc(), F.col("lbl").asc())
-    rnd = (
-        votes.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(F.col("src").alias("vid"), "lbl")
-    )
-    plan = _plan(rnd)
-    assert "WindowGroupLimit" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    names = [n.nodeName() for n in nodes]
+    assert "CartesianProduct" not in names
+    assert "BroadcastNestedLoopJoin" not in names
+    assert not [n for n in names if n.startswith("Window")], names
+    joins = [n.simpleString(100) for n in nodes if n.nodeName().endswith("Join")]
+    assert [j for j in joins if "[dst#" in j and "[dst2#" in j], joins
 
 
 def test_dedup_unicode_normalized_single_arrow_stage(spark, sf_smoke) -> None:
@@ -839,7 +820,7 @@ def test_adjacency_round_joins_are_shuffle_hash_on_the_base_exchange(
     assert len(round_exchanges) == rounds, [n.simpleString(100) for n in round_exchanges]
 
 
-SINGLE_PLAN_GRAPH_QUERIES = (
+SINGLE_PLAN_QUERIES = (
     "pagerank_iter",
     "bfs_distances",
     "graph_cc_rounds",
@@ -848,7 +829,11 @@ SINGLE_PLAN_GRAPH_QUERIES = (
     "graph_clustering_coef",
     "graph_common_neighbors",
     "graph_degree",
+    "anomaly_mad",
+    "token_budget_allocator",
 )
+# Queries whose build runs exactly one materialization pass.
+ONE_PASS_QUERIES = ("remove_dup_spans", "collocation_pmi")
 
 
 def test_loop_base_two_exchanges_and_single_plan_loops_build_no_job(
@@ -869,14 +854,14 @@ def test_loop_base_two_exchanges_and_single_plan_loops_build_no_job(
     ]
     assert sorted(exchanges) == ["l_orderkey", "vtx"], base
     assert "Union" not in base, base
-    # The single-plan graph queries take their bases unmaterialized, so
-    # the loops' round joins reuse the bases' exchanges: building any of
-    # them runs no Spark job and materializes nothing. A checkpoint, a
-    # count() action or any other eager step at build time fails here.
-    # The job count is read rather than final-plan strings, which AQE
-    # repeats per stage.
+    # The single-plan queries take their bases unmaterialized, so their
+    # consumers (and the graph loops' round joins) reuse the bases'
+    # exchanges: building any of them runs no Spark job and materializes
+    # nothing. A checkpoint, a count() action or any other eager step at
+    # build time fails here. The job count is read rather than final-plan
+    # strings, which AQE repeats per stage.
     sc = spark.sparkContext
-    for name in SINGLE_PLAN_GRAPH_QUERIES:
+    for name in SINGLE_PLAN_QUERIES + ONE_PASS_QUERIES:
         group = f"build_{name}"
         passes: list[str] = []
         materialize.PLAN_CAPTURE = passes
@@ -887,6 +872,9 @@ def test_loop_base_two_exchanges_and_single_plan_loops_build_no_job(
             materialize.PLAN_CAPTURE = None
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
+        if name in ONE_PASS_QUERIES:
+            assert len(passes) == 1, (name, len(passes))
+            continue
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
         assert passes == [], name
 
