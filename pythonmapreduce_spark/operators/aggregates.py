@@ -65,6 +65,8 @@ def agg_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("l_discount"), 4).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
+        # returnflag × linestatus: at most 6 rows, sorted in one task
+        .coalesce(1)
         .orderBy("l_returnflag", "l_linestatus")
     )
 

@@ -137,7 +137,13 @@ def sort_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Global sorts range-partition (sample → range exchange → per-partition
     sort); at 100 TB this is the one operator where output partitioning is
-    dictated by the sort, so it sits last in the plan.
+    dictated by the sort, so it sits last in the plan. That is the rule for
+    output that grows with sf, like this one. A final ORDER BY whose rows
+    are bounded by a dimension domain (``agg_basic``'s ≤ 6 groups,
+    ``join_star``'s 25 nations) sorts on one partition instead:
+    ``.coalesce(1)`` right before ``.orderBy``, or ``/*+ COALESCE(1) */``
+    in the outer SELECT of SQL text, plans no sampling job and no range
+    exchange.
     """
     return (
         load(spark, sf_dir, "orders")

@@ -412,8 +412,9 @@ def analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+# one row per (lang, source): at most 5 × 20 rows, sorted in one task
 _GROUP_ORDER_ALL_ORACLE = """
-SELECT lang, source,
+SELECT /*+ COALESCE(1) */ lang, source,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(SUM(n_chars) AS BIGINT) AS total_chars
 FROM documents

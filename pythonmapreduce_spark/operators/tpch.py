@@ -27,8 +27,9 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
   AND l_quantity < 24
 """
 
+# one row per distinct order count (about 20): sorted in one task
 _Q13 = """
-SELECT c_count, COUNT(*) AS custdist
+SELECT /*+ COALESCE(1) */ c_count, COUNT(*) AS custdist
 FROM (
     SELECT c_custkey, COUNT(o_orderkey) AS c_count
     FROM customer LEFT JOIN orders
@@ -89,8 +90,9 @@ def tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_Q18)
 
 
+# one row per order priority (5): sorted in one task
 _Q4 = """
-SELECT o_orderpriority, COUNT(*) AS order_count
+SELECT /*+ COALESCE(1) */ o_orderpriority, COUNT(*) AS order_count
 FROM orders
 WHERE o_orderdate >= TIMESTAMP '1996-07-01'
   AND o_orderdate < TIMESTAMP '1996-10-01'
@@ -102,8 +104,9 @@ GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """
 
+# one row per return flag (3): sorted in one task
 _Q12 = """
-SELECT l_returnflag AS shipmode,
+SELECT /*+ COALESCE(1) */ l_returnflag AS shipmode,
        CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT'
                        OR o_orderpriority = '2-HIGH' THEN 1 ELSE 0 END)
             AS BIGINT) AS high_line_count,
@@ -173,8 +176,9 @@ WHERE p_size <= 10
 ORDER BY p_partkey, s_name
 """
 
+# one row per nation of one region (5): sorted in one task
 _Q5 = """
-SELECT n_name, ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS revenue
+SELECT /*+ COALESCE(1) */ n_name, ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS revenue
 FROM customer
 JOIN orders   ON c_custkey = o_custkey
 JOIN lineitem ON l_orderkey = o_orderkey

@@ -25,3 +25,19 @@ def test_rows_only_runs(name: str, spark, sf_oracle: str) -> None:
     df = registry.QUERIES[name](spark, sf_oracle)
     assert len(df.columns) > 0
     assert df.count() >= 0
+
+
+# The SQL-text queries whose final sort runs on one partition carry
+# Spark's COALESCE hint in the text they share with their oracle.
+HINTED_ORACLE_NAMES = ("tpch_q4", "tpch_q5", "tpch_q12", "tpch_q13", "group_order_by_all")
+_HINT = "/*+ COALESCE(1) */ "
+
+
+@pytest.mark.parametrize("name", HINTED_ORACLE_NAMES)
+def test_duckdb_reads_coalesce_hint_as_comment(name: str, sf_smoke: str) -> None:
+    hinted = registry.ORACLES[name]
+    assert _HINT in hinted
+    con = harness.duckdb_con(sf_smoke)
+    rows = con.sql(hinted).fetchall()
+    assert rows
+    assert rows == con.sql(hinted.replace(_HINT, "")).fetchall()

@@ -1279,3 +1279,49 @@ def test_tpch_q18_semi_join_on_shared_key(spark, sf_smoke) -> None:
     plan = _plan(registry.QUERIES["tpch_q18"](spark, sf_smoke))
     assert "LeftSemi" in plan, plan
     assert "hashpartitioning(l_orderkey" in plan
+
+
+# Final ORDER BYs whose rows are bounded by a dimension domain, not by sf:
+# each sorts on one partition, so no range-sample job and no range exchange.
+# Each site names its bound in a comment.
+BOUNDED_SORTS = (
+    "agg_basic",
+    "join_star",
+    "tpch_q4",
+    "tpch_q5",
+    "tpch_q12",
+    "tpch_q13",
+    "group_order_by_all",
+)
+# Final ORDER BYs whose rows grow with sf keep the range sort.
+UNBOUNDED_SORTS = (
+    "sort_multi",
+    "sort_nulls",
+    "zorder_key",
+    "tpch_q2",
+    "tpch_q15",
+    "tpch_q18",
+    "tpch_q20",
+    "tpch_q21",
+)
+
+
+def _executed_tree(df) -> list[str]:
+    """Run ``df`` and return the lines of its executed plan (AQE final
+    plan first)."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString().splitlines()
+
+
+@pytest.mark.parametrize("name", BOUNDED_SORTS)
+def test_bounded_sort_runs_on_one_partition(spark, sf_smoke, name: str) -> None:
+    lines = _executed_tree(registry.QUERIES[name](spark, sf_smoke))
+    assert not [ln for ln in lines if "rangepartitioning" in ln], "\n".join(lines)
+    top_sort = next(i for i, ln in enumerate(lines) if " Sort [" in ln)
+    assert lines[top_sort + 1].strip() == "+- Coalesce 1", "\n".join(lines)
+
+
+@pytest.mark.parametrize("name", UNBOUNDED_SORTS)
+def test_unbounded_sort_keeps_range_exchange(spark, sf_smoke, name: str) -> None:
+    lines = _executed_tree(registry.QUERIES[name](spark, sf_smoke))
+    assert [ln for ln in lines if "rangepartitioning" in ln], "\n".join(lines)

@@ -77,6 +77,9 @@ def normalize(text: str) -> str:
     text = re.sub(r"cte\[\d+\]", "cte[N]", text)
     text = re.sub(r"MapPartitionsRDD\[\d+\]", "MapPartitionsRDD[N]", text)
     text = re.sub(r"ExistingRDD\[\d+\]", "ExistingRDD[N]", text)
+    # an RDD's call site: Spark prints the same checkpoint as "at
+    # <unknown>:0" or "at NativeMethodAccessorImpl.java:0" from run to run
+    text = re.sub(r"(RDD\[N\] at \w+) at \S+:\d+", r"\1 at <site>", text)
     # per-session counters in the names of lambda variables and of
     # common subexpressions
     text = re.sub(r"(lambda \w+?)_\d+#N", r"\1_N#N", text)

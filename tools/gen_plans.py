@@ -18,12 +18,14 @@ NOTES = {
         "lineitem (the 100 TB fact) is joined without ever shuffling: "
         "orders/customer arrive via shuffle exchanges only on THEIR side at "
         "larger SFs, nation/region are broadcast; one exchange for the final "
-        "aggregation."
+        "aggregation, and its 25 rows sort in one task (Coalesce 1, no range "
+        "exchange)."
     ),
     "agg_basic": (
         "partial HashAggregate before the exchange (map-side combine) — only "
         "|groups| rows shuffle, not |lineitem|; the reference ships every "
-        "(word,1) pair uncombined."
+        "(word,1) pair uncombined. The ≤6 groups sort in one task (Coalesce 1, "
+        "no range exchange)."
     ),
     "wordcount": (
         "explode stays inside WholeStageCodegen; partial+final aggregate pair "
