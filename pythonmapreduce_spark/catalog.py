@@ -130,11 +130,6 @@ SCHEMAS: dict[str, T.StructType] = {
     ),
 }
 
-# Dimension tables small enough to broadcast at ANY scale factor — region and
-# nation are fixed-cardinality (5 / 25 rows) even at 100 TB.
-BROADCAST_DIMS = {"region", "nation"}
-
-
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 

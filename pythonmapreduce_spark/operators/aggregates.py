@@ -829,9 +829,10 @@ def customer_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("revenue").over(w_all).alias("total_rev"),
         F.count(F.lit(1)).over(w_all).alias("n_cust"),
     )
+    # One partition: the broadcast of thresholds runs one task, not nproc.
     thresholds = per_cust.sparkSession.createDataFrame(
         [(50,), (80,), (95,)], "threshold_pct int"
-    )
+    ).coalesce(1)
     return (
         ranked.crossJoin(F.broadcast(thresholds))
         .where(

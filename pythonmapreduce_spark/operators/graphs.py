@@ -1047,7 +1047,7 @@ def graph_cc_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     than (vertex, vertex) int pairs crosses an exchange.
     """
     # Checkpointed like each star_op round: the driver-loop sites of
-    # ROADMAP item 6, left for their own pass.
+    # ROADMAP item 4, which decides their checkpoint cadence.
     e = iter_materialize(_edges(spark, sf_dir)).select(
         F.col("src").alias("a"), F.col("dst").alias("b")
     )

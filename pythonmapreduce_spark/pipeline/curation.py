@@ -1225,9 +1225,11 @@ def dedup_unicode_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark has no built-in NFC function, so normalization runs in an
     Arrow-batched pandas UDF (unicodedata.normalize — byte-identical to
-    DuckDB's utf8proc nfc_normalize, probed on combining-mark inputs);
-    everything downstream of the scan ships 16-byte digests through one
-    aggregation, the dedup_exact shuffle discipline. The committed
+    DuckDB's utf8proc nfc_normalize, probed on combining-mark inputs).
+    Everything downstream of the scan ships one md5 digest per document
+    through one ``groupBy(digest)``: a document already in NFC has equal
+    raw and NFC digests, so its one row stands for both; only a document
+    outside NFC adds a second row for its NFC digest. The committed
     corpus is pure ASCII (NFC is the identity there — n_denormalized
     pins 0); the charset robustness sweep's multi-byte fixture is where
     the normalization path does real work.
@@ -1235,32 +1237,40 @@ def dedup_unicode_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     nfc = _nfc_udf()
     docs = load(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     # normalize ONCE into a named column — Catalyst does not collapse two
-    # textually-identical Python UDF calls, so deriving digest and the
-    # denormalized flag from separate nfc(text) expressions runs the
-    # Arrow stage twice over the corpus (plan-pinned to 1 stage). The raw
-    # digest rides the SAME scan: the pre-reshape separate raw-count
-    # aggregate was a second corpus text scan with zero runtime reuse;
-    # the multi-distinct Expand this replaces it with doubles only
-    # digest-width rows.
-    norm = docs.select("text", nfc(F.col("text")).alias("ntext")).select(
-        F.md5("ntext").alias("digest"),
-        F.md5("text").alias("raw_digest"),
-        (F.col("text") != F.col("ntext")).cast("long").alias("was_denormalized"),
+    # textually-identical Python UDF calls, so deriving the digests and
+    # the NFC flag from separate nfc(text) expressions runs the Arrow
+    # stage twice over the corpus (plan-pinned to 1 stage).
+    norm = docs.select("text", nfc(F.col("text")).alias("ntext"))
+    # One row (digest, raw, nf) per document, keyed by its raw digest and
+    # flagged nf when the text is NFC; a text outside NFC also emits its
+    # NFC digest as a non-raw row. A digest is raw-unique when some row
+    # for it is raw, and NFC-unique when some row for it is nf.
+    is_nfc = F.col("text") == F.col("ntext")
+    raw_row = F.struct(
+        F.md5("text").alias("digest"), F.lit(True).alias("raw"), is_nfc.alias("nf")
     )
-    return (
-        norm.agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("was_denormalized").cast("long").alias("n_denormalized"),
-            F.count_distinct("digest").cast("long").alias("n_nfc_unique"),
-            F.count_distinct("raw_digest").cast("long").alias("n_raw_unique"),
-        )
-        .select(
-            "n_docs",
-            "n_denormalized",
-            "n_nfc_unique",
-            "n_raw_unique",
-            (F.col("n_raw_unique") - F.col("n_nfc_unique")).alias("n_caught_by_nfc"),
-        )
+    nfc_row = F.struct(
+        F.md5("ntext").alias("digest"), F.lit(False).alias("raw"), F.lit(True).alias("nf")
+    )
+    rows = norm.select(
+        F.inline(F.when(is_nfc, F.array(raw_row)).otherwise(F.array(raw_row, nfc_row)))
+    )
+    per_digest = rows.groupBy("digest").agg(
+        F.count_if("raw").alias("n_raw"),
+        F.count_if(F.col("raw") & ~F.col("nf")).alias("n_denormalized"),
+        F.bool_or("nf").alias("nf"),
+    )
+    return per_digest.agg(
+        F.coalesce(F.sum("n_raw"), F.lit(0)).cast("long").alias("n_docs"),
+        F.sum("n_denormalized").cast("long").alias("n_denormalized"),
+        F.count_if("nf").cast("long").alias("n_nfc_unique"),
+        F.count_if(F.col("n_raw") > 0).cast("long").alias("n_raw_unique"),
+    ).select(
+        "n_docs",
+        "n_denormalized",
+        "n_nfc_unique",
+        "n_raw_unique",
+        (F.col("n_raw_unique") - F.col("n_nfc_unique")).alias("n_caught_by_nfc"),
     )
 
 

@@ -975,10 +975,11 @@ def search_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
+    # One partition: each broadcast of qmap runs one task, not nproc.
     qmap = spark.createDataFrame(
         [(qid, t1, t2) for qid, t1, t2 in _EVAL_QUERIES],
         "query_id long, t1 string, t2 string",
-    )
+    ).coalesce(1)
     # Kept (c): lazy, documents is scanned 7x instead of once.
     base = iter_materialize(_ndcg_base(spark, sf_dir))
     dl = base.select("doc_id", "dl")

@@ -108,20 +108,25 @@ def knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = with_norm(emb.where(F.col("vec_id") <= _KNN_QUERIES)).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("q_nrm")
     )
-    scored = (
-        corpus.join(F.broadcast(queries), F.col("q_id") != F.col("n_id"))
-        .withColumn("cos_raw", _dot(F.col("qv"), F.col("nv")) / (F.col("q_nrm") * F.col("n_nrm")))
-    )
     # Rank over the ROUNDED cosine with n_id tiebreak: the raw double is
     # summation-order-dependent (HOF fold here vs list_cosine_similarity in
     # the oracle vs BLAS in knn_gemm), so near-ties at the k boundary could
     # flip membership between engines. 4dp is the emitted precision — making
-    # it the ranking key resolves every tie on the deterministic n_id.
-    w = W.partitionBy("q_id").orderBy(F.round("cos_raw", 4).desc(), F.col("n_id").asc())
+    # it the ranking key resolves every tie on the deterministic n_id. It is
+    # rounded once, before the window, so the window exchange carries the
+    # rounded value alone and the raw double never leaves the scan stage.
+    scored = corpus.join(F.broadcast(queries), F.col("q_id") != F.col("n_id")).select(
+        "q_id",
+        "n_id",
+        F.round(_dot(F.col("qv"), F.col("nv")) / (F.col("q_nrm") * F.col("n_nrm")), 4).alias(
+            "cosine"
+        ),
+    )
+    w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= _KNN_K)
-        .select("q_id", "n_id", F.round("cos_raw", 4).alias("cosine"), F.col("rank").cast("long").alias("rank"))
+        .select("q_id", "n_id", "cosine", F.col("rank").cast("long").alias("rank"))
     )
 
 
@@ -317,7 +322,11 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codegen compile (as one inlined array literal, compiled once per
     # side); a column reference keeps the generated code tiny. Same
     # lesson as ann_ivf's packed centroids.
-    planes_df = spark.createDataFrame([(planes,)], "_planes array<array<double>>")
+    # One partition: a local list parallelizes to defaultParallelism, and
+    # the broadcast job would run a task per (empty) slice.
+    planes_df = spark.createDataFrame(
+        [(planes,)], "_planes array<array<double>>"
+    ).coalesce(1)
     bits_sql = (
         "transform(_planes, p -> "
         "CASE WHEN aggregate(zip_with(transform(v, x -> CAST(x AS DOUBLE)), p, "
@@ -358,25 +367,26 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Candidates: any shared (band, key); dedup collapses multi-band hits.
-    cand = (
-        corpus.join(F.broadcast(queries), ["band", "key"], "inner")
-        .where(F.col("q_id") != F.col("vec_id"))
-        .dropDuplicates(["q_id", "vec_id"])
-        .select("q_id", "vec_id", "qv", "q_nrm", "v", "nrm")
-    )
-
+    # The rounded cosine is scored in the join's projection, before the
+    # dedup: every duplicate of a pair carries the same score, so only
+    # (q_id, vec_id, cosine) crosses the dedup exchange, not two vectors.
     cos = _dot(_as_double(F.col("qv")), _as_double(F.col("v"))) / (
         F.col("q_nrm") * F.col("nrm")
     )
-    w = W.partitionBy("q_id").orderBy(F.round("cos_raw", 4).desc(), F.col("vec_id"))
+    cand = (
+        corpus.join(F.broadcast(queries), ["band", "key"], "inner")
+        .where(F.col("q_id") != F.col("vec_id"))
+        .select("q_id", "vec_id", F.round(cos, 4).alias("cosine"))
+        .dropDuplicates(["q_id", "vec_id"])
+    )
+    w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return (
-        cand.withColumn("cos_raw", cos)
-        .withColumn("rank", F.row_number().over(w))
+        cand.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= _KNN_K)
         .select(
             "q_id",
             F.col("vec_id").alias("n_id"),
-            F.round("cos_raw", 4).alias("cosine"),
+            "cosine",
             F.col("rank").cast("long").alias("rank"),
         )
     )
@@ -433,33 +443,34 @@ def knn_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("n_id"),
         F.col("v").alias("nv"),
         F.col("nrm").alias("n_nrm"),
-        F.pmod(F.xxhash64("vec_id"), F.lit(_KNN_BLOCKS)).alias("block"),
     )
     queries = with_norm(emb.where(F.col("vec_id") <= _KNN_QUERIES)).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("q_nrm")
     )
-    scored = corpus.join(F.broadcast(queries), F.col("q_id") != F.col("n_id")).withColumn(
-        "cos_raw", _dot(F.col("qv"), F.col("nv")) / (F.col("q_nrm") * F.col("n_nrm"))
+    scored = corpus.join(F.broadcast(queries), F.col("q_id") != F.col("n_id")).select(
+        "q_id",
+        "n_id",
+        F.round(_dot(F.col("qv"), F.col("nv")) / (F.col("q_nrm") * F.col("n_nrm")), 4).alias(
+            "cosine"
+        ),
     )
     # Rounded-cosine ranking (see knn_cosine): per-block top-k under the
-    # same total order is still a superset of the global top-k.
-    order = (F.round("cos_raw", 4).desc(), F.col("n_id").asc())
-    local_w = W.partitionBy("q_id", "block").orderBy(*order)
+    # same total order is still a superset of the global top-k. The block
+    # is a partition expression of n_id, hashed inside the exchange, so
+    # no block column ships beside the id it derives from.
+    order = (F.col("cosine").desc(), F.col("n_id").asc())
+    block = F.pmod(F.xxhash64("n_id"), F.lit(_KNN_BLOCKS))
+    local_w = W.partitionBy("q_id", block).orderBy(*order)
     survivors = (
         scored.withColumn("lrank", F.row_number().over(local_w))
         .where(F.col("lrank") <= _KNN_K)
-        .select("q_id", "n_id", "cos_raw")
+        .select("q_id", "n_id", "cosine")
     )
     global_w = W.partitionBy("q_id").orderBy(*order)
     return (
         survivors.withColumn("rank", F.row_number().over(global_w))
         .where(F.col("rank") <= _KNN_K)
-        .select(
-            "q_id",
-            "n_id",
-            F.round("cos_raw", 4).alias("cosine"),
-            F.col("rank").cast("long").alias("rank"),
-        )
+        .select("q_id", "n_id", "cosine", F.col("rank").cast("long").alias("rank"))
     )
 
 
@@ -554,17 +565,14 @@ def knn_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out_s.extend(vals[order])
             yield pd.DataFrame({"q_id": out_q, "n_id": out_n, "cos_raw": out_s})
 
-    local = emb.mapInPandas(score_batches, schema)
-    w = W.partitionBy("q_id").orderBy(F.round("cos_raw", 4).desc(), F.col("n_id").asc())
+    local = emb.mapInPandas(score_batches, schema).select(
+        "q_id", "n_id", F.round("cos_raw", 4).alias("cosine")
+    )
+    w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id").asc())
     return (
         local.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select(
-            "q_id",
-            "n_id",
-            F.round("cos_raw", 4).alias("cosine"),
-            F.col("rank").cast("long").alias("rank"),
-        )
+        .select("q_id", "n_id", "cosine", F.col("rank").cast("long").alias("rank"))
     )
 
 
@@ -1411,12 +1419,14 @@ def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = _dot(F.col("qv"), F.col("nv")) / (
         _norm(F.col("qv")) * _norm(F.col("nv"))
     )
+    # Rounded once, before the window. The oracle's ROUND(MAX(cos)) equals
+    # MAX(ROUND(cos)) because rounding is monotone.
     scored = (
         c.join(F.broadcast(q), F.col("q_id") != F.col("n_id"))
         .select(
             "q_id",
             "n_id",
-            cos.alias("cos_raw"),
+            F.round(cos, 4).alias("cosine"),
             (F.col("q_label") == F.col("n_label")).alias("same_label"),
         )
     )
@@ -1424,15 +1434,15 @@ def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rn",
         F.row_number().over(
             W.partitionBy("q_id", "same_label").orderBy(
-                F.round(F.col("cos_raw"), 4).desc(), F.col("n_id")
+                F.col("cosine").desc(), F.col("n_id")
             )
         ),
     ).where(F.col("rn") == 1)
     return ranked.groupBy("q_id").agg(
         F.max(F.when(F.col("same_label"), F.col("n_id"))).cast("long").alias("pos_id"),
-        F.round(F.max(F.when(F.col("same_label"), F.col("cos_raw"))), 4).alias("pos_cos"),
+        F.max(F.when(F.col("same_label"), F.col("cosine"))).alias("pos_cos"),
         F.max(F.when(~F.col("same_label"), F.col("n_id"))).cast("long").alias("neg_id"),
-        F.round(F.max(F.when(~F.col("same_label"), F.col("cos_raw"))), 4).alias("neg_cos"),
+        F.max(F.when(~F.col("same_label"), F.col("cosine"))).alias("neg_cos"),
     )
 
 
@@ -1911,18 +1921,16 @@ def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     reranked = (
         shortlist.join(unit, "vec_id")
         .join(F.broadcast(qvec), "q_id")
-        .withColumn("cos_raw", _dot(F.col("qu"), F.col("u")))
+        .select("q_id", "vec_id", F.round(_dot(F.col("qu"), F.col("u")), 4).alias("cosine"))
     )
-    w = W.partitionBy("q_id").orderBy(
-        F.round("cos_raw", 4).desc(), F.col("vec_id").asc()
-    )
+    w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
     return (
         reranked.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= _KNN_K)
         .select(
             "q_id",
             F.col("vec_id").alias("n_id"),
-            F.round("cos_raw", 4).alias("cosine"),
+            "cosine",
             F.col("rank").cast("long").alias("rank"),
         )
     )

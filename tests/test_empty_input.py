@@ -147,6 +147,40 @@ def test_embedding_drift_empty_half_matches_oracle(
 
 
 @pytest.fixture(scope="session")
+def nfc_collapse_sf_dir(spark) -> str:
+    """documents where NFC and NFD spellings of one text collapse:
+    precomposed "café" twice, decomposed "café" once, "tea", and NULL."""
+    nfc, nfd = "caf\u00e9", "cafe\u0301"
+    rows = [
+        (0, nfc, "fr", "synthetic", 4),
+        (1, nfc, "fr", "synthetic", 4),
+        (2, nfd, "fr", "synthetic", 5),
+        (3, "tea", "en", "synthetic", 3),
+        (4, None, "en", "synthetic", 0),
+    ]
+    return _sf_with_table(spark, "pmr_nfc_collapse_sf", "documents", rows)
+
+
+# (n_docs, n_denormalized, n_nfc_unique, n_raw_unique, n_caught_by_nfc)
+@pytest.mark.parametrize(
+    "fixture, expected",
+    [("nfc_collapse_sf_dir", (4, 1, 2, 3, 1)), ("empty_sf_dir", (0, None, 0, 0, 0))],
+)
+def test_dedup_unicode_normalized_collapse_matches_oracle(
+    fixture: str, expected: tuple, spark, request
+) -> None:
+    # The decomposed "café" is a third raw digest but the NFC digest of
+    # the precomposed pair; on an empty corpus n_denormalized is NULL.
+    sf_dir = request.getfixturevalue(fixture)
+    query = registry.QUERIES["dedup_unicode_normalized"]
+    assert [tuple(r) for r in query(spark, sf_dir).collect()] == [expected]
+    run_compare(
+        spark, sf_dir, "dedup_unicode_normalized", query,
+        registry.ORACLES["dedup_unicode_normalized"],
+    )
+
+
+@pytest.fixture(scope="session")
 def no_match_sf_dir(spark) -> str:
     """documents with text but none of the query terms join/table/spark."""
     rows = [

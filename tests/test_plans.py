@@ -644,11 +644,11 @@ def test_lpa_vote_join_is_equi_join_without_window(spark, sf_smoke) -> None:
 
 def test_dedup_unicode_normalized_single_arrow_stage(spark, sf_smoke) -> None:
     # NFC normalization is ONE Arrow stage over a text-only pruned scan
-    # (digest and the denormalized flag both derive from the same
-    # normalized column — a second UDF evaluation would double the
-    # corpus pass); the raw digest rides the same scan (round-7 reshape:
-    # the separate raw-unique aggregate was a second corpus scan) and
-    # downstream ships 16-byte digests through one multi-distinct agg.
+    # (both digests and the NFC flag derive from the same normalized
+    # column — a second UDF evaluation would double the corpus pass);
+    # the raw digest rides the same scan (round-7 reshape: the separate
+    # raw-unique aggregate was a second corpus scan) and downstream
+    # ships one md5 digest per NFC document through one groupBy.
     plan = _plan(registry.QUERIES["dedup_unicode_normalized"](spark, sf_smoke))
     assert plan.count("ArrowEvalPython (") == 1
     assert "BatchEvalPython" not in plan
@@ -1325,3 +1325,45 @@ def test_bounded_sort_runs_on_one_partition(spark, sf_smoke, name: str) -> None:
 def test_unbounded_sort_keeps_range_exchange(spark, sf_smoke, name: str) -> None:
     lines = _executed_tree(registry.QUERIES[name](spark, sf_smoke))
     assert [ln for ln in lines if "rangepartitioning" in ln], "\n".join(lines)
+
+
+def _exchange_outputs(df) -> list[list[tuple[str, str]]]:
+    """(name, type) of each output column of every shuffle exchange that
+    ``df``'s executed plan ran."""
+    return [
+        [
+            (a.name(), a.dataType().typeName())
+            for a in (n.output().apply(i) for i in range(n.output().size()))
+        ]
+        for n in _executed_nodes(df)
+        if n.nodeName() == "Exchange"
+    ]
+
+
+@pytest.mark.parametrize(
+    "name", ["knn_cosine", "knn_blocked", "knn_gemm", "ann_pq_rerank", "hard_negatives"]
+)
+def test_topk_exchanges_carry_only_the_rounded_cosine(spark, sf_smoke, name: str) -> None:
+    # The cosine is rounded once, before the window: it is the ranking
+    # key and the emitted value, so the raw double stays in the scoring
+    # stage instead of riding beside its rounded copy.
+    outputs = _exchange_outputs(registry.QUERIES[name](spark, sf_smoke))
+    assert outputs
+    for cols in outputs:
+        assert "cos_raw" not in [c for c, _ in cols], cols
+
+
+def test_ann_lsh_exchanges_carry_no_vectors(spark, sf_smoke) -> None:
+    # Candidates are scored in the band join's projection, so only
+    # (q_id, vec_id, cosine) crosses the dedup exchange, not two vectors.
+    outputs = _exchange_outputs(registry.QUERIES["ann_lsh"](spark, sf_smoke))
+    assert outputs
+    for cols in outputs:
+        assert "array" not in [t for _, t in cols], cols
+
+
+def test_dedup_unicode_normalized_one_digest_groupby(spark, sf_smoke) -> None:
+    # One groupBy(digest) replaces the two count_distincts, whose Expand
+    # shipped every document's digest twice.
+    nodes = _executed_nodes(registry.QUERIES["dedup_unicode_normalized"](spark, sf_smoke))
+    assert "Expand" not in [n.nodeName() for n in nodes]

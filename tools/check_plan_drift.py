@@ -25,50 +25,6 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-# The Expand of a rewritten multi-distinct aggregate:
-# "Arguments: [[row], [row], ...], [<distinct columns>, gid#N, ...]".
-_GID_EXPAND = re.compile(r"^Arguments: \[(\[.*\])\], \[(.+?), gid#N, ", re.M)
-
-
-def _canonical_gids(plan: str) -> str:
-    """Relabel one plan's distinct-aggregate grouping sets canonically.
-
-    Spark numbers the grouping sets of a multi-distinct aggregate (gid 1,
-    2, ...) in a hash order of the distinct children, which moves with
-    expression ids: one plan captures as ``[raw_digest, digest, gid]``
-    with raw_digest at gid 1, or as ``[digest, raw_digest, gid]`` with
-    digest at gid 1. Sort the distinct columns by name, renumber the gids
-    in the order of their sorted column groups, and rewrite the Expand
-    rows, the column lists and every ``gid#N = k`` to match. A plan whose
-    Expand rows do not split cleanly into columns is left as it is.
-    """
-    m = _GID_EXPAND.search(plan)
-    if not m:
-        return plan
-    cols = m.group(2).split(", ")
-    rows = [r.split(", ") for r in m.group(1)[1:-1].split("], [")]
-    if any(len(r) <= len(cols) for r in rows):
-        return plan
-    group = {r[len(cols)]: tuple(c for c, v in zip(cols, r) if v != "null") for r in rows}
-    new_gid = {k: str(i) for i, k in enumerate(sorted(group, key=group.get))}
-    order = sorted(range(len(cols)), key=cols.__getitem__)
-    new_rows = sorted(
-        ([r[i] for i in order] + [new_gid[r[len(cols)]]] + r[len(cols) + 1 :] for r in rows),
-        key=lambda r: int(r[len(cols)]),
-    )
-    plan = (
-        plan[: m.start(1)]
-        + ", ".join(f"[{', '.join(r)}]" for r in new_rows)
-        + plan[m.end(1) :]
-    )
-    plan = plan.replace(
-        ", ".join(cols) + ", gid#N", ", ".join(sorted(cols)) + ", gid#N"
-    )
-    return re.sub(
-        r"gid#N = (\d+)", lambda g: f"gid#N = {new_gid.get(g[1], g[1])}", plan
-    )
-
-
 def normalize(text: str) -> str:
     text = re.sub(r"\(\d+\)", "(N)", text)  # operator ids
     text = re.sub(r"#\d+[A-Za-z]*", "#N", text)  # expression ids
@@ -83,9 +39,7 @@ def normalize(text: str) -> str:
     # per-session counters in the names of lambda variables and of
     # common subexpressions
     text = re.sub(r"(lambda \w+?)_\d+#N", r"\1_N#N", text)
-    text = re.sub(r"_common_expr_\d+", "_common_expr_N", text)
-    # grouping-sets gids, one "## query" section at a time
-    return "".join(_canonical_gids(p) for p in re.split(r"(?m)^(?=## )", text))
+    return re.sub(r"_common_expr_\d+", "_common_expr_N", text)
 
 
 def main() -> int:

@@ -49,13 +49,18 @@ NOTES = {
     ),
     "knn_cosine": (
         "corpus never shuffles: queries broadcast (BroadcastNestedLoopJoin "
-        "over 20 rows), scoring inside codegen, per-query top-k via window."
+        "over 20 rows), scoring inside codegen, per-query top-k via window. "
+        "The cosine is rounded once in the scoring stage and is both the "
+        "ranking key and the output, so the window exchange carries "
+        "(q_id, n_id, cosine) and never the raw double."
     ),
     "knn_blocked": (
         "scale formulation of knn_cosine (same oracle): local top-k per "
         "(query, block) spreads ranking over 8x more partitions, global "
         "merge sees only blocks*k rows per query — no per-query straggler "
-        "partition at 1000-executor scale."
+        "partition at 1000-executor scale. The block is a partition "
+        "expression of n_id, hashed inside the exchange, so both window "
+        "exchanges carry only (q_id, n_id, rounded cosine)."
     ),
     "dedup_near": (
         "MinHash-LSH: one scan computes 64 signatures via partial+final "
@@ -206,10 +211,10 @@ NOTES = {
     ),
     "dedup_unicode_normalized": (
         "ONE ArrowEvalPython stage (NFC) over a text-only pruned scan — "
-        "digest and the denormalized flag both derive from the same "
-        "normalized column; downstream ships 16-byte digests, and the "
-        "only non-equi join is the 1-row broadcast of the raw-unique "
-        "aggregate."
+        "both digests and the NFC flag derive from the same normalized "
+        "column. A Generate emits one (md5 digest, raw, nf) row per NFC "
+        "document and two for a document outside NFC; one groupBy(digest) "
+        "exchange feeds a 1-row global aggregate. No Expand, no join."
     ),
     "audio_decode_wav": (
         "REAL stdlib WAV codec round trip in one narrow MapInPandas "
