@@ -988,10 +988,7 @@ def knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-on-zero denominators identical on both engines. Both tagged
     projections read ``preds`` (|queries| rows).
     """
-    # Kept (d): lazy, CPU min 0.532 -> 0.669 s at sf0.1 (0.082 s spread).
-    preds = iter_materialize(
-        QUERIES["knn_classify"](spark, sf_dir).select("true_label", "predicted")
-    )
+    preds = QUERIES["knn_classify"](spark, sf_dir).select("true_label", "predicted")
     truth_side = preds.select(
         F.col("true_label").alias("cls"),
         F.when(F.col("predicted") == F.col("true_label"), 1).otherwise(0).alias("tp"),

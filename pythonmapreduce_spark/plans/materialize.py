@@ -42,33 +42,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# Plan-evidence hook (round 12): when a list, every iter_materialize call
-# appends the FORMATTED PLAN of the subtree it is about to execute.
-# Checkpointed subtrees run eagerly at query-build time and appear in the
-# final explain only as `Scan ExistingRDD`, so without this the
-# plans/r{N} artifacts understate the work (a 0-scan after-plan is not
-# free — the scans happened here). tools/dump_round_plans.py sets this
-# around each query build and emits the captured passes into the
-# artifact; None (the default) adds zero overhead to normal runs.
-PLAN_CAPTURE: list[str] | None = None
-
-
-def _capture_plan(df: DataFrame) -> None:
-    if PLAN_CAPTURE is None:
-        return
-    try:
-        jvm = df.sparkSession._jvm
-        PLAN_CAPTURE.append(
-            jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-        )
-    except Exception:  # evidence hook — never fail the query for it
-        PLAN_CAPTURE.append("PLAN CAPTURE FAILED\n")
-
 
 def iter_materialize(df: DataFrame) -> DataFrame:
     """Materialize an iteration base eagerly: reliable checkpoint when the
     session has a checkpoint dir, localCheckpoint otherwise."""
-    _capture_plan(df)
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.catalog import load
 from pythonmapreduce_spark.plans import registry
+from pythonmapreduce_spark.plans.signature import executed_nodes, signature, table_scans
 
 registry.load_all()
 
@@ -631,7 +632,7 @@ def test_lpa_vote_join_is_equi_join_without_window(spark, sf_smoke) -> None:
     # stay a vertex-key equi-join (no cartesian or nested loop anywhere),
     # and its per-vertex top-1 is a max_by aggregate, so no Window or
     # WindowGroupLimit sorts the vote set.
-    nodes = _executed_nodes(
+    nodes = executed_nodes(
         registry.QUERIES["label_propagation_communities"](spark, sf_smoke)
     )
     names = [n.nodeName() for n in nodes]
@@ -762,25 +763,6 @@ def test_triangle_wedge_joins_stay_equi_with_pruned_scans(spark, sf_smoke) -> No
     ), lineitem_schemas
 
 
-def _executed_nodes(df) -> list:
-    """Run ``df`` and return every node of its executed (AQE final) plan,
-    entering query stages; a reused exchange is listed, not entered."""
-    df.collect()
-    nodes, todo = [], [df._jdf.queryExecution().executedPlan()]
-    while todo:
-        node = todo.pop()
-        nodes.append(node)
-        name = node.nodeName()
-        if name == "AdaptiveSparkPlan":
-            todo.append(node.executedPlan())
-        elif name.endswith("QueryStage"):
-            todo.append(node.plan())
-        elif name != "ReusedExchange":
-            kids = node.children()
-            todo.extend(kids.apply(i) for i in range(kids.size()))
-    return nodes
-
-
 # (query, the rounds' aggregation key, rounds, rounds with a state join):
 # pagerank_iter's first round folds the uniform ranks and joins nothing.
 @pytest.mark.parametrize(
@@ -796,7 +778,7 @@ def test_adjacency_round_joins_are_shuffle_hash_on_the_base_exchange(
     # base's own exchange instead of broadcasting the adjacency in an
     # extra job. Per round exactly one exchange moves the state on the
     # round's aggregation key, and no join degrades to a cartesian.
-    nodes = _executed_nodes(registry.QUERIES[name](spark, sf_smoke))
+    nodes = executed_nodes(registry.QUERIES[name](spark, sf_smoke))
     names = [n.nodeName() for n in nodes]
     assert "CartesianProduct" not in names
     assert "BroadcastNestedLoopJoin" not in names
@@ -837,14 +819,15 @@ ONE_PASS_QUERIES = ("remove_dup_spans", "collocation_pmi")
 
 
 def test_loop_base_two_exchanges_and_single_plan_loops_build_no_job(
-    spark, sf_smoke
+    spark, sf_smoke, monkeypatch
 ) -> None:
     # The adjacency loop base builds straight from the order baskets: one
     # shuffle for the basket groupBy (l_orderkey), one for the neighbor
     # collect_set (vtx). An edge distinct() or a union with the mirrored
     # edges (which re-plans the whole basket subtree) fails here.
     from pythonmapreduce_spark.operators.graphs import _sym_adjacency
-    from pythonmapreduce_spark.plans import materialize
+    from pythonmapreduce_spark.pipeline import dedup, text_analysis
+    from pythonmapreduce_spark.plans.materialize import iter_materialize
 
     base = _plan(_sym_adjacency(spark, sf_smoke))
     exchanges = [
@@ -859,24 +842,30 @@ def test_loop_base_two_exchanges_and_single_plan_loops_build_no_job(
     # exchanges: building any of them runs no Spark job and materializes
     # nothing. A checkpoint, a count() action or any other eager step at
     # build time fails here. The job count is read rather than final-plan
-    # strings, which AQE repeats per stage.
+    # strings, which AQE repeats per stage. The one-pass queries' passes
+    # are counted at their modules' iter_materialize.
+    passes: list = []
+
+    def counted(df):
+        passes.append(df)
+        return iter_materialize(df)
+
+    for module in (dedup, text_analysis):
+        monkeypatch.setattr(module, "iter_materialize", counted)
     sc = spark.sparkContext
     for name in SINGLE_PLAN_QUERIES + ONE_PASS_QUERIES:
         group = f"build_{name}"
-        passes: list[str] = []
-        materialize.PLAN_CAPTURE = passes
+        passes.clear()
         sc.setJobGroup(group, "single-plan loop build")
         try:
             registry.QUERIES[name](spark, sf_smoke)
         finally:
-            materialize.PLAN_CAPTURE = None
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         if name in ONE_PASS_QUERIES:
             assert len(passes) == 1, (name, len(passes))
             continue
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
-        assert passes == [], name
 
 
 def test_hits_only_nested_loops_are_one_row_normalizer_broadcasts(
@@ -919,11 +908,9 @@ def test_reshaped_queries_stay_single_pass(spark, sf_smoke) -> None:
     # scan-dedup work: the queries restructured to one-corpus-pass bases
     # must never silently regrow duplicate subtrees (>= SCAN_MULT_BAR
     # same-table scans with zero runtime exchange reuse), cartesians, or
-    # row-at-a-time Python. Shares tools/audit_plans.py's final-plan-only
-    # counter LITERALLY (one rule, two callers) — raw Location-line
-    # counting overcounts because formatted AQE explain also prints the
-    # Initial Plan tree with renumbered scan nodes.
-    from tools.audit_plans import SCAN_MULT_BAR, final_plan_scan_counts
+    # row-at-a-time Python. Counts come from the executed plan's
+    # signature, as in tools/audit_plans.py (one rule, two callers).
+    from tools.audit_plans import SCAN_MULT_BAR
 
     reshaped = [
         "bm25_rank",
@@ -951,26 +938,24 @@ def test_reshaped_queries_stay_single_pass(spark, sf_smoke) -> None:
         "fim_split_prep",
         "winnow_fingerprints",
     ]
-    jvm = spark._jvm
     problems = []
     any_scans_counted = False
     for name in reshaped:
-        df = registry.QUERIES[name](spark, sf_smoke)
-        df.collect()
-        plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-        if "CartesianProduct" in plan:
+        sig = signature(registry.QUERIES[name](spark, sf_smoke))
+        if "CartesianProduct" in sig:
             problems.append(f"{name}: CartesianProduct")
-        if "BatchEvalPython" in plan:
+        if "python BatchEvalPython" in sig:
             problems.append(f"{name}: BatchEvalPython")
-        scans, reused = final_plan_scan_counts(plan)
+        scans = table_scans(sig)
         any_scans_counted = any_scans_counted or bool(scans)
-        if reused == 0:
+        if "ReusedExchange" not in sig:
             for table, cnt in scans.items():
                 if cnt >= SCAN_MULT_BAR:
                     problems.append(f"{name}: {table} scanned {cnt}x, no reuse")
     # Sanity: the counter must actually see scans somewhere, else the
-    # scan-multiplicity gate is dead code (the bug this rewrite fixed).
-    assert any_scans_counted, "scan counter matched nothing — regex rotted"
+    # scan-multiplicity gate is dead code (a scan no longer recognised as
+    # a catalog table).
+    assert any_scans_counted, "scan counter matched nothing"
     assert not problems, problems
 
 
@@ -1113,8 +1098,6 @@ def test_round7_second_wave_single_scan(spark, sf_smoke) -> None:
     # window, dual digests in one scan, count re-aggregation, guarded
     # CASE) must stay single-scan: at most ONE final-plan scan of the
     # base table (zero when an eager materialization hides it).
-    from tools.audit_plans import final_plan_scan_counts
-
     wave = {
         "stickiness_dau_mau": "events",
         "bandit_ucb": "events",
@@ -1126,15 +1109,11 @@ def test_round7_second_wave_single_scan(spark, sf_smoke) -> None:
         "fim_split_prep": "documents",
         "winnow_fingerprints": "documents",
     }
-    jvm = spark._jvm
     problems = []
     for name, table in wave.items():
-        df = registry.QUERIES[name](spark, sf_smoke)
-        df.collect()
-        plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-        scans, _ = final_plan_scan_counts(plan)
-        if scans.get(table, 0) > 1:
-            problems.append(f"{name}: {table} scanned {scans[table]}x")
+        scans = table_scans(signature(registry.QUERIES[name](spark, sf_smoke))).get(table, 0)
+        if scans > 1:
+            problems.append(f"{name}: {table} scanned {scans}x")
     assert not problems, problems
 
 
@@ -1335,7 +1314,7 @@ def _exchange_outputs(df) -> list[list[tuple[str, str]]]:
             (a.name(), a.dataType().typeName())
             for a in (n.output().apply(i) for i in range(n.output().size()))
         ]
-        for n in _executed_nodes(df)
+        for n in executed_nodes(df)
         if n.nodeName() == "Exchange"
     ]
 
@@ -1365,5 +1344,5 @@ def test_ann_lsh_exchanges_carry_no_vectors(spark, sf_smoke) -> None:
 def test_dedup_unicode_normalized_one_digest_groupby(spark, sf_smoke) -> None:
     # One groupBy(digest) replaces the two count_distincts, whose Expand
     # shipped every document's digest twice.
-    nodes = _executed_nodes(registry.QUERIES["dedup_unicode_normalized"](spark, sf_smoke))
+    nodes = executed_nodes(registry.QUERIES["dedup_unicode_normalized"](spark, sf_smoke))
     assert "Expand" not in [n.nodeName() for n in nodes]

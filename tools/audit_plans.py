@@ -18,7 +18,9 @@ post-execution plan:
   where AQE reused NOTHING (zero ReusedExchange after execution) means
   duplicate subtrees are genuinely re-executed — the shape that hid the
   round-6 HITS half-round re-execution. Plans where AQE reuse kicks in
-  are fine: the visible scan count includes collapsed duplicates.
+  are fine: the visible scan count includes collapsed duplicates. Both
+  counts come from the executed plan's signature (plans/signature.py),
+  which counts scans of the catalog tables.
 - CONTENT-OVER-EXCHANGE (round-7 addition): the raw documents ``text``
   column crossing any Exchange violates DEPLOYMENT §3's design rule
   (content never crosses an exchange — keys, digests, and aggregates
@@ -52,7 +54,6 @@ import argparse
 import os
 import re
 import sys
-from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -304,46 +305,6 @@ for _q in ("ann_ivf", "ann_ivf_recall"):
 SCAN_MULT_BAR = 3
 
 
-def final_plan_scan_counts(plan: str) -> tuple[Counter, int]:
-    """(table -> final-plan scan count, final-plan ReusedExchange count).
-
-    Formatted AQE explain prints the Final Plan tree AND the Initial Plan
-    tree, and when AQE renumbers nodes the initial tree's scans get their
-    own detail blocks — so counting raw ``Location:`` lines OVERCOUNTS
-    (measured: ngram_decontaminate shows 3 Location lines for a 2-scan
-    final plan). Count scan node ids that appear in tree lines OUTSIDE
-    any ``== Initial Plan ==`` region, then map ids to tables via the
-    detail blocks' Location lines.
-    """
-    kept_tree_ids: list[str] = []
-    reused = 0
-    skipping = False
-    for line in plan.splitlines():
-        if "== Initial Plan ==" in line:
-            skipping = True
-            continue
-        if skipping:
-            if not line.strip():
-                skipping = False
-            continue
-        if re.match(r"^\(\d+\) ", line):  # detail block header, not a tree line
-            continue
-        if "Scan parquet" in line:
-            m = re.search(r"\((\d+)\)\s*$", line)
-            if m:
-                kept_tree_ids.append(m.group(1))
-        if "ReusedExchange" in line:
-            reused += 1
-    table_of: dict[str, str] = {}
-    for m in re.finditer(
-        r"^\((\d+)\) Scan parquet[^\n]*\n(?:[^\n]+\n)*?Location:[^\n]*?/(\w+)\.parquet",
-        plan,
-        re.MULTILINE,
-    ):
-        table_of[m.group(1)] = m.group(2)
-    return Counter(table_of[i] for i in kept_tree_ids if i in table_of), reused
-
-
 # Aggregate functions whose aggregation buffer grows with the group's
 # row count (unspillable until finalization). approx_percentile / hll /
 # count-min run in fixed-size buffers and are not in this set.
@@ -418,10 +379,10 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     ap.add_argument("--names", default="")
-    ap.add_argument("--no-exec", action="store_true", help="audit static plans only")
     args = ap.parse_args()
 
     from pythonmapreduce_spark.plans import registry
+    from pythonmapreduce_spark.plans.signature import signature, table_scans
     from pythonmapreduce_spark.session import get_spark
 
     registry.load_all()
@@ -435,8 +396,7 @@ def main() -> int:
         fn = registry.QUERIES[name]
         try:
             df = fn(spark, args.sf_dir)
-            if not args.no_exec:
-                df.collect()
+            sig = signature(df)
             plan = jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
@@ -487,9 +447,8 @@ def main() -> int:
                     "or collapse (operators/quantiles.py)"
                 )
 
-        scans, reused = final_plan_scan_counts(plan)
-        if reused == 0:
-            for table, cnt in scans.items():
+        if "ReusedExchange" not in sig:
+            for table, cnt in table_scans(sig).items():
                 if cnt >= SCAN_MULT_BAR and f"scan-mult:{table}" not in allowed:
                     findings.append(
                         f"{name}: table '{table}' scanned {cnt}x with ZERO "

@@ -1,17 +1,27 @@
-"""Regenerate PLANS.md: annotated formatted physical plans for the headline
-queries. Run from the repo root: ``python tools/gen_plans.py``."""
+"""Regenerate PLANS.md and plans/signatures.json for the headline queries.
+
+Each query runs once at sf0.01 in a ``get_spark`` session at its default
+core count. PLANS.md gets the annotated formatted plan after the run (the
+AQE final plan, then the initial one); plans/signatures.json gets the final
+plan's structural signature (``plans/signature.py``), which
+``tests/test_plan_signatures.py`` must reproduce. Run from the repo root:
+``python tools/gen_plans.py``."""
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pythonmapreduce_spark.plans.registry import QUERIES, load_all  # noqa: E402
-from pythonmapreduce_spark.session import get_spark  # noqa: E402
+from pythonmapreduce_spark.plans.signature import signature  # noqa: E402
+from pythonmapreduce_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
-SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+SF = "/root/testdata/sf0.01"
+SIGNATURES = os.path.join(REPO, "plans", "signatures.json")
 
 NOTES = {
     "join_star": (
@@ -258,7 +268,7 @@ NOTES = {
         "each re-derived the user-key collapse — a third events pass; n "
         "now rides through the deaths aggregate as a constant), and the "
         "surviving pair of last-seen derivations shares its exchange at "
-        "runtime (executed plan: 2 events scans, 1 ReusedExchange). "
+        "runtime (executed plan: 1 events scan, 1 ReusedExchange). "
         "Nothing wider than |users| ever shuffles."
     ),
     "auc_roc": (
@@ -312,28 +322,30 @@ NOTES = {
 
 def main() -> None:
     load_all()
-    spark = get_spark(cpus="8")
+    spark = get_spark()
     jvm = spark._jvm
     out = [
-        "# PLANS — annotated physical plans (generated at sf0.01, local[8])",
+        f"# PLANS — annotated executed plans (generated at sf0.01, local[{DEFAULT_CPUS}])",
         "",
-        "Regenerate: `python tools/gen_plans.py`. These are the plans the scale",
-        "story depends on; `tests/test_plans.py` asserts the load-bearing shapes",
-        "(pushdown, broadcast, partial agg, WindowGroupLimit, AQE re-plan) so",
-        "regressions fail CI rather than silently degrading at 100 TB.",
+        "Regenerate: `python tools/gen_plans.py`. Each plan is printed after the",
+        "query ran: AQE's final plan, then the initial plan it replaced. The final",
+        "plans' structural signatures (exchanges, joins, scans, Python nodes) are in",
+        "`plans/signatures.json`, and `tests/test_plan_signatures.py` fails when one",
+        "changes; `tests/test_plans.py` asserts the load-bearing shapes (pushdown,",
+        "broadcast, partial agg, WindowGroupLimit, AQE re-plan).",
         "",
     ]
+    signatures = {}
     for name, note in NOTES.items():
         df = QUERIES[name](spark, SF)
+        signatures[name] = signature(df)
         plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
         out.append(f"## {name}\n\n{note}\n\n```\n{plan.strip()}\n```\n")
-    # PLANS_OUT lets tools/check_plan_drift.py capture to a temp file and
-    # diff against the committed dump without touching it.
-    dest = os.environ.get(
-        "PLANS_OUT", os.path.join(os.path.dirname(__file__), "..", "PLANS.md")
-    )
-    with open(dest, "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
+    with open(SIGNATURES, "w") as fh:
+        json.dump(signatures, fh, indent=1)
+        fh.write("\n")
 
 
 if __name__ == "__main__":
