@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.catalog import load
 from pythonmapreduce_spark.plans.registry import register
-from pythonmapreduce_spark.plans.materialize import iter_materialize
+from pythonmapreduce_spark.plans.materialize import iter_materialize, materialize_observed
 
 # Shared CTE prefix for the DuckDB oracles — identical edge derivation.
 # AS MATERIALIZED throughout the graph oracles: DuckDB inlines a CTE
@@ -933,8 +933,9 @@ def kcore_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per round: two semi-joins restrict the checkpointed adjacency to the
     surviving subgraph (vertex-key equi-joins, survivor sets O(V)), then
     one combine-enabled degree count — no edge regeneration, no pair
-    explosion. Emits survivors per round; a round losing no vertices is
-    the converged core.
+    explosion. Emits survivors per round, counted while each round's
+    survivor set materializes; a round losing no vertices is the
+    converged core.
     """
     # Round 12: adjacency-array loop base (see _sym_adjacency) — round 1's
     # degree is size(nbrs) (map-only; the edge-row form paid a count
@@ -961,18 +962,15 @@ def kcore_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("src")
                 .agg(F.count(F.lit(1)).alias("deg"))
             )
-        alive = iter_materialize(
-            deg.where(F.col("deg") >= 3).select(F.col("src").alias("vid"))
+        # The pass that materializes a round's survivors also counts them,
+        # so the three counts return as one local partition with no
+        # aggregate over the survivor sets.
+        alive, stats = materialize_observed(
+            deg.where(F.col("deg") >= 3).select(F.col("src").alias("vid")),
+            F.count(F.lit(1)).alias("n_alive"),
         )
-        counts.append(
-            alive.agg(F.count(F.lit(1)).cast("long").alias("n_alive")).select(
-                F.lit(r).alias("peel_round"), "n_alive"
-            )
-        )
-    out = counts[0]
-    for c in counts[1:]:
-        out = out.unionAll(c)
-    return out
+        counts.append((r, stats["n_alive"]))
+    return spark.createDataFrame(counts, "peel_round int, n_alive long").coalesce(1)
 
 
 def _bigstar_oracle(rounds: int) -> str:

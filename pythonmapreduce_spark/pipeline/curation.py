@@ -1139,36 +1139,44 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the cheap middle tier between dedup_exact and MinHash, and the
     first thing to try when near-dup volume looks suspiciously high.
 
-    Normalization is scan-side regexp/lower; BOTH digests (raw and
-    normalized) come out of the SAME scan and both distinct counts ride
-    16-byte digests through one multi-distinct aggregation (the Expand
-    doubles digest-width rows — far cheaper than the pre-reshape second
-    corpus text scan for the raw count, which reused nothing at
-    runtime). The report form (raw vs normalized unique counts) is the
-    decision artifact: a large gap says normalize-then-hash before
-    paying for LSH.
+    Normalization is scan-side regexp/lower, and both digests come out
+    of the SAME scan. As in dedup_unicode_normalized, one
+    ``groupBy(digest)`` counts both: a document whose text is already
+    normalized has equal raw and normalized digests, so its one row
+    stands for both; any other document adds a second row for its
+    normalized digest. A NULL text is one row keyed NULL, counted in
+    n_docs and in neither distinct count. The report form (raw vs
+    normalized unique counts) is the decision artifact: a large gap says
+    normalize-then-hash before paying for LSH.
     """
     docs = load(spark, sf_dir, "documents")
-    norm_digest = F.md5(
-        F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
+    ntext = F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "))
+    norm = docs.select("text", ntext.alias("ntext"))
+    same = F.col("text").eqNullSafe(F.col("ntext"))
+    raw_row = F.struct(
+        F.md5("text").alias("digest"), F.lit(True).alias("raw"), same.alias("nm")
     )
-    return (
-        docs.select(
-            norm_digest.alias("digest"), F.md5("text").alias("raw_digest")
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.count_distinct("digest").cast("long").alias("n_normalized_unique"),
-            F.count_distinct("raw_digest").cast("long").alias("n_raw_unique"),
-        )
-        .select(
-            "n_docs",
-            "n_normalized_unique",
-            "n_raw_unique",
-            (F.col("n_raw_unique") - F.col("n_normalized_unique")).alias(
-                "n_caught_by_normalization"
-            ),
-        )
+    norm_row = F.struct(
+        F.md5("ntext").alias("digest"), F.lit(False).alias("raw"), F.lit(True).alias("nm")
+    )
+    rows = norm.select(
+        F.inline(F.when(same, F.array(raw_row)).otherwise(F.array(raw_row, norm_row)))
+    )
+    per_digest = rows.groupBy("digest").agg(
+        F.count_if("raw").alias("n_raw"), F.bool_or("nm").alias("nm")
+    )
+    keyed = F.col("digest").isNotNull()
+    return per_digest.agg(
+        F.coalesce(F.sum("n_raw"), F.lit(0)).cast("long").alias("n_docs"),
+        F.count_if(keyed & F.col("nm")).cast("long").alias("n_normalized_unique"),
+        F.count_if(keyed & (F.col("n_raw") > 0)).cast("long").alias("n_raw_unique"),
+    ).select(
+        "n_docs",
+        "n_normalized_unique",
+        "n_raw_unique",
+        (F.col("n_raw_unique") - F.col("n_normalized_unique")).alias(
+            "n_caught_by_normalization"
+        ),
     )
 
 

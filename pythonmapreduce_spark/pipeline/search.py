@@ -14,9 +14,9 @@ ranking primitives a retrieval/curation stack actually serves:
 Both are pure Column-expression plans: tokenization, bigram assembly and
 probability math all run inside whole-stage codegen; Python never touches
 a row. BM25 scores in the scan stage: each document row carries its own
-per-query-term counts, the corpus statistics (N, avgdl and the df array)
-are ONE 1-row global aggregate that broadcasts back, and the corpus
-itself never shuffles.
+per-query-term counts, the corpus statistics (N, avgdl and the df counts)
+are observed by the pass that materializes those rows and enter the
+score as literals, and the corpus itself never shuffles.
 """
 
 from __future__ import annotations
@@ -26,12 +26,12 @@ from functools import reduce
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.catalog import load
 from pythonmapreduce_spark.sources.text_corpus import tokens_col
-from pythonmapreduce_spark.plans.materialize import iter_materialize
+from pythonmapreduce_spark.plans.materialize import iter_materialize, materialize_observed
 from pythonmapreduce_spark.plans.registry import register
 
 # Fixed query for the registered BM25 ranking (terms from the corpus vocab).
@@ -119,13 +119,14 @@ def bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape for 100 TB: ONE corpus pass — a single scan emits
     (doc_id, doc length, per-query-term counts), materialized at
-    integer-array width. The only exchange is the 1-row SinglePartition
-    of the corpus aggregate (N, avgdl, df → idf), which broadcasts onto
-    the matching documents; each document is scored in place, with no
-    explode, no (doc, term) or df shuffle and no doc-length join.
-    TakeOrderedAndProject keeps k rows per partition. Scores round to
-    4dp on both engines before the top-k order so float-summation drift
-    cannot flip the ranking tiebreak (doc_id).
+    integer-array width. That pass also observes the corpus statistics
+    (N, avgdl, df), which the score reads as literals, so the plan has
+    no exchange and no join: each document is scored in place, with no
+    explode, no (doc, term) or df shuffle, no doc-length join and no
+    broadcast of a corpus aggregate. TakeOrderedAndProject keeps k rows
+    per partition. Scores round to 4dp on both engines before the top-k
+    order so float-summation drift cannot flip the ranking tiebreak
+    (doc_id).
     """
     return (
         _bm25_scores(spark, sf_dir)
@@ -141,11 +142,10 @@ def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every input of a document's score but the corpus statistics sits in
     its own row, so all per-document work runs in the scan stage: the
     materialized base holds (doc_id, dl, tf), where ``tf`` counts each
-    query term in ``_QUERY_TERMS`` order. One global aggregate over that
-    base yields n_docs, avgdl and the df array, and the idf array is
-    computed on the same 1-row side, which broadcasts as the only join.
-    No (doc_id, term) row, df table or doc-length join exists, so the one
-    exchange is the aggregate's 1-row SinglePartition.
+    query term in ``_QUERY_TERMS`` order. The pass that materializes the
+    base also observes n_docs, avgdl and each term's df, and the score
+    reads them as literals: the plan has no exchange, no join, no
+    (doc_id, term) row, df table or doc-length join.
 
     Documents with no query term are dropped BEFORE the score: under ANSI
     a corpus of blank texts (avgdl = 0) therefore never reaches the
@@ -153,8 +153,9 @@ def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's sum over matched terms only.
     """
     terms_sql = ", ".join(f"'{t}'" for t in _QUERY_TERMS)
-    # Kept (d): lazy raises CPU min 0.074 -> 0.145 s at sf0.01.
-    base = iter_materialize(
+    # Kept (a): the pass also yields the corpus statistics the score reads;
+    # (d) lazy raises CPU min 0.074 -> 0.145 s at sf0.01.
+    base, stats = materialize_observed(
         load(spark, sf_dir, "documents")
         .select(
             "doc_id",
@@ -167,37 +168,36 @@ def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"transform(array({terms_sql}), "
                 "q -> CAST(size(filter(toks, t -> t = q)) AS BIGINT))"
             ).alias("tf"),
-        )
-    )
-    corpus = base.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        ),
+        F.count(F.lit(1)).alias("n_docs"),
         F.avg("dl").alias("avgdl"),
-        F.array(
-            *[F.count_if(F.col("tf")[i] > 0) for i in range(len(_QUERY_TERMS))]
-        ).alias("df"),
-    ).select(
-        "avgdl",
-        F.transform(
-            "df",
-            lambda d: F.log(1 + (F.col("n_docs") - d + 0.5) / (d + 0.5)),
-        ).alias("idf"),
+        *[
+            F.count_if(F.col("tf")[i] > 0).alias(f"df{i}")
+            for i in range(len(_QUERY_TERMS))
+        ],
     )
-    norm = _K1 * (1 - _B + _B * F.col("dl") / F.col("avgdl"))
+    n_docs = F.lit(stats["n_docs"]).cast("long")
+    norm = _K1 * (1 - _B + _B * F.col("dl") / F.lit(stats["avgdl"]).cast("double"))
     score = reduce(
         operator.add,
         [
             F.when(
                 F.col("tf")[i] > 0,
-                F.col("idf")[i] * F.col("tf")[i] * (_K1 + 1) / (F.col("tf")[i] + norm),
+                _idf(n_docs, F.lit(stats[f"df{i}"]).cast("long"))
+                * F.col("tf")[i] * (_K1 + 1) / (F.col("tf")[i] + norm),
             ).otherwise(0.0)
             for i in range(len(_QUERY_TERMS))
         ],
     )
-    return (
-        base.where(F.exists("tf", lambda x: x > 0))
-        .crossJoin(F.broadcast(corpus))
-        .select("doc_id", (F.round(score, 4) + 0.0).alias("bm25"))
+    return base.where(F.exists("tf", lambda x: x > 0)).select(
+        "doc_id", (F.round(score, 4) + 0.0).alias("bm25")
     )
+
+
+def _idf(n_docs: Column, df: Column) -> Column:
+    """BM25's idf, ln(1 + (N − df + 0.5) / (df + 0.5)), as the oracles
+    write it."""
+    return F.log(1 + (n_docs - df + 0.5) / (df + 0.5))
 
 
 @register(
@@ -963,14 +963,16 @@ def search_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     grades and scores aggregate on the same (query_id, doc_id) key,
     per-query ranking is a window partitioned by query_id, and every
     metric aggregate after the top-k touches ≤ |queries|·k rows.
-    idf/avgdl/qmap sides broadcast. Ranking keys are (4dp-rounded
-    score, doc_id) and metrics round to 6dp — the suite's drift-proof
-    compare convention; DCG terms are irrational (log2 denominators),
-    so a 6dp half-boundary tie between engines is measure-zero.
+    n_docs and avgdl are observed while the base materializes and enter
+    the idf and score as literals; the idf and qmap sides broadcast.
+    Ranking keys are (4dp-rounded score, doc_id) and metrics round to
+    6dp — the suite's drift-proof compare convention; DCG terms are
+    irrational (log2 denominators), so a 6dp half-boundary tie between
+    engines is measure-zero.
 
     ONE narrow base, as in _bm25_scores: (doc_id, dl, query-matching
     tokens, query-phrase bigrams) is computed in a single scan and every
-    downstream table (dl, stats, tf, phrase) reads it; ``graded`` feeds
+    downstream table (dl, tf, phrase) reads it; ``graded`` feeds
     ranked, ideal and nrel.
     """
     from pyspark.sql import Window
@@ -980,13 +982,15 @@ def search_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(qid, t1, t2) for qid, t1, t2 in _EVAL_QUERIES],
         "query_id long, t1 string, t2 string",
     ).coalesce(1)
-    # Kept (c): lazy, documents is scanned 7x instead of once.
-    base = iter_materialize(_ndcg_base(spark, sf_dir))
-    dl = base.select("doc_id", "dl")
-    stats = base.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
+    # Kept (c): lazy, documents is scanned 7x instead of once; (a) the pass
+    # also yields n_docs and avgdl.
+    base, stats = materialize_observed(
+        _ndcg_base(spark, sf_dir),
+        F.count(F.lit(1)).alias("n_docs"),
         F.avg("dl").alias("avgdl"),
     )
+    dl = base.select("doc_id", "dl")
+    avgdl = F.lit(stats["avgdl"]).cast("double")
     tf = (
         base.select("doc_id", F.explode("qtoks").alias("term"))
         .groupBy("doc_id", "term")
@@ -995,12 +999,9 @@ def search_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     idf = (
         tf.groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
-        .crossJoin(F.broadcast(stats))
         .select(
             "term",
-            F.log(
-                1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ).alias("idf"),
+            _idf(F.lit(stats["n_docs"]).cast("long"), F.col("df")).alias("idf"),
         )
     )
     qtf = tf.join(
@@ -1038,7 +1039,6 @@ def search_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         qtf.join(F.broadcast(idf), "term")
         .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats.select("avgdl")))
         .groupBy("query_id", "doc_id")
         .agg(
             F.round(
@@ -1046,7 +1046,7 @@ def search_ndcg_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("idf") * F.col("tf") * (_K1 + 1)
                     / (
                         F.col("tf")
-                        + _K1 * (1 - _B + _B * F.col("dl") / F.col("avgdl"))
+                        + _K1 * (1 - _B + _B * F.col("dl") / avgdl)
                     )
                 ),
                 4,

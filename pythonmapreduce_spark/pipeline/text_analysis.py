@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.catalog import load
-from pythonmapreduce_spark.plans.materialize import iter_materialize
+from pythonmapreduce_spark.plans.materialize import materialize_observed
 from pythonmapreduce_spark.plans.registry import register
 from pythonmapreduce_spark.sources.text_corpus import token_count_col, tokens_col
 
@@ -884,8 +884,6 @@ def collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``observe()`` metric summed during that same pass and folded into the
     projection as a literal.
     """
-    from pyspark.sql import Observation
-
     toks = tokens_col()
     docs = load(spark, sf_dir, "documents")
     uni = (
@@ -898,21 +896,18 @@ def collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
         lambda a, b: F.concat_ws(" ", a, b),
     )
-    obs = Observation()
-    # Kept (a): the driver reads obs's n_big right after this pass.
-    big = iter_materialize(
+    # Kept (a): the driver reads n_big, observed by this pass. It is None
+    # only on an empty corpus, where `big` is empty and the literal never
+    # meets a row.
+    big, stats = materialize_observed(
         docs.select(F.explode(bigrams).alias("bigram"))
         .groupBy("bigram")
-        .agg(F.count(F.lit(1)).alias("c_ab"))
-        .observe(obs, F.sum("c_ab").alias("n_big"))
-        .where(F.col("c_ab") >= 10)
+        .agg(F.count(F.lit(1)).alias("c_ab")),
+        F.sum("c_ab").alias("n_big"),
+        where=F.col("c_ab") >= 10,
     )
-    # The eager materialization above already ran the pass; .get returns
-    # the delivered metric (None only on an empty corpus, where `big` is
-    # empty anyway and the literal is never evaluated against a row).
-    n_big = obs.get["n_big"]
     tot = uni.agg(F.sum("c").alias("n_uni")).withColumn(
-        "n_big", F.lit(n_big).cast("long")
+        "n_big", F.lit(stats["n_big"]).cast("long")
     )
     w1 = F.split(F.col("bigram"), " ").getItem(0)
     w2 = F.split(F.col("bigram"), " ").getItem(1)

@@ -36,11 +36,17 @@ shallow loops (pagerank_iter 1.1 s vs 2.0), but the kept lineage grows
 with loop depth and deep chained loops blow up (graph_cc_bigstar 21.2 s
 vs 2.8; bfs/hits/dedup_clusters all ~2× slower). Both checkpoint forms
 cost a flat amount per round, independent of loop depth.
+
+A base whose global statistics the driver reads (a count, a mean, a
+document frequency) goes through ``materialize_observed``: the
+statistics are ``observe()`` metrics of the same eager pass, so the plan
+needs no 1-row aggregate, no SinglePartition exchange and no broadcast
+cross join to carry them back, and the caller folds them in as literals.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Row
 
 
 def iter_materialize(df: DataFrame) -> DataFrame:
@@ -49,3 +55,24 @@ def iter_materialize(df: DataFrame) -> DataFrame:
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def materialize_observed(
+    df: DataFrame, *metrics: Column, where: Column | None = None
+) -> tuple[DataFrame, Row]:
+    """``iter_materialize`` ``df`` and compute the named aggregate
+    ``metrics`` over its rows in that same pass; return the base and the
+    metrics as one Row. ``where`` filters the materialized rows after the
+    metrics have seen all of them.
+
+    This is the one place that reads an Observation. ``Observation.get``
+    blocks until an action has run the observed plan, and the read here
+    follows the eager pass, so a caller cannot read a metric too early.
+    A count is 0 and a mean None on an empty base.
+    """
+    obs = Observation()
+    observed = df.observe(obs, *metrics)
+    if where is not None:
+        observed = observed.where(where)
+    out = iter_materialize(observed)
+    return out, Row(**obs.get)

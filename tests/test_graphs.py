@@ -116,19 +116,26 @@ def test_graph_plans_have_no_cartesian(spark, sf_smoke) -> None:
 
 
 def test_bm25_scores_in_scan_stage(spark, sf_smoke) -> None:
-    """bm25_rank scores each document in its scan row: the one exchange
-    is the 1-row corpus aggregate (SinglePartition, no hash shuffle), it
-    broadcasts back as the only join, nothing explodes, the documents
+    """bm25_rank scores each document in its scan row: the corpus
+    statistics come from the materializing pass's observed metrics, so
+    the plan has no exchange and no join, nothing explodes, the documents
     are read from the materialized base (no parquet rescan), and the
-    ranking is TakeOrderedAndProject."""
-    plan = _plan(registry.QUERIES["bm25_rank"](spark, sf_smoke))
-    # formatted plans list each node in the tree AND the details section;
-    # count the details headers, "(N) Exchange", which skip BroadcastExchange
-    assert len(re.findall(r"^\(\d+\) Exchange$", plan, re.M)) == 1, plan
-    assert "SinglePartition" in plan
-    assert "hashpartitioning" not in plan
-    # the tree form carries the join type, the details form does not
-    assert plan.count("BroadcastNestedLoopJoin Cross") == 1
+    ranking is TakeOrderedAndProject. Building it runs exactly one job,
+    the materialization that also yields the statistics."""
+    sc = spark.sparkContext
+    group = "bm25_build"
+    sc.setJobGroup(group, "bm25_rank build")
+    try:
+        df = registry.QUERIES["bm25_rank"](spark, sf_smoke)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    plan = _plan(df)
+    # a shuffle exchange would print a "(N) Exchange" details header
+    assert not re.findall(r"^\(\d+\) Exchange$", plan, re.M), plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "BroadcastExchange" not in plan
     assert "CartesianProduct" not in plan
     assert "Generate" not in plan
     assert "Scan parquet" not in plan

@@ -16,7 +16,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.plans import registry
-from pythonmapreduce_spark.plans.materialize import iter_materialize
+from pythonmapreduce_spark.plans.materialize import iter_materialize, materialize_observed
+from tests.harness import run_compare
 
 registry.load_all()
 
@@ -75,24 +76,42 @@ def test_iter_materialize_checkpoint_dir(spark, sf_smoke, ckpt_dir, unset_rows) 
 
 
 def test_iter_materialize_is_eager(spark, ckpt_dir) -> None:
-    """Both paths run a Spark job before they return. collocation_pmi reads
-    an ``observe()`` metric right after iter_materialize, and
+    """Both paths run a Spark job before they return. materialize_observed
+    reads its ``observe()`` metrics right after iter_materialize, and
     ``Observation.get`` blocks forever if no action ran on the plan — so the
-    job must exist BEFORE the metric is read."""
-    from pyspark.sql import Observation
-
+    job must exist BEFORE the metric is read. The metrics cover every row
+    of the pass, also those its ``where`` keeps out of the base."""
     sc = spark.sparkContext
     group = f"eager_{ckpt_dir[1]}"
     sc.setJobGroup(group, "iter_materialize eagerness")
     try:
-        obs = Observation()
-        out = iter_materialize(spark.range(10).observe(obs, F.count(F.lit(1)).alias("n")))
+        out, stats = materialize_observed(
+            spark.range(10),
+            F.count(F.lit(1)).alias("n"),
+            F.sum("id").alias("total"),
+            where=F.col("id") < 3,
+        )
         assert list(sc.statusTracker().getJobIdsForGroup(group)), "no job ran"
-        assert obs.get["n"] == 10
+        assert stats["n"] == 10 and stats.total == 45
+        assert sorted(r.id for r in out.collect()) == [0, 1, 2]
         out.unpersist()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+def test_bm25_rank_oracle_with_checkpoint_dir(spark, sf_oracle, tmp_path) -> None:
+    """bm25_rank reads its corpus statistics from the materializing pass's
+    observed metrics; the oracle diff (run on the localCheckpoint path by
+    the oracle suite) also holds on the reliable-checkpoint path."""
+    with _checkpoint_dir(spark, tmp_path / "ckpt"):
+        run_compare(
+            spark,
+            sf_oracle,
+            "bm25_rank",
+            registry.QUERIES["bm25_rank"],
+            registry.ORACLES["bm25_rank"],
+        )
 
 
 def test_aqe_splits_skewed_join(spark) -> None:

@@ -826,7 +826,8 @@ def test_loop_base_two_exchanges_and_single_plan_loops_build_no_job(
     # collect_set (vtx). An edge distinct() or a union with the mirrored
     # edges (which re-plans the whole basket subtree) fails here.
     from pythonmapreduce_spark.operators.graphs import _sym_adjacency
-    from pythonmapreduce_spark.pipeline import dedup, text_analysis
+    from pythonmapreduce_spark.pipeline import dedup
+    from pythonmapreduce_spark.plans import materialize
     from pythonmapreduce_spark.plans.materialize import iter_materialize
 
     base = _plan(_sym_adjacency(spark, sf_smoke))
@@ -843,14 +844,15 @@ def test_loop_base_two_exchanges_and_single_plan_loops_build_no_job(
     # nothing. A checkpoint, a count() action or any other eager step at
     # build time fails here. The job count is read rather than final-plan
     # strings, which AQE repeats per stage. The one-pass queries' passes
-    # are counted at their modules' iter_materialize.
+    # are counted at iter_materialize: dedup's import of it, and the one
+    # materialize_observed calls (collocation_pmi).
     passes: list = []
 
     def counted(df):
         passes.append(df)
         return iter_materialize(df)
 
-    for module in (dedup, text_analysis):
+    for module in (dedup, materialize):
         monkeypatch.setattr(module, "iter_materialize", counted)
     sc = spark.sparkContext
     for name in SINGLE_PLAN_QUERIES + ONE_PASS_QUERIES:
@@ -1033,15 +1035,10 @@ def test_survival_km_single_stats_pass(spark, sf_smoke) -> None:
     # last-seen table: the pre-round-7 form ran them as two separate
     # aggs, each re-deriving the user-key collapse (3 events scans).
     # Executed plan (AQE reuse visible): ≤2 events scans, ≥1 reuse.
-    import re
-
     df = registry.QUERIES["survival_km"](spark, sf_smoke)
-    df.collect()
-    jvm = spark._jvm
-    plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-    scans = len(re.findall(r"Location:[^\n]*?/events\.parquet", plan))
+    scans = table_scans(signature(df)).get("events", 0)
     assert scans <= 2, f"events scanned {scans}x"
-    assert "ReusedExchange" in plan, "last-seen derivations no longer share"
+    assert "ReusedExchange" in _plan(df), "last-seen derivations no longer share"
 
 
 def test_chi2_contingency_materialized_once(spark, sf_smoke) -> None:
@@ -1052,13 +1049,8 @@ def test_chi2_contingency_materialized_once(spark, sf_smoke) -> None:
     # column sets differ, so AQE never collapses them). With the base
     # materialized the corpus scan happens once, eagerly, and the final
     # executed plan contains NO parquet scan at all.
-    import re
-
     df = registry.QUERIES["chi2_independence"](spark, sf_smoke)
-    df.collect()
-    jvm = spark._jvm
-    plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-    scans = len(re.findall(r"Location:[^\n]*?/customer\.parquet", plan))
+    scans = table_scans(signature(df)).get("customer", 0)
     assert scans == 0, f"customer re-scanned {scans}x past the materialized base"
 
 
@@ -1066,15 +1058,10 @@ def test_retention_cohorts_single_events_scan(spark, sf_smoke) -> None:
     # Cohort week must come from a MIN window over user_id, not a
     # groupBy+self-join: the pre-reshape form ran 3 events scans with
     # zero runtime exchange reuse. One scan, no join.
-    import re
-
     df = registry.QUERIES["retention_cohorts"](spark, sf_smoke)
-    df.collect()
-    jvm = spark._jvm
-    plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-    scans = len(re.findall(r"Location:[^\n]*?/events\.parquet", plan))
+    scans = table_scans(signature(df)).get("events", 0)
     assert scans == 1, f"events scanned {scans}x"
-    assert "Join" not in plan, "cohort week regrew a self-join"
+    assert "Join" not in _plan(df), "cohort week regrew a self-join"
 
 
 def test_resample_ffill_series_from_observed(spark, sf_smoke) -> None:
@@ -1082,13 +1069,8 @@ def test_resample_ffill_series_from_observed(spark, sf_smoke) -> None:
     # aggregate, not a third events scan: post-reshape the final plan
     # holds ONLY the global day-span scan (the observed aggregate's scan
     # ran eagerly inside the materialization).
-    import re
-
     df = registry.QUERIES["resample_ffill"](spark, sf_smoke)
-    df.collect()
-    jvm = spark._jvm
-    plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-    scans = len(re.findall(r"Location:[^\n]*?/events\.parquet", plan))
+    scans = table_scans(signature(df)).get("events", 0)
     assert scans <= 1, f"events scanned {scans}x past the materialized aggregate"
 
 
@@ -1209,13 +1191,8 @@ def test_intradoc_spans_window_not_selfjoin(spark, sf_smoke) -> None:
     # the groupBy+self-join form re-derived the exploded span table on
     # both sides (3 documents scans, zero runtime reuse). Two scans stay:
     # the span explode and the all-docs length pass.
-    import re
-
     df = registry.QUERIES["dedup_intradoc_spans"](spark, sf_smoke)
-    df.collect()
-    jvm = spark._jvm
-    plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-    scans = len(re.findall(r"Location:[^\n]*?/documents\.parquet", plan))
+    scans = table_scans(signature(df)).get("documents", 0)
     assert scans <= 2, f"documents scanned {scans}x — span self-join regrew"
 
 
@@ -1224,13 +1201,8 @@ def test_boilerplate_detect_window_not_having_join(spark, sf_smoke) -> None:
     # seg_key) window, not groupBy-HAVING joined back (3 documents scans,
     # zero runtime reuse). Two scans stay: the segment explode and the
     # all-docs id pass.
-    import re
-
     df = registry.QUERIES["boilerplate_detect"](spark, sf_smoke)
-    df.collect()
-    jvm = spark._jvm
-    plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-    scans = len(re.findall(r"Location:[^\n]*?/documents\.parquet", plan))
+    scans = table_scans(signature(df)).get("documents", 0)
     assert scans <= 2, f"documents scanned {scans}x — HAVING join regrew"
 
 

@@ -219,13 +219,6 @@ ALLOW: dict[str, dict[str, str]] = {
             "in order)"
         ),
     },
-    "graph_common_neighbors": {
-        "objagg:collect_set": (
-            "adjacency set per vertex — bounded by max degree, which the "
-            "co-occurrence construction bounds by order size (the same "
-            "bound the wedge join's Σdeg² argument rests on)"
-        ),
-    },
     "anomaly_mad": {
         "objagg:percentile": (
             "median/MAD over the ALREADY-COLLAPSED |days|-row daily "
@@ -289,6 +282,26 @@ for _q in (
         "LSH bucket membership list: id-width rows linear in bucket "
         "members (≈ one duplicate cluster); pair explosion capped by "
         "_BUCKET_CAP star degradation"
+    )
+
+# The adjacency base (graphs._sym_adjacency, basket_adjacency_rows) is
+# one collect_set row per vertex, which the lazy graph bases put into
+# each of these final plans.
+for _q in (
+    "graph_degree",
+    "triangle_count",
+    "graph_common_neighbors",
+    "pagerank_iter",
+    "bfs_distances",
+    "graph_clustering_coef",
+    "graph_cc_rounds",
+    "label_propagation_communities",
+):
+    ALLOW.setdefault(_q, {})["objagg:collect_set"] = (
+        "adjacency set per vertex — bounded by max degree, which the "
+        "co-occurrence construction bounds by order size (the same "
+        "bound the wedge join's Σdeg² argument rests on); ROADMAP item 4 "
+        "chunks the row at a fixed width"
     )
 
 # IVF's "collect" is the K centroids into ONE broadcastable row — bound

@@ -130,14 +130,14 @@ NOTES = {
     ),
     "bm25_rank": (
         "every document is scored in the scan stage from its own per-term "
-        "count array; the one exchange is the 1-row SinglePartition corpus "
-        "aggregate (N, avgdl, df → idf), which broadcasts back as the only "
-        "join; TakeOrderedAndProject caps the ranking at k rows per "
-        "partition."
+        "count array; the corpus statistics (N, avgdl, df) are observe() "
+        "metrics of the pass that materializes the base and enter the "
+        "score as literals, so the plan has no exchange and no join; "
+        "TakeOrderedAndProject caps the ranking at k rows per partition."
     ),
     "hybrid_search_rrf": (
-        "the lexical leg is bm25_rank's scorer (one 1-row SinglePartition "
-        "corpus aggregate broadcast onto the scan-stage scores); the "
+        "the lexical leg is bm25_rank's scorer (scan-stage scores over the "
+        "materialized base, corpus statistics as literals, no exchange); the "
         "semantic leg broadcasts the one query vector onto the unshuffled "
         "embeddings scan; each leg's row_number <= 100 becomes a "
         "TakeOrderedAndProject, so the full-outer fusion join and the final "
@@ -214,7 +214,8 @@ NOTES = {
         "offline ranking evaluation with bm25_rank's scan discipline: both "
         "corpus explodes (terms and bigrams) carry their IN-list filter "
         "directly on the Generate, so only the 6 eval terms / 3 query "
-        "phrases ever reach an Exchange; qmap/idf/avgdl broadcast; every "
+        "phrases ever reach an Exchange; n_docs and avgdl are observed while "
+        "the base materializes and enter as literals; qmap/idf broadcast; every "
         "aggregate past the per-query top-10 touches ≤ |queries|·k rows. "
         "tests/test_plans.py asserts every Generate's parent is a Filter "
         "and the documents scans read only (doc_id, text)."
