@@ -27,6 +27,12 @@ Scale notes per operator:
   broadcast job, and per round only the state moves. The build side is
   one AQE-coalesced partition of the adjacency; a super-node row is
   ROADMAP item 4.
+- A loop-wide scalar rides an exchange the loop already has: PageRank's
+  |V| is the sum of a sentinel row that round 1 emits beside each
+  vertex's contributions, and the subquery that reads it filters the
+  round's aggregate output, so it reuses round 1's exchange. A NULL
+  sentinel key or a filter on the key is pushed below the aggregate and
+  costs the subquery its own exchange (see _pagerank_ranks).
 - The edge-row loops (graph_cc_rounds, label_propagation_communities,
   hits_hub_authority) join O(V) state to the 2|E| edge rows unhinted:
   there AQE's broadcast of the state, taken only under the broadcast
@@ -42,7 +48,11 @@ from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.catalog import load
 from pythonmapreduce_spark.plans.registry import register
-from pythonmapreduce_spark.plans.materialize import iter_materialize, materialize_observed
+from pythonmapreduce_spark.plans.materialize import (
+    iter_materialize,
+    materialize_observed,
+    observe_pass,
+)
 
 # Shared CTE prefix for the DuckDB oracles — identical edge derivation.
 # AS MATERIALIZED throughout the graph oracles: DuckDB inlines a CTE
@@ -112,6 +122,11 @@ def _round_join(adj: DataFrame, state: DataFrame, on) -> DataFrame:
     return adj.hint("shuffle_hash").join(state, on)
 
 
+# PageRank's |V| row key: below every part key, so it never names a
+# vertex, and not NULL (see _pagerank_ranks).
+_SENTINEL = -1
+
+
 def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full (node, pr) vector after 3 iterations; no rows on an empty
     graph. Factored out of the registered query so tests can assert
@@ -122,28 +137,43 @@ def _pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = _sym_adjacency(spark, sf_dir).select(
         "vtx", "nbrs", F.size("nbrs").alias("d")
     )
-    # |V| is an in-plan scalar subquery, not a count() action. It counts
-    # the rows with d > 0, which is every row: basket_adjacency_rows
-    # emits a vertex only when it has a neighbor. Reading nbrs keeps the
-    # subquery on the base's own vtx exchange; a plain count(*) is
-    # column-pruned into a second, vtx-only exchange.
-    n_nodes = adj.agg(F.count_if(F.col("d") > 0)).scalar()
-    teleport = F.lit(0.15) / n_nodes
-    # Iteration-1 specialization (superstep-0 constant folding): the
-    # uniform init makes every rank the literal 1/|V|, so each vertex
-    # sends the constant (1/|V|)/d to every neighbor — fold it into the
-    # explode+aggregate instead of joining a constant rank table. Same
-    # pr/d terms summed under the same grouping; any reordering drift
-    # sits far below the ×1000-then-round-6dp compare precision the
-    # oracle already relies on for cross-engine float summation.
-    ranks = (
+    # Round 1 (superstep-0 constant folding): the uniform init makes every
+    # rank 1/|V|, so a vertex's rank is (0.15 + m) / |V| with m the sum of
+    # 0.85/d over its neighbors — no rank table to join. Each adjacency row
+    # also emits one _SENTINEL row with t = -1; the rows are exactly the
+    # vertices, so the sentinel's m is -|V|. |V| is a scalar subquery that
+    # filters this aggregate's output, so it reads round 1's own dst
+    # exchange as a ReusedExchange: no count job, no SinglePartition
+    # exchange. Round 2's join to the adjacency drops the sentinel row.
+    # Forms that lose the reuse or add bytes (pagerank_iter at sf0.01,
+    # against 201,048 B / 8 tasks for this one):
+    # - a NULL key: the round join's inferred isnotnull(src) is pushed
+    #   below this aggregate, so the subquery needs an exchange of its
+    #   own (9 tasks);
+    # - a subquery filter on the key instead of on m: pushed below the
+    #   aggregate the same way (9 tasks);
+    # - array_append in place of concat: its result may hold NULLs, so
+    #   isnotnull(dst) is kept below the aggregate (220,504 B, 9 tasks);
+    # - t = 1/d (+213 B), or all three rounds unnormalized with one
+    #   division at the end (+433 B): the value form moves the
+    #   compressed bytes.
+    raw = (
         adj.select(
-            F.explode("nbrs").alias("dst"),
-            (F.lit(1.0) / n_nodes / F.col("d")).alias("t"),
+            F.explode(F.concat("nbrs", F.array(F.lit(_SENTINEL)))).alias("dst"), "d"
+        )
+        .select(
+            "dst",
+            F.when(F.col("dst") == _SENTINEL, -1.0)
+            .otherwise(0.85 / F.col("d"))
+            .alias("t"),
         )
         .groupBy("dst")
-        .agg((teleport + 0.85 * F.sum("t")).alias("pr"))
-        .withColumnRenamed("dst", "src")
+        .agg(F.sum("t").alias("m"))
+    )
+    n_nodes = raw.where(F.col("m") < 0).select(-F.col("m")).scalar()
+    teleport = F.lit(0.15) / n_nodes
+    ranks = raw.select(
+        F.col("dst").alias("src"), ((F.lit(0.15) + F.col("m")) / n_nodes).alias("pr")
     )
     for _ in range(2):
         ranks = (
@@ -933,8 +963,9 @@ def kcore_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per round: two semi-joins restrict the checkpointed adjacency to the
     surviving subgraph (vertex-key equi-joins, survivor sets O(V)), then
     one combine-enabled degree count — no edge regeneration, no pair
-    explosion. Emits survivors per round, counted while each round's
-    survivor set materializes; a round losing no vertices is the
+    explosion. Emits survivors per round, counted in the pass that
+    materializes each round's survivor set (round 3's pass, which no
+    round reads, only counts); a round losing no vertices is the
     converged core.
     """
     # Round 12: adjacency-array loop base (see _sym_adjacency) — round 1's
@@ -964,11 +995,14 @@ def kcore_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         # The pass that materializes a round's survivors also counts them,
         # so the three counts return as one local partition with no
-        # aggregate over the survivor sets.
-        alive, stats = materialize_observed(
-            deg.where(F.col("deg") >= 3).select(F.col("src").alias("vid")),
-            F.count(F.lit(1)).alias("n_alive"),
-        )
+        # aggregate over the survivor sets. Nothing reads round 3's
+        # survivors, so its pass only counts them and keeps no blocks.
+        survivors = deg.where(F.col("deg") >= 3).select(F.col("src").alias("vid"))
+        n_alive = F.count(F.lit(1)).alias("n_alive")
+        if r < 3:
+            alive, stats = materialize_observed(survivors, n_alive)
+        else:
+            stats = observe_pass(survivors, n_alive)
         counts.append((r, stats["n_alive"]))
     return spark.createDataFrame(counts, "peel_round int, n_alive long").coalesce(1)
 

@@ -42,6 +42,8 @@ document frequency) goes through ``materialize_observed``: the
 statistics are ``observe()`` metrics of the same eager pass, so the plan
 needs no 1-row aggregate, no SinglePartition exchange and no broadcast
 cross join to carry them back, and the caller folds them in as literals.
+A frame whose rows nothing reads after its statistics (k-core's last
+round) goes through ``observe_pass`` instead, which materializes nothing.
 """
 
 from __future__ import annotations
@@ -65,7 +67,7 @@ def materialize_observed(
     metrics as one Row. ``where`` filters the materialized rows after the
     metrics have seen all of them.
 
-    This is the one place that reads an Observation. ``Observation.get``
+    This module is the one place that reads an Observation. ``Observation.get``
     blocks until an action has run the observed plan, and the read here
     follows the eager pass, so a caller cannot read a metric too early.
     A count is 0 and a mean None on an empty base.
@@ -76,3 +78,13 @@ def materialize_observed(
         observed = observed.where(where)
     out = iter_materialize(observed)
     return out, Row(**obs.get)
+
+
+def observe_pass(df: DataFrame, *metrics: Column) -> Row:
+    """Compute the named aggregate ``metrics`` over ``df``'s rows in one
+    pass into the noop sink, which keeps no blocks: for a frame whose
+    statistics the driver reads but whose rows nothing reads. Same plan
+    as ``materialize_observed``'s pass, less the checkpoint."""
+    obs = Observation()
+    df.observe(obs, *metrics).write.format("noop").mode("overwrite").save()
+    return Row(**obs.get)

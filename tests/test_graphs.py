@@ -9,6 +9,7 @@ import re
 from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.operators.graphs import (
+    _SENTINEL,
     _edges,
     _pagerank_ranks,
     _sym_adjacency,
@@ -106,6 +107,15 @@ def test_pagerank_mass_conserved(spark, sf_smoke) -> None:
     assert abs(total - 1.0) < 1e-9
     low = ranks.agg(F.min("pr").alias("m")).collect()[0]["m"]
     assert low > 0
+
+
+def test_pagerank_ranks_never_emit_the_sentinel(spark, sf_smoke) -> None:
+    """Round 1's |V| sentinel row stops at round 2's adjacency join: the
+    rank vector holds exactly the graph's vertices."""
+    ranks = _pagerank_ranks(spark, sf_smoke)
+    nodes = {r.src for r in ranks.select("src").collect()}
+    assert _SENTINEL not in nodes
+    assert nodes == {r.vtx for r in _sym_adjacency(spark, sf_smoke).select("vtx").collect()}
 
 
 def test_graph_plans_have_no_cartesian(spark, sf_smoke) -> None:
@@ -211,9 +221,10 @@ def test_superstep0_specializations_match_general_round(spark, sf_smoke) -> None
     assert cc_general.exceptAll(cc_special).count() == 0
     assert cc_special.exceptAll(cc_general).count() == 0
 
-    # PageRank iteration 1, general join form vs folded-literal form:
-    # float sums may reorder, so compare per-vertex within 1e-12 — three
-    # orders tighter than the oracle's round-6dp-of-×1000 compare.
+    # PageRank iteration 1, general join form vs _pagerank_ranks' folded
+    # form (0.15 + Σ 0.85/d) / |V|: float sums may reorder, so compare
+    # per-vertex within 1e-12 — three orders tighter than the oracle's
+    # round-6dp-of-×1000 compare.
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     base = sym.join(deg, "src")
     n = base.select("src").distinct().count()
@@ -227,7 +238,7 @@ def test_superstep0_specializations_match_general_round(spark, sf_smoke) -> None
         .agg((F.lit(teleport) + 0.85 * F.sum(F.col("pr") / F.col("d"))).alias("pr"))
     )
     pr_special = base.groupBy("dst").agg(
-        (F.lit(teleport) + 0.85 * F.sum(F.lit(1.0 / n) / F.col("d"))).alias("pr")
+        ((F.lit(0.15) + F.sum(0.85 / F.col("d"))) / n).alias("pr")
     )
     drift = (
         pr_general.withColumnRenamed("pr", "pg")

@@ -16,7 +16,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.plans import registry
-from pythonmapreduce_spark.plans.materialize import iter_materialize, materialize_observed
+from pythonmapreduce_spark.plans.materialize import (
+    iter_materialize,
+    materialize_observed,
+    observe_pass,
+)
 from tests.harness import run_compare
 
 registry.load_all()
@@ -98,6 +102,21 @@ def test_iter_materialize_is_eager(spark, ckpt_dir) -> None:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+def test_observe_pass_keeps_no_blocks(spark) -> None:
+    """observe_pass reads its metrics after one pass into the noop sink
+    and leaves no RDD resident: kcore_rounds' last round is counted this
+    way instead of being checkpointed."""
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
+    stats = observe_pass(
+        spark.range(10).where(F.col("id") >= 3),
+        F.count(F.lit(1)).alias("n"),
+        F.sum("id").alias("total"),
+    )
+    assert stats["n"] == 7 and stats.total == 42
+    assert set(sc._jsc.getPersistentRDDs().keySet().toArray()) <= before
 
 
 def test_bm25_rank_oracle_with_checkpoint_dir(spark, sf_oracle, tmp_path) -> None:

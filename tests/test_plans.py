@@ -802,6 +802,29 @@ def test_adjacency_round_joins_are_shuffle_hash_on_the_base_exchange(
     assert len(round_exchanges) == rounds, [n.simpleString(100) for n in round_exchanges]
 
 
+def test_pagerank_vertex_count_reuses_round_one_exchange(spark, sf_smoke) -> None:
+    # |V| is the sum of round 1's sentinel row: its scalar subquery reads
+    # round 1's dst exchange as a ReusedExchange, so the plan (subqueries
+    # included) has no count job's SinglePartition exchange and reuses no
+    # other round exchange. A NULL sentinel key or a subquery filter on
+    # the key is pushed below the aggregate and fails here.
+    nodes = executed_nodes(registry.QUERIES["pagerank_iter"](spark, sf_smoke))
+    singles = [
+        n.simpleString(100)
+        for n in nodes
+        if n.nodeName() == "Exchange" and "SinglePartition" in n.simpleString(100)
+    ]
+    assert not singles, singles
+    reused = [
+        n.child()
+        for n in nodes
+        if n.nodeName() == "ReusedExchange" and "hashpartitioning(dst#" in n.simpleString(100)
+    ]
+    assert len(reused) == 1, [r.simpleString(100) for r in reused]
+    # round 1 is the one round exchange with no round join below it
+    assert "ShuffledHashJoin" not in reused[0].treeString(), reused[0].treeString()
+
+
 SINGLE_PLAN_QUERIES = (
     "pagerank_iter",
     "bfs_distances",

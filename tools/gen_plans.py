@@ -122,6 +122,16 @@ NOTES = {
         "volume is the Σ deg² bound kept small by the order-size-bounded "
         "co-occurrence degree. One plan, no checkpoint."
     ),
+    "pagerank_iter": (
+        "three rounds in one plan over the vtx-partitioned adjacency base: "
+        "rounds 2 and 3 join the O(V) ranks to it as shuffle-hash joins on "
+        "the base's own exchange (ReusedExchange), and each round moves "
+        "only (dst, partial sum) rows. Round 1 folds the uniform ranks and "
+        "emits one sentinel row per vertex beside the contributions; |V| is "
+        "the sentinel's sum, read by a scalar subquery that reuses round "
+        "1's exchange, so no count job and no SinglePartition exchange. "
+        "One plan, no checkpoint."
+    ),
     "tfidf_cosine_pairs": (
         "partial dot products generated per POSTING LIST (equi-join on the "
         "bigram key), never per document pair; the df∈[2,100] prune bounds "
