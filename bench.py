@@ -163,15 +163,18 @@ def main() -> int:
     warmups, timed_runs = 2, 3
     times: dict[str, float] = {}
     mins: dict[str, float] = {}
+
+    def noop(df) -> None:
+        df.write.mode("overwrite").format("noop").save()
+
     for name in HEADLINE:
-        fn = registry.QUERIES[name]
         for _ in range(warmups):
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+            registry.run_query(spark, name, sf_dir, noop)
         assert_no_cache(name)
         samples = []
         for _ in range(timed_runs):
             t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+            registry.run_query(spark, name, sf_dir, noop)
             samples.append(time.perf_counter() - t0)
         times[name] = round(statistics.median(samples), 3)
         mins[name] = round(min(samples), 3)

@@ -53,12 +53,14 @@ def main(argv: list[str] | None = None) -> int:
     if args.name not in registry.QUERIES:
         print(f"unknown query: {args.name}", file=sys.stderr)
         return 2
-    spark = get_spark("pythonmapreduce-spark-cli")
-    df = registry.QUERIES[args.name](spark, args.sf_dir)
-    if args.cmd == "explain":
-        df.explain("formatted")
-    else:
-        df.show(args.limit, truncate=False)
+
+    def sink(df) -> None:
+        if args.cmd == "explain":
+            df.explain("formatted")
+        else:
+            df.show(args.limit, truncate=False)
+
+    registry.run_query(get_spark("pythonmapreduce-spark-cli"), args.name, args.sf_dir, sink)
     return 0
 
 

@@ -1146,22 +1146,26 @@ def chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cont, ["seg", "nat"], "left")
         .select("seg", "nat", F.coalesce("cnt", F.lit(0.0)).alias("cnt"))
     )
+    by_seg, by_nat = Window.partitionBy("seg"), Window.partitionBy("nat")
+    # cells is the full segs x nats grid, so a segment's row count is
+    # |nats| and a nation's is |segs|: dof comes from the margin windows,
+    # with no count_distinct (whose Expand orders its groups per build).
+    # An empty grid counts 0 of each, as COUNT(DISTINCT) does.
     tot = cells.select(
         "seg",
         "nat",
         "cnt",
-        F.sum("cnt").over(Window.partitionBy("seg")).alias("rt"),
-        F.sum("cnt").over(Window.partitionBy("nat")).alias("ct"),
+        F.sum("cnt").over(by_seg).alias("rt"),
+        F.sum("cnt").over(by_nat).alias("ct"),
         F.sum("cnt").over(Window.partitionBy()).alias("n"),
+        F.count(F.lit(1)).over(by_seg).alias("n_nat"),
+        F.count(F.lit(1)).over(by_nat).alias("n_seg"),
     )
     e = F.col("rt") * F.col("ct") / F.col("n")
+    n_segs, n_nats = (F.coalesce(F.max(c), F.lit(0)) for c in ("n_seg", "n_nat"))
     return tot.agg(
         F.round(F.sum((F.col("cnt") - e) * (F.col("cnt") - e) / e), 4).alias("chi2"),
-        (
-            (F.count_distinct("seg") - 1) * (F.count_distinct("nat") - 1)
-        )
-        .cast("long")
-        .alias("dof"),
+        ((n_segs - 1) * (n_nats - 1)).cast("long").alias("dof"),
         F.max("n").cast("long").alias("n_obs"),
     )
 

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.catalog import load
-from pythonmapreduce_spark.plans.materialize import iter_materialize
+from pythonmapreduce_spark.plans.materialize import iter_materialize, release_at_run_end
 from pythonmapreduce_spark.plans.registry import QUERIES, register
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1115,14 +1115,6 @@ def ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # semdedup_k below.
 _SEMDEDUP_K = 64
 
-# Per-session history of centroid broadcasts (see semdedup_assign) —
-# weak-keyed so a stopped session releases its broadcasts.
-import weakref  # noqa: E402
-
-_ASSIGN_BC_HISTORY: "weakref.WeakKeyDictionary[SparkSession, list]" = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def _semdedup_unit_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings as unit vectors (normalized once at the scan; cosine ≡ dot
@@ -1169,15 +1161,7 @@ def semdedup_assign(spark: SparkSession, e: DataFrame, centroids: DataFrame) -> 
     cid_arr = np.array([r["cid"] for r in rows], dtype=np.int64)
     cmat = np.array([list(r["cv"]) for r in rows], dtype=np.float64)  # K × d
     bc = spark.sparkContext.broadcast((cid_arr, cmat.T.copy()))  # d × K
-    # Bound broadcast accumulation across repeated calls in one session
-    # (bench warmups, scaling sweeps, long-lived servers): unpersist the
-    # oldest beyond a small window. unpersist (not destroy) keeps the
-    # driver-side value, so a still-held older assign DataFrame simply
-    # re-broadcasts on its next execution instead of failing.
-    hist = _ASSIGN_BC_HISTORY.setdefault(spark, [])
-    hist.append(bc)
-    while len(hist) > 8:
-        hist.pop(0).unpersist(blocking=False)
+    release_at_run_end(lambda: bc.unpersist(blocking=False))
 
     def assign_batches(batches):
         cids, ct = bc.value
@@ -1867,12 +1851,7 @@ def _pq_adc_scored(spark: SparkSession, sf_dir: str):
     dts = ((qmat[:, :, None, :] - cb[None, :, :, :]) ** 2).sum(axis=3)  # (Q, M, K)
     qids = np.array([int(r["vec_id"]) for r in qrows], dtype=np.int64)
     bc = spark.sparkContext.broadcast((cb, dts, qids))
-    # Same broadcast-accumulation bound as semdedup_assign: long-lived
-    # sessions (bench warmups, scaling sweeps) unpersist the oldest.
-    hist = _ASSIGN_BC_HISTORY.setdefault(spark, [])
-    hist.append(bc)
-    while len(hist) > 8:
-        hist.pop(0).unpersist(blocking=False)
+    release_at_run_end(lambda: bc.unpersist(blocking=False))
 
     scored = unit.mapInPandas(
         _pq_fused_adc(bc), schema="q_id long, vec_id long, est_d2 double"

@@ -44,19 +44,56 @@ needs no 1-row aggregate, no SinglePartition exchange and no broadcast
 cross join to carry them back, and the caller folds them in as literals.
 A frame whose rows nothing reads after its statistics (k-core's last
 round) goes through ``observe_pass`` instead, which materializes nothing.
+
+Lifetime: a run scope (``run_scope``, opened per thread by
+``registry.run_query``) holds a release for each base checkpointed, each
+broadcast and each memory-sink view created while it is open, and calls
+them as it closes: non-blocking unpersists and a view drop, never a job.
+Outside a scope nothing registers; Spark's ContextCleaner frees what a
+build left once it is garbage-collected, and always owns the files of a
+reliable checkpoint (``unpersist`` frees blocks only).
 """
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import Column, DataFrame, Observation, Row
+
+_open = threading.local()
+
+
+@contextmanager
+def run_scope() -> Iterator[list[Callable[[], object]]]:
+    """Hold the releases registered on this thread until the block exits,
+    then call them; yields the list of releases held so far."""
+    outer = getattr(_open, "releases", None)
+    _open.releases = releases = []
+    try:
+        yield releases
+    finally:
+        _open.releases = outer
+        for release in releases:
+            release()
+
+
+def release_at_run_end(release: Callable[[], object]) -> None:
+    """Have this thread's open run scope call ``release`` when it closes;
+    no-op when no scope is open."""
+    releases = getattr(_open, "releases", None)
+    if releases is not None:
+        releases.append(release)
 
 
 def iter_materialize(df: DataFrame) -> DataFrame:
     """Materialize an iteration base eagerly: reliable checkpoint when the
     session has a checkpoint dir, localCheckpoint otherwise."""
-    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+    reliable = df.sparkSession.sparkContext.getCheckpointDir() is not None
+    out = (df.checkpoint if reliable else df.localCheckpoint)(eager=True)
+    release_at_run_end(lambda: out._jdf.logicalPlan().rdd().unpersist(False))
+    return out
 
 
 def materialize_observed(

@@ -46,10 +46,14 @@ import re
 import weakref
 
 from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pythonmapreduce_spark.plans.materialize import run_scope
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
+T = TypeVar("T")
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
@@ -121,6 +125,15 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
         return wrapped
 
     return deco
+
+
+def run_query(
+    spark: SparkSession, name: str, sf_dir: str, sink: Callable[[DataFrame], T]
+) -> T:
+    """Build query ``name`` and return ``sink(df)``, then release what the
+    build materialized (``materialize.run_scope``), also if the sink raises."""
+    with run_scope():
+        return sink(QUERIES[name](spark, sf_dir))
 
 
 def query_names() -> list[str]:

@@ -43,6 +43,8 @@ from pythonmapreduce_spark.plans import registry
 
 _DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 _MAX_LIMIT = 10_000
+# Finished jobs (and their rows) the table keeps; older ones are evicted.
+_MAX_FINISHED_JOBS = 1_000
 
 
 def _json_cell(v):
@@ -111,18 +113,21 @@ class JobServer:
         job.status = "RUNNING"
         job.log_line("started")
         try:
-            df = registry.QUERIES[job.name](self.spark, job.sf_dir)
-            rows = df.limit(job.limit).collect()
-            job.columns = df.columns
-            job.rows = [
-                {c: _json_cell(r[c]) for c in df.columns} for r in rows
-            ]
+            job.columns, rows = registry.run_query(
+                self.spark, job.name, job.sf_dir,
+                lambda df: (df.columns, df.limit(job.limit).collect()),
+            )
+            job.rows = [{c: _json_cell(r[c]) for c in job.columns} for r in rows]
             job.status = "COMPLETED"
             job.log_line(f"completed rows={len(job.rows)}")
         except Exception as e:  # noqa: BLE001 — surfaced through the API
             job.status = "FAILED"
             job.error = f"{type(e).__name__}: {e}"
             job.log_line(f"failed: {job.error}")
+        with self._lock:  # evict the oldest finished jobs past the bound
+            done = [k for k, j in self.jobs.items() if j.status in ("COMPLETED", "FAILED")]
+            for k in done[: max(0, len(done) - _MAX_FINISHED_JOBS)]:
+                del self.jobs[k]
 
     def get(self, job_id: str) -> Job | None:
         return self.jobs.get(job_id)
@@ -164,7 +169,7 @@ def _make_handler(srv: JobServer):
                 )
             if path == "/jobs":
                 return self._send(
-                    200, {"jobs": [j.to_summary() for j in srv.jobs.values()]}
+                    200, {"jobs": [j.to_summary() for j in list(srv.jobs.values())]}
                 )
             parts = path.split("/")
             if len(parts) >= 3 and parts[1] == "jobs":

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.catalog import SCHEMAS, events_stream_source
+from pythonmapreduce_spark.plans.materialize import release_at_run_end
 from pythonmapreduce_spark.plans.registry import register
 
 # Progress events of the most recent completed _run_to_memory query
@@ -95,6 +96,7 @@ def _run_to_memory(
     # it here (not at interpreter exit) stops the one-leaked-dir-per-
     # streaming-query growth the old fire-and-forget path had
     shutil.rmtree(ckpt, ignore_errors=True)
+    release_at_run_end(lambda: spark.catalog.dropTempView(name))
     return spark, name
 
 

@@ -18,6 +18,7 @@ import numpy as np
 import pandas as pd
 
 from pythonmapreduce_spark.catalog import TABLES
+from pythonmapreduce_spark.plans import registry
 
 
 def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -82,10 +83,10 @@ def compare(spark_df, oracle_rows: pd.DataFrame, name: str = "query") -> None:
         raise AssertionError(f"{name}: value mismatch; first diffs (spark vs oracle): {diffs}")
 
 
-def run_compare(spark, sf_dir: str, name: str, query_fn, oracle: str) -> None:
+def run_compare(spark, sf_dir: str, name: str) -> None:
     con = duckdb_con(sf_dir)
     try:
-        oracle_rows = con.sql(oracle).df()
+        oracle_rows = con.sql(registry.ORACLES[name]).df()
     finally:
         con.close()
-    compare(query_fn(spark, sf_dir), oracle_rows, name=name)
+    registry.run_query(spark, name, sf_dir, lambda df: compare(df, oracle_rows, name=name))

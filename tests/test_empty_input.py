@@ -13,6 +13,7 @@ import os
 import tempfile
 
 import pytest
+from pyspark.sql import DataFrame
 
 from pythonmapreduce_spark.catalog import SCHEMAS, TABLES
 from pythonmapreduce_spark.plans import registry
@@ -41,9 +42,7 @@ def empty_sf_dir(spark) -> str:
 
 @pytest.mark.parametrize("name", sorted(registry.QUERIES))
 def test_runs_on_empty_input(name: str, spark, empty_sf_dir: str) -> None:
-    df = registry.QUERIES[name](spark, empty_sf_dir)
-    n = df.count()
-    assert n >= 0
+    assert registry.run_query(spark, name, empty_sf_dir, DataFrame.count) >= 0
 
 
 def _sf_with_table(spark, dirname: str, table: str, rows: list) -> str:
@@ -101,8 +100,7 @@ _SHORT_DOC_QUERIES = [
 
 @pytest.mark.parametrize("name", _SHORT_DOC_QUERIES)
 def test_runs_on_short_docs(name: str, spark, short_doc_sf_dir: str) -> None:
-    df = registry.QUERIES[name](spark, short_doc_sf_dir)
-    assert df.count() >= 0
+    assert registry.run_query(spark, name, short_doc_sf_dir, DataFrame.count) >= 0
 
 
 def test_single_plan_graph_loops_on_empty_graph(spark, empty_sf_dir: str) -> None:
@@ -117,9 +115,7 @@ def test_single_plan_graph_loops_on_empty_graph(spark, empty_sf_dir: str) -> Non
     # output: no rows, or triangle_count's one zero count.
     for name in SINGLE_PLAN_QUERIES:
         if name not in ("pagerank_iter", "bfs_distances"):
-            run_compare(
-                spark, empty_sf_dir, name, registry.QUERIES[name], registry.ORACLES[name]
-            )
+            run_compare(spark, empty_sf_dir, name)
 
 
 @pytest.fixture(scope="session")
@@ -137,13 +133,7 @@ def test_embedding_drift_empty_half_matches_oracle(
     # An empty half is one row with that half's n and the metrics NULL,
     # as in the oracle, whose per-half CTEs are global aggregates.
     sf_dir = request.getfixturevalue(fixture)
-    run_compare(
-        spark,
-        sf_dir,
-        "embedding_drift",
-        registry.QUERIES["embedding_drift"],
-        registry.ORACLES["embedding_drift"],
-    )
+    run_compare(spark, sf_dir, "embedding_drift")
 
 
 @pytest.fixture(scope="session")
@@ -174,10 +164,7 @@ def test_dedup_unicode_normalized_collapse_matches_oracle(
     sf_dir = request.getfixturevalue(fixture)
     query = registry.QUERIES["dedup_unicode_normalized"]
     assert [tuple(r) for r in query(spark, sf_dir).collect()] == [expected]
-    run_compare(
-        spark, sf_dir, "dedup_unicode_normalized", query,
-        registry.ORACLES["dedup_unicode_normalized"],
-    )
+    run_compare(spark, sf_dir, "dedup_unicode_normalized")
 
 
 @pytest.fixture(scope="session")
@@ -218,10 +205,4 @@ def test_bm25_rank_degenerate_corpus_matches_oracle(
     # (avgdl = 0) never reaches the length division that ANSI would fail.
     sf_dir = request.getfixturevalue(fixture)
     assert registry.QUERIES["bm25_rank"](spark, sf_dir).count() == n_rows
-    run_compare(
-        spark,
-        sf_dir,
-        "bm25_rank",
-        registry.QUERIES["bm25_rank"],
-        registry.ORACLES["bm25_rank"],
-    )
+    run_compare(spark, sf_dir, "bm25_rank")

@@ -8,6 +8,7 @@ AQE splits a skewed join at scale.
 
 from __future__ import annotations
 
+import threading
 import warnings
 from contextlib import contextmanager
 
@@ -20,6 +21,7 @@ from pythonmapreduce_spark.plans.materialize import (
     iter_materialize,
     materialize_observed,
     observe_pass,
+    run_scope,
 )
 from tests.harness import run_compare
 
@@ -124,13 +126,75 @@ def test_bm25_rank_oracle_with_checkpoint_dir(spark, sf_oracle, tmp_path) -> Non
     observed metrics; the oracle diff (run on the localCheckpoint path by
     the oracle suite) also holds on the reliable-checkpoint path."""
     with _checkpoint_dir(spark, tmp_path / "ckpt"):
-        run_compare(
-            spark,
-            sf_oracle,
-            "bm25_rank",
-            registry.QUERIES["bm25_rank"],
-            registry.ORACLES["bm25_rank"],
-        )
+        run_compare(spark, sf_oracle, "bm25_rank")
+
+
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def test_run_query_releases_on_both_paths(spark, sf_smoke, ckpt_dir) -> None:
+    """kcore_rounds checkpoints three bases. Through run_query they are
+    held while the sink runs (as blocks on the localCheckpoint path, as
+    files on the reliable one) and released once it returns."""
+    before = _persistent_rdds(spark)
+    rows, held = registry.run_query(
+        spark, "kcore_rounds", sf_smoke,
+        lambda df: (df.collect(), _persistent_rdds(spark) - before),
+    )
+    assert rows
+    assert len(held) == (0 if ckpt_dir[1] else 3), held
+    assert _persistent_rdds(spark) <= before
+
+
+def test_run_query_releases_when_the_sink_raises(spark, sf_smoke) -> None:
+    before = _persistent_rdds(spark)
+
+    def sink(df):
+        assert _persistent_rdds(spark) - before, "bases should be held here"
+        raise RuntimeError("sink failed")
+
+    with _checkpoint_dir(spark, None), pytest.raises(RuntimeError, match="sink failed"):
+        registry.run_query(spark, "kcore_rounds", sf_smoke, sink)
+    assert _persistent_rdds(spark) <= before
+
+
+def test_concurrent_run_scopes_release_only_their_own(spark) -> None:
+    """The REST server's case: scopes are per thread. Thread A opens its
+    scope, then B opens one, A materializes, B closes, and only then does
+    A read its base: a scope shared across threads would have handed A's
+    base to B, whose release drops the localCheckpoint blocks A reads."""
+    a_open, b_open, a_built, b_closed = (threading.Event() for _ in range(4))
+    out: dict = {}
+
+    def thread_a() -> None:
+        try:
+            with run_scope():
+                a_open.set()
+                b_open.wait(60)
+                base = iter_materialize(spark.range(100).withColumn("sq", F.col("id") ** 2))
+                a_built.set()
+                b_closed.wait(60)
+                out["rows"] = base.count()
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            out["error"] = e
+        finally:
+            a_built.set()
+
+    before = _persistent_rdds(spark)
+    with _checkpoint_dir(spark, None):
+        a = threading.Thread(target=thread_a)
+        a.start()
+        assert a_open.wait(60)
+        with run_scope() as held:
+            b_open.set()
+            assert a_built.wait(60)
+            assert iter_materialize(spark.range(7)).count() == 7
+        b_closed.set()
+        a.join(60)
+    assert len(held) == 1
+    assert out == {"rows": 100}, out
+    assert _persistent_rdds(spark) <= before
 
 
 def test_aqe_splits_skewed_join(spark) -> None:

@@ -24,7 +24,7 @@ import pytest
 
 from pythonmapreduce_spark import catalog
 from pythonmapreduce_spark.plans import registry
-from tests.harness import compare
+from tests.harness import run_compare
 
 registry.load_all()
 
@@ -83,15 +83,7 @@ def edge_dir(tmp_path_factory, sf_smoke) -> str:
     ],
 )
 def test_multimodal_oracle_on_edge_corpus(spark, edge_dir, name) -> None:
-    con = duckdb.connect()
-    for t in catalog.TABLES:
-        con.sql(
-            f"CREATE OR REPLACE VIEW {t} AS"
-            f" SELECT * FROM read_parquet('{edge_dir}/{t}.parquet')"
-        )
-    sdf = registry.QUERIES[name](spark, edge_dir)
-    want = con.sql(registry.ORACLES[name]).df()
-    compare(sdf, want, name)
+    run_compare(spark, edge_dir, name)
 
 
 def test_phantom_tail_chunk_absent(spark, edge_dir) -> None:

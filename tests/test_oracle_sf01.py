@@ -44,6 +44,4 @@ SF_SENSITIVE = [
 
 @pytest.mark.parametrize("name", SF_SENSITIVE)
 def test_oracle_match_sf01(name: str, spark) -> None:
-    harness.run_compare(
-        spark, SF01, name, registry.QUERIES[name], registry.ORACLES[name]
-    )
+    harness.run_compare(spark, SF01, name)

@@ -842,16 +842,14 @@ ONE_PASS_QUERIES = ("remove_dup_spans", "collocation_pmi")
 
 
 def test_loop_base_two_exchanges_and_single_plan_loops_build_no_job(
-    spark, sf_smoke, monkeypatch
+    spark, sf_smoke
 ) -> None:
     # The adjacency loop base builds straight from the order baskets: one
     # shuffle for the basket groupBy (l_orderkey), one for the neighbor
     # collect_set (vtx). An edge distinct() or a union with the mirrored
     # edges (which re-plans the whole basket subtree) fails here.
     from pythonmapreduce_spark.operators.graphs import _sym_adjacency
-    from pythonmapreduce_spark.pipeline import dedup
-    from pythonmapreduce_spark.plans import materialize
-    from pythonmapreduce_spark.plans.materialize import iter_materialize
+    from pythonmapreduce_spark.plans.materialize import run_scope
 
     base = _plan(_sym_adjacency(spark, sf_smoke))
     exchanges = [
@@ -867,28 +865,19 @@ def test_loop_base_two_exchanges_and_single_plan_loops_build_no_job(
     # nothing. A checkpoint, a count() action or any other eager step at
     # build time fails here. The job count is read rather than final-plan
     # strings, which AQE repeats per stage. The one-pass queries' passes
-    # are counted at iter_materialize: dedup's import of it, and the one
-    # materialize_observed calls (collocation_pmi).
-    passes: list = []
-
-    def counted(df):
-        passes.append(df)
-        return iter_materialize(df)
-
-    for module in (dedup, materialize):
-        monkeypatch.setattr(module, "iter_materialize", counted)
+    # are counted as the releases their build leaves in a run scope.
     sc = spark.sparkContext
     for name in SINGLE_PLAN_QUERIES + ONE_PASS_QUERIES:
         group = f"build_{name}"
-        passes.clear()
         sc.setJobGroup(group, "single-plan loop build")
         try:
-            registry.QUERIES[name](spark, sf_smoke)
+            with run_scope() as held:
+                registry.QUERIES[name](spark, sf_smoke)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         if name in ONE_PASS_QUERIES:
-            assert len(passes) == 1, (name, len(passes))
+            assert len(held) == 1, (name, len(held))
             continue
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
 

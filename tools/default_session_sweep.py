@@ -62,6 +62,7 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod
     from pythonmapreduce_spark.catalog import TABLES
+    from pythonmapreduce_spark.plans.registry import run_query
 
     q, o = entry_mod.queries(), entry_mod.oracle_sql()
     con = duckdb.connect()
@@ -80,7 +81,7 @@ def main() -> int:
     for i, name in enumerate(names):
         t0 = time.time()
         try:
-            sp = q[name](spark, args.sf_dir).toPandas()
+            sp = run_query(spark, name, args.sf_dir, lambda df: df.toPandas())
             if name in o:
                 du = con.sql(o[name]).df()
                 ok = (

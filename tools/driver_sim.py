@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 import time
 
@@ -32,10 +33,6 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
-def cell_hash(df: pd.DataFrame) -> int:
-    return hash(tuple(tuple(str(v) for v in row) for row in df.itertuples(index=False)))
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
@@ -44,9 +41,10 @@ def main() -> int:
     ap.add_argument("--json-out", default="")
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
     from pythonmapreduce_spark.catalog import TABLES
+    from pythonmapreduce_spark.plans.registry import run_query
     from pythonmapreduce_spark.session import get_spark
 
     t0 = time.time()
@@ -75,10 +73,8 @@ def main() -> int:
         err = None
         spark_rows = oracle_rows = None
         try:
-            sdf = qs[name](spark, args.sf_dir)
-            got = canon(sdf.toPandas())
+            got = run_query(spark, name, args.sf_dir, lambda df: canon(df.toPandas()))
             spark_rows = len(got)
-            t_spark = time.time() - t0
             if name in oracles:
                 want = canon(con.sql(oracles[name]).df())
                 oracle_rows = len(want)
@@ -104,7 +100,6 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             status = "ERROR"
             err = f"{type(e).__name__}: {e}"
-            t_spark = time.time() - t0
         dt_total = time.time() - t0
         results[name] = {
             "i": i,
