@@ -1147,10 +1147,10 @@ def chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("seg", "nat", F.coalesce("cnt", F.lit(0.0)).alias("cnt"))
     )
     by_seg, by_nat = Window.partitionBy("seg"), Window.partitionBy("nat")
-    # cells is the full segs x nats grid, so a segment's row count is
-    # |nats| and a nation's is |segs|: dof comes from the margin windows,
-    # with no count_distinct (whose Expand orders its groups per build).
-    # An empty grid counts 0 of each, as COUNT(DISTINCT) does.
+    # cells is the full segs x nats grid, so a segment's non-null nats
+    # are |nats| and a nation's non-null segs |segs|, as COUNT(DISTINCT)
+    # counts them: dof comes from the margin windows, with no count_distinct
+    # (whose Expand orders its groups per build). An empty grid counts 0.
     tot = cells.select(
         "seg",
         "nat",
@@ -1158,13 +1158,17 @@ def chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cnt").over(by_seg).alias("rt"),
         F.sum("cnt").over(by_nat).alias("ct"),
         F.sum("cnt").over(Window.partitionBy()).alias("n"),
-        F.count(F.lit(1)).over(by_seg).alias("n_nat"),
-        F.count(F.lit(1)).over(by_nat).alias("n_seg"),
+        F.count("nat").over(by_seg).alias("n_nat"),
+        F.count("seg").over(by_nat).alias("n_seg"),
     )
-    e = F.col("rt") * F.col("ct") / F.col("n")
+    # A NULL key's grid row or column joins no count, so its expected
+    # counts are 0: try_divide gives NULL, as the oracle's / does, not
+    # ANSI's DIVIDE_BY_ZERO, and SUM skips it.
+    e = F.try_divide(F.col("rt") * F.col("ct"), F.col("n"))
+    d = F.col("cnt") - e
     n_segs, n_nats = (F.coalesce(F.max(c), F.lit(0)) for c in ("n_seg", "n_nat"))
     return tot.agg(
-        F.round(F.sum((F.col("cnt") - e) * (F.col("cnt") - e) / e), 4).alias("chi2"),
+        F.round(F.sum(F.try_divide(d * d, e)), 4).alias("chi2"),
         ((n_segs - 1) * (n_nats - 1)).cast("long").alias("dof"),
         F.max("n").cast("long").alias("n_obs"),
     )

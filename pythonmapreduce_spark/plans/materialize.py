@@ -46,9 +46,9 @@ A frame whose rows nothing reads after its statistics (k-core's last
 round) goes through ``observe_pass`` instead, which materializes nothing.
 
 Lifetime: a run scope (``run_scope``, opened per thread by
-``registry.run_query``) holds a release for each base checkpointed, each
-broadcast and each memory-sink view created while it is open, and calls
-them as it closes: non-blocking unpersists and a view drop, never a job.
+``registry.run_query``) holds a release for each base checkpointed
+(``iter_materialize``, ``local_checkpoint``), each broadcast and each
+memory-sink view created while it is open, and calls them as it closes: non-blocking unpersists and a view drop, never a job.
 Outside a scope nothing registers; Spark's ContextCleaner frees what a
 build left once it is garbage-collected, and always owns the files of a
 reliable checkpoint (``unpersist`` frees blocks only).
@@ -90,8 +90,18 @@ def release_at_run_end(release: Callable[[], object]) -> None:
 def iter_materialize(df: DataFrame) -> DataFrame:
     """Materialize an iteration base eagerly: reliable checkpoint when the
     session has a checkpoint dir, localCheckpoint otherwise."""
-    reliable = df.sparkSession.sparkContext.getCheckpointDir() is not None
-    out = (df.checkpoint if reliable else df.localCheckpoint)(eager=True)
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return local_checkpoint(df)
+    return _released(df.checkpoint(eager=True))
+
+
+def local_checkpoint(df: DataFrame) -> DataFrame:
+    """``localCheckpoint`` ``df`` eagerly, on any deployment: for a result
+    that must stop reading the scratch files it was built from."""
+    return _released(df.localCheckpoint(eager=True))
+
+
+def _released(out: DataFrame) -> DataFrame:
     release_at_run_end(lambda: out._jdf.logicalPlan().rdd().unpersist(False))
     return out
 

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.catalog import SCHEMAS, load
+from pythonmapreduce_spark.plans.materialize import local_checkpoint
 from pythonmapreduce_spark.plans.registry import register
 from pythonmapreduce_spark.sources.text_corpus import BOOKS_DIR
 
@@ -552,13 +553,9 @@ def source_libsvm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(" 3:"), F.element_at("v", 3).cast("string"),
         F.lit(" 4:"), F.element_at("v", 4).cast("string"),
     )
-    # (pid, session, input-digest)-keyed scratch, stale tree removed at entry
-    # (the stream_state_inspect remediation pattern — the old uuid key
-    # leaked one libsvm dir per invocation); the read-back is
-    # localCheckpoint-materialized so the dir can be removed before
-    # returning — nothing reads it lazily. The whole write→read
-    # lifecycle holds SCRATCH_LOCK so a concurrent invocation's
-    # entry-rmtree cannot delete these files mid-flight.
+    # Scratch keyed by (pid, session, input digest) and cleared at entry;
+    # local_checkpoint lets the dir go before returning, and SCRATCH_LOCK
+    # keeps a concurrent invocation's entry rmtree off these files.
     out_dir = _scratch_keyed(spark, "libsvm", sf_dir)
     with SCRATCH_LOCK:
         _shutil.rmtree(out_dir, ignore_errors=True)
@@ -569,13 +566,8 @@ def source_libsvm(spark: SparkSession, sf_dir: str) -> DataFrame:
             .load(out_dir)
         )
         arr = vector_to_array(F.col("features"))
-        out = back.select(
-            "label",
-            F.array_join(
-                F.transform(arr, lambda x: F.round(x * 1000).cast("long").cast("string")),
-                ",",
-            ).alias("fvec_milli"),
-        ).localCheckpoint(eager=True)
+        milli = F.transform(arr, lambda x: F.round(x * 1000).cast("long").cast("string"))
+        out = local_checkpoint(back.select("label", F.array_join(milli, ",").alias("fvec_milli")))
         _shutil.rmtree(out_dir, ignore_errors=True)
     return out
 

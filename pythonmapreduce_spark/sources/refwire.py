@@ -37,6 +37,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from pythonmapreduce_spark.plans.materialize import local_checkpoint
 from pythonmapreduce_spark.plans.registry import register
 from pythonmapreduce_spark.sources.text_corpus import BOOKS_DIR
 
@@ -307,29 +308,17 @@ def sink_roundtrip_refwire(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pythonmapreduce_spark.catalog import load
 
     register_refwire(spark)
-    # (pid, session, input-digest)-keyed so repeated runs REUSE one scratch
-    # location instead of leaking a fresh uuid dir per invocation (the
-    # stream_state_inspect remediation pattern, ADVICE r3); the stale
-    # prior tree is removed at entry. Safe against an earlier
-    # invocation's still-held DataFrame because the read below is
-    # localCheckpoint-materialized before return — nothing returned here
-    # reads these files lazily.
+    # Scratch keyed by (pid, session, input digest) and cleared at entry;
+    # local_checkpoint lets nothing returned read it lazily, and
+    # SCRATCH_LOCK keeps a concurrent invocation's entry rmtree (a
+    # newSession clone shares the key) off the wire files.
     from pythonmapreduce_spark.sources.readers import SCRATCH_LOCK, _scratch_keyed
 
     out_dir = _scratch_keyed(spark, "refwire_rt", sf_dir)
-
-    # the whole write→read lifecycle holds SCRATCH_LOCK so a concurrent
-    # invocation's entry-rmtree (same (pid, app, input) key from a
-    # newSession clone) cannot delete the wire files mid-flight
     with SCRATCH_LOCK:
         shutil.rmtree(out_dir, ignore_errors=True)
         docs = load(spark, sf_dir, "documents").select(
             F.col("source").alias("file_name"), F.col("text").alias("chunk")
         )
         docs.write.format("refwire").mode("overwrite").option("path", out_dir).save()
-        return (
-            spark.read.format("refwire")
-            .option("path", out_dir)
-            .load()
-            .localCheckpoint(eager=True)
-        )
+        return local_checkpoint(spark.read.format("refwire").option("path", out_dir).load())

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.catalog import SCHEMAS, events_stream_source
-from pythonmapreduce_spark.plans.materialize import release_at_run_end
+from pythonmapreduce_spark.plans.materialize import local_checkpoint, release_at_run_end
 from pythonmapreduce_spark.plans.registry import register
 
 # Progress events of the most recent completed _run_to_memory query
@@ -512,11 +512,10 @@ def sink_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
         q.awaitTermination()
-        out = (
+        out = local_checkpoint(
             spark.read.parquet(state["path"])
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-            .localCheckpoint(eager=True)
         )
         shutil.rmtree(base, ignore_errors=True)
     return out
@@ -758,6 +757,7 @@ def _stream_state_inspect_run(spark: SparkSession, sf_dir: str, ckpt: str) -> Da
         .start()
     )
     q.awaitTermination()
+    release_at_run_end(lambda: spark.catalog.dropTempView(name))
     if not os.path.isdir(os.path.join(ckpt, "state")):
         # zero-batch replay (empty source) never creates a state dir; a
         # corrupt/unreadable checkpoint should RAISE, not read as empty
@@ -770,4 +770,4 @@ def _stream_state_inspect_run(spark: SparkSession, sf_dir: str, ckpt: str) -> Da
     # Materialize eagerly: decouples the returned DataFrame from the
     # scratch checkpoint files so the next invocation's rmtree cannot
     # corrupt it. State is O(distinct keys) — executor-storage sized.
-    return out.localCheckpoint(eager=True)
+    return local_checkpoint(out)

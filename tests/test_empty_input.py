@@ -206,3 +206,24 @@ def test_bm25_rank_degenerate_corpus_matches_oracle(
     sf_dir = request.getfixturevalue(fixture)
     assert registry.QUERIES["bm25_rank"](spark, sf_dir).count() == n_rows
     run_compare(spark, sf_dir, "bm25_rank")
+
+
+def test_chi2_independence_null_keys_match_oracle(spark) -> None:
+    """A NULL segment and a NULL nation add a grid row and column that no
+    count joins: dof counts non-null keys only, as COUNT(DISTINCT) does
+    ((2-1)*(3-1) = 2, where counting the NULL cells gives 6), and their
+    zero expected counts drop out of chi2 instead of failing under ANSI."""
+    rows = [  # (c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment)
+        (1, "a", 1, 1.0, "A"),
+        (2, "b", 2, 1.0, "A"),
+        (3, "c", 1, 1.0, "B"),
+        (4, "d", None, 1.0, "B"),
+        (5, "e", 2, 1.0, None),
+        (6, "f", 3, 1.0, "A"),
+        (7, "g", None, 1.0, None),
+        (8, "h", 1, 1.0, "B"),
+    ]
+    sf_dir = _sf_with_table(spark, "pmr_chi2_null_keys_sf", "customer", rows)
+    got = registry.run_query(spark, "chi2_independence", sf_dir, DataFrame.collect)
+    assert [(r.dof, r.n_obs) for r in got] == [(2, 5)]
+    run_compare(spark, sf_dir, "chi2_independence")

@@ -119,21 +119,22 @@ def test_failure_and_unknown_routes(rest):
 def test_fifty_jobs_leave_storage_views_and_table_flat(spark, sf_smoke, monkeypatch):
     """A long-lived server holds nothing per finished job past its bound:
     50 consecutive jobs (checkpointed bases, a centroid broadcast, a
-    streaming memory sink) leave no persisted RDD and no ``mem_*`` view
+    streaming memory sink, a result checkpointed off scratch files plus a
+    state-store memory sink) leave no persisted RDD and no temporary view
     beyond those the session held before, and the job table keeps the 10
     newest finished jobs plus every unfinished one."""
     monkeypatch.setattr(srv_mod, "_MAX_FINISHED_JOBS", 10)
 
     def held() -> tuple[set, set]:
         rdds = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-        views = {t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")}
+        views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
         return rdds, views
 
     rdds0, views0 = held()
     job_srv = srv_mod.JobServer(spark, max_workers=1)
     pending = srv_mod.Job("agg_basic", sf_smoke, 5)  # oldest, never runs
     job_srv.jobs[pending.job_id] = pending
-    names = ("bm25_rank", "kcore_rounds", "semdedup", "stream_wordcount", "agg_basic")
+    names = ("bm25_rank", "kcore_rounds", "semdedup", "stream_wordcount", "stream_state_inspect")
     try:
         for i in range(50):
             job = job_srv.submit(names[i % len(names)], sf_dir=sf_smoke, limit=5)
