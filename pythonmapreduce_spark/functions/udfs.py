@@ -28,8 +28,9 @@ from pythonmapreduce_spark.plans.registry import register
 
 @F.pandas_udf(T.LongType())
 def _token_count_udf(texts: pd.Series) -> pd.Series:
-    """Reference-contract tokenizer (split \\s+, drop empties), vectorized."""
-    return texts.str.split().map(len).astype("int64")
+    """Reference-contract tokenizer (split \\s+, drop empties), vectorized;
+    a NULL text counts NULL, as in the oracle."""
+    return texts.str.split().map(len, na_action="ignore").astype("Int64")
 
 
 @register(

@@ -708,8 +708,11 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     a1 = a1r.crossJoin(F.broadcast(a_tot)).select(
         "vid", (F.col("a") / F.col("at")).alias("a")
     )
+    # Hinted like the adjacency round joins: both sides are already hash
+    # exchanged on vid, and unhinted AQE broadcasts a1 or not depending on
+    # which stage finishes first.
     return (
-        h1.join(a1, "vid")
+        h1.join(a1.hint("shuffle_hash"), "vid")
         .select(
             F.col("vid").alias("part"),
             F.round("h", 6).alias("hub"),

@@ -72,7 +72,7 @@ def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
       and the wide explode, measured 2.0-2.8 s → 1.4-1.5 s at sf0.1.
     The two 8-row results broadcast-join on col_name. Nothing here ever
     sorts the corpus; the 9 scans are disjoint column slices, argued in
-    tools/audit_plans.py's allowlist.
+    tests/test_plan_audit.py's ALLOW table.
     """
     li = load(spark, sf_dir, "lineitem")
 

@@ -888,9 +888,9 @@ def dataset_card_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_tokens").cast("long").alias("total_tokens"),
         F.count_distinct("lang").cast("long").alias("n_langs"),
         F.count_distinct("digest").cast("long").alias("n_unique_texts"),
-        F.round(1.0 - F.count_distinct("digest") * 1.0 / F.count(F.lit(1)), 4).alias(
-            "dup_ratio"
-        ),
+        F.round(
+            1.0 - F.try_divide(F.count_distinct("digest") * 1.0, F.count(F.lit(1))), 4
+        ).alias("dup_ratio"),
         F.round(F.avg("n_chars"), 4).alias("avg_chars"),
         F.round(
             F.avg(

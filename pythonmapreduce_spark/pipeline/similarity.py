@@ -1605,7 +1605,7 @@ def embedding_truncate_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("nq").cast("long").alias("n_queries"),
             F.lit(_KNN_K).cast("long").alias("k"),
             "n_hits",
-            F.round(F.col("n_hits") * 1.0 / F.col("nf"), 4).alias("recall"),
+            F.round(F.try_divide(F.col("n_hits") * 1.0, F.col("nf")), 4).alias("recall"),
         )
     )
 

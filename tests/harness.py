@@ -83,6 +83,12 @@ def compare(spark_df, oracle_rows: pd.DataFrame, name: str = "query") -> None:
         raise AssertionError(f"{name}: value mismatch; first diffs (spark vs oracle): {diffs}")
 
 
+def write_noop(df) -> None:
+    """A sink that computes every column of ``df`` (a count lets the
+    optimizer drop the expressions it does not need) and keeps nothing."""
+    df.write.format("noop").mode("overwrite").save()
+
+
 def run_compare(spark, sf_dir: str, name: str) -> None:
     con = duckdb_con(sf_dir)
     try:

@@ -215,68 +215,3 @@ def test_resize_kernel_geometry(payload: bytes, w: int, h: int) -> None:
     assert (row.dst_w, row.dst_h) == (_DST_W, _DST_H)
     assert row.resized_len == _DST_W * _DST_H
     assert row.corner_byte == payload[0]
-
-
-# ---------------------------------------------------------------------------
-# Round-8: the audit's text-attribute alias tracer is a pure plan-string
-# function — hammer it with randomized rename chains and wrapped uses.
-# Property: every id reachable from text#<seed> through IDENTITY re-aliases
-# (a AS b, transitively, any chain length/order) is traced; any id produced
-# only through a FUNCTION of a traced attribute is not (derived digests are
-# the values the content rule says SHOULD cross an exchange).
-# ---------------------------------------------------------------------------
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.sampled_from(["alias", "wrap", "cast", "wrap_as_text"]),
-        min_size=0,
-        max_size=8,
-    ),
-    st.randoms(use_true_random=False),
-)
-def test_text_attr_ids_traces_alias_chains(steps: list[str], rng) -> None:
-    # Round-9 hardening: the tracer is id-keyed, so the chain generator
-    # also emits (a) identity CASTS (content-preserving — must be traced
-    # through like a bare alias) and (b) derived columns that REUSE the
-    # name `text` and are then reprinted bare (must NOT poison the seed).
-    from tools.audit_plans import text_attr_ids
-
-    attrs = [("text", "5")]  # (name, id) — names may repeat
-    traced = {"5"}
-    derived: set[str] = set()
-    lines = ["(1) Scan parquet", "Output [2]: [doc_id#1, text#5]"]
-    next_id = 6
-    for k, step in enumerate(steps):
-        # pick any previously-seen attribute (traced or derived) as source
-        src_name, src_id = rng.choice(sorted(attrs))
-        new_name, new_id = f"c{k}", str(next_id)
-        next_id += 1
-        if step == "alias":
-            lines.append(f"Output [1]: [{src_name}#{src_id} AS {new_name}#{new_id}]")
-            (traced if src_id in traced else derived).add(new_id)
-        elif step == "cast":
-            lines.append(
-                f"Output [1]: [cast({src_name}#{src_id} as string) "
-                f"AS {new_name}#{new_id}]"
-            )
-            (traced if src_id in traced else derived).add(new_id)
-        elif step == "wrap_as_text":
-            new_name = "text"
-            lines.append(
-                f"Output [1]: [xxhash64({src_name}#{src_id}, 42) "
-                f"AS text#{new_id}]"
-            )
-            lines.append(f"Input [1]: [text#{new_id}]")  # bare reprint
-            derived.add(new_id)
-        else:
-            lines.append(
-                f"Output [1]: [xxhash64({src_name}#{src_id}, 42) "
-                f"AS {new_name}#{new_id}]"
-            )
-            derived.add(new_id)
-        attrs.append((new_name, new_id))
-    got = text_attr_ids("\n".join(lines) + "\n")
-    assert traced <= got, (traced, got, lines)
-    assert not (derived & got), (derived, got, lines)

@@ -1,74 +1,51 @@
-"""Repo-wide physical-plan audit: the anti-pattern grep, mechanized.
+"""The plan audit: no registered query's executed plan holds a communication
+or memory anti-pattern of the replication-rate cost model unless ``ALLOW``
+argues its bound, and every ``ALLOW`` entry still matches a finding, so the
+list cannot drift. The finding classes:
 
-EXECUTES every registered query at sf0.001 (cheap; eager materializations
-and AQE both need a run for the plan to be honest) and audits the
-post-execution plan:
+- ``CartesianProduct``: nothing in this engine should plan one.
+- ``BroadcastNestedLoopJoin <type>`` for an outer, semi or anti type: it
+  broadcasts a relation, so its bound is argued per query. Cross and Inner
+  are the bounded crossJoin pattern (1-row or tiny aggregate broadcasts).
+- ``BatchEvalPython``: row-at-a-time Python; the Arrow surfaces are the
+  sanctioned Python path.
+- ``text-exchange``: the raw documents ``text``, or an identity alias or
+  cast of it, crossing a shuffle (DEPLOYMENT.md §3's content rule).
+- ``objagg:<fn>``: a growth-class aggregate buffer, which holds its whole
+  group and cannot spill.
+- ``scan-mult:<table>``: a table scanned ``SCAN_MULT_BAR`` times or more
+  in a plan with no reused exchange, so duplicate subtrees re-execute.
 
-- ``CartesianProduct`` anywhere is a finding — nothing in this engine
-  should ever plan one.
-- ``BatchEvalPython`` (row-at-a-time Python) is a finding outside the
-  two intentional coverage queries — Arrow surfaces (ArrowEvalPython /
-  MapInPandas / grouped pandas) are the only sanctioned Python path.
-- ``BroadcastNestedLoopJoin`` with Cross/Inner type is allowed — the
-  repo's documented bounded-crossJoin pattern (1-row/tiny aggregate
-  broadcasts). Outer/semi/anti BNLJs must be individually allowlisted
-  with a reason (they broadcast a RELATION, so the bound must be argued
-  per query).
-- Scan multiplicity: a table scanned ≥ SCAN_MULT_BAR times in a plan
-  where AQE reused NOTHING (zero ReusedExchange after execution) means
-  duplicate subtrees are genuinely re-executed — the shape that hid the
-  round-6 HITS half-round re-execution. Plans where AQE reuse kicks in
-  are fine: the visible scan count includes collapsed duplicates. Both
-  counts come from the executed plan's signature (plans/signature.py),
-  which counts scans of the catalog tables.
-- CONTENT-OVER-EXCHANGE (round-7 addition): the raw documents ``text``
-  column crossing any Exchange violates DEPLOYMENT §3's design rule
-  (content never crosses an exchange — keys, digests, and aggregates
-  do). The engine-wide probe that introduced this check found the rule
-  already held everywhere except the two composed pipelines (both
-  reshaped: text-derived digests/verdicts now compute scan-side) and
-  the grouped-pandas coverage query, whose applyInPandas semantics
-  REQUIRE co-locating group rows (allowlisted: ``text-exchange``).
-  Round 8: the check traces IDENTITY RE-ALIASES of the text attribute
-  (``text#5 AS body#9``, transitively) so renaming the column no
-  longer hides a violation; function-derived digests stay exempt by
-  design.
-- GROWTH-CLASS aggregate buffers (round-7 addition): ``percentile`` /
-  ``collect_list`` / ``collect_set`` / ``mode`` / ``median`` buffers
-  hold data PROPORTIONAL TO GROUP SIZE until finalization and cannot
-  spill — the wall percentile_agg's collapsed weighted-quantile rewrite
-  removed (~2 TB per group at 100 TB for a value buffer). Fixed-size
-  sketch aggregates (approx_percentile's t-digest, HLL) are fine and
-  not flagged. Round 8: SortAggregate nodes are scanned too — the same
-  whole-group buffer runs there when objectHashAggregate is disabled or
-  its fallback threshold trips. Each surviving growth-class site must
-  carry an argued PER-GROUP bound in the allowlist (``objagg:<fn>``).
-
-Exit 0 when only allowlisted findings remain, 1 otherwise. Run after
-adding or reshaping any query:  python tools/audit_plans.py
+Each query runs at sf0.001 through ``registry.run_query``, and its
+findings come from one walk of its executed plan (plans/signature.py).
 """
 
 from __future__ import annotations
 
-import argparse
-import os
-import re
-import sys
+from functools import partial, reduce
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-# query -> {pattern: reason}; the audit is the single source of truth for
-# why each exception is bounded.
+from pythonmapreduce_spark.catalog import load
+from pythonmapreduce_spark.plans import registry
+from pythonmapreduce_spark.plans.signature import (
+    executed_nodes,
+    growth_aggregates,
+    node_counts,
+    raw_text_crossings,
+    signature,
+    table_scans,
+)
+
+registry.load_all()
+
+# query -> {finding: reason}; the single record of why each exception is
+# bounded. An entry that no longer matches a finding fails the audit.
 ALLOW: dict[str, dict[str, str]] = {
-    "udf_scalar": {"BatchEvalPython": "intentional row-UDF coverage query"},
-    "decontamination": {
-        "BroadcastNestedLoopJoin LeftAnti": (
-            "decontamination theta anti-join: build side is the benchmark "
-            "set (thousands of rows by design), broadcast once; the "
-            "large-bench algorithm is decontamination_ngram's hash join, "
-            "which pipeline_train_prep also uses since late round 7"
-        ),
-    },
     "pipeline_train_prep": {
         "scan-mult:documents": (
             "three DISJOINT pruned projections since the round-11 split: "
@@ -318,165 +295,158 @@ for _q in ("ann_ivf", "ann_ivf_recall"):
 SCAN_MULT_BAR = 3
 
 
-# Aggregate functions whose aggregation buffer grows with the group's
-# row count (unspillable until finalization). approx_percentile / hll /
-# count-min run in fixed-size buffers and are not in this set.
-GROWTH_AGG_FNS = ("percentile", "collect_list", "collect_set", "mode", "median")
-
-
-def growth_object_aggs(plan: str) -> set[str]:
-    """Growth-class aggregate function names appearing in any
-    ObjectHashAggregate OR SortAggregate node's Functions list. The
-    SortAggregate arm matters because the SAME whole-group buffer runs
-    there when objectHashAggregate is disabled or the fallback-count
-    threshold trips mid-query — the memory wall doesn't care which
-    operator hosts the buffer (round-8 ADVICE fix)."""
-    found: set[str] = set()
-    for m in re.finditer(
-        r"^\(\d+\) (?:ObjectHashAggregate|SortAggregate)\n"
-        r"((?:[^\n]+\n)*?)Functions \[\d+\]: \[([^\n]*)",
-        plan,
-        re.MULTILINE,
-    ):
-        fns = m.group(2)
-        for fn in GROWTH_AGG_FNS:
-            if re.search(rf"\b{fn}\(", fns):
-                found.add(fn)
+def findings(nodes: list) -> set[str]:
+    """The audit's findings in one executed plan's nodes (module notes)."""
+    sig = node_counts(nodes)
+    found = {f"objagg:{fn}" for fn in growth_aggregates(nodes)}
+    found |= {
+        key.removeprefix("join ")
+        for key in sig
+        if key.startswith("join BroadcastNestedLoopJoin ")
+        and not key.endswith((" Cross", " Inner"))
+    }
+    if "CartesianProduct" in sig:
+        found.add("CartesianProduct")
+    if "python BatchEvalPython" in sig:
+        found.add("BatchEvalPython")
+    if raw_text_crossings(nodes):
+        found.add("text-exchange")
+    if "ReusedExchange" not in sig:
+        found |= {
+            f"scan-mult:{table}"
+            for table, n in table_scans(sig).items()
+            if n >= SCAN_MULT_BAR
+        }
     return found
 
 
-def text_attr_ids(plan: str) -> set[str]:
-    """Attribute ids carrying the RAW documents ``text`` column,
-    including identity re-aliases (``text#5 AS body#9`` — and aliases of
-    those aliases, transitively) and content-preserving cast wrappers
-    (``cast(text#5 as string) AS body#9``, byte-identical re-typings to
-    string/binary). Function-DERIVED values (``xxhash64(text#5, 42) AS
-    d#9``) are intentionally not traced: digests/verdicts computed from
-    text are exactly what the content rule says SHOULD cross an
-    exchange. Trimming/concat/substring stay exempt with the same
-    rationale as the xxhash exemption — they produce NEW content, and a
-    rule broad enough to chase every string function would flag the
-    derived snippets the pipelines legitimately shuffle.
-
-    Tracing is keyed on attribute IDS, not names (round-9 ADVICE fix):
-    the plan is seeded with every ``text#N`` occurrence whose id is
-    never itself an alias TARGET anywhere in the plan — so a derived
-    column that reuses the name (``xxhash64(text#5, 42) AS text#12``,
-    later printed bare as ``text#12``) is not mistaken for the raw
-    attribute — then propagated through ``<attr>#<traced_id> AS
-    other#j`` matches on the source id. The identity-alias regex relies
-    on the formatted plan printing a bare re-alias with the attribute
-    directly adjacent to ``AS`` — a wrapped use always has ``)``/``,``
-    in between."""
-    alias_targets = {m.group(1) for m in re.finditer(r"\bAS \w+#(\d+)", plan)}
-    ids = {
-        m.group(1) for m in re.finditer(r"\btext#(\d+)", plan)
-    } - alias_targets
-    frontier = set(ids)
-    while frontier:
-        new: set[str] = set()
-        for tid in sorted(frontier):
-            for m in re.finditer(
-                rf"(?:\b\w+#{tid}|\bcast\(\w+#{tid} as (?:string|binary)\))"
-                rf" AS \w+#(\d+)",
-                plan,
-            ):
-                if m.group(1) not in ids:
-                    new.add(m.group(1))
-        ids |= new
-        frontier = new
-    return ids
+def unexplained(name: str, found: set[str]) -> list[str]:
+    """Findings of query ``name`` without an exemption, and its exemptions
+    that match no finding."""
+    allowed = ALLOW.get(name, {})
+    return [f"{name}: {f} has no exemption" for f in sorted(found - allowed.keys())] + [
+        f"{name}: stale exemption {f}" for f in sorted(allowed.keys() - found)
+    ]
 
 
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
-    ap.add_argument("--names", default="")
-    args = ap.parse_args()
-
-    from pythonmapreduce_spark.plans import registry
-    from pythonmapreduce_spark.plans.signature import signature, table_scans
-    from pythonmapreduce_spark.session import get_spark
-
-    registry.load_all()
-    spark = get_spark("plan-audit")
-    jvm = spark._jvm
-    names = args.names.split(",") if args.names else list(registry.QUERIES)
-    findings: list[str] = []
-    checked = 0
-
-    for name in names:
-        fn = registry.QUERIES[name]
-        try:
-            df = fn(spark, args.sf_dir)
-            sig = signature(df)
-            plan = jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-        except Exception as ex:  # noqa: BLE001 — audit must visit every query
-            findings.append(f"{name}: PLAN CAPTURE FAILED: {type(ex).__name__}: {ex}")
-            continue
-        checked += 1
-        allowed = ALLOW.get(name, {})
-
-        if "CartesianProduct" in plan:
-            findings.append(f"{name}: CartesianProduct in plan")
-
-        for ln in plan.splitlines():
-            m = re.search(r"BroadcastNestedLoopJoin (\w+)", ln)
-            if m and m.group(1) not in ("Cross", "Inner"):
-                key = f"BroadcastNestedLoopJoin {m.group(1)}"
-                if key not in allowed:
-                    findings.append(f"{name}: non-bounded BNLJ: {ln.strip()[:100]}")
-
-        if "BatchEvalPython" in plan and "BatchEvalPython" not in allowed:
-            findings.append(f"{name}: BatchEvalPython (row-at-a-time Python) in plan")
-
-        if "text-exchange" not in allowed:
-            raw_ids = text_attr_ids(plan)
-            for m in re.finditer(
-                r"^\(\d+\) Exchange\nInput \[\d+\]: \[([^\n]*)", plan, re.MULTILINE
-            ):
-                crossing = {
-                    a.group(1)
-                    for a in re.finditer(r"\w+#(\d+)", m.group(1))
-                    if a.group(1) in raw_ids
-                }
-                if crossing:
-                    findings.append(
-                        f"{name}: raw 'text' column (attr id(s) "
-                        f"{sorted(crossing)}, incl. identity aliases) "
-                        "crosses an Exchange — compute digests/derived "
-                        "values scan-side instead (DEPLOYMENT §3 content "
-                        "rule)"
-                    )
-                    break
-
-        for fn_name in growth_object_aggs(plan):
-            if f"objagg:{fn_name}" not in allowed:
-                findings.append(
-                    f"{name}: growth-class ObjectHashAggregate buffer "
-                    f"({fn_name}) — per-group memory wall, argue the bound "
-                    "or collapse (operators/quantiles.py)"
-                )
-
-        if "ReusedExchange" not in sig:
-            for table, cnt in table_scans(sig).items():
-                if cnt >= SCAN_MULT_BAR and f"scan-mult:{table}" not in allowed:
-                    findings.append(
-                        f"{name}: table '{table}' scanned {cnt}x with ZERO "
-                        "exchange reuse (duplicate subtrees re-execute)"
-                    )
-
-    print(f"audited {checked}/{len(names)} query plans")
-    if findings:
-        print(f"{len(findings)} findings:")
-        for f in findings:
-            print(" -", f)
-        return 1
-    print("no findings")
-    return 0
+@pytest.mark.parametrize("name", registry.query_names())
+def test_plan_audit(spark, sf_smoke, name: str) -> None:
+    found = registry.run_query(spark, name, sf_smoke, lambda df: findings(executed_nodes(df)))
+    assert not unexplained(name, found)
 
 
-if __name__ == "__main__":
-    raise SystemExit(main())
+def test_stale_exemption_is_a_problem() -> None:
+    assert unexplained("tpch_q21", set()) == ["tpch_q21: stale exemption scan-mult:lineitem"]
+    assert unexplained("agg_basic", {"CartesianProduct"}) == [
+        "agg_basic: CartesianProduct has no exemption"
+    ]
+
+
+def test_scan_counter_matches_catalog_tables(spark, sf_smoke) -> None:
+    # A catalog scan the counter no longer recognised would leave the
+    # scan-multiplicity class dead.
+    assert table_scans(signature(load(spark, sf_smoke, "orders"))) == {"orders": 1}
+
+
+# One hand-built plan per finding class.
+_CAUGHT = {
+    "CartesianProduct": lambda t: t("nation").hint("shuffle_replicate_nl").crossJoin(t("region")),
+    "BroadcastNestedLoopJoin LeftAnti": lambda t: t("orders").join(
+        t("customer"), F.col("o_custkey") < F.col("c_custkey"), "left_anti"
+    ),
+    "BatchEvalPython": lambda t: t("documents").select(
+        F.udf(lambda s: len(s or ""), "int")("text")
+    ),
+    "text-exchange": lambda t: t("documents").select(F.col("text").alias("body")).repartition(3),
+    "objagg:collect_list": lambda t: (
+        t("orders").groupBy("o_custkey").agg(F.collect_list("o_orderkey"))
+    ),
+    "scan-mult:orders": lambda t: reduce(
+        DataFrame.union,
+        (t("orders").where(F.col("o_orderkey") % 3 == r).select("o_orderkey") for r in range(3)),
+    ),
+}
+
+
+@pytest.mark.parametrize("finding", list(_CAUGHT))
+def test_finding_class_is_caught(spark, sf_smoke, finding: str) -> None:
+    df = _CAUGHT[finding](partial(load, spark, sf_smoke))
+    assert finding in findings(executed_nodes(df))
+
+
+def _crossings(df: DataFrame) -> set[str]:
+    return raw_text_crossings(executed_nodes(df.repartition(2)))
+
+
+def test_text_tracer_follows_identity_aliases(spark, sf_smoke) -> None:
+    # An alias of the text, and an alias of that alias behind a shuffle,
+    # are traced; a digest or a substring of it is new content.
+    body = load(spark, sf_smoke, "documents").select(F.col("text").alias("body"))
+    df = body.repartition(2).select(
+        F.col("body").alias("c"),
+        F.xxhash64("body").alias("d"),
+        F.substring("body", 1, 10).alias("snip"),
+    )
+    assert _crossings(df) == {"body", "c"}
+
+
+def test_text_tracer_is_id_keyed_not_name_keyed(spark, sf_smoke) -> None:
+    # A digest named `text` crosses a shuffle and is aliased after it: the
+    # query stage that outputs it is not a leaf of the plan, so neither
+    # is taken for the text.
+    digest = load(spark, sf_smoke, "documents").select(F.xxhash64("text").alias("text"))
+    df = digest.repartition(2, "text").select(F.col("text").alias("d"))
+    assert _crossings(df) == set()
+
+
+def test_text_tracer_follows_identity_casts(spark, sf_smoke) -> None:
+    # A cast to binary and back to string keeps the bytes; a cast of a
+    # function of the text does not.
+    docs = load(spark, sf_smoke, "documents")
+    df = docs.select(
+        F.col("text").cast("binary").alias("raw"),
+        F.length("text").cast("string").alias("len_s"),
+    )
+    df = df.repartition(2).select("raw", "len_s", F.col("raw").cast("string").alias("c"))
+    assert _crossings(df) == {"raw", "c"}
+
+
+def test_growth_aggregates_see_sortaggregate_not_sketches(spark, sf_smoke) -> None:
+    # The same whole-group buffer runs under SortAggregate when the object
+    # hash aggregate is off; approx_percentile's fixed-size sketch is fine.
+    orders = load(spark, sf_smoke, "orders").groupBy("o_custkey")
+    spark.conf.set("spark.sql.execution.useObjectHashAggregateExec", "false")
+    try:
+        nodes = executed_nodes(orders.agg(F.percentile("o_totalprice", 0.5)))
+    finally:
+        spark.conf.unset("spark.sql.execution.useObjectHashAggregateExec")
+    assert "SortAggregate" in {n.nodeName() for n in nodes}
+    assert growth_aggregates(nodes) == {"percentile"}
+    sketch = orders.agg(F.percentile_approx("o_totalprice", 0.5))
+    assert growth_aggregates(executed_nodes(sketch)) == set()
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(st.sampled_from(["alias", "cast", "wrap", "wrap_as_text"]), max_size=8),
+    st.randoms(use_true_random=False),
+)
+def test_text_tracer_follows_random_chains(spark, sf_smoke, steps: list[str], rng) -> None:
+    # Each step adds a column computed from any earlier one, in its own
+    # projection (the nondeterministic filter keeps the optimizer from
+    # merging them). An alias or a cast carries its source's text; a
+    # function of it carries none, also when it replaces `text` itself.
+    df = load(spark, sf_smoke, "documents").select("text")
+    raw = {"text": True}
+    for k, step in enumerate(steps):
+        src = rng.choice(sorted(raw))
+        new = "text" if step == "wrap_as_text" else f"c{k}"
+        if step == "alias":
+            col = F.col(src)
+        elif step == "cast":
+            col = F.col(src).cast("binary" if dict(df.dtypes)[src] == "string" else "string")
+        else:
+            col = F.xxhash64(src)
+        raw[new] = raw[src] and step in ("alias", "cast")
+        df = df.withColumn(new, col).where(F.rand(k) >= 0)
+    assert _crossings(df) == {name for name, is_raw in raw.items() if is_raw}

@@ -92,21 +92,6 @@ def test_bigrams_stay_codegen(spark, sf_smoke) -> None:
     assert plan.count("HashAggregate") >= 2  # partial + final
 
 
-def test_engine_wide_plan_audit(spark, sf_smoke) -> None:
-    """Every batch query's physical plan is free of the two scale killers:
-    CartesianProduct (unbounded O(n²)) and BatchEvalPython (row-at-a-time
-    Python in the hot path — Arrow-batched pandas_udf is the sanctioned
-    Python escape hatch and plans as ArrowEvalPython / mapInPandas)."""
-    skip_prefixes = ("stream_",)  # streaming queries execute on build
-    eager = {"source_roundtrip_csv", "source_roundtrip_json", "sink_partitioned_parquet"}
-    for name in registry.query_names():
-        if name.startswith(skip_prefixes) or name in eager:
-            continue
-        plan = _plan(registry.QUERIES[name](spark, sf_smoke))
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
-        assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF"
-
-
 def test_aqe_replans_at_runtime(spark, sf_smoke) -> None:
     """AQE must re-plan at shuffle boundaries: after execution the final
     adaptive plan exists and has coalesced the small shuffle partitions
@@ -917,62 +902,6 @@ def test_clustering_coef_no_cartesian_and_left_join_preserved(spark, sf_smoke) -
     assert "LeftOuter" in plan, plan
 
 
-def test_reshaped_queries_stay_single_pass(spark, sf_smoke) -> None:
-    # Executed-plan audit as a regression gate for the round-6/7
-    # scan-dedup work: the queries restructured to one-corpus-pass bases
-    # must never silently regrow duplicate subtrees (>= SCAN_MULT_BAR
-    # same-table scans with zero runtime exchange reuse), cartesians, or
-    # row-at-a-time Python. Counts come from the executed plan's
-    # signature, as in tools/audit_plans.py (one rule, two callers).
-    from tools.audit_plans import SCAN_MULT_BAR
-
-    reshaped = [
-        "bm25_rank",
-        "hybrid_search_rrf",
-        "lm_perplexity",
-        "remove_dup_spans",
-        "coverage_overlap_sources",
-        "cdc_aggregate",
-        "shard_rendezvous",
-        "hits_hub_authority",
-        # round-7 reshapes
-        "chi2_independence",
-        "retention_cohorts",
-        "resample_ffill",
-        "dedup_intradoc_spans",
-        "boilerplate_detect",
-        # round-7 second wave (2-scan -> 1-scan collapses)
-        "stickiness_dau_mau",
-        "bandit_ucb",
-        "interval_overlap",
-        "ngram_novelty",
-        "dedup_exact_normalized",
-        "dedup_unicode_normalized",
-        "group_rare_categories",
-        "fim_split_prep",
-        "winnow_fingerprints",
-    ]
-    problems = []
-    any_scans_counted = False
-    for name in reshaped:
-        sig = signature(registry.QUERIES[name](spark, sf_smoke))
-        if "CartesianProduct" in sig:
-            problems.append(f"{name}: CartesianProduct")
-        if "python BatchEvalPython" in sig:
-            problems.append(f"{name}: BatchEvalPython")
-        scans = table_scans(sig)
-        any_scans_counted = any_scans_counted or bool(scans)
-        if "ReusedExchange" not in sig:
-            for table, cnt in scans.items():
-                if cnt >= SCAN_MULT_BAR:
-                    problems.append(f"{name}: {table} scanned {cnt}x, no reuse")
-    # Sanity: the counter must actually see scans somewhere, else the
-    # scan-multiplicity gate is dead code (a scan no longer recognised as
-    # a catalog table).
-    assert any_scans_counted, "scan counter matched nothing"
-    assert not problems, problems
-
-
 # --- round-7: plan pins for the r07 attestation window's tier
 # (time-series / event-analytics / ML-eval / as-of / TPC-H) ---
 
@@ -1109,93 +1038,6 @@ def test_round7_second_wave_single_scan(spark, sf_smoke) -> None:
         if scans > 1:
             problems.append(f"{name}: {table} scanned {scans}x")
     assert not problems, problems
-
-
-def test_audit_text_alias_tracing() -> None:
-    # Round-8 content-rule hardening: an IDENTITY re-alias of the raw
-    # text attribute (text#5 AS body#9, transitively body#9 AS c#11)
-    # must be traced into the Exchange check; a function-DERIVED value
-    # (xxhash64(text#5) AS d#7) must NOT — digests are what the rule
-    # says should cross.
-    from tools.audit_plans import text_attr_ids
-
-    plan = (
-        "(1) Scan parquet\n"
-        "Output [2]: [doc_id#1, text#5]\n"
-        "(2) Project\n"
-        "Output [3]: [text#5 AS body#9, xxhash64(text#5, 42) AS d#7, "
-        "substring(text#5, 1, 10) AS snip#8]\n"
-        "(3) Project\n"
-        "Output [1]: [body#9 AS c#11]\n"
-    )
-    ids = text_attr_ids(plan)
-    assert {"5", "9", "11"} <= ids
-    assert "7" not in ids and "8" not in ids
-
-
-def test_audit_text_tracer_is_id_keyed_not_name_keyed() -> None:
-    # Round-9 ADVICE fix: a function-DERIVED column that reuses the
-    # traced NAME (xxhash64(text#5) AS text#12, later printed bare as
-    # text#12) must NOT be seeded or propagated as raw text — tracing is
-    # keyed on attribute ids, with alias TARGETS excluded from the seed.
-    from tools.audit_plans import text_attr_ids
-
-    plan = (
-        "(1) Scan parquet\n"
-        "Output [2]: [doc_id#1, text#5]\n"
-        "(2) Project\n"
-        "Output [1]: [xxhash64(text#5, 42) AS text#12]\n"
-        "(3) Exchange\n"
-        "Input [1]: [text#12]\n"
-        "(4) Project\n"
-        "Output [1]: [text#12 AS digest#13]\n"
-    )
-    ids = text_attr_ids(plan)
-    assert "5" in ids
-    # the digest named `text` and its downstream alias are NOT raw text
-    assert "12" not in ids and "13" not in ids
-
-
-def test_audit_text_tracer_follows_identity_casts() -> None:
-    # Round-9 ADVICE fix: cast(text#5 as string) is byte-identical
-    # content — a no-op re-typing must not launder raw text past the
-    # Exchange check. Casts to non-content types and real functions
-    # remain exempt (they derive NEW values).
-    from tools.audit_plans import text_attr_ids
-
-    plan = (
-        "(1) Scan parquet\n"
-        "Output [2]: [doc_id#1, text#5]\n"
-        "(2) Project\n"
-        "Output [3]: [cast(text#5 as string) AS body#9, "
-        "cast(text#5 as binary) AS raw#10, "
-        "cast(length(text#5) as string) AS len_s#14]\n"
-        "(3) Project\n"
-        "Output [1]: [cast(body#9 as string) AS c#11]\n"
-    )
-    ids = text_attr_ids(plan)
-    assert {"5", "9", "10", "11"} <= ids
-    assert "14" not in ids
-
-
-def test_audit_growth_aggs_sees_sortaggregate() -> None:
-    # Round-8 hardening: the same growth-class buffer runs under
-    # SortAggregate when ObjectHashAggregate is disabled or falls back —
-    # the lint must catch both hosts, and leave fixed-size sketches
-    # (approx_percentile) alone.
-    from tools.audit_plans import growth_object_aggs
-
-    plan = (
-        "(1) SortAggregate\n"
-        "Functions [1]: [percentile(v#3, 0.5, 1, 0, 0)]\n"
-        "(2) ObjectHashAggregate\n"
-        "Functions [1]: [collect_list(x#4, 0, 0)]\n"
-        "(3) HashAggregate\n"
-        "Functions [1]: [approx_percentile(v#3, 0.5, 10000, 0, 0)]\n"
-        "(4) SortAggregate\n"
-        "Functions [1]: [min(v#3)]\n"
-    )
-    assert growth_object_aggs(plan) == {"percentile", "collect_list"}
 
 
 def test_intradoc_spans_window_not_selfjoin(spark, sf_smoke) -> None:

@@ -52,7 +52,11 @@ def main() -> int:
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "16"))
     args = ap.parse_args()
 
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
+    # Python workers import the package by name: before the session starts,
+    # point them at this checkout, not at their working directory's.
+    os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))
 
     import duckdb
     from pyspark.sql import SparkSession

@@ -41,7 +41,11 @@ def main() -> int:
     ap.add_argument("--json-out", default="")
     args = ap.parse_args()
 
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
+    # Python workers import the package by name: before the session starts,
+    # point them at this checkout, not at their working directory's.
+    os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))
     import __spark_entry__ as entry_mod
     from pythonmapreduce_spark.catalog import TABLES
     from pythonmapreduce_spark.plans.registry import run_query
