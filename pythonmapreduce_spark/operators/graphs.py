@@ -19,26 +19,29 @@ Scale notes per operator:
   volume is Σ deg(v)²/2 over the oriented adjacency — the standard
   node-iterator bound. A wedge (v, w) closes when w is in v's neighbour
   array: one equi-join on the vertex key, no cartesian anywhere.
-- Round-join rule: pagerank_iter and bfs_distances loop over the
-  adjacency base (_sym_adjacency), hash-partitioned on vtx by its own
-  groupBy, each as ONE plan. Every join of O(V) loop state to it
-  goes through _round_join, a shuffle-hash join that builds the
-  adjacency: AQE keeps the join on the base's own exchange and runs no
-  broadcast job, and per round only the state moves. The build side is
-  one AQE-coalesced partition of the adjacency; a super-node row is
-  ROADMAP item 4.
+- Loop-base rule: the fixed-depth loops (pagerank_iter, bfs_distances,
+  hits_hub_authority, label_propagation_communities, kcore_rounds)
+  loop over the adjacency base (_sym_adjacency), hash-partitioned on
+  vtx by its own groupBy, and all but kcore_rounds as ONE plan. Every
+  join of O(V) loop state to it goes through _round_join, a
+  shuffle-hash join that builds the adjacency: AQE keeps the join on
+  the base's own exchange and runs no broadcast job, and per round
+  only the state moves. The build side is one AQE-coalesced partition
+  of the adjacency; a super-node row is ROADMAP item 4.
 - A loop-wide scalar rides an exchange the loop already has: PageRank's
   |V| is the sum of a sentinel row that round 1 emits beside each
   vertex's contributions, and the subquery that reads it filters the
   round's aggregate output, so it reuses round 1's exchange. A NULL
   sentinel key or a filter on the key is pushed below the aggregate and
   costs the subquery its own exchange (see _pagerank_ranks).
-- The edge-row loops (graph_cc_rounds, label_propagation_communities,
-  hits_hub_authority) join O(V) state to the 2|E| edge rows unhinted:
-  there AQE's broadcast of the state, taken only under the broadcast
-  threshold, is what saves the edge shuffle.
-- Only hits_hub_authority, kcore_rounds (see there) and the star loops,
-  whose rounds are driver-loop actions, checkpoint at build time.
+- The one exception is graph_cc_rounds, which loops over the 2|E| edge
+  rows and joins its O(V) labels to them unhinted (AQE broadcasts the
+  labels under the broadcast threshold, which saves the edge shuffle):
+  on the adjacency it wrote 134,584 → 153,014 B at sf0.01, because the
+  base's collect_set exchange ships each edge in both directions
+  (ROADMAP item 4).
+- Only kcore_rounds (see there) and the star loops, whose rounds are
+  driver-loop actions, checkpoint at build time.
 """
 
 from __future__ import annotations
@@ -80,8 +83,9 @@ _EDGES_CTE = """
 
 def _sym_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric ADJACENCY LISTS: (vtx, nbrs) — one row per vertex,
-    neighbors as an array. The base of pagerank_iter, bfs_distances,
-    kcore_rounds, the triangle pair and graph_common_neighbors.
+    neighbors as an array. The base of every graph loop but
+    graph_cc_rounds (see the module notes), the triangle pair and
+    graph_common_neighbors.
 
     Built straight from the per-order baskets (basket_adjacency_rows), not
     from ``_edges``: the neighbor sets are the symmetric closure of the
@@ -664,42 +668,24 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis run on directed webs).
 
     Same spine as the rest of the tier: scores live in O(V) tables
-    keyed on the vertex, each half-round is one equi-join +
-    combine-enabled sum, normalizers are 1-row broadcasts, and the
-    deterministic top-20 (score desc, id) bounds the output. More rounds
-    = the same pair of joins repeated over checkpointed score tables.
+    keyed on the vertex, the authority half-round is one round join to
+    the adjacency base + a pushed explode and combine-enabled sum,
+    normalizers are 1-row broadcasts, and the deterministic top-20
+    (score desc, id) bounds the output. One plan, no checkpoint; more
+    rounds repeat the round join.
     """
-    # Round-12 note: the adjacency-array base measured neutral here
-    # (1.032 interleaved, steal 11 — ONE propagation join can't amortize
-    # the base's collect_list shuffle). Edge-row form kept, same
-    # adjudication as LPA/CC.
-    # Checkpointed: both score-table checkpoints below read it, and each
-    # would rebuild the edge set from lineitem in its own job.
-    e = iter_materialize(_edges(spark, sf_dir))
-    sym = _both_directions(e)
-    # Each raw score table feeds BOTH its own normalizer aggregate and the
-    # next half-round (and h1 additionally the final join). Without
-    # materializing these O(V) tables Catalyst re-executes the |E|-sized
-    # propagation join once per consumer (measured: 4 nested-loop
-    # normalizer subtrees instead of 2, with h1's edge join computed three
-    # times); checkpointing them keeps each half-round's shuffle join
-    # computed exactly once — the two-table-UPDATE shape iterative HITS
-    # needs at scale.
-    # Half-round-1 specialization (superstep-0 fold, as in LPA/CC/
-    # pagerank): a0 is uniformly 1.0, so the first hub score is just the
-    # vertex degree — sum of exact 1.0s, order-independent in float, so
-    # bit-identical to the general half-round's join+sum the oracle runs.
-    h1r = iter_materialize(
-        sym.groupBy("src")
-        .agg(F.sum(F.lit(1.0)).alias("h"))
-        .select(F.col("src").alias("vid"), "h")
-    )
+    adj = _sym_adjacency(spark, sf_dir)
+    # Half-round 1 (superstep-0 fold, as in pagerank): a0 is uniformly
+    # 1.0, so the first hub score is the degree, size(nbrs) — exact, as
+    # the general half-round's sum of 1.0s is.
+    h1r = adj.select(F.col("vtx").alias("vid"), F.size("nbrs").cast("double").alias("h"))
     h_tot = h1r.agg(F.sum("h").alias("ht"))
     h1 = h1r.crossJoin(F.broadcast(h_tot)).select(
         "vid", (F.col("h") / F.col("ht")).alias("h")
     )
-    a1r = iter_materialize(
-        sym.join(h1, sym.src == h1.vid)
+    a1r = (
+        _round_join(adj, h1, F.col("vtx") == F.col("vid"))
+        .select(F.explode("nbrs").alias("dst"), "h")
         .groupBy("dst")
         .agg(F.sum("h").alias("a"))
         .select(F.col("dst").alias("vid"), "a")
@@ -773,11 +759,8 @@ def graph_cc_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the one plan. A run to convergence is a driver loop that cuts
     lineage per round, as bigstar_fixpoint does.
     """
-    # Round-12 note: the adjacency-array base measured ~neutral-to-worse
-    # here (1.050 interleaved, steal 15) — two min rounds don't clearly
-    # amortize the extra collect_list shuffle. Edge-row form kept (same
-    # adjudication as LPA; pagerank/bfs/kcore adopted the base on
-    # measured wins).
+    # The one edge-row loop: the adjacency base raises its bytes (see the
+    # module notes).
     sym = _both_directions(_edges(spark, sf_dir))
     # Round-1 specialization (superstep-0 constant folding): with every
     # initial label equal to the vertex id, round 1's neighbor-min is
@@ -866,44 +849,27 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     every intermediate state deterministic, so the unrolled DuckDB CTE
     reproduces it exactly (the graph_cc_rounds trick).
 
-    Per round: one vertex-key equi-join of the label table against the
-    edge rows, a (vertex, label) count aggregate, and a
+    Per round: one round join of the label table to the adjacency base,
+    a pushed explode into a (vertex, label) count aggregate, and a
     per-vertex top-1 expressed as max_by(lbl, (cnt, -lbl)) — a second
     combine-enabled hash aggregate instead of a per-vertex sort window,
     so both round stages take map-side partials and nothing sorts.
-    Labels stay O(V); the one plan derives the edges once and AQE reuses
-    their exchange in every round. Same iterative scale shape as
-    pagerank: state keyed on the vertex, nothing collected, rounds
-    extend to convergence on a cluster.
+    Labels stay O(V), and the one plan builds the adjacency once. Same
+    iterative scale shape as pagerank: state keyed on the vertex,
+    nothing collected, rounds extend to convergence on a cluster.
     """
-    # Round-12 note: the adjacency-array base (_sym_adjacency) measured
-    # 1.16× SLOWER here interleaved (1.790 vs 1.545 min, steal 22) —
-    # LPA's single vote round cannot amortize the extra collect_list
-    # shuffle the base costs, unlike pagerank/bfs/kcore's 2-3 join
-    # rounds. Edge-row form kept; at convergence-depth production runs
-    # the adjacency base wins, and flipping it is a 5-line change.
-    sym = _both_directions(_edges(spark, sf_dir))
-    # Round-1 specialization (first-iteration constant folding, the
-    # standard Pregel superstep-0 trick): every initial label is the
-    # vertex id and sym is duplicate-free BY CONSTRUCTION (_edges ends
-    # in distinct() under src < dst, so no (a,b) repeats in either
-    # direction on any fixture) — every round-1 vote count is exactly 1
-    # and the (cnt DESC, lbl ASC) top-1 is simply the minimum neighbor
-    # id. One combine-enabled min-aggregate over the edge base replaces
-    # the label join + O(E) vote count + per-vertex window; integer
-    # min, so bit-identical to the general round the oracle unrolls.
-    labels = (
-        sym.groupBy("src")
-        .agg(F.min("dst").alias("lbl"))
-        .select(F.col("src").alias("vid"), "lbl")
-    )
+    adj = _sym_adjacency(spark, sf_dir)
+    # Round-1 specialization (the Pregel superstep-0 fold): every initial
+    # label is the vertex id and nbrs holds no duplicates, so every
+    # round-1 vote count is exactly 1 and the (cnt DESC, lbl ASC) top-1
+    # is the least neighbor id: array_min(nbrs), integer and exact.
+    labels = adj.select(F.col("vtx").alias("vid"), F.array_min("nbrs").alias("lbl"))
     for _ in range(1):
+        # Each vertex pushes its label to its neighbors: one vote per edge.
         votes = (
-            sym.join(
-                labels.withColumnRenamed("vid", "dst2"),
-                F.col("dst") == F.col("dst2"),
-            )
-            .groupBy("src", "lbl")
+            _round_join(adj, labels, F.col("vtx") == F.col("vid"))
+            .select(F.explode("nbrs").alias("dst"), "lbl")
+            .groupBy("dst", "lbl")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
         # Top-1 under (cnt DESC, lbl ASC) == argmax of the struct
@@ -912,7 +878,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
         # order-equivalent to the oracle's ROW_NUMBER pick — but runs as
         # a combine-enabled hash aggregate instead of a per-vertex sort
         # window (map-side partials, no sort, no WindowGroupLimit pass).
-        labels = votes.groupBy(F.col("src").alias("vid")).agg(
+        labels = votes.groupBy(F.col("dst").alias("vid")).agg(
             F.max_by("lbl", F.struct(F.col("cnt"), (-F.col("lbl")).alias("nl"))).alias("lbl")
         )
     return labels.groupBy(F.col("lbl").alias("community")).agg(

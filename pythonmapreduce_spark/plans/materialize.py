@@ -5,9 +5,9 @@ to a fixpoint, dedup's label propagation, k-core peeling) must cut its
 lineage each round or re-execute the whole upstream plan per iteration
 (measured ~8 of dedup_clusters' 9.6 s at sf0.01 without it). A
 fixed-depth loop built as ONE plan (pagerank_iter, bfs_distances,
-graph_cc_rounds, label_propagation_communities) does not: the plan
-executes once and AQE reuses its exchanges across rounds, so it
-materializes nothing.
+hits_hub_authority, graph_cc_rounds, label_propagation_communities) does
+not: the plan executes once and AQE reuses its exchanges across rounds,
+so it materializes nothing.
 
 Lazy is the default: each call is an eager job at query-build time, so a
 base stays in the plan unless its site names one of four reasons, in a
@@ -48,7 +48,8 @@ round) goes through ``observe_pass`` instead, which materializes nothing.
 Lifetime: a run scope (``run_scope``, opened per thread by
 ``registry.run_query``) holds a release for each base checkpointed
 (``iter_materialize``, ``local_checkpoint``), each broadcast and each
-memory-sink view created while it is open, and calls them as it closes: non-blocking unpersists and a view drop, never a job.
+memory-sink view created while it is open, and calls them as it closes:
+non-blocking unpersists and a view drop, never a job, and no log line.
 Outside a scope nothing registers; Spark's ContextCleaner frees what a
 build left once it is garbage-collected, and always owns the files of a
 reliable checkpoint (``unpersist`` frees blocks only).
@@ -102,7 +103,11 @@ def local_checkpoint(df: DataFrame) -> DataFrame:
 
 
 def _released(out: DataFrame) -> DataFrame:
-    release_at_run_end(lambda: out._jdf.logicalPlan().rdd().unpersist(False))
+    # SparkContext.unpersistRDD is what RDD.unpersist calls, less the WARN
+    # line it logs for every locally checkpointed RDD it frees.
+    rdd_id = out._jdf.logicalPlan().rdd().id()
+    sc = out.sparkSession.sparkContext._jsc.sc()
+    release_at_run_end(lambda: sc.unpersistRDD(rdd_id, False))
     return out
 
 

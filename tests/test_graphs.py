@@ -153,19 +153,19 @@ def test_bm25_scores_in_scan_stage(spark, sf_smoke) -> None:
 
 
 def test_superstep0_specializations_match_general_round(spark, sf_smoke) -> None:
-    """The round-1 specializations in LPA / CC / pagerank fold the
-    deterministic uniform init into one aggregate. Their soundness rests
-    on sym being duplicate-free (``_edges`` ends in distinct() under
-    src < dst); this test re-runs round 1 in the GENERAL form the oracle
-    unrolls and asserts equality on the live graph, so a future edge
-    derivation that drops the distinct (or an asymmetric variant that
-    makes both directions collide) fails here, not in the driver diff.
+    """The round-1 specializations in LPA / CC / pagerank / HITS / k-core
+    fold the deterministic uniform init into one expression. Their
+    soundness rests on the neighbor sets being duplicate-free (``_edges``
+    ends in distinct() under src < dst); this test re-runs round 1 in the
+    GENERAL form the oracle unrolls and asserts equality on the live
+    graph, so a future edge derivation that drops the distinct (or an
+    asymmetric variant that makes both directions collide) fails here,
+    not in the driver diff.
 
-    pagerank (and bfs/kcore) read the basket-built ``_sym_adjacency``
-    instead of this edge-row sym. That base is pinned to the same
-    duplicate-free, self-loop-free symmetric closure by
-    test_sym_adjacency_is_symmetric_closure_of_edges, so the equalities
-    below cover it too.
+    Only graph_cc_rounds runs on this edge-row sym, so its fold is checked
+    in that form; LPA, HITS and k-core fold over the basket-built
+    ``_sym_adjacency`` row (array_min(nbrs), size(nbrs)) and are checked
+    in the form the code runs.
     """
     from pyspark.sql import Window
 
@@ -198,9 +198,8 @@ def test_superstep0_specializations_match_general_round(spark, sf_smoke) -> None
         .where(F.col("rn") == 1)
         .select(F.col("src").alias("vid"), "lbl")
     )
-    lpa_special = sym.groupBy("src").agg(F.min("dst").alias("lbl")).select(
-        F.col("src").alias("vid"), "lbl"
-    )
+    adj = _sym_adjacency(spark, sf_smoke)
+    lpa_special = adj.select(F.col("vtx").alias("vid"), F.array_min("nbrs").alias("lbl"))
     assert lpa_general.exceptAll(lpa_special).count() == 0
     assert lpa_special.exceptAll(lpa_general).count() == 0
 
@@ -249,15 +248,15 @@ def test_superstep0_specializations_match_general_round(spark, sf_smoke) -> None
     assert drift is not None and drift < 1e-12
     assert pr_general.count() == pr_special.count() == n
 
-    # HITS half-round 1, general join+sum over a0 ≡ 1.0 vs bare degree
-    # sum: both are sums of exact 1.0s, so equality is exact.
+    # HITS half-round 1, general join+sum over a0 ≡ 1.0 vs the degree as
+    # a double: a sum of exact 1.0s is exact, so equality is exact.
     a0 = labels0.select("vid", F.lit(1.0).alias("a"))
     h_general = (
         sym.join(a0, sym.dst == a0.vid)
         .groupBy("src")
         .agg(F.sum("a").alias("h"))
     )
-    h_special = sym.groupBy("src").agg(F.sum(F.lit(1.0)).alias("h"))
+    h_special = adj.select(F.col("vtx").alias("src"), F.size("nbrs").cast("double").alias("h"))
     assert h_general.exceptAll(h_special).count() == 0
     assert h_special.exceptAll(h_general).count() == 0
 
@@ -270,6 +269,6 @@ def test_superstep0_specializations_match_general_round(spark, sf_smoke) -> None
         .groupBy("src")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    deg_special = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    deg_special = adj.select(F.col("vtx").alias("src"), F.size("nbrs").cast("long").alias("deg"))
     assert deg_general.exceptAll(deg_special).count() == 0
     assert deg_special.exceptAll(deg_general).count() == 0

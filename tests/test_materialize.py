@@ -8,6 +8,9 @@ AQE splits a skewed join at scale.
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 import threading
 import warnings
 from contextlib import contextmanager
@@ -145,6 +148,29 @@ def test_run_query_releases_on_both_paths(spark, sf_smoke, ckpt_dir) -> None:
     assert rows
     assert len(held) == (0 if ckpt_dir[1] else 3), held
     assert _persistent_rdds(spark) <= before
+
+
+def test_release_logs_no_warning(sf_smoke) -> None:
+    """Releasing a localCheckpoint base is routine, so it logs nothing:
+    RDD.unpersist warns once per locally checkpointed RDD, and a
+    long-lived server's stderr would grow by a line per released base.
+    Runs in its own session, whose stderr is this test's to read."""
+    script = (
+        "from pythonmapreduce_spark.plans import registry\n"
+        "from pythonmapreduce_spark.session import get_spark\n"
+        "registry.load_all()\n"
+        "spark = get_spark('release-log')\n"
+        "jsc = spark.sparkContext._jsc\n"
+        f"rows = registry.run_query(spark, 'kcore_rounds', {sf_smoke!r}, lambda df: df.collect())\n"
+        "assert rows and jsc.getPersistentRDDs().isEmpty()\n"
+        "spark.stop()\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, capture_output=True, text=True, timeout=300
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    assert "cannot be recomputed after unpersisting" not in done.stderr, done.stderr[-3000:]
 
 
 def test_run_query_releases_when_the_sink_raises(spark, sf_smoke) -> None:

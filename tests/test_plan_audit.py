@@ -265,13 +265,12 @@ for _q in (
 # one collect_set row per vertex, which the lazy graph bases put into
 # each of these final plans.
 for _q in (
-    "graph_degree",
     "triangle_count",
     "graph_common_neighbors",
     "pagerank_iter",
     "bfs_distances",
     "graph_clustering_coef",
-    "graph_cc_rounds",
+    "hits_hub_authority",
     "label_propagation_communities",
 ):
     ALLOW.setdefault(_q, {})["objagg:collect_set"] = (
@@ -279,6 +278,13 @@ for _q in (
         "co-occurrence construction bounds by order size (the same "
         "bound the wedge join's Σdeg² argument rests on); ROADMAP item 4 "
         "chunks the row at a fixed width"
+    )
+
+# The edge-row queries carry only graphs._baskets' per-order part set.
+for _q in ("graph_degree", "graph_cc_rounds"):
+    ALLOW.setdefault(_q, {})["objagg:collect_set"] = (
+        "part set per order — bounded by order size (~4 items in TPC-H, "
+        "similarly small in real carts)"
     )
 
 # IVF's "collect" is the K centroids into ONE broadcastable row — bound

@@ -625,7 +625,7 @@ def test_lpa_vote_join_is_equi_join_without_window(spark, sf_smoke) -> None:
     assert "BroadcastNestedLoopJoin" not in names
     assert not [n for n in names if n.startswith("Window")], names
     joins = [n.simpleString(100) for n in nodes if n.nodeName().endswith("Join")]
-    assert [j for j in joins if "[dst#" in j and "[dst2#" in j], joins
+    assert [j for j in joins if "[vtx#" in j and "[vid#" in j], joins
 
 
 def test_dedup_unicode_normalized_single_arrow_stage(spark, sf_smoke) -> None:
@@ -748,25 +748,34 @@ def test_triangle_wedge_joins_stay_equi_with_pruned_scans(spark, sf_smoke) -> No
     ), lineitem_schemas
 
 
-# (query, the rounds' aggregation key, rounds, rounds with a state join):
-# pagerank_iter's first round folds the uniform ranks and joins nothing.
+# (query, the rounds' aggregation key, exchanges on that key, rounds with
+# a state join): pagerank_iter's first round folds the uniform ranks and
+# joins nothing; HITS's hub half-round and LPA's round 1 are projections
+# of the adjacency row, and LPA's vote round aggregates on dst twice
+# (the vote count, then the top-1).
 @pytest.mark.parametrize(
-    "name, round_key, rounds, joins",
-    [("pagerank_iter", "dst", 3, 2), ("bfs_distances", "node", 3, 3)],
-    ids=["pagerank_iter", "bfs_distances"],
+    "name, round_key, exchanges, joins",
+    [
+        ("pagerank_iter", "dst", 3, 2),
+        ("bfs_distances", "node", 3, 3),
+        ("hits_hub_authority", "dst", 1, 1),
+        ("label_propagation_communities", "dst", 2, 1),
+    ],
+    ids=["pagerank_iter", "bfs_distances", "hits_hub_authority", "label_propagation_communities"],
 )
 def test_adjacency_round_joins_are_shuffle_hash_on_the_base_exchange(
-    spark, sf_smoke, name: str, round_key: str, rounds: int, joins: int
+    spark, sf_smoke, name: str, round_key: str, exchanges: int, joins: int
 ) -> None:
     # Each round joins the O(V) state to the vtx-partitioned adjacency as
     # a shuffle-hash join that builds the adjacency: AQE keeps it on the
     # base's own exchange instead of broadcasting the adjacency in an
-    # extra job. Per round exactly one exchange moves the state on the
+    # extra job. Only the rounds' aggregates move the state, each on the
     # round's aggregation key, and no join degrades to a cartesian.
     nodes = executed_nodes(registry.QUERIES[name](spark, sf_smoke))
     names = [n.nodeName() for n in nodes]
     assert "CartesianProduct" not in names
-    assert "BroadcastNestedLoopJoin" not in names
+    # HITS's normalizer cross joins are pinned by the test below.
+    assert "BroadcastNestedLoopJoin" not in names or name == "hits_hub_authority"
     vtx_joins = [
         n for n in nodes if n.nodeName().endswith("Join") and "[vtx#" in n.simpleString(100)
     ]
@@ -784,7 +793,7 @@ def test_adjacency_round_joins_are_shuffle_hash_on_the_base_exchange(
         if n.nodeName() == "Exchange"
         and f"hashpartitioning({round_key}#" in n.simpleString(100)
     ]
-    assert len(round_exchanges) == rounds, [n.simpleString(100) for n in round_exchanges]
+    assert len(round_exchanges) == exchanges, [n.simpleString(100) for n in round_exchanges]
 
 
 def test_pagerank_vertex_count_reuses_round_one_exchange(spark, sf_smoke) -> None:
@@ -813,6 +822,7 @@ def test_pagerank_vertex_count_reuses_round_one_exchange(spark, sf_smoke) -> Non
 SINGLE_PLAN_QUERIES = (
     "pagerank_iter",
     "bfs_distances",
+    "hits_hub_authority",
     "graph_cc_rounds",
     "label_propagation_communities",
     "triangle_count",
@@ -870,26 +880,34 @@ def test_loop_base_two_exchanges_and_single_plan_loops_build_no_job(
 def test_hits_only_nested_loops_are_one_row_normalizer_broadcasts(
     spark, sf_smoke
 ) -> None:
-    # The two score-propagation joins must be hash equi-joins on vertex
-    # keys; the ONLY nested-loop shapes allowed are the two 1-row
-    # normalizer broadcasts (sum-of-hubs, sum-of-authorities crossJoins),
-    # which is the documented bounded-crossJoin pattern. A third nested
-    # loop means a score table lost its materialization and its |E|-sized
-    # propagation join is being re-executed per consumer; any cartesian
-    # means a score join silently degraded.
-    import re
-
-    plan = _plan(registry.QUERIES["hits_hub_authority"](spark, sf_smoke))
-    assert "CartesianProduct" not in plan
-    bnlj = re.findall(r"\(\d+\) BroadcastNestedLoopJoin", plan)
-    assert len(bnlj) == 2, plan
-    assert "BuildRight, Cross" in plan or "Cross BuildRight" in plan
-    equi = re.findall(
-        r"\(\d+\) (?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", plan
-    )
-    assert len(equi) >= 1, plan  # the final hub⋈authority join at minimum
-    # (the propagation joins themselves sit behind the two score-table
-    # checkpoints, which truncate lineage out of this plan)
+    # The authority propagation is a vertex-key round join (pinned above);
+    # the ONLY nested loops are cross joins that broadcast a 1-row
+    # normalizer (the sum-of-hubs or sum-of-authorities aggregate, which
+    # has no grouping key), the documented bounded-crossJoin pattern. The
+    # authority exchange runs once: its normalizer reads it as a
+    # ReusedExchange instead of re-running the propagation.
+    nodes = executed_nodes(registry.QUERIES["hits_hub_authority"](spark, sf_smoke))
+    names = [n.nodeName() for n in nodes]
+    assert "CartesianProduct" not in names
+    loops = [n for n in nodes if n.nodeName() == "BroadcastNestedLoopJoin"]
+    assert loops, names
+    for join in loops:
+        assert join.joinType().toString() == "Cross", join.simpleString(100)
+        assert join.buildSide().toString() == "BuildRight", join.simpleString(100)
+        built = join.right()
+        while built.nodeName() != "BroadcastExchange":
+            built = built.plan() if built.nodeName().endswith("QueryStage") else built.child()
+        agg = built.child()
+        while agg.nodeName().startswith("WholeStageCodegen"):
+            agg = agg.child()
+        assert agg.nodeName() == "HashAggregate", agg.treeString()
+        assert agg.groupingExpressions().isEmpty(), agg.simpleString(100)
+    authority = [
+        n
+        for n in nodes
+        if n.nodeName() == "Exchange" and "hashpartitioning(dst#" in n.simpleString(100)
+    ]
+    assert len(authority) == 1, [n.simpleString(100) for n in authority]
 
 
 def test_clustering_coef_no_cartesian_and_left_join_preserved(spark, sf_smoke) -> None:

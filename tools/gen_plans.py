@@ -1,16 +1,20 @@
 """Regenerate PLANS.md and plans/signatures.json for the headline queries.
 
 Each query runs once at sf0.01 in a ``get_spark`` session at its default
-core count. PLANS.md gets the annotated formatted plan after the run (the
-AQE final plan, then the initial one); plans/signatures.json gets the final
-plan's structural signature (``plans/signature.py``), which
-``tests/test_plan_signatures.py`` must reproduce. Run from the repo root:
+core count. plans/signatures.json gets the final plan's structural
+signature (``plans/signature.py``), which ``tests/test_plan_signatures.py``
+must reproduce. PLANS.md gets the annotated formatted plan after the run
+(the AQE final plan, then the initial one) for each query whose signature
+or note changed; a section whose query kept both keeps its committed text,
+so a regeneration's diff shows only the plans that changed and not the
+expression ids every run renumbers. Run from the repo root:
 ``python tools/gen_plans.py``."""
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -180,9 +184,13 @@ NOTES = {
         "bound, output is |V|. One plan, no checkpoint."
     ),
     "hits_hub_authority": (
-        "mutually-recursive two-table update: each half-round is one "
-        "vertex-key equi-join + partial/final sum; normalizers are 1-row "
-        "broadcasts; deterministic top-20 caps the output."
+        "mutually-recursive two-table update in one plan over the "
+        "vtx-partitioned adjacency base: the hub half-round is size(nbrs) "
+        "on the base's rows; the authority half-round joins the hubs to "
+        "the base as a shuffle-hash join on its own exchange, explodes "
+        "nbrs and sums per dst on one exchange, which the authority "
+        "normalizer reads as a ReusedExchange; normalizers are 1-row "
+        "broadcasts; deterministic top-20 caps the output. No checkpoint."
     ),
     "ann_pq": (
         "the final ADC scan: the encoded corpus (8 one-byte codes/vector) "
@@ -214,11 +222,12 @@ NOTES = {
         "check; all later aggregates reuse doc_id-keyed exchanges."
     ),
     "label_propagation_communities": (
-        "both rounds in one plan: the edge set is derived once and "
-        "read once per round through its reused exchange; round 1 is a "
-        "min-aggregate, round 2 the vote equi-join + count agg + max_by "
-        "top-1, and the community sizes aggregate last. No checkpoint, "
-        "no cartesian."
+        "both rounds in one plan over the vtx-partitioned adjacency base: "
+        "round 1 is array_min(nbrs) on the base's rows; round 2 joins the "
+        "labels to the base as a shuffle-hash join on its own exchange, "
+        "pushes each label to the neighbours (explode), then a vote count "
+        "agg + max_by top-1; the community sizes aggregate last. No "
+        "checkpoint, no cartesian."
     ),
     "search_ndcg_mrr": (
         "offline ranking evaluation with bm25_rank's scan discipline: both "
@@ -346,13 +355,29 @@ def main() -> None:
         "broadcast, partial agg, WindowGroupLimit, AQE re-plan).",
         "",
     ]
+    plans_md = os.path.join(REPO, "PLANS.md")
+    with open(plans_md) as fh:
+        head, *chunks = re.split(r"(?m)^## ", fh.read())
+    # A committed section is kept only under the same header, which names
+    # the core count it was generated at.
+    kept = {
+        chunk.split("\n", 1)[0]: "## " + chunk.rstrip("\n") + "\n"
+        for chunk in chunks
+        if head == "\n".join(out) + "\n"
+    }
+    with open(SIGNATURES) as fh:
+        committed = json.load(fh)
     signatures = {}
     for name, note in NOTES.items():
         df = QUERIES[name](spark, SF)
         signatures[name] = signature(df)
-        plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-        out.append(f"## {name}\n\n{note}\n\n```\n{plan.strip()}\n```\n")
-    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
+        start = f"## {name}\n\n{note}\n\n```\n"
+        section = kept.get(name, "")
+        if committed.get(name) != signatures[name] or not section.startswith(start):
+            plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+            section = f"{start}{plan.strip()}\n```\n"
+        out.append(section)
+    with open(plans_md, "w") as fh:
         fh.write("\n".join(out))
     with open(SIGNATURES, "w") as fh:
         json.dump(signatures, fh, indent=1)
