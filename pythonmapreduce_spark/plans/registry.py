@@ -140,44 +140,8 @@ def query_names() -> list[str]:
     return sorted(QUERIES)
 
 
-# Names surfaced first among the never-attested tier (SURVEY §2.3 rows that
-# lack a driver correctness row in any prior round, then the streaming /
-# UDF-surface / graph tiers). Ordering within the tier is: this list, then
-# registration order. The list is only a tiebreak — attestation state from
-# CORRECTNESS_r*.json decides the tiers, so once a name here gains a green
-# driver row it automatically drops to the back and the next never-attested
-# names surface. No per-round manual rotation needed.
-_ATTESTATION_PRIORITY: tuple[str, ...] = (
-    # r01 recorded these as rows-only (no_oracle); both have since gained
-    # full DuckDB oracles — their driver evidence predates the claim, so
-    # they rank as unattested-in-current-form (tier 1, front).
-    "approx_distinct", "approx_quantile",
-    "agg_collect",  # only historical driver FAIL; fixed in 03a0823 — re-attest
-    # --- the 17 SURVEY §2.3 rows never driver-checked in r01/r02 ---
-    "window_rank", "window_running", "window_lag",
-    "string_funcs", "date_funcs", "math_funcs", "array_funcs", "json_funcs",
-    "case_null", "cast_types",
-    "udf_scalar", "udaf_grouped",
-    "window_tumbling", "window_sliding", "window_session",
-    "stream_wordcount", "text_stats",
-    # --- rest of the streaming surface ---
-    "stream_event_window", "stream_dedup", "stream_static_join",
-    "stream_session_window", "stream_stream_join",
-    "sink_foreach_batch_upsert", "stream_stateful_counts",
-    # --- rest of the UDF / pandas-interchange surface ---
-    "udtf_tokenize", "cogroup_reconcile", "udf_arrow", "udf_map_arrow",
-    # --- graph tier ---
-    "graph_degree", "triangle_count", "pagerank_iter", "bfs_distances",
-    "graph_common_neighbors",
-    # --- text-analysis tier (SURVEY §2.3 row 46 neighborhood) ---
-    "lang_id", "quality_score", "token_count", "doc_fingerprint",
-    # --- remaining scalar-function family ---
-    "map_funcs", "struct_funcs", "array_hof", "explode_null", "regex_funcs",
-    "fuzzy_match", "bit_funcs", "try_arithmetic", "json_variant",
-    # --- behavior-changing fixes this round (ADVICE r2) + heavy TPC-H ---
-    "interval_merge", "rate_wilson", "ab_test_lift",
-    "tpch_q21", "scd2_snapshot",
-)
+# The committed CORRECTNESS_r*.json files live at the repo root.
+_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _attestation_state() -> dict[str, tuple[int, bool, bool]]:
@@ -190,9 +154,8 @@ def _attestation_state() -> dict[str, tuple[int, bool, bool]]:
     full oracle. Missing/unparseable files are skipped — ordering is an
     optimization, never a correctness dependency.
     """
-    root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     state: dict[str, tuple[int, bool, bool]] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
+    for path in sorted(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if not m:
             continue
@@ -230,16 +193,14 @@ def ordered_names() -> list[str]:
     The driver attests ~50 queries per round in iteration order, so emit:
     (1) queries whose LAST driver row failed — a fix with no green
     re-attestation is still a standing red signal; (2) queries never
-    driver-checked in any round (priority list first, then registration
-    order) — a query whose only driver row was rows-only but which NOW has
-    a full oracle counts as never-attested-in-current-form; (3) green
-    queries, stalest attestation first. State comes from the committed
+    driver-checked in any round — a query whose only driver row was
+    rows-only but which NOW has a full oracle counts as
+    never-attested-in-current-form; (3) green queries, stalest attestation
+    first. Ties keep registration order. State comes from the committed
     CORRECTNESS_r*.json files, so the rotation advances by itself every
-    round.
+    round; ``tools/attestation_report.py`` prints it.
     """
     state = _attestation_state()
-    prio = {n: i for i, n in enumerate(_ATTESTATION_PRIORITY)}
-    reg = {n: i for i, n in enumerate(QUERIES)}
 
     def key(name: str) -> tuple:
         st = state.get(name)
@@ -251,9 +212,9 @@ def ordered_names() -> list[str]:
         else:  # green; refresh stalest first
             tier = 2
         rnd = st[0] if st is not None and tier != 1 else 0
-        return (tier, rnd, prio.get(name, len(prio)), reg[name])
+        return (tier, rnd)
 
-    return sorted(QUERIES, key=key)
+    return sorted(QUERIES, key=key)  # stable: ties keep registration order
 
 
 def load_all() -> None:

@@ -1,6 +1,6 @@
-"""The attestation-ledger tool vs the committed r01-r08 history and the
-registry's own rotation ordering (VERDICT r08 item 8: the SURVEY log
-should cite tool output instead of hand-counted windows)."""
+"""The attestation state (``registry._attestation_state``) against the
+committed r01-r12 history, the rotation ``registry.ordered_names()`` builds
+from it, and ``tools/attestation_report.py``, which prints both."""
 from __future__ import annotations
 
 import json
@@ -8,26 +8,27 @@ from pathlib import Path
 
 import pytest
 
-from tools.attestation_report import ledger, registry_tier1
+from pythonmapreduce_spark.plans import registry
+from tools import attestation_report
 
 REPO = Path(__file__).resolve().parent.parent
+HISTORY = (REPO / "CORRECTNESS_r08.json").exists()
+
+registry.load_all()
 
 
+@pytest.mark.skipif(not HISTORY, reason="history files absent")
 def test_ledger_matches_known_r08_counts() -> None:
-    if not (REPO / "CORRECTNESS_r08.json").exists():
-        pytest.skip("history files absent")
-    state, max_round = ledger(REPO)
-    assert max_round >= 8
-    statuses = [v["status"] for v in state.values()]
+    state = registry._attestation_state()
+    assert max(rnd for rnd, _, _ in state.values()) >= 8
     # the r08 verdict's hand-verified figures: 378 attested,
     # 367 triple-green + 11 by-design rows-only, zero failures
     assert len(state) == 378
-    assert statuses.count("FAILED") == 0
-    assert statuses.count("rows-only") == 11
-    assert statuses.count("green") == 367
+    assert sum(not ok for _, ok, _ in state.values()) == 0
+    assert sum(rows_only for _, _, rows_only in state.values()) == 11
 
 
-def test_ledger_status_semantics(tmp_path: Path) -> None:
+def test_ledger_status_semantics(tmp_path: Path, monkeypatch) -> None:
     (tmp_path / "CORRECTNESS_r01.json").write_text(
         json.dumps(
             {
@@ -37,94 +38,80 @@ def test_ledger_status_semantics(tmp_path: Path) -> None:
                       "spark_rows": 1, "oracle_rows": 2, "err": None},
                 "c": {"rows_match": None, "schema_match": None, "hash_match": None,
                       "spark_rows": 5, "oracle_rows": None, "err": "no_oracle"},
+                "d": {"rows_match": True, "schema_match": True, "hash_match": True,
+                      "spark_rows": 1, "oracle_rows": 1, "err": None},
             }
         )
     )
-    # a later round flips b green — latest row wins
+    # a later round flips b green and d red — the latest row wins
     (tmp_path / "CORRECTNESS_r02.json").write_text(
         json.dumps(
             {"b": {"rows_match": True, "schema_match": True, "hash_match": True,
-                   "spark_rows": 2, "oracle_rows": 2, "err": None}}
+                   "spark_rows": 2, "oracle_rows": 2, "err": None},
+             "d": {"rows_match": False, "schema_match": True, "hash_match": False,
+                   "spark_rows": 1, "oracle_rows": 2, "err": None}}
         )
     )
-    state, max_round = ledger(tmp_path)
-    assert max_round == 2
-    assert state["a"] == {"round": 1, "status": "green"}
-    assert state["b"] == {"round": 2, "status": "green"}
-    assert state["c"] == {"round": 1, "status": "rows-only"}
-
-
-def test_window_round_grouping_matches_registry_rotation() -> None:
-    # The tool's stalest-first window must draw from the same ROUNDS as
-    # registry.ordered_names' tier-2 ordering (exact within-round order
-    # may differ: the registry tie-breaks by priority/registration).
-    if not (REPO / "CORRECTNESS_r08.json").exists():
-        pytest.skip("history files absent")
-    from pythonmapreduce_spark.plans import registry
-
-    registry.load_all()
-    state, _ = ledger(REPO)
-    reg_window = registry.ordered_names()[:50]
-    tool_window = sorted(
-        state, key=lambda n: (0 if state[n]["status"] == "FAILED" else 1,
-                              state[n]["round"], n)
-    )[:50]
-    assert {state[n]["round"] for n in reg_window} == {
-        state[n]["round"] for n in tool_window
+    monkeypatch.setattr(registry, "_REPO", str(tmp_path))
+    assert registry._attestation_state() == {
+        "a": (1, True, False),
+        "b": (2, True, False),
+        "c": (1, True, True),  # a rows-only row that ran counts as attested
+        "d": (2, False, False),
     }
 
 
+@pytest.mark.skipif(not HISTORY, reason="history files absent")
+def test_window_round_grouping_matches_registry_rotation(capsys) -> None:
+    assert attestation_report.main(["--json"]) == 0
+    out = json.loads(capsys.readouterr().out)
+    assert out["next_window"] == registry.ordered_names()[:50]
+    state = registry._attestation_state()
+    assert sum(out["next_window_rounds"].values()) == 50
+    assert set(map(int, out["next_window_rounds"])) == {state[n][0] for n in out["next_window"]}
+
+
+@pytest.mark.skipif(not HISTORY, reason="history files absent")
 def test_registry_tier1_empty_on_fully_attested_ledger() -> None:
     # Today's ledger is fully attested with no oracle-upgraded rows-only
-    # rows, so tier 1 must be empty and no stale (unregistered) rows
-    # should exist — the cross-check exists for the first divergence.
-    if not (REPO / "CORRECTNESS_r08.json").exists():
-        pytest.skip("history files absent")
-    state, _ = ledger(REPO)
-    tier1, unregistered, notes = registry_tier1(state)
-    assert tier1 == []
-    assert unregistered == []
-    assert any("378 queries" in n for n in notes)
+    # rows, so the rotation's tier 1 is empty, and no stale (unregistered)
+    # rows exist.
+    out = attestation_report.report(50)
+    assert out["unattested"] == [] and out["unregistered"] == [] and out["failed"] == []
+    state = registry._attestation_state()
+    assert not [n for n, (_, _, rows_only) in state.items() if rows_only and n in registry.ORACLES]
 
 
-def test_registry_tier1_flags_unattested_and_oracle_upgraded() -> None:
-    # Synthetic ledger: drop one registered query (=> unattested) and
-    # mark one oracle-backed query rows-only (=> oracle postdates its
-    # driver evidence). Both are registry.ordered_names tier-1 cases the
-    # JSON-only projection used to miss (ADVICE r09).
-    if not (REPO / "CORRECTNESS_r08.json").exists():
-        pytest.skip("history files absent")
-    state, _ = ledger(REPO)
-    state.pop("join_star")
-    state["percentile_agg"] = {"round": 3, "status": "rows-only"}
-    state["ghost_query_not_registered"] = {"round": 2, "status": "green"}
-    tier1, unregistered, _ = registry_tier1(state)
-    assert "join_star" in tier1
-    assert "percentile_agg" in tier1
-    assert unregistered == ["ghost_query_not_registered"]
+def _rotation(monkeypatch, state: dict) -> list[str]:
+    monkeypatch.setattr(registry, "_attestation_state", lambda: state)
+    return registry.ordered_names()
 
 
-def test_project_window_failed_before_tier1() -> None:
-    # registry.ordered_names() sorts FAILED as tier 0 BEFORE tier-1
-    # (unattested/oracle-upgraded) rows; the projection must splice tier1
-    # after the FAILED prefix, not ahead of it (r10 ADVICE, low).
-    from tools.attestation_report import project_window
+def _green(names) -> dict:
+    return {n: (5, True, False) for n in names}
 
-    state = {
-        "ok_old": {"round": 1, "status": "green"},
-        "ok_new": {"round": 3, "status": "green"},
-        "broken": {"round": 2, "status": "FAILED"},
-    }
-    assert project_window(state, ["fresh_unattested"], 4) == [
-        "broken",
-        "fresh_unattested",
-        "ok_old",
-        "ok_new",
-    ]
-    # membership at the truncation boundary: FAILED must survive a tiny
-    # window even when tier1 alone would fill it
-    assert project_window(state, ["t1a", "t1b", "t1c"], 2) == ["broken", "t1a"]
-    # fully-green ledger, no tier1: pure stalest-first (unchanged path)
-    assert project_window(
-        {k: v for k, v in state.items() if v["status"] != "FAILED"}, [], 2
-    ) == ["ok_old", "ok_new"]
+
+def test_registry_tier1_flags_unattested_and_oracle_upgraded(monkeypatch) -> None:
+    # One registered query with no row (unattested) and one oracle-backed
+    # query whose only row is rows-only (the oracle postdates its driver
+    # evidence) both lead a fully green rotation.
+    state = _green(n for n in registry.QUERIES if n != "join_star")
+    state["percentile_agg"] = (3, True, True)
+    assert "percentile_agg" in registry.ORACLES
+    assert set(_rotation(monkeypatch, state)[:2]) == {"join_star", "percentile_agg"}
+
+
+def test_project_window_failed_before_tier1(monkeypatch) -> None:
+    # A failed latest row is tier 0, ahead of the unattested tier 1, then
+    # green rows stalest first; ties keep registration order.
+    state = _green(n for n in registry.QUERIES if n != "join_star")
+    state["agg_basic"] = (2, False, False)
+    state["topk"] = (1, True, False)
+    state["wordcount"] = (1, True, False)
+    order = _rotation(monkeypatch, state)
+    stale = sorted(["topk", "wordcount"], key=list(registry.QUERIES).index)
+    assert order[:4] == ["agg_basic", "join_star", *stale]
+    # with no failure and no unattested query: pure stalest first
+    state = _green(registry.QUERIES)
+    state["topk"] = (1, True, False)
+    assert _rotation(monkeypatch, state)[0] == "topk"

@@ -29,14 +29,14 @@ def test_signatures_cover_the_plans_md_queries() -> None:
 
 @pytest.mark.parametrize("name", list(COMMITTED))
 def test_signature_matches_committed(spark, name: str) -> None:
-    assert signature(registry.QUERIES[name](spark, SF)) == COMMITTED[name]
+    assert registry.run_query(spark, name, SF, signature) == COMMITTED[name]
 
 
 def test_signature_repeats_across_builds(spark, sf_smoke) -> None:
     # remove_dup_spans checkpoints at build time: each build scans new
     # RDDs under new expression ids
     first, second = (
-        signature(registry.QUERIES["remove_dup_spans"](spark, sf_smoke)) for _ in range(2)
+        registry.run_query(spark, "remove_dup_spans", sf_smoke, signature) for _ in range(2)
     )
     assert first["Scan ExistingRDD"] > 0
     assert first == second

@@ -227,8 +227,8 @@ def test_watermark_eviction_shrinks_window_state(spark) -> None:
 
     This is the mechanism that bounds the time-keyed state class at an
     unbounded-run 100 TB: state is O(windows inside the watermark
-    horizon), not O(stream length) — SCALING.md's measured FLAT
-    b_state=0.00 tier is this eviction doing its job continuously.
+    horizon), not O(stream length): this eviction, done continuously,
+    is what keeps the time-keyed state flat as the stream grows.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     staging = tempfile.mkdtemp(prefix="pmr_evict_")
@@ -290,8 +290,8 @@ def test_watermark_eviction_shrinks_window_state(spark) -> None:
 
 
 def test_watermark_eviction_shrinks_dedup_key_state(spark) -> None:
-    """The ENTITY-KEYED state class (stream_dedup's keys — SCALING.md's
-    measured b_state=1.00 tier) names watermark/TTL eviction as its
+    """The ENTITY-KEYED state class (stream_dedup's keys, one state row
+    per live key, so linear in the keys seen) names watermark/TTL eviction as its
     unbounded-run bound; demonstrate it: dropDuplicatesWithinWatermark
     key state must SHRINK once the watermark passes the keys' event
     times.

@@ -1,207 +1,73 @@
 #!/usr/bin/env python3
-"""Attestation-ledger report over the committed CORRECTNESS_r*.json files.
+"""Print the driver-attestation state of every registered query and the
+next rotation window.
 
-Prints, per registered query, the latest driver attestation round, its
-status (green / rows-only / FAILED), and staleness in rounds — the
-bookkeeping the round-7/8 judges recomputed by hand (VERDICT r08 item 8).
-Also projects the NEXT rotation window: with the ledger fully green this
-is exactly the first N entries of ``registry.ordered_names()``'s tier-2
-stalest-first ordering, which this tool reproduces from the JSONs alone
-(no pyspark import) so it runs anywhere, instantly.
+A printer over ``registry._attestation_state()`` (the latest
+CORRECTNESS_r*.json row per query: green, rows-only or FAILED) and
+``registry.ordered_names()`` (the order ``queries()`` hands a
+budget-capped driver), so the report and the rotation cannot disagree.
+It prints the status counts, staleness in rounds, failed and unattested
+queries, rows left by queries no longer registered, and the next window.
 
-Status semantics mirror ``registry._attestation_state``: a row is GREEN
-when err is null and rows/schema/hash all match; a row with err ==
-"no_oracle" is the by-design rows-only tier and counts as attested when
-it produced rows; anything else is FAILED. Latest round wins per query.
-
-By default the report then cross-checks the JSON-only ledger against the
-REAL registry (``registry.load_all()`` — imports pyspark's Python side,
-no JVM; a few seconds): queries registered but never attested, and
-rows-only rows whose query has since gained a full oracle, form
-``ordered_names()``'s tier 1 and go to the FRONT of the projected window
-(VERDICT r09 ADVICE — the JSON-only projection silently diverges the
-first time either case appears). Pass ``--no-registry`` for the instant
-JSON-only view; an import failure degrades to a printed note, never an
-error, so the tool still runs anywhere.
-
-Usage:
-    python tools/attestation_report.py [--repo DIR] [--window N] \
-        [--no-registry] [--json]
+Usage: python tools/attestation_report.py [--window N] [--json]
 """
 from __future__ import annotations
 
 import argparse
 import json
 import os
-import re
 import sys
 from collections import Counter
-from pathlib import Path
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def ledger(repo: Path) -> tuple[dict[str, dict], int]:
-    """query -> {round, status} from the committed CORRECTNESS files."""
-    state: dict[str, dict] = {}
-    max_round = 0
-    for f in sorted(repo.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", f.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.loads(f.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        max_round = max(max_round, rnd)
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            err = row.get("err")
-            if err == "no_oracle":
-                status = "rows-only" if row.get("spark_rows") is not None else "FAILED"
-            elif (
-                err is None
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                status = "green"
-            else:
-                status = "FAILED"
-            prev = state.get(name)
-            if prev is None or rnd >= prev["round"]:
-                state[name] = {"round": rnd, "status": status}
-    return state, max_round
+from pythonmapreduce_spark.plans import registry  # noqa: E402
 
 
-def registry_tier1(state: dict[str, dict]) -> tuple[list[str], list[str], list[str]]:
-    """(tier1, attested_but_unregistered, notes) from the real registry.
-
-    tier1 replicates ``registry.ordered_names()``'s front-of-rotation
-    rule: registered queries with NO attestation row in any round, plus
-    rows-only rows whose query now carries a full oracle (their driver
-    evidence predates the claim). Raises ImportError and friends to the
-    caller — degrade there, not here.
-    """
-    from pythonmapreduce_spark.plans import registry
-
+def report(window: int) -> dict:
     registry.load_all()
-    prio = {n: i for i, n in enumerate(registry._ATTESTATION_PRIORITY)}
-    reg_order = {n: i for i, n in enumerate(registry.QUERIES)}
-    tier1 = sorted(
-        (
-            n
-            for n in registry.QUERIES
-            if n not in state
-            or (state[n]["status"] == "rows-only" and n in registry.ORACLES)
-        ),
-        key=lambda n: (prio.get(n, len(prio)), reg_order[n]),
-    )
-    unregistered = sorted(n for n in state if n not in registry.QUERIES)
-    notes = [f"registry: {len(registry.QUERIES)} queries, {len(registry.ORACLES)} oracle-backed"]
-    return tier1, unregistered, notes
-
-
-def project_window(
-    state: dict[str, dict], tier1: list[str], size: int
-) -> list[str]:
-    """The next rotation window, mirroring ``registry.ordered_names()``:
-    FAILED rows are tier 0 and go FIRST, tier-1 (unattested or
-    oracle-upgraded rows-only) splice in after them, then stalest-first.
-    Splicing tier1 at the very front — ahead of FAILED — diverged from
-    the real rotation whenever failures existed (r10 ADVICE, low)."""
-    ordered = sorted(
-        (n for n in state if n not in set(tier1)),
-        key=lambda n: (
-            0 if state[n]["status"] == "FAILED" else 1,
-            state[n]["round"],
-            n,
-        ),
-    )
-    n_failed = sum(1 for n in ordered if state[n]["status"] == "FAILED")
-    return (ordered[:n_failed] + tier1 + ordered[n_failed:])[:size]
-
-
-def main() -> int:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--repo", default=str(Path(__file__).resolve().parent.parent))
-    ap.add_argument("--window", type=int, default=50, help="size of next rotation window")
-    ap.add_argument(
-        "--no-registry",
-        action="store_true",
-        help="skip the registry cross-check (instant, JSON-only view)",
-    )
-    ap.add_argument("--json", action="store_true")
-    args = ap.parse_args()
-
-    repo = Path(args.repo)
-    state, max_round = ledger(repo)
-
-    tier1: list[str] = []
-    warnings: list[str] = []
-    if not args.no_registry:
-        try:
-            tier1, unregistered, notes = registry_tier1(state)
-            warnings.extend(notes)
-            if tier1:
-                warnings.append(
-                    "TIER-1 (unattested or oracle-upgraded rows-only) queries "
-                    f"exist and lead the rotation: {', '.join(tier1)}"
-                )
-            if unregistered:
-                warnings.append(
-                    "attested but no longer registered (stale ledger rows): "
-                    + ", ".join(unregistered)
-                )
-        except Exception as exc:  # registry unavailable — JSON-only view
-            warnings.append(
-                f"registry cross-check skipped ({type(exc).__name__}: {exc}); "
-                "window projection assumes a fully-attested ledger"
-            )
-    by_status = Counter(v["status"] for v in state.values())
-    staleness = Counter(max_round - v["round"] for v in state.values())
-
-    # Next-window projection mirrors registry.ordered_names: FAILED
-    # first, then tier1, then stalest attestation, ties by name for
-    # determinism here (the registry breaks ties by priority/registration
-    # order — with a fully-green ledger the ROUND grouping is what
-    # matters for planning, and rounds group identically).
-    window = project_window(state, tier1, args.window)
-    out = {
-        "rounds_seen": max_round,
-        "queries_attested": len(state),
-        "by_status": dict(by_status),
-        "staleness_histogram": {str(k): v for k, v in sorted(staleness.items())},
-        "failed": sorted(n for n, v in state.items() if v["status"] == "FAILED"),
-        "tier1": tier1,
-        "warnings": warnings,
-        "next_window_rounds": dict(
-            Counter(state[n]["round"] for n in window if n in state)
-        ),
-        "next_window": window,
+    state = registry._attestation_state()
+    status = {
+        name: "FAILED" if not ok else "rows-only" if rows_only else "green"
+        for name, (_, ok, rows_only) in state.items()
     }
+    last = max((rnd for rnd, _, _ in state.values()), default=0)
+    names = registry.ordered_names()[:window]
+    return {
+        "rounds_seen": last,
+        "queries_attested": len(state),
+        "by_status": dict(Counter(status.values())),
+        "staleness_histogram": dict(sorted(Counter(last - st[0] for st in state.values()).items())),
+        "failed": sorted(n for n, s in status.items() if s == "FAILED"),
+        "unattested": [n for n in registry.QUERIES if n not in state],
+        "unregistered": sorted(n for n in state if n not in registry.QUERIES),
+        "next_window_rounds": dict(Counter(state[n][0] for n in names if n in state)),
+        "next_window": names,
+    }
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--window", type=int, default=50, help="size of next rotation window")
+    ap.add_argument("--json", action="store_true")
+    args = ap.parse_args(argv)
+    out = report(args.window)
     if args.json:
         print(json.dumps(out))
         return 0
     print(
         f"attested queries: {out['queries_attested']}  "
-        f"(rounds 1..{max_round})  status: {dict(by_status)}"
+        f"(rounds 1..{out['rounds_seen']})  status: {out['by_status']}"
     )
-    print(f"staleness (rounds since latest attestation -> queries): "
-          f"{out['staleness_histogram']}")
-    if out["failed"]:
-        print(f"FAILED at latest check: {out['failed']}")
-    for w in warnings:
-        print(f"note: {w}")
+    print(f"staleness (rounds since latest attestation -> queries): {out['staleness_histogram']}")
+    for key in ("failed", "unattested", "unregistered"):
+        if out[key]:
+            print(f"{key}: {', '.join(out[key])}")
     print(
         f"next {args.window}-query rotation window draws from rounds "
         f"{out['next_window_rounds']}:"
     )
-    print("  " + ", ".join(window))
+    print("  " + ", ".join(out["next_window"]))
     return 0
 
 

@@ -1,12 +1,23 @@
 """Simulate the driver's CORRECTNESS loop with per-query wall timing.
 
 Runs every ``queries()`` entry at sf0.01 in registration order (the order the
-driver sees), compares against ``oracle_sql()`` via DuckDB, canonicalizes both
-sides like the driver (sort columns by name, pandas sort_values over raw
-cells — the exact step that crashes on array cells), and prints a timing
-table. Use this to (a) catch canonicalizer-hostile output types before the
-driver does and (b) keep total pass time far below any plausible driver
-budget.
+driver sees) in the driver's regime: a PLAIN ``SparkSession`` at
+``local[DEFAULT_CPUS]`` with Spark 4 defaults (ANSI on, 200 shuffle
+partitions, the machine timezone, lz4), not ``get_spark()``, so a query that
+leans on the tuned session's confs instead of pinning them in
+``registry._tune_session`` fails here. It compares against ``oracle_sql()``
+via DuckDB, canonicalizes both sides like the driver (sort columns by name,
+pandas sort_values over raw cells — the exact step that crashes on array
+cells), and prints a timing table. Use this to (a) catch
+canonicalizer-hostile output types before the driver does and (b) keep total
+pass time far below any plausible driver budget. Tuned-session oracle
+coverage is ``tests/test_oracle_diff.py``.
+
+Timezone robustness: the process TZ moves the JVM default zone and DuckDB's
+ICU TimeZone; the queries pin spark.sql.session.timeZone=UTC themselves and
+the oracles use naive UTC timestamp arithmetic, so this must also be green as
+
+    TZ=Asia/Tokyo python tools/driver_sim.py
 
 Usage: python tools/driver_sim.py [--sf-dir DIR] [--limit N] [--names a,b,c]
 """
@@ -46,13 +57,15 @@ def main() -> int:
     # Python workers import the package by name: before the session starts,
     # point them at this checkout, not at their working directory's.
     os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")]))
+    from pyspark.sql import SparkSession
+
     import __spark_entry__ as entry_mod
     from pythonmapreduce_spark.catalog import TABLES
     from pythonmapreduce_spark.plans.registry import run_query
-    from pythonmapreduce_spark.session import get_spark
+    from pythonmapreduce_spark.session import DEFAULT_CPUS
 
     t0 = time.time()
-    spark = get_spark("driver-sim")
+    spark = SparkSession.builder.master(f"local[{DEFAULT_CPUS}]").getOrCreate()
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     print(f"session+registry up in {time.time() - t0:.2f}s; {len(qs)} queries", flush=True)

@@ -1,18 +1,45 @@
-"""Regenerate PLANS.md and plans/signatures.json for the headline queries.
+"""Regenerate PLANS.md, plans/signatures.json and the counter ledger
+plans/ledger.json, and flag any query whose shuffle bytes or tasks rose.
 
-Each query runs once at sf0.01 in a ``get_spark`` session at its default
-core count. plans/signatures.json gets the final plan's structural
-signature (``plans/signature.py``), which ``tests/test_plan_signatures.py``
-must reproduce. PLANS.md gets the annotated formatted plan after the run
-(the AQE final plan, then the initial one) for each query whose signature
-or note changed; a section whose query kept both keeps its committed text,
-so a regeneration's diff shows only the plans that changed and not the
-expression ids every run renumbers. Run from the repo root:
-``python tools/gen_plans.py``."""
+One ``get_spark`` session at its default core count runs everything.
+
+The ledger: every registered query runs twice at sf0.01 through
+``registry.run_query`` into the noop sink, and its row records the stages
+built before the sink was called, total stages, tasks and shuffle-write
+bytes as ``[min, max]`` ranges, and spill bytes, all read from Spark's
+status store by ``perfbench/layers.py``. Some queries take more than one
+value with unchanged code (BASELINE.md "Regression rule"): a range sort's
+bytes follow its sample's seed (the RDD id), and AQE's runtime choices
+can add a stage. The ``bench.py`` headline queries also run once at
+sf0.001 and at sf0.1, with the byte exponent over the top decade (sf0.01
+-> sf0.1); below sf0.01 the corpus is flat.
+
+Before overwriting the ledger, the sf0.01 rows are compared with the
+committed ones: a query rose when the minimum of its tasks or of its
+bytes exceeds the recorded maximum. Risen, added and removed queries are
+printed, and the exit status is 1 when any query rose. A query that did
+not rise keeps the union of its recorded and new ranges, so a
+multi-valued query settles on the range it takes; a fall only lowers the
+minimum, and deleting a row re-records it from scratch.
+
+PLANS.md and signatures.json: each PLANS.md query runs once more
+(collecting) through ``run_query``. plans/signatures.json gets the final
+plan's structural signature (``plans/signature.py``), which
+``tests/test_plan_signatures.py`` must reproduce. PLANS.md gets the
+annotated formatted plan after the run (the AQE final plan, then the
+initial one) for each query whose signature or note changed; a section
+whose query kept both keeps its committed text, so a regeneration's diff
+shows only the plans that changed and not the expression ids every run
+renumbers.
+
+Run from the repo root: ``python tools/gen_plans.py`` (bytes are zstd
+bytes; they compare only within one codec).
+"""
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
 import sys
@@ -20,12 +47,16 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pythonmapreduce_spark.plans.registry import QUERIES, load_all  # noqa: E402
+from bench import HEADLINE  # noqa: E402
+from perfbench.layers import next_stage_id, stage_totals  # noqa: E402
+from pythonmapreduce_spark.plans import registry  # noqa: E402
 from pythonmapreduce_spark.plans.signature import signature  # noqa: E402
 from pythonmapreduce_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
+HEADLINE_SFS = tuple(os.path.join(os.path.dirname(SF), sf) for sf in ("sf0.001", "sf0.1"))
 SIGNATURES = os.path.join(REPO, "plans", "signatures.json")
+LEDGER = os.path.join(REPO, "plans", "ledger.json")
 
 NOTES = {
     "join_star": (
@@ -340,9 +371,102 @@ NOTES = {
 }
 
 
-def main() -> None:
-    load_all()
+def measure(spark, name: str, sf_dir: str) -> dict[str, int]:
+    """One noop-sink run of ``name`` through ``run_query``: the stages its
+    build created before the sink was called, and the totals over every
+    stage the run created."""
+    sc = spark.sparkContext
+    first, built = next_stage_id(sc), []
+
+    def sink(df) -> None:
+        built.append(next_stage_id(sc))
+        df.write.mode("overwrite").format("noop").save()
+
+    registry.run_query(spark, name, sf_dir, sink)
+    total = stage_totals(sc, range(first, next_stage_id(sc)))
+    return {
+        "build_stages": int(stage_totals(sc, range(first, built[0]))["stages"]),
+        "stages": int(total["stages"]),
+        "tasks": int(total["tasks"]),
+        "shuffle_write_bytes": int(total["shuffle_write_bytes"]),
+        "spill_bytes": int(total["spill_bytes"]),
+    }
+
+
+# Counts the ledger keeps as a [min, max] range and checks for a rise.
+RANGED = ("tasks", "shuffle_write_bytes")
+
+
+def ledger_row(runs: list[dict[str, int]]) -> dict:
+    """The range of each ``RANGED`` count over ``runs``, the most of the rest."""
+    return {
+        k: [min(r[k] for r in runs), max(r[k] for r in runs)] if k in RANGED
+        else max(r[k] for r in runs)
+        for k in runs[0]
+    }
+
+
+def rises(committed: dict, measured: dict) -> tuple[list[str], list[str], list[str]]:
+    """(rose, added, removed) query names of ``measured`` against
+    ``committed`` ledger rows: a query rose when the minimum of its tasks or
+    of its shuffle bytes exceeds the recorded maximum."""
+    rose = [
+        name
+        for name in sorted(committed.keys() & measured.keys())
+        if any(measured[name][k][0] > committed[name][k][1] for k in RANGED)
+    ]
+    added = sorted(measured.keys() - committed.keys())
+    return rose, added, sorted(committed.keys() - measured.keys())
+
+
+def _dump(ledger: dict) -> str:
+    """JSON with one line per query, so a rise is one line of ``git diff``."""
+    sections = (
+        f" {json.dumps(key)}: {{\n"
+        + ",\n".join(f"  {json.dumps(n)}: {json.dumps(row)}" for n, row in rows.items())
+        + "\n }"
+        for key, rows in ledger.items()
+    )
+    return "{\n" + ",\n".join(sections) + "\n}\n"
+
+
+def write_ledger(spark) -> int:
+    """Measure, compare with the committed ledger, write it; 1 if any rose."""
+    committed = {}
+    if os.path.exists(LEDGER):
+        with open(LEDGER) as fh:
+            committed = json.load(fh)["sf0.01"]
+    rows = {name: ledger_row([measure(spark, name, SF) for _ in range(2)])
+            for name in registry.query_names()}
+    rose, added, removed = rises(committed, rows)
+    for name in rose:
+        old, new = committed[name], rows[name]
+        print(f"ROSE {name}: " + ", ".join(f"{k} {old[k]} -> {new[k]}" for k in RANGED))
+    print(f"added: {', '.join(added) or '-'}\nremoved: {', '.join(removed) or '-'}")
+    for name in (committed.keys() & rows.keys()) - set(rose):
+        for k in RANGED:
+            old, new = committed[name][k], rows[name][k]
+            rows[name][k] = [min(old[0], new[0]), max(old[1], new[1])]
+    headline = {}
+    for name in HEADLINE:
+        small, large = (measure(spark, name, sf_dir) for sf_dir in HEADLINE_SFS)
+        low, high = rows[name]["shuffle_write_bytes"][0], large["shuffle_write_bytes"]
+        headline[name] = {
+            "sf0.001": small,
+            "sf0.1": large,
+            "byte_exponent": round(math.log10(high / low), 2) if low and high else None,
+        }
+    with open(LEDGER, "w") as fh:
+        fh.write(_dump({"sf0.01": rows, "headline": headline}))
+    return 1 if rose else 0
+
+
+def main() -> int:
+    registry.load_all()
+    # Python workers import the package by name: point them at this checkout.
+    os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")]))
     spark = get_spark()
+    status = write_ledger(spark)
     jvm = spark._jvm
     out = [
         f"# PLANS — annotated executed plans (generated at sf0.01, local[{DEFAULT_CPUS}])",
@@ -369,20 +493,24 @@ def main() -> None:
         committed = json.load(fh)
     signatures = {}
     for name, note in NOTES.items():
-        df = QUERIES[name](spark, SF)
-        signatures[name] = signature(df)
         start = f"## {name}\n\n{note}\n\n```\n"
         section = kept.get(name, "")
-        if committed.get(name) != signatures[name] or not section.startswith(start):
+
+        def sink(df) -> str:
+            signatures[name] = signature(df)
+            if committed.get(name) == signatures[name] and section.startswith(start):
+                return section
             plan = jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-            section = f"{start}{plan.strip()}\n```\n"
-        out.append(section)
+            return f"{start}{plan.strip()}\n```\n"
+
+        out.append(registry.run_query(spark, name, SF, sink))
     with open(plans_md, "w") as fh:
         fh.write("\n".join(out))
     with open(SIGNATURES, "w") as fh:
         json.dump(signatures, fh, indent=1)
         fh.write("\n")
+    return status
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -22,12 +22,87 @@ from __future__ import annotations
 import os
 
 import duckdb
-
-from gen_scaled_sf import _gen_documents, _gen_embeddings
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.01"
 OUT = "/tmp/pmr_robust"
 R = 3
+SEED = 42
+
+
+def _gen_documents(con: duckdb.DuckDBPyConnection, out_dir: str, r: int) -> None:
+    """``r`` replicas of the documents; replica i > 0 suffixes every token
+    with ``_r{i}``, so the vocabulary grows with the corpus and replicas are
+    not near-duplicates of replica 0."""
+    parts = []
+    for i in range(r):
+        if i == 0:
+            parts.append(
+                f"SELECT doc_id, text, lang, source, n_chars "
+                f"FROM read_parquet('{SRC}/documents.parquet')"
+            )
+        else:
+            # \s+ split + empty-token filter matches the engine-wide
+            # tokenizer contract — a bare string_split(text, ' ') would
+            # mint spurious '_rN' tokens from consecutive-whitespace runs
+            # and skew the replica's token/shingle distribution
+            parts.append(
+                f"""
+                SELECT doc_id + {i} * (1 + (SELECT MAX(doc_id) FROM
+                           read_parquet('{SRC}/documents.parquet'))) AS doc_id,
+                       array_to_string(
+                           list_transform(
+                               list_filter(string_split_regex(text, '\\s+'),
+                                           t -> t <> ''),
+                               t -> t || '_r{i}'), ' ') AS text,
+                       lang, source,
+                       CAST(LENGTH(array_to_string(
+                           list_transform(
+                               list_filter(string_split_regex(text, '\\s+'),
+                                           t -> t <> ''),
+                               t -> t || '_r{i}'), ' ')) AS BIGINT)
+                           AS n_chars
+                FROM read_parquet('{SRC}/documents.parquet')
+                """
+            )
+    con.sql(
+        "COPY (" + " UNION ALL ".join(parts) + f") TO '{out_dir}/documents.parquet'"
+        " (FORMAT PARQUET)"
+    )
+
+
+def _gen_embeddings(out_dir: str, r: int) -> None:
+    """``r`` replicas of the embeddings; replica i > 0 draws fresh iid
+    vectors from the source's coordinate moments, with the same labels."""
+    base = pq.read_table(f"{SRC}/embeddings.parquet")
+    emb = np.array(base.column("embedding").to_pylist(), dtype=np.float64)
+    labels = np.array(base.column("label").to_pylist())
+    vec_ids = np.array(base.column("vec_id").to_pylist(), dtype=np.int64)
+    mu, sd = emb.mean(), emb.std()
+    n, d = emb.shape
+    rng = np.random.default_rng(SEED)
+    out_ids, out_emb, out_lab = [vec_ids], [emb.astype(np.float32)], [labels]
+    off = vec_ids.max() + 1
+    for i in range(1, r):
+        out_ids.append(vec_ids + i * off)
+        out_emb.append(rng.normal(mu, sd, size=(n, d)).astype(np.float32))
+        out_lab.append(labels)
+    tbl = pa.table(
+        {
+            "vec_id": pa.array(np.concatenate(out_ids), type=pa.int64()),
+            "embedding": pa.array(
+                [list(map(float, row)) for row in np.concatenate(out_emb)],
+                type=pa.list_(pa.float32()),
+            ),
+            "label": pa.array(
+                np.concatenate(out_lab).tolist(),
+                type=base.schema.field("label").type,
+            ),
+        }
+    )
+    pq.write_table(tbl, f"{out_dir}/embeddings.parquet")
 
 
 def main() -> None:
@@ -112,19 +187,11 @@ def main() -> None:
         f" FROM read_parquet('{SRC}/events.parquet')",
     )
 
-    # documents/embeddings reuse the scaling generator's replica transforms
-    # (suffixed vocabulary / fresh same-moment vectors), pointed at sf0.01
-    import gen_scaled_sf as g
-
-    g.SRC = SRC
     _gen_documents(con, OUT, R)
     _gen_embeddings(OUT, R)
 
 
 if __name__ == "__main__":
-    import gen_scaled_sf as g
-
-    g.SRC = SRC  # replica transforms read sf0.01, not the default sf0.1
     main()
     for t in ("documents", "embeddings", "lineitem", "events"):
         n = duckdb.sql(

@@ -1,16 +1,17 @@
 #!/usr/bin/env bash
-# Round-N eight-axis robustness battery (SURVEY.md §5.7). Regenerates the
-# four perturbed fixtures from the CURRENT /root/testdata, then runs the
-# full oracle differential on every axis:
+# Seven-axis robustness battery (SURVEY.md §5.7). Regenerates the four
+# perturbed fixtures from the current sf0.01 test data, then runs the full
+# oracle differential on every axis, each in the driver's plain default
+# session (tools/driver_sim.py):
 #   1. ROBUST   (3x FK-consistent size)        driver_sim --sf-dir /tmp/pmr_robust
 #   2. SKEW     (hot keys / dup cluster)       driver_sim --sf-dir /tmp/pmr_skew
 #   3. CHARSET  (multi-byte + NFD text)        driver_sim --sf-dir /tmp/pmr_unicode
 #   4. TEMPORAL (32x compressed clock)         driver_sim --sf-dir /tmp/pmr_temporal
 #   5. sf0.001  (single-member groups)         driver_sim --sf-dir /root/testdata/sf0.001
-#   6. tuned    (committed fixture, sf0.01)    driver_sim
-#   7. default session, UTC                    default_session_sweep
-#   8. default session, Asia/Tokyo             TZ=Asia/Tokyo default_session_sweep
-# Each run prints "problems: 0" / "BAD=[]" when green. ~30 min total.
+#   6. default session, UTC (sf0.01)           driver_sim
+#   7. default session, Asia/Tokyo (sf0.01)    TZ=Asia/Tokyo driver_sim
+# Each run prints "problems: 0" when green. The tuned session's oracle
+# coverage is tier-1 tests/test_oracle_diff.py.
 set -u
 cd "$(dirname "$0")/.."
 OUT=${1:-/tmp/axis_battery}
@@ -29,7 +30,7 @@ run() { # name, command...
   "$@" > "$OUT/$name.log" 2>&1
   rc=$?
   fail=$((fail + rc))
-  echo "exit=$rc $(grep -E 'problems: [0-9]+|BAD=\[' "$OUT/$name.log" | tail -1)"
+  echo "exit=$rc $(grep -E 'problems: [0-9]+' "$OUT/$name.log" | tail -1)"
 }
 
 run robust    python tools/driver_sim.py --sf-dir /tmp/pmr_robust
@@ -37,8 +38,7 @@ run skew      python tools/driver_sim.py --sf-dir /tmp/pmr_skew
 run charset   python tools/driver_sim.py --sf-dir /tmp/pmr_unicode
 run temporal  python tools/driver_sim.py --sf-dir /tmp/pmr_temporal
 run sf0001    python tools/driver_sim.py --sf-dir /root/testdata/sf0.001
-run tuned     python tools/driver_sim.py
-run def_utc   python tools/default_session_sweep.py
-run def_tokyo env TZ=Asia/Tokyo python tools/default_session_sweep.py
+run def_utc   python tools/driver_sim.py
+run def_tokyo env TZ=Asia/Tokyo python tools/driver_sim.py
 echo "battery complete; logs in $OUT; failed-axis exit sum=$fail"
 exit $((fail > 0 ? 1 : 0))
