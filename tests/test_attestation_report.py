@@ -94,11 +94,17 @@ def _green(names) -> dict:
 def test_registry_tier1_flags_unattested_and_oracle_upgraded(monkeypatch) -> None:
     # One registered query with no row (unattested) and one oracle-backed
     # query whose only row is rows-only (the oracle postdates its driver
-    # evidence) both lead a fully green rotation.
+    # evidence) both lead a fully green rotation; a row left by a query no
+    # longer registered is reported and stays out of the rotation.
     state = _green(n for n in registry.QUERIES if n != "join_star")
     state["percentile_agg"] = (3, True, True)
+    state["ghost_query_not_registered"] = (2, True, False)
     assert "percentile_agg" in registry.ORACLES
     assert set(_rotation(monkeypatch, state)[:2]) == {"join_star", "percentile_agg"}
+    out = attestation_report.report(50)
+    assert out["unregistered"] == ["ghost_query_not_registered"]
+    assert out["unattested"] == ["join_star"]
+    assert "ghost_query_not_registered" not in registry.ordered_names()
 
 
 def test_project_window_failed_before_tier1(monkeypatch) -> None:

@@ -1,9 +1,10 @@
-"""The counter ledger's rise rule (``tools/gen_plans.py`` ``rises``) over
-hand-built rows: no Spark session."""
+"""The counter ledger's rise rule and the ranges it records
+(``tools/gen_plans.py`` ``rises`` and ``merged``) over hand-built rows: no
+Spark session."""
 
 from __future__ import annotations
 
-from tools.gen_plans import ledger_row, rises
+from tools.gen_plans import ledger_row, merged, rises
 
 
 def _row(tasks: int | list[int], low: int, high: int) -> dict:
@@ -48,3 +49,18 @@ def test_ledger_row_keeps_task_and_byte_ranges() -> None:
         {"stages": 4, "tasks": 4, "shuffle_write_bytes": 4_372},
     ]
     assert ledger_row(runs) == {"stages": 5, "tasks": [4, 5], "shuffle_write_bytes": [4_372, 6_036]}
+
+
+def test_an_overlapping_range_widens_the_record() -> None:
+    committed = {"sort_multi": _row(3, 52_557, 53_134)}
+    measured = {"sort_multi": _row([3, 4], 52_099, 52_647)}
+    assert merged(committed, measured) == {"sort_multi": _row([3, 4], 52_099, 53_134)}
+
+
+def test_a_return_to_the_old_value_after_a_fall_flags() -> None:
+    committed = {"q": _row(8, 1_000, 1_000)}
+    fell = {"q": _row(6, 500, 500)}
+    assert rises(committed, fell) == ([], [], [])
+    committed = merged(committed, fell)
+    assert committed == fell
+    assert rises(committed, {"q": _row(8, 1_000, 1_000)}) == (["q"], [], [])

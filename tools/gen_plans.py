@@ -11,16 +11,17 @@ status store by ``perfbench/layers.py``. Some queries take more than one
 value with unchanged code (BASELINE.md "Regression rule"): a range sort's
 bytes follow its sample's seed (the RDD id), and AQE's runtime choices
 can add a stage. The ``bench.py`` headline queries also run once at
-sf0.001 and at sf0.1, with the byte exponent over the top decade (sf0.01
--> sf0.1); below sf0.01 the corpus is flat.
+sf0.1, with the byte exponent over the top decade (sf0.01 -> sf0.1);
+below sf0.01 the corpus is flat.
 
 Before overwriting the ledger, the sf0.01 rows are compared with the
 committed ones: a query rose when the minimum of its tasks or of its
 bytes exceeds the recorded maximum. Risen, added and removed queries are
-printed, and the exit status is 1 when any query rose. A query that did
-not rise keeps the union of its recorded and new ranges, so a
-multi-valued query settles on the range it takes; a fall only lowers the
-minimum, and deleting a row re-records it from scratch.
+printed, and the exit status is 1 when any query rose. Where a new range
+overlaps the recorded one, the ledger keeps their union, so a
+multi-valued query settles on the range it takes; otherwise (a rise or a
+fall) it keeps the new range, so a later return to the old value flags.
+Deleting a row re-records it from scratch.
 
 PLANS.md and signatures.json: each PLANS.md query runs once more
 (collecting) through ``run_query``. plans/signatures.json gets the final
@@ -54,7 +55,7 @@ from pythonmapreduce_spark.plans.signature import signature  # noqa: E402
 from pythonmapreduce_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
-HEADLINE_SFS = tuple(os.path.join(os.path.dirname(SF), sf) for sf in ("sf0.001", "sf0.1"))
+SF_LARGE = os.path.join(os.path.dirname(SF), "sf0.1")
 SIGNATURES = os.path.join(REPO, "plans", "signatures.json")
 LEDGER = os.path.join(REPO, "plans", "ledger.json")
 
@@ -419,6 +420,19 @@ def rises(committed: dict, measured: dict) -> tuple[list[str], list[str], list[s
     return rose, added, sorted(committed.keys() - measured.keys())
 
 
+def merged(committed: dict, measured: dict) -> dict:
+    """The rows to record: each ``RANGED`` count keeps the union of its
+    committed and measured ranges when they overlap, else (a rise or a
+    fall) the measured range."""
+    rows = {name: dict(row) for name, row in measured.items()}
+    for name in committed.keys() & measured.keys():
+        for k in RANGED:
+            (old_lo, old_hi), (lo, hi) = committed[name][k], measured[name][k]
+            if lo <= old_hi and hi >= old_lo:
+                rows[name][k] = [min(old_lo, lo), max(old_hi, hi)]
+    return rows
+
+
 def _dump(ledger: dict) -> str:
     """JSON with one line per query, so a rise is one line of ``git diff``."""
     sections = (
@@ -443,19 +457,15 @@ def write_ledger(spark) -> int:
         old, new = committed[name], rows[name]
         print(f"ROSE {name}: " + ", ".join(f"{k} {old[k]} -> {new[k]}" for k in RANGED))
     print(f"added: {', '.join(added) or '-'}\nremoved: {', '.join(removed) or '-'}")
-    for name in (committed.keys() & rows.keys()) - set(rose):
-        for k in RANGED:
-            old, new = committed[name][k], rows[name][k]
-            rows[name][k] = [min(old[0], new[0]), max(old[1], new[1])]
     headline = {}
     for name in HEADLINE:
-        small, large = (measure(spark, name, sf_dir) for sf_dir in HEADLINE_SFS)
+        large = measure(spark, name, SF_LARGE)
         low, high = rows[name]["shuffle_write_bytes"][0], large["shuffle_write_bytes"]
         headline[name] = {
-            "sf0.001": small,
             "sf0.1": large,
             "byte_exponent": round(math.log10(high / low), 2) if low and high else None,
         }
+    rows = merged(committed, rows)
     with open(LEDGER, "w") as fh:
         fh.write(_dump({"sf0.01": rows, "headline": headline}))
     return 1 if rose else 0
