@@ -371,22 +371,12 @@ def analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the compare. NDV is exact here (25 rows; the HLL±5% kicks in at
     cardinalities where exactness is priced accordingly).
     """
-    import os as _os
-    import shutil as _shutil
+    import uuid
 
     from pythonmapreduce_spark.catalog import load
+    from pythonmapreduce_spark.sources.bucketing import drop_managed_table
 
-    tbl = f"analyze_stats_{_os.getpid()}"
-    # the warehouse DIRECTORY outlives the in-memory catalog: drop both
-    # the entry and any stale location from a killed/recycled-pid run
-    # (same failure mode bucketing.write_bucketed documents)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    for prefix in ("file://", "file:"):
-        if warehouse.startswith(prefix):
-            warehouse = warehouse[len(prefix):]
-            break
-    _shutil.rmtree(_os.path.join(warehouse, tbl), ignore_errors=True)
+    tbl = f"analyze_stats_{uuid.uuid4().hex[:12]}"
     load(spark, sf_dir, "nation").write.mode("overwrite").saveAsTable(tbl)
     spark.sql(
         f"ANALYZE TABLE {tbl} COMPUTE STATISTICS FOR COLUMNS n_nationkey, n_regionkey"
@@ -407,8 +397,7 @@ def analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = parts[0].unionAll(parts[1])
     # DESCRIBE is a command — its rows are already materialized in the
     # plan, so the scratch table can be dropped before returning
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    _shutil.rmtree(_os.path.join(warehouse, tbl), ignore_errors=True)
+    drop_managed_table(spark, tbl)
     return out
 
 

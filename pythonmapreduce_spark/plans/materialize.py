@@ -47,16 +47,22 @@ round) goes through ``observe_pass`` instead, which materializes nothing.
 
 Lifetime: a run scope (``run_scope``, opened per thread by
 ``registry.run_query``) holds a release for each base checkpointed
-(``iter_materialize``, ``local_checkpoint``), each broadcast and each
-memory-sink view created while it is open, and calls them as it closes:
-non-blocking unpersists and a view drop, never a job, and no log line.
-Outside a scope nothing registers; Spark's ContextCleaner frees what a
-build left once it is garbage-collected, and always owns the files of a
-reliable checkpoint (``unpersist`` frees blocks only).
+(``iter_materialize``), each broadcast, each memory-sink view and each
+scratch directory (``run_scratch``) created while it is open, and calls
+them, newest first, as it closes: non-blocking unpersists, a view drop
+and a directory removal, never a job, and no log line. Outside a scope
+nothing registers; Spark's ContextCleaner frees what a build left once
+it is garbage-collected, and always owns the files of a reliable
+checkpoint (``unpersist`` frees blocks only), and scratch directories
+stay until the process exits.
 """
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 import threading
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
@@ -76,7 +82,7 @@ def run_scope() -> Iterator[list[Callable[[], object]]]:
         yield releases
     finally:
         _open.releases = outer
-        for release in releases:
+        for release in reversed(releases):
             release()
 
 
@@ -88,21 +94,52 @@ def release_at_run_end(release: Callable[[], object]) -> None:
         releases.append(release)
 
 
+_scratch_root: str | None = None
+
+
+def run_scratch(name: str) -> str:
+    """A fresh directory for files one run writes and reads back, removed
+    when this thread's run scope closes (at process exit with none open).
+
+    Directories live under ``<tmp>/pmr_spark_io/pid<pid>``; the first call
+    in a process has that root removed at exit and removes the roots of
+    processes that no longer run."""
+    global _scratch_root
+    if _scratch_root is None:
+        parent = os.path.join(tempfile.gettempdir(), "pmr_spark_io")
+        _sweep_dead_roots(parent)
+        root = os.path.join(parent, f"pid{os.getpid()}")
+        os.makedirs(root, exist_ok=True)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        _scratch_root = root
+    path = tempfile.mkdtemp(prefix=name, dir=_scratch_root)
+    release_at_run_end(lambda: shutil.rmtree(path, ignore_errors=True))
+    return path
+
+
+def _sweep_dead_roots(parent: str) -> None:
+    try:
+        entries = os.listdir(parent)
+    except OSError:
+        return
+    for entry in entries:
+        if not (entry.startswith("pid") and entry[3:].isdigit()):
+            continue
+        try:
+            os.kill(int(entry[3:]), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+        except OSError:
+            pass  # EPERM: the pid runs under another user
+
+
 def iter_materialize(df: DataFrame) -> DataFrame:
     """Materialize an iteration base eagerly: reliable checkpoint when the
     session has a checkpoint dir, localCheckpoint otherwise."""
     if df.sparkSession.sparkContext.getCheckpointDir() is None:
-        return local_checkpoint(df)
-    return _released(df.checkpoint(eager=True))
-
-
-def local_checkpoint(df: DataFrame) -> DataFrame:
-    """``localCheckpoint`` ``df`` eagerly, on any deployment: for a result
-    that must stop reading the scratch files it was built from."""
-    return _released(df.localCheckpoint(eager=True))
-
-
-def _released(out: DataFrame) -> DataFrame:
+        out = df.localCheckpoint(eager=True)
+    else:
+        out = df.checkpoint(eager=True)
     # SparkContext.unpersistRDD is what RDD.unpersist calls, less the WARN
     # line it logs for every locally checkpointed RDD it frees.
     rdd_id = out._jdf.logicalPlan().rdd().id()

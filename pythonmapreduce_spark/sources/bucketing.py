@@ -13,7 +13,9 @@ whole input through the KV store (/root/reference/master.py:27-40).
 
 from __future__ import annotations
 
+import hashlib
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,15 +26,13 @@ from pythonmapreduce_spark.plans.registry import register
 N_BUCKETS = 8
 
 
-def write_bucketed(spark: SparkSession, sf_dir: str, table: str, key: str, name: str) -> None:
-    """Persist a table bucketed+sorted by its join key as a managed table.
+def drop_managed_table(spark: SparkSession, name: str) -> None:
+    """Drop a managed table's catalog entry and its warehouse directory.
 
-    The warehouse DIRECTORY outlives the per-session in-memory catalog, so
-    a fresh session's saveAsTable would hit LOCATION_ALREADY_EXISTS on a
-    location left by an earlier session (or a killed run). Drop both the
-    catalog entry and the stale location first — overwrite semantics
-    regardless of which of the two actually exists.
-    """
+    The directory outlives the per-session in-memory catalog, so a fresh
+    session's saveAsTable would hit LOCATION_ALREADY_EXISTS on a location
+    left by an earlier session (or a killed run); both go, whichever of
+    the two exists."""
     import shutil
 
     spark.sql(f"DROP TABLE IF EXISTS {name}")
@@ -42,6 +42,12 @@ def write_bucketed(spark: SparkSession, sf_dir: str, table: str, key: str, name:
             warehouse = warehouse[len(prefix):]
             break
     shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
+
+
+def write_bucketed(spark: SparkSession, sf_dir: str, table: str, key: str, name: str) -> None:
+    """Persist a table bucketed+sorted by its join key as a managed table,
+    replacing any table or warehouse directory of that name."""
+    drop_managed_table(spark, name)
     (
         load(spark, sf_dir, table)
         .write.mode("overwrite")
@@ -117,10 +123,13 @@ def zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Bucketed copies are written once per (session, sf_dir) and reused — the
-# entire point of bucketing is paying the shuffle at WRITE time and
-# amortizing it over every subsequent join.
-_BUCKETED_READY: set[tuple[int, str]] = set()
+# Bucketed copies are written once per (live session, sf_dir) and reused —
+# the entire point of bucketing is paying the shuffle at WRITE time and
+# amortizing it over every subsequent join. Each input gets its own pair
+# of tables, named by a digest of its sf_dir.
+_BUCKETED_READY: "weakref.WeakKeyDictionary[SparkSession, set[str]]" = (
+    weakref.WeakKeyDictionary()
+)
 
 _BUCKETED_ORACLE = """
 SELECT c_mktsegment,
@@ -145,13 +154,15 @@ def join_bucketed_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     at ingest: the physical layout IS the optimization. The aggregate
     after the join shuffles only |segments| partial rows.
     """
-    key = (id(spark), sf_dir)
-    if key not in _BUCKETED_READY:
-        write_bucketed(spark, sf_dir, "orders", "o_custkey", "bq_orders")
-        write_bucketed(spark, sf_dir, "customer", "c_custkey", "bq_customer")
-        _BUCKETED_READY.add(key)
-    joined = spark.table("bq_orders").join(
-        spark.table("bq_customer"),
+    tag = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
+    orders, customer = f"bq_orders_{tag}", f"bq_customer_{tag}"
+    ready = _BUCKETED_READY.setdefault(spark, set())
+    if sf_dir not in ready:
+        write_bucketed(spark, sf_dir, "orders", "o_custkey", orders)
+        write_bucketed(spark, sf_dir, "customer", "c_custkey", customer)
+        ready.add(sf_dir)
+    joined = spark.table(orders).join(
+        spark.table(customer),
         F.col("o_custkey") == F.col("c_custkey"),
         "inner",
     )

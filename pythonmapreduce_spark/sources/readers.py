@@ -12,15 +12,14 @@ stubbed with a clear error.
 from __future__ import annotations
 
 import os
-import tempfile
-import threading
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.catalog import SCHEMAS, load
-from pythonmapreduce_spark.plans.materialize import local_checkpoint
+from pythonmapreduce_spark.plans.materialize import release_at_run_end, run_scratch
 from pythonmapreduce_spark.plans.registry import register
 from pythonmapreduce_spark.sources.text_corpus import BOOKS_DIR
 
@@ -89,182 +88,18 @@ def read_jdbc(
     return reader.load()
 
 
-def _scratch(name: str) -> str:
-    return os.path.join(tempfile.gettempdir(), "pmr_spark_io", name)
-
-
-def _session_uid(spark: SparkSession) -> str:
-    """A uuid private to this SparkSession OBJECT (not its application):
-    ``spark.newSession()`` clones share the applicationId, and the REST
-    server's thread pool shares one session across requests, so neither
-    pid nor applicationId distinguishes two live sessions in one driver.
-    Attached under SCRATCH_LOCK with the double-checked pattern
-    catalog._session_memo uses (a racing second attach would silently
-    fork the namespace — harmless, but the lock is already here)."""
-    uid = getattr(spark, "_pmr_scratch_uid", None)
-    if uid is None:
-        with SCRATCH_LOCK:
-            uid = getattr(spark, "_pmr_scratch_uid", None)
-            if uid is None:
-                import uuid
-
-                uid = uuid.uuid4().hex[:8]
-                spark._pmr_scratch_uid = uid
-    return uid
-
-
-_SWEPT_STALE = False
-
-# Live-pid entries older than this are reaped anyway: a long-lived driver
-# (the REST server) that churns SparkSession objects accumulates one dir
-# set per session uid for the life of the process, and age is the only
-# signal that a set's lazy readers are gone. Two days is far beyond any
-# single query/round lifetime here.
-_SCRATCH_AGE_LIMIT_S = 2 * 24 * 3600
-
-# Fixed-name entries current code still writes WITHOUT a pid key — an
-# immutable content cache regenerated on demand; never age-reaped because
-# its mtime stays at first creation while readers keep using it.
-_FIXED_LIVE_SCRATCH = {"refwire_books"}
-
-# Fixed names the pre-round-5 scheme wrote; no current code references
-# them, so they are removed on sight regardless of age (one-time cleanup
-# of pre-existing litter — new runs never recreate them).
-_LEGACY_FIXED_SCRATCH = {
-    "nation_csv",
-    "region_json",
-    "part_xml",
-    "part_v1",
-    "part_v2",
-    "supplier_orc",
-    "documents_by_lang",
-    "documents_compacted",
-    "documents_fragmented",
-    "dpp_documents_by_lang",
-    "refwire_rt",
-}
-
-
-def _sweep_stale_scratch() -> None:
-    """Once per process: bound the pmr_spark_io key space.
-
-    Keyed dirs cannot be removed by their creators (lazy readers are
-    still serving them when the query returns), so without this the key
-    space — one set of dirs per (process, session, input) — grows
-    without bound across pytest runs, sweeps, and driver rounds. Three
-    reap rules over entries not owned by this process:
-
-    1. pid-keyed entry (``_pid<d>_``, ``derby_db_<d>``, or the trailing
-       ``_<d>`` form of documents_dyn_overwrite/documents_prov) whose
-       pid is dead — garbage by construction.
-    2. pid-keyed entry whose pid is ALIVE but whose mtime is older than
-       ``_SCRATCH_AGE_LIMIT_S`` — session-uid churn inside a long-lived
-       driver; bounded by age instead of process death.
-    3. entry with no recognizable pid key (the pre-round-5 fixed-name
-       scheme: nation_csv, region_json, documents_fragmented, …) older
-       than the limit — legacy litter nothing live references. The
-       ``_FIXED_LIVE_SCRATCH`` allowlist protects the one fixed-name
-       cache current code still serves.
-    """
-    global _SWEPT_STALE
-    if _SWEPT_STALE:
-        return
-    with SCRATCH_LOCK:
-        if _SWEPT_STALE:
-            return
-        _SWEPT_STALE = True
-        import re
-        import shutil
-        import time
-
-        root = os.path.join(tempfile.gettempdir(), "pmr_spark_io")
-        try:
-            entries = os.listdir(root)
-        except OSError:
-            return
-        now = time.time()
-
-        def aged(path: str) -> bool:
-            try:
-                return now - os.path.getmtime(path) > _SCRATCH_AGE_LIMIT_S
-            except OSError:
-                return False  # vanished or unreadable: skip
-
-        for entry in entries:
-            path = os.path.join(root, entry)
-            m = (
-                re.search(r"_pid(\d+)_", entry)
-                or re.fullmatch(r"derby_db_(\d+)", entry)
-                or re.fullmatch(r"documents_(?:dyn_overwrite|prov)_(\d+)", entry)
-            )
-            if m is None:
-                if entry in _LEGACY_FIXED_SCRATCH or (
-                    entry not in _FIXED_LIVE_SCRATCH and aged(path)
-                ):
-                    shutil.rmtree(path, ignore_errors=True)  # rule 3
-                continue
-            if int(m.group(1)) == os.getpid():
-                continue
-            try:
-                os.kill(int(m.group(1)), 0)
-            except ProcessLookupError:
-                shutil.rmtree(path, ignore_errors=True)  # rule 1
-                continue
-            except OSError:
-                pass  # EPERM: pid exists
-            if aged(path):
-                shutil.rmtree(path, ignore_errors=True)  # rule 2
-
-
-def _scratch_keyed(spark: SparkSession, name: str, sf_dir: str) -> str:
-    """(process, session-object, input)-keyed scratch dir for round trips
-    that RETURN a lazy reader over the written files: the caller (driver)
-    collects after return, so the dir must be private enough that no
-    OTHER live invocation's mode-overwrite can delete part-files between
-    this call's return and the caller's collect. pid + a per-session uuid
-    + the input digest make concurrent processes, newSession() clones,
-    and distinct sessions on one thread pool all disjoint. The one regime
-    NOT covered: two threads invoking the SAME query on the SAME session
-    and input concurrently — they compute the same key, and closing that
-    would require eager materialization (which would also truncate the
-    lineage the plan-pin tests assert on); every in-repo harness and the
-    external driver run a session's queries sequentially. Dirs are
-    reused per key (overwrite-in-place), and dead-pid keys are reaped by
-    _sweep_stale_scratch so the key space stays bounded across runs."""
-    import hashlib
-
-    _sweep_stale_scratch()
-    path = _scratch(
-        f"{name}_pid{os.getpid()}_{_session_uid(spark)}_"
-        f"{hashlib.sha1(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    # Refresh mtime on every reuse: dir mtime only reflects direct-child
-    # writes, so without this a foreign process's age-based sweep (rule 2)
-    # could rmtree a >2-day-old dir a live long-running driver is still
-    # lazily serving. Liveness now keeps the age clock reset.
+def _shutdown_derby(spark: SparkSession, db: str) -> None:
     try:
-        os.utime(path)
-    except OSError:
-        pass  # not created yet — first write will set a fresh mtime
-    return path
-
-
-# Serializes every keyed scratch write→read lifecycle (libsvm/refwire
-# round trips, foreachBatch upsert): two concurrent invocations of the
-# SAME query on the SAME session and input compute the same key, so B's
-# entry-rmtree would otherwise delete A's in-flight files between A's
-# write and its materializing read (the same hazard
-# stream_state_inspect's lock closes). RLock, pure in-process: the keys
-# are pid-scoped so no cross-process coordination is needed. Also guards
-# the one-time attach in _session_uid and the one-shot stale-dir sweep.
-SCRATCH_LOCK = threading.RLock()
+        spark._jvm.java.sql.DriverManager.getConnection(f"jdbc:derby:{db};shutdown=true")
+    except Py4JJavaError:
+        pass  # Derby reports a clean shutdown as SQLException 08006
 
 
 @register("source_roundtrip_csv", oracle="SELECT * FROM nation")
 def source_roundtrip_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nation → CSV sink → CSV source must be lossless (header + explicit
     schema; no type inference)."""
-    path = _scratch_keyed(spark, "nation_csv", sf_dir)
+    path = run_scratch("nation_csv_")
     write_csv(load(spark, sf_dir, "nation"), path)
     return read_csv(spark, path, "nation")
 
@@ -277,10 +112,12 @@ def source_roundtrip_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     the partitioned range-query form (4 partitions on n_nationkey), proving
     the parallel-scan path, not just the single-task one.
     """
-    # Embedded Derby allows exactly one JVM to boot a given database
-    # directory; a pid-unique path keeps concurrent harnesses (pytest +
-    # external verifier) and stale locks from a killed JVM from colliding.
-    url = f"jdbc:derby:{_scratch(f'derby_db_{os.getpid()}')};create=true"
+    # Derby creates the database directory itself, so it is a child of the
+    # run's scratch directory; the run's end shuts the database down before
+    # removing it, so a long-lived JVM keeps no database booted per run.
+    db = os.path.join(run_scratch("derby_"), "db")
+    release_at_run_end(lambda: _shutdown_derby(spark, db))
+    url = f"jdbc:derby:{db};create=true"
     write_jdbc(load(spark, sf_dir, "nation"), url, "nation")
     return read_jdbc(
         spark, url, "nation", partition_column="n_nationkey", bounds=(0, 25), num_partitions=4
@@ -290,7 +127,7 @@ def source_roundtrip_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("source_roundtrip_json", oracle="SELECT * FROM region")
 def source_roundtrip_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """region → JSONL sink → JSONL source must be lossless."""
-    path = _scratch_keyed(spark, "region_json", sf_dir)
+    path = run_scratch("region_json_")
     write_jsonl(load(spark, sf_dir, "region"), path)
     return read_jsonl(spark, path, "region")
 
@@ -323,7 +160,7 @@ def source_roundtrip_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each executor task writes one part-file and the reader splits on row
     tags per file, so both directions stay executor-parallel at any scale.
     """
-    path = _scratch_keyed(spark, "part_xml", sf_dir)
+    path = run_scratch("part_xml_")
     write_xml(load(spark, sf_dir, "part"), path, "part")
     return read_xml(spark, path, "part", "part")
 
@@ -337,7 +174,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``WHERE lang = 'en'`` scan touches only that directory. The oracle
     proves the round trip preserves every row and value.
     """
-    path = _scratch_keyed(spark, "documents_by_lang", sf_dir)
+    path = run_scratch("documents_by_lang_")
     (
         load(spark, sf_dir, "documents")
         .select("doc_id", "lang", "n_chars")
@@ -361,7 +198,7 @@ def source_roundtrip_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate pushdown, zlib/zstd) — the interchange format when the
     surrounding warehouse is Hive/Trino-based rather than parquet-native.
     """
-    path = _scratch_keyed(spark, "supplier_orc", sf_dir)
+    path = run_scratch("supplier_orc_")
     load(spark, sf_dir, "supplier").write.mode("overwrite").orc(path)
     return spark.read.schema(SCHEMAS["supplier"]).orc(path)
 
@@ -383,8 +220,8 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle pins exactly which rows carry the late column.
     """
     part = load(spark, sf_dir, "part")
-    p1 = _scratch_keyed(spark, "part_v1", sf_dir)
-    p2 = _scratch_keyed(spark, "part_v2", sf_dir)
+    p1 = run_scratch("part_v1_")
+    p2 = run_scratch("part_v2_")
     part.where(F.col("p_partkey") % 2 == 0).select("p_partkey", "p_name").write.mode(
         "overwrite"
     ).parquet(p1)
@@ -409,8 +246,8 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     only merges partitions on read. tests/test_sources.py asserts the
     physical file count actually dropped.
     """
-    frag = _scratch_keyed(spark, "documents_fragmented", sf_dir)
-    compact = _scratch_keyed(spark, "documents_compacted", sf_dir)
+    frag = run_scratch("documents_fragmented_")
+    compact = run_scratch("documents_compacted_")
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     docs.repartition(32).write.mode("overwrite").parquet(frag)
     spark.read.parquet(frag).coalesce(2).write.mode("overwrite").parquet(compact)
@@ -445,7 +282,7 @@ def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the executed plan); the oracle proves the pruned read returns
     exactly the rows the logical join demands.
     """
-    path = _scratch_keyed(spark, "dpp_documents_by_lang", sf_dir)
+    path = run_scratch("dpp_documents_by_lang_")
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     docs.write.mode("overwrite").partitionBy("lang").parquet(path)
     fact = spark.read.schema("doc_id long, n_chars long, lang string").parquet(path)
@@ -528,9 +365,6 @@ def source_libsvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector column is flattened via vector_to_array — driver
     canonicalizers reject UDT cells.
     """
-    import hashlib as _hashlib
-    import shutil as _shutil
-
     from pyspark.ml.functions import vector_to_array
 
     from pythonmapreduce_spark.catalog import load
@@ -553,23 +387,12 @@ def source_libsvm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(" 3:"), F.element_at("v", 3).cast("string"),
         F.lit(" 4:"), F.element_at("v", 4).cast("string"),
     )
-    # Scratch keyed by (pid, session, input digest) and cleared at entry;
-    # local_checkpoint lets the dir go before returning, and SCRATCH_LOCK
-    # keeps a concurrent invocation's entry rmtree off these files.
-    out_dir = _scratch_keyed(spark, "libsvm", sf_dir)
-    with SCRATCH_LOCK:
-        _shutil.rmtree(out_dir, ignore_errors=True)
-        emb.select(line.alias("value")).write.mode("overwrite").text(out_dir)
-        back = (
-            spark.read.format("libsvm")
-            .option("numFeatures", "4")
-            .load(out_dir)
-        )
-        arr = vector_to_array(F.col("features"))
-        milli = F.transform(arr, lambda x: F.round(x * 1000).cast("long").cast("string"))
-        out = local_checkpoint(back.select("label", F.array_join(milli, ",").alias("fvec_milli")))
-        _shutil.rmtree(out_dir, ignore_errors=True)
-    return out
+    out_dir = run_scratch("libsvm_")
+    emb.select(line.alias("value")).write.mode("overwrite").text(out_dir)
+    back = spark.read.format("libsvm").option("numFeatures", "4").load(out_dir)
+    arr = vector_to_array(F.col("features"))
+    milli = F.transform(arr, lambda x: F.round(x * 1000).cast("long").cast("string"))
+    return back.select("label", F.array_join(milli, ",").alias("fvec_milli"))
 
 
 @register(
@@ -601,7 +424,7 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     states. At 100 TB this is the nightly-restatement path: work scales
     with the restated partition, never the table.
     """
-    path = _scratch(f"documents_dyn_overwrite_{os.getpid()}")
+    path = run_scratch("documents_dyn_overwrite_")
     base = load(spark, sf_dir, "documents").select("doc_id", "lang")
     base.write.mode("overwrite").partitionBy("lang").parquet(path)
     corrected = base.where(F.col("lang") == "en").select(
@@ -643,7 +466,7 @@ def source_file_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     task already knows its split); grouping by provenance costs the same
     as any low-cardinality aggregate.
     """
-    path = _scratch(f"documents_prov_{os.getpid()}")
+    path = run_scratch("documents_prov_")
     (
         load(spark, sf_dir, "documents")
         .select("doc_id", "lang")

@@ -37,7 +37,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from pythonmapreduce_spark.plans.materialize import local_checkpoint
+from pythonmapreduce_spark.plans.materialize import run_scratch
 from pythonmapreduce_spark.plans.registry import register
 from pythonmapreduce_spark.sources.text_corpus import BOOKS_DIR
 
@@ -189,11 +189,8 @@ def _frame_books(cache_dir: str) -> str:
     agrees). Returns the framed directory.
 
     The frames live in ``cache_dir/<corpus digest>``, so an edited corpus
-    never reads stale frames. ``cache_dir`` is a FIXED-NAME scratch entry
-    (an immutable content cache whose mtime never refreshes): any new
-    fixed-name cache like this one MUST be added to
-    ``readers._FIXED_LIVE_SCRATCH``, or the age-based sweep will silently
-    reap it after 2 days."""
+    never reads stale frames; the cache is shared across runs and
+    processes, and nothing removes it."""
     srcs = sorted(glob.glob(os.path.join(BOOKS_DIR, "*.txt")))
     digest = hashlib.sha1()
     for src in srcs:
@@ -308,17 +305,9 @@ def sink_roundtrip_refwire(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pythonmapreduce_spark.catalog import load
 
     register_refwire(spark)
-    # Scratch keyed by (pid, session, input digest) and cleared at entry;
-    # local_checkpoint lets nothing returned read it lazily, and
-    # SCRATCH_LOCK keeps a concurrent invocation's entry rmtree (a
-    # newSession clone shares the key) off the wire files.
-    from pythonmapreduce_spark.sources.readers import SCRATCH_LOCK, _scratch_keyed
-
-    out_dir = _scratch_keyed(spark, "refwire_rt", sf_dir)
-    with SCRATCH_LOCK:
-        shutil.rmtree(out_dir, ignore_errors=True)
-        docs = load(spark, sf_dir, "documents").select(
-            F.col("source").alias("file_name"), F.col("text").alias("chunk")
-        )
-        docs.write.format("refwire").mode("overwrite").option("path", out_dir).save()
-        return local_checkpoint(spark.read.format("refwire").option("path", out_dir).load())
+    out_dir = run_scratch("refwire_rt_")
+    docs = load(spark, sf_dir, "documents").select(
+        F.col("source").alias("file_name"), F.col("text").alias("chunk")
+    )
+    docs.write.format("refwire").mode("overwrite").option("path", out_dir).save()
+    return spark.read.format("refwire").option("path", out_dir).load()

@@ -15,24 +15,16 @@ real cluster).
 
 from __future__ import annotations
 
-import json as _json
 import os
 import shutil
-import tempfile
-import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pythonmapreduce_spark.catalog import SCHEMAS, events_stream_source
-from pythonmapreduce_spark.plans.materialize import local_checkpoint, release_at_run_end
+from pythonmapreduce_spark.plans.materialize import release_at_run_end, run_scratch
 from pythonmapreduce_spark.plans.registry import register
-
-# Progress events of the most recent completed _run_to_memory query
-# (observability side-channel: {"query_name": str, "progress": [dict]}).
-# Single-slot by design — read it right after the query you care about.
-LAST_RUN_PROGRESS: dict = {}
 
 
 def _run_to_memory(
@@ -44,7 +36,7 @@ def _run_to_memory(
     query stops — the streaming analog of a batch job.
     """
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    ckpt = os.path.join(tempfile.gettempdir(), f"ckpt_{name}")
+    ckpt = run_scratch("ckpt_")
     spark = stream_df.sparkSession
     # A streaming query pins its state-store partition count to
     # spark.sql.shuffle.partitions at first start, and every partition is
@@ -77,24 +69,8 @@ def _run_to_memory(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.awaitTermination()
-    # Stash the finished run's progress events for observers (the
-    # scaling report reads stateOperators.numRowsTotal to put MEASURED
-    # state-size-vs-SF numbers next to the streaming tier's wall times;
-    # stream_state_inspect-style debugging reads the same dict). The
-    # query handle dies with this scope, so this is the only window.
-    try:
-        LAST_RUN_PROGRESS.clear()
-        LAST_RUN_PROGRESS["query_name"] = name
-        LAST_RUN_PROGRESS["progress"] = [
-            p if isinstance(p, dict) else _json.loads(p.json)
-            for p in (q.recentProgress or [])
-        ]
-    except Exception:  # observability only — never fail the query for it
-        LAST_RUN_PROGRESS["progress"] = []
     # the bounded run is complete and the results live in the in-memory
-    # sink table — the checkpoint has nothing left to serve, so removing
-    # it here (not at interpreter exit) stops the one-leaked-dir-per-
-    # streaming-query growth the old fire-and-forget path had
+    # sink table, so the checkpoint has nothing left to serve
     shutil.rmtree(ckpt, ignore_errors=True)
     release_at_run_end(lambda: spark.catalog.dropTempView(name))
     return spark, name
@@ -458,67 +434,51 @@ def sink_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     at-least-once foreachBatch contract) merges to the same state —
     idempotent, hence effectively exactly-once.
     """
-    import shutil
+    from pythonmapreduce_spark.catalog import load
 
-    # (pid, session, input-digest)-keyed scratch, stale tree removed at entry
-    # (the stream_state_inspect remediation pattern — the old uuid key
-    # leaked a fresh versioned-target tree per invocation); the WHOLE
-    # base is removed before returning, which is safe because the
-    # returned aggregate is localCheckpoint-materialized — nothing reads
-    # these files lazily. The full write→stream→read lifecycle holds
-    # SCRATCH_LOCK so a concurrent invocation's entry-rmtree (same key
-    # from a newSession clone) cannot delete it mid-flight.
-    from pythonmapreduce_spark.sources.readers import SCRATCH_LOCK, _scratch_keyed
+    base = run_scratch("fbu_")
+    src_dir = os.path.join(base, "src")
+    ev = load(spark, sf_dir, "events")
+    ev.write.mode("overwrite").parquet(os.path.join(src_dir, "full"))
+    dups = ev.where(F.col("event_id") % 5 == 0)
+    dups.write.mode("overwrite").parquet(os.path.join(src_dir, "dups"))
 
-    base = _scratch_keyed(spark, "fbu", sf_dir)
-    with SCRATCH_LOCK:
-        shutil.rmtree(base, ignore_errors=True)
-        src_dir = os.path.join(base, "src")
-        from pythonmapreduce_spark.catalog import load
+    state = {"path": None}
 
-        ev = load(spark, sf_dir, "events")
-        ev.write.mode("overwrite").parquet(os.path.join(src_dir, "full"))
-        dups = ev.where(F.col("event_id") % 5 == 0)
-        dups.write.mode("overwrite").parquet(os.path.join(src_dir, "dups"))
+    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if state["path"] is None:
+            merged = batch_df.dropDuplicates(["event_id"])
+        else:
+            cur = spark.read.parquet(state["path"])
+            merged = cur.unionByName(batch_df).dropDuplicates(["event_id"])
+        new_path = os.path.join(base, f"target_v{batch_id}")
+        merged.write.mode("overwrite").parquet(new_path)
+        state["path"] = new_path
 
-        state = {"path": None}
-
-        def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-            if state["path"] is None:
-                merged = batch_df.dropDuplicates(["event_id"])
-            else:
-                cur = spark.read.parquet(state["path"])
-                merged = cur.unionByName(batch_df).dropDuplicates(["event_id"])
-            new_path = os.path.join(base, f"target_v{batch_id}")
-            merged.write.mode("overwrite").parquet(new_path)
-            state["path"] = new_path
-
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("recursiveFileLookup", "true")
+        .parquet(src_dir)
+    )
+    ckpt = os.path.join(base, "ckpt")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        q = (
+            stream.writeStream.foreachBatch(merge_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-        ckpt = os.path.join(base, "ckpt")
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            q = (
-                stream.writeStream.foreachBatch(merge_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        q.awaitTermination()
-        out = local_checkpoint(
-            spark.read.parquet(state["path"])
-            .groupBy("event_type")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-        )
-        shutil.rmtree(base, ignore_errors=True)
-    return out
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()
+    return (
+        spark.read.parquet(state["path"])
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
+    )
 
 
 @register(
@@ -718,29 +678,7 @@ def stream_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint's store files (one task per state partition), same as any
     file source; no running cluster is needed.
     """
-    # (pid, app)-keyed so repeated runs REUSE one scratch location instead
-    # of leaking a fresh state dir per invocation (ADVICE r3); the stale
-    # prior tree is removed at entry. Safe against an earlier invocation's
-    # still-held DataFrame because the state read below is localCheckpoint-
-    # materialized before return — the returned DataFrame no longer reads
-    # these files lazily (review r4 finding #2). Concurrent invocations in
-    # one process (incl. newSession() clones, which share the appId)
-    # serialize on a module lock so one call's rmtree can never delete a
-    # sibling's in-flight checkpoint (review r4.2).
-    ckpt = os.path.join(
-        tempfile.gettempdir(),
-        "pmr_spark_state",
-        f"pid{os.getpid()}_{spark.sparkContext.applicationId}",
-    )
-    with _STATE_INSPECT_LOCK:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        return _stream_state_inspect_run(spark, sf_dir, ckpt)
-
-
-_STATE_INSPECT_LOCK = threading.Lock()
-
-
-def _stream_state_inspect_run(spark: SparkSession, sf_dir: str, ckpt: str) -> DataFrame:
+    ckpt = run_scratch("state_")
     src = events_stream_source(spark, sf_dir)
     deduped = (
         src.withWatermark("ts", "40 days")
@@ -763,11 +701,7 @@ def _stream_state_inspect_run(spark: SparkSession, sf_dir: str, ckpt: str) -> Da
         # corrupt/unreadable checkpoint should RAISE, not read as empty
         return spark.createDataFrame([], "user_id long, event_type string")
     state = spark.read.format("statestore").load(ckpt)
-    out = state.select(
+    return state.select(
         F.col("key.user_id").alias("user_id"),
         F.col("key.event_type").alias("event_type"),
     )
-    # Materialize eagerly: decouples the returned DataFrame from the
-    # scratch checkpoint files so the next invocation's rmtree cannot
-    # corrupt it. State is O(distinct keys) — executor-storage sized.
-    return local_checkpoint(out)

@@ -44,3 +44,15 @@ def test_bucketed_join_is_exchange_free(spark, sf_smoke) -> None:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         spark.sql("DROP TABLE IF EXISTS li_bucketed")
         spark.sql("DROP TABLE IF EXISTS ord_bucketed")
+
+
+def test_join_bucketed_answers_each_scale_factor(spark, sf_smoke, sf_oracle) -> None:
+    """One session alternating inputs gets each input's answer: the
+    bucketed copies are per input, not one pair overwritten by the last
+    input written."""
+    from pythonmapreduce_spark.plans import registry
+    from tests.harness import run_compare
+
+    registry.load_all()
+    for sf_dir in (sf_oracle, sf_smoke, sf_oracle):
+        run_compare(spark, sf_dir, "join_bucketed")

@@ -24,6 +24,7 @@ from pythonmapreduce_spark.plans.materialize import (
     iter_materialize,
     materialize_observed,
     observe_pass,
+    release_at_run_end,
     run_scope,
 )
 from tests.harness import run_compare
@@ -183,6 +184,17 @@ def test_run_query_releases_when_the_sink_raises(spark, sf_smoke) -> None:
     with _checkpoint_dir(spark, None), pytest.raises(RuntimeError, match="sink failed"):
         registry.run_query(spark, "kcore_rounds", sf_smoke, sink)
     assert _persistent_rdds(spark) <= before
+
+
+def test_run_scope_releases_newest_first() -> None:
+    """A release registered after another may depend on it still being
+    held (the JDBC round trip shuts its Derby database down before its
+    scratch directory is removed), so a scope calls them newest first."""
+    called: list[int] = []
+    with run_scope():
+        for i in range(3):
+            release_at_run_end(lambda i=i: called.append(i))
+    assert called == [2, 1, 0]
 
 
 def test_concurrent_run_scopes_release_only_their_own(spark) -> None:

@@ -5,6 +5,7 @@ status returns the output once completed; logs are fetchable per job)."""
 from __future__ import annotations
 
 import json
+import os
 import threading
 import time
 import urllib.request
@@ -12,6 +13,7 @@ import urllib.request
 import pytest
 
 from pythonmapreduce_spark import server as srv_mod
+from pythonmapreduce_spark.plans.materialize import run_scratch
 
 
 @pytest.fixture(scope="module")
@@ -119,22 +121,27 @@ def test_failure_and_unknown_routes(rest):
 def test_fifty_jobs_leave_storage_views_and_table_flat(spark, sf_smoke, monkeypatch):
     """A long-lived server holds nothing per finished job past its bound:
     50 consecutive jobs (checkpointed bases, a centroid broadcast, a
-    streaming memory sink, a result checkpointed off scratch files plus a
-    state-store memory sink) leave no persisted RDD and no temporary view
-    beyond those the session held before, and the job table keeps the 10
-    newest finished jobs plus every unfinished one."""
+    streaming memory sink, a state-store memory sink, and results read
+    back off scratch files and a Derby database) leave no persisted RDD,
+    no temporary view and no scratch dir beyond those the session held
+    before, and the job table keeps the 10 newest finished jobs plus
+    every unfinished one."""
     monkeypatch.setattr(srv_mod, "_MAX_FINISHED_JOBS", 10)
+    root = os.path.dirname(run_scratch("probe_"))
 
-    def held() -> tuple[set, set]:
+    def held() -> tuple[set, set, set]:
         rdds = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
         views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
-        return rdds, views
+        return rdds, views, set(os.listdir(root))
 
-    rdds0, views0 = held()
+    rdds0, views0, dirs0 = held()
     job_srv = srv_mod.JobServer(spark, max_workers=1)
     pending = srv_mod.Job("agg_basic", sf_smoke, 5)  # oldest, never runs
     job_srv.jobs[pending.job_id] = pending
-    names = ("bm25_rank", "kcore_rounds", "semdedup", "stream_wordcount", "stream_state_inspect")
+    names = (
+        "bm25_rank", "kcore_rounds", "semdedup", "stream_wordcount", "stream_state_inspect",
+        "sink_dynamic_overwrite", "source_libsvm", "source_roundtrip_jdbc",
+    )
     try:
         for i in range(50):
             job = job_srv.submit(names[i % len(names)], sf_dir=sf_smoke, limit=5)
@@ -144,8 +151,9 @@ def test_fifty_jobs_leave_storage_views_and_table_flat(spark, sf_smoke, monkeypa
             assert job.status == "COMPLETED", (job.name, job.status, job.error)
     finally:
         job_srv._pool.shutdown(wait=True)
-    rdds, views = held()
+    rdds, views, dirs = held()
     assert rdds <= rdds0, rdds - rdds0
     assert views <= views0, views - views0
+    assert dirs <= dirs0, dirs - dirs0
     assert len(job_srv.jobs) == 11 and pending.job_id in job_srv.jobs
     assert job.job_id in job_srv.jobs

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -51,25 +52,79 @@ def test_permissive_read_quarantines_corrupt_rows(spark) -> None:
     df.unpersist()
 
 
-def test_compaction_reduces_file_count(spark, sf_oracle) -> None:
+@pytest.fixture
+def scratch_dirs(monkeypatch) -> list[str]:
+    """The scratch dirs the source queries make, in the order made."""
+    from pythonmapreduce_spark.plans import materialize
+    from pythonmapreduce_spark.sources import readers
+
+    made: list[str] = []
+
+    def recording(name: str) -> str:
+        made.append(materialize.run_scratch(name))
+        return made[-1]
+
+    monkeypatch.setattr(readers, "run_scratch", recording)
+    return made
+
+
+def test_compaction_reduces_file_count(spark, sf_oracle, scratch_dirs) -> None:
+    """The fragmented write has many files and the compacted one at most
+    two; both are the run's own scratch dirs, removed once it returns."""
     import glob
-    import os
 
     from pythonmapreduce_spark.plans import registry
-    from pythonmapreduce_spark.sources.readers import _scratch_keyed
 
     registry.load_all()
-    df = registry.QUERIES["sink_compaction"](spark, sf_oracle)
-    assert df.count() > 0
-    # derive the SAME (pid, session, input)-keyed dirs the query wrote —
-    # asserting on the old fixed names would inspect stale leftovers from
-    # earlier runs instead of this invocation's output
-    frag_dir = _scratch_keyed(spark, "documents_fragmented", sf_oracle)
-    comp_dir = _scratch_keyed(spark, "documents_compacted", sf_oracle)
-    frag = glob.glob(os.path.join(frag_dir, "*.parquet"))
-    comp = glob.glob(os.path.join(comp_dir, "*.parquet"))
-    assert len(frag) >= 16
-    assert len(comp) <= 2
+
+    def sink(df):
+        frag_dir, comp_dir = scratch_dirs
+        assert all(f.startswith("file://" + comp_dir) for f in df.inputFiles())
+        return (
+            df.count(),
+            len(glob.glob(os.path.join(frag_dir, "*.parquet"))),
+            len(glob.glob(os.path.join(comp_dir, "*.parquet"))),
+        )
+
+    n_rows, n_frag, n_comp = registry.run_query(spark, "sink_compaction", sf_oracle, sink)
+    assert n_rows > 0
+    assert n_frag >= 16
+    assert n_comp <= 2
+    assert not any(os.path.exists(d) for d in scratch_dirs)
+
+
+def test_jdbc_round_trip_shuts_its_database_down(spark, sf_smoke, scratch_dirs) -> None:
+    """The JDBC round trip's Derby database is shut down, then removed,
+    when its run ends: a database still booted in the JVM would accept a
+    connection after its directory is gone."""
+    from py4j.protocol import Py4JJavaError
+
+    from pythonmapreduce_spark.plans import registry
+
+    registry.load_all()
+    assert registry.run_query(spark, "source_roundtrip_jdbc", sf_smoke, lambda df: df.count()) == 25
+    [scratch] = scratch_dirs
+    assert not os.path.exists(scratch)
+    with pytest.raises(Py4JJavaError, match="not found"):
+        spark._jvm.java.sql.DriverManager.getConnection(f"jdbc:derby:{scratch}/db")
+
+
+@pytest.mark.parametrize("name", ["sink_dynamic_overwrite", "source_roundtrip_csv"])
+def test_concurrent_runs_of_one_query_match_the_oracle(spark, sf_smoke, name) -> None:
+    """The REST server's regime: two threads run the same query on the
+    shared session at once, round after round. Each run writes its own
+    scratch dir, so neither overwrites the files the other reads."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pythonmapreduce_spark.plans import registry
+    from tests.harness import run_compare
+
+    registry.load_all()
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        for _ in range(4):
+            runs = [pool.submit(run_compare, spark, sf_smoke, name) for _ in range(2)]
+            for run in runs:
+                run.result()
 
 
 def test_cli_surface() -> None:
@@ -81,20 +136,19 @@ def test_cli_surface() -> None:
     assert main(["oracle", "dedup_near"]) == 1  # rows-only
 
 
-def test_sweep_stale_scratch_rules(tmp_path, monkeypatch) -> None:
-    """The once-per-process scratch sweep bounds the pmr_spark_io key
-    space via three rules: dead-pid keyed entries (any of the three pid
-    patterns) go unconditionally, live-foreign-pid entries go only past
-    the age limit, and non-pid entries go when legacy-listed or aged —
-    with the live fixed-name allowlist immune even at any age."""
-    import time
+def test_run_scratch_removes_dead_process_roots(tmp_path, monkeypatch) -> None:
+    """The first ``run_scratch`` in a process removes the scratch roots of
+    processes that no longer run and keeps the roots of live ones and the
+    shared refwire frame cache; its exit hook removes only its own root."""
+    import atexit
 
-    from pythonmapreduce_spark.sources import readers
+    from pythonmapreduce_spark.plans import materialize
 
-    root = tmp_path / "pmr_spark_io"
-    root.mkdir()
+    parent = tmp_path / "pmr_spark_io"
     monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    monkeypatch.setattr(readers, "_SWEPT_STALE", False)
+    monkeypatch.setattr(materialize, "_scratch_root", None)
+    hooks: list = []
+    monkeypatch.setattr(atexit, "register", lambda *a, **kw: hooks.append((a, kw)))
 
     dead = 999_999  # find a pid that demonstrably does not exist
     while True:
@@ -105,61 +159,46 @@ def test_sweep_stale_scratch_rules(tmp_path, monkeypatch) -> None:
         except OSError:
             pass
         dead -= 1
+    for name in (f"pid{dead}/csv_x", "pid1/csv_y", "refwire_books/abc"):
+        (parent / name).mkdir(parents=True)
 
-    old = time.time() - readers._SCRATCH_AGE_LIMIT_S - 60
-    gone, kept = [], []
+    path = materialize.run_scratch("probe_")
 
-    def mk(name: str, aged: bool = False) -> str:
-        p = root / name
-        p.mkdir()
-        if aged:
-            os.utime(p, (old, old))
-        return name
-
-    # rule 1: dead-pid entries, all three patterns
-    gone.append(mk(f"nation_csv_pid{dead}_ab12cd34_ef56ab78"))
-    gone.append(mk(f"derby_db_{dead}"))
-    gone.append(mk(f"documents_prov_{dead}"))
-    gone.append(mk(f"documents_dyn_overwrite_{dead}"))
-    # rule 2: live foreign pid (pid 1 always exists) — aged goes, fresh stays
-    gone.append(mk("region_json_pid1_ab12cd34_ef56ab78", aged=True))
-    kept.append(mk("part_xml_pid1_ab12cd34_ef56ab78"))
-    # own pid is never touched, even aged
-    kept.append(mk(f"own_pid{os.getpid()}_ab12cd34_ef56ab78", aged=True))
-    # rule 3: legacy fixed names go on sight; unknown names only when aged
-    gone.append(mk("nation_csv"))
-    gone.append(mk("documents_fragmented"))
-    gone.append(mk("mystery_aged", aged=True))
-    kept.append(mk("mystery_fresh"))
-    # allowlisted fixed-name cache survives any age
-    kept.append(mk("refwire_books", aged=True))
-
-    readers._sweep_stale_scratch()
-
-    remaining = sorted(p.name for p in root.iterdir())
-    assert remaining == sorted(kept)
-    assert not any((root / g).exists() for g in gone)
+    own = parent / f"pid{os.getpid()}"
+    assert os.path.dirname(path) == str(own)
+    assert sorted(p.name for p in parent.iterdir()) == sorted(["pid1", own.name, "refwire_books"])
+    [((fn, *args), kw)] = hooks
+    fn(*args, **kw)
+    assert sorted(p.name for p in parent.iterdir()) == ["pid1", "refwire_books"]
 
 
-def test_scratch_keyed_reuse_refreshes_mtime(tmp_path, monkeypatch, spark) -> None:
-    """Liveness must reset the age clock: a keyed dir a live driver keeps
-    reusing would otherwise cross _SCRATCH_AGE_LIMIT_S (dir mtime only
-    moves on direct-child writes) and a FOREIGN process's rule-2 sweep
-    could rmtree it mid-serve. _scratch_keyed touches the dir on every
-    call, so a reused dir is always younger than the limit."""
-    import time
+def test_run_scratch_lives_for_one_run() -> None:
+    """A scratch dir made inside a run scope goes when the scope closes;
+    one made outside any scope stays until the process exits, and then
+    the process's root goes with it."""
+    import subprocess
+    import sys
 
-    from pythonmapreduce_spark.sources import readers
+    from pythonmapreduce_spark.plans.materialize import run_scope, run_scratch
 
-    monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
-    monkeypatch.setattr(readers, "_SWEPT_STALE", True)  # isolate from the sweep
+    with run_scope():
+        path = run_scratch("probe_")
+        assert os.path.isdir(path)
+    assert not os.path.exists(path)
 
-    path = readers._scratch_keyed(spark, "mtime_probe", "/some/sf_dir")
-    os.makedirs(path)
-    old = time.time() - readers._SCRATCH_AGE_LIMIT_S - 60
-    os.utime(path, (old, old))
-    assert readers._scratch_keyed(spark, "mtime_probe", "/some/sf_dir") == path
-    assert time.time() - os.path.getmtime(path) < readers._SCRATCH_AGE_LIMIT_S
+    script = (
+        "from pythonmapreduce_spark.plans.materialize import run_scratch\n"
+        "path = run_scratch('probe_')\n"
+        "open(path + '/f', 'w').close()\n"
+        "print(path)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, capture_output=True, text=True, timeout=60
+    )
+    assert done.returncode == 0, done.stderr
+    path = done.stdout.strip()
+    assert path and not os.path.exists(os.path.dirname(path))
 
 
 def test_frame_books_ignores_stale_frames(tmp_path) -> None:
